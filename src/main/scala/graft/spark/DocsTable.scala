@@ -1,7 +1,14 @@
 package graft.spark
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.catalyst.InternalRow
+import org.apache.spark.sql.catalyst.expressions.{Cast, Expression, GenericInternalRow, Literal}
+import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graftbridge.Bridge
+import org.apache.spark.sql.types._
+import org.apache.spark.unsafe.Platform
+import org.apache.spark.unsafe.types.UTF8String
 
 /** Deterministic interleaved-document corpus per the engine's input contract:
   * docs(doc_id string, spans array<struct<kind, text, media_ref, offset>>).
@@ -66,23 +73,36 @@ object DocsTable {
            partitions: Int = 32): DataFrame =
     spark.range(0, nDocs, 1, partitions)
       .select(format_string("doc_%012d", col("id")).as("doc_id"),
-        org.apache.spark.sql.graftbridge.Bridge.column(
-          DocSpansExpr(org.apache.spark.sql.graftbridge.Bridge.expression(col("id")),
-            org.apache.spark.sql.graftbridge.Bridge.expression(lit(seed)))).as("spans"))
+        Bridge.column(DocSpansExpr(Bridge.expression(col("id")),
+          Bridge.expression(lit(seed)))).as("spans"))
 
-  /** Extract the geo anchor (lon, lat, h, epoch) from the first 'geo' span —
-    * a pure column expression, no UDTF (FIXTURES.md geo-anchor convention).
-    * Null lon/lat for docs without a geo span. */
+  /** The columns withAnchor adds, in order: the fields of AnchorExpr. */
+  val anchorColumns: Seq[String] = Seq("lon", "lat", "anchor_h", "anchor_epoch")
+
+  /** Extract the geo anchor (lon, lat, anchor_h, anchor_epoch) in one
+    * codegen'd pass over `spans` (AnchorExpr; FIXTURES.md §1 geo-anchor
+    * convention):
+    * - the first span with `kind = 'geo'` is used
+    * - its text is split on single spaces, and token i gives column i as
+    *   `try_cast(token AS DOUBLE)` would
+    * - a malformed or missing token gives null, never an error; docs
+    *   without a geo span, or whose geo text is null, get four nulls
+    * `spans` passes through untouched. */
   def withAnchor(docs: DataFrame): DataFrame = {
-    val geoText = try_element_at(
-      filter(col("spans"), s => s.getField("kind") === "geo"), lit(1))
-      .getField("text")
-    val parts = split(geoText, " ")
-    docs
-      .withColumn("lon", try_element_at(parts, lit(1)).cast("double"))
-      .withColumn("lat", try_element_at(parts, lit(2)).cast("double"))
-      .withColumn("anchor_h", try_element_at(parts, lit(3)).cast("double"))
-      .withColumn("anchor_epoch", try_element_at(parts, lit(4)).cast("double"))
+    val span = docs.select(col("spans")).schema.head.dataType match {
+      case ArrayType(s: StructType, _) => s
+      case t => throw new IllegalArgumentException(
+        s"withAnchor: spans must be array<struct<kind, text, ...>>, not ${t.simpleString}")
+    }
+    def stringField(name: String): Literal = {
+      val i = span.fieldNames.indexOf(name)
+      require(i >= 0 && span(i).dataType.isInstanceOf[StringType],
+        s"withAnchor: span struct has no string field `$name`: ${span.simpleString}")
+      Literal(i)
+    }
+    val anchor = Bridge.column(AnchorExpr(Bridge.expression(col("spans")),
+      stringField("kind"), stringField("text"), Literal(span.length)))
+    anchorColumns.foldLeft(docs)((d, c) => d.withColumn(c, anchor.getField(c)))
   }
 
   /** The per-row span-sequence invariant checksum (kind, text, media_ref,
@@ -105,12 +125,9 @@ object DocsTable {
   }
 }
 
-/** Static kernel: spansFor as Catalyst data. */
+/** Static kernels of the docs table: span generation (spansFor as
+  * Catalyst data) and geo-anchor parsing. */
 object DocGenKernels {
-  import org.apache.spark.sql.catalyst.expressions.GenericInternalRow
-  import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
-  import org.apache.spark.unsafe.types.UTF8String
-
   def docSpans(docId: Long, seed: Long): ArrayData = {
     val spans = DocsTable.spansFor(docId, seed)
     val out = new Array[Any](spans.length)
@@ -124,17 +141,96 @@ object DocGenKernels {
     }
     new GenericArrayData(out)
   }
+
+  private val Geo = UTF8String.fromString("geo")
+
+  /** The anchor of the first span whose kind is "geo", as a row of
+    * DocsTable.anchorColumns; null when there is no such span or its text
+    * is null. The kind and text ordinals and the field count locate the
+    * fields in the span struct. */
+  def anchor(spans: ArrayData, kindOrdinal: Int, textOrdinal: Int,
+             spanWidth: Int): InternalRow = {
+    val n = spans.numElements()
+    var i = 0
+    while (i < n) {
+      if (!spans.isNullAt(i)) {
+        val s = spans.getStruct(i, spanWidth)
+        if (!s.isNullAt(kindOrdinal) && s.getUTF8String(kindOrdinal) == Geo)
+          return if (s.isNullAt(textOrdinal)) null
+          else parseAnchor(s.getUTF8String(textOrdinal))
+      }
+      i += 1
+    }
+    null
+  }
+
+  /** Split `text` on single ' ' bytes in place, as split(text, ' ') does
+    * (empty tokens kept), and parse the first four tokens; tokens past the
+    * end are null. */
+  private def parseAnchor(text: UTF8String): InternalRow = {
+    val out = new Array[Any](4)
+    val base = text.getBaseObject
+    val off = text.getBaseOffset
+    val n = text.numBytes
+    var start = 0
+    var field = 0
+    while (field < 4 && start <= n) {
+      var end = start
+      while (end < n && Platform.getByte(base, off + end) != ' ') end += 1
+      out(field) = parseDouble(base, off + start, end - start)
+      field += 1
+      start = end + 1
+    }
+    new GenericInternalRow(out)
+  }
+
+  // 10^0 .. 10^22, each product exact in a double
+  private val Pow10 = Array.iterate(1.0, 23)(_ * 10)
+
+  /** The token's double as `try_cast(token AS DOUBLE)` gives it, or null.
+    * Fast path: [-]digits[.digits] with at most 15 significant digits and
+    * at most 22 fraction digits is m / 10^f with both operands exact, so
+    * the one division rounds correctly, as Double.parseDouble does. Any
+    * other token takes the cast's own conversion. */
+  private def parseDouble(base: AnyRef, off: Long, len: Int): Any = {
+    val neg = len > 0 && Platform.getByte(base, off) == '-'
+    var i = if (neg) 1 else 0
+    var m = 0L
+    var sig = 0
+    var digits = 0
+    var frac = 0
+    var dot = false
+    while (i < len) {
+      val b = Platform.getByte(base, off + i)
+      if (b >= '0' && b <= '9') {
+        if (m != 0 || b != '0') sig += 1
+        if (sig > 15) return castToDouble(base, off, len)
+        m = m * 10 + (b - '0')
+        digits += 1
+        if (dot) frac += 1
+      } else if (b == '.' && !dot) dot = true
+      else return castToDouble(base, off, len)
+      i += 1
+    }
+    if (digits == 0 || frac > 22) castToDouble(base, off, len)
+    else { val v = m / Pow10(frac); if (neg) -v else v }
+  }
+
+  /** Cast's string-to-double conversion with ANSI off (what try_cast runs):
+    * Double.parseDouble, then the special literals (inf, nan, ...), else
+    * null. */
+  private def castToDouble(base: AnyRef, off: Long, len: Int): Any = {
+    val s = UTF8String.fromAddress(base, off, len).toString
+    try java.lang.Double.parseDouble(s)
+    catch {
+      case _: NumberFormatException => Cast.processFloatingPointSpecialLiterals(s, false)
+    }
+  }
 }
 
 /** doc_id → array<struct<kind, text, media_ref, offset>> — the deterministic
   * interleaved-span generator as a codegen-able expression. */
-case class DocSpansExpr(id: org.apache.spark.sql.catalyst.expressions.Expression,
-                        seed: org.apache.spark.sql.catalyst.expressions.Expression)
-    extends MediaStaticCall {
-  import org.apache.spark.sql.catalyst.InternalRow
-  import org.apache.spark.sql.catalyst.expressions.Expression
-  import org.apache.spark.sql.types._
-
+case class DocSpansExpr(id: Expression, seed: Expression) extends MediaStaticCall {
   override def children: Seq[Expression] = Seq(id, seed)
   override def inputSpec: Seq[DataType] = Seq(LongType, LongType)
   override def dataType: DataType = ArrayType(StructType(Seq(
@@ -149,4 +245,28 @@ case class DocSpansExpr(id: org.apache.spark.sql.catalyst.expressions.Expression
   }
   override protected def withNewChildrenInternal(c: IndexedSeq[Expression]): Expression =
     copy(c(0), c(1))
+}
+
+/** spans → struct<lon, lat, anchor_h, anchor_epoch> of nullable doubles,
+  * parsed from the first geo span in one pass; null without one. The
+  * ordinals and width are integer literals built by DocsTable.withAnchor,
+  * which also checks the span struct's shape. */
+case class AnchorExpr(spans: Expression, kindOrdinal: Expression,
+                      textOrdinal: Expression, spanWidth: Expression)
+    extends MediaStaticCall {
+  override def children: Seq[Expression] = Seq(spans, kindOrdinal, textOrdinal, spanWidth)
+  override def inputSpec: Seq[DataType] =
+    Seq(spans.dataType, IntegerType, IntegerType, IntegerType)
+  override def dataType: DataType =
+    StructType(DocsTable.anchorColumns.map(StructField(_, DoubleType)))
+  override def kernelObject: String = DocGenKernels.getClass.getName + ".MODULE$"
+  override def staticCall: String = "anchor"
+  override def eval(input: InternalRow): Any = {
+    val a = evalArgs(input)
+    if (a == null) null
+    else DocGenKernels.anchor(a(0).asInstanceOf[ArrayData], a(1).asInstanceOf[Int],
+      a(2).asInstanceOf[Int], a(3).asInstanceOf[Int])
+  }
+  override protected def withNewChildrenInternal(c: IndexedSeq[Expression]): Expression =
+    copy(c(0), c(1), c(2), c(3))
 }

@@ -216,9 +216,10 @@ object MediaKernels {
     }
 }
 
-/** Codegen base for the media kernels: like GeoStaticCall, but the static
-  * call returns an OBJECT that is itself null for undecodable payloads —
-  * the generated code re-checks nullness after the call. */
+/** Codegen base for the media kernels: like GeoStaticCall, but a static
+  * call returning an OBJECT may return null for undecodable payloads —
+  * the generated code re-checks nullness after the call. A primitive
+  * return (long, int, ...) is never null, so it gets no re-check. */
 abstract class MediaStaticCall extends Expression
     with org.apache.spark.sql.graftbridge.PublicInputTypes {
   def staticCall: String
@@ -246,6 +247,9 @@ abstract class MediaStaticCall extends Expression
     val args = codes.map(_.value).mkString(", ")
     val javaType = CodeGenerator.javaType(dataType)
     val childCode = codes.map(_.code).reduce(_ + _)
+    val nullCheck =
+      if (CodeGenerator.isPrimitiveType(dataType)) ""
+      else s"${ev.isNull} = ${ev.value} == null;"
     val code =
       code"""
         $childCode
@@ -253,7 +257,7 @@ abstract class MediaStaticCall extends Expression
         $javaType ${ev.value} = ${CodeGenerator.defaultValue(dataType)};
         if (!${ev.isNull}) {
           ${ev.value} = $kern.$staticCall($args);
-          ${ev.isNull} = ${ev.value} == null;
+          $nullCheck
         }
       """
     ev.copy(code = code)
