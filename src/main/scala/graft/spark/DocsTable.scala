@@ -2,7 +2,8 @@ package graft.spark
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.catalyst.expressions.{Cast, Expression, GenericInternalRow, Literal}
+import org.apache.spark.sql.catalyst.expressions.{Cast, GenericInternalRow, Literal}
+import org.apache.spark.sql.catalyst.expressions.objects.StaticInvoke
 import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.graftbridge.Bridge
@@ -65,31 +66,39 @@ object DocsTable {
     }
   }
 
+  private val spanType = StructType(Seq(
+    StructField("kind", StringType), StructField("text", StringType),
+    StructField("media_ref", StringType), StructField("offset", IntegerType)))
+
   /** Build the docs DataFrame (distributed generation; nothing collected).
-    * The span generator runs as a Catalyst expression (DocSpansExpr), so
-    * the synthesized corpus — like every kernel in the engine — stays
-    * inside whole-stage codegen with no typed-object serialization fence. */
+    * The span generator runs as a Catalyst expression (a `StaticInvoke` of
+    * DocGenKernels.docSpans), so the synthesized corpus — like every
+    * kernel in the engine — stays inside whole-stage codegen with no
+    * typed-object serialization fence. */
   def docs(spark: SparkSession, nDocs: Long, seed: Long = 42L,
            partitions: Int = 32): DataFrame =
     spark.range(0, nDocs, 1, partitions)
       .select(format_string("doc_%012d", col("id")).as("doc_id"),
-        Bridge.column(DocSpansExpr(Bridge.expression(col("id")),
-          Bridge.expression(lit(seed)))).as("spans"))
+        Bridge.column(StaticInvoke(DocGenKernels.getClass, ArrayType(spanType), "docSpans",
+          Seq(Bridge.expression(col("id")), Literal(seed)), Seq(LongType, LongType)))
+          .as("spans"))
 
-  /** The columns withAnchor adds, in order: the fields of AnchorExpr. */
+  /** The columns withAnchor adds, in order: the fields of the anchor
+    * struct. */
   val anchorColumns: Seq[String] = Seq("lon", "lat", "anchor_h", "anchor_epoch")
 
   /** Extract the geo anchor (lon, lat, anchor_h, anchor_epoch) in one
-    * codegen'd pass over `spans` (AnchorExpr; FIXTURES.md §1 geo-anchor
-    * convention):
+    * codegen'd pass over `spans` (a `StaticInvoke` of DocGenKernels.anchor;
+    * FIXTURES.md §1 geo-anchor convention):
     * - the first span with `kind = 'geo'` is used
     * - its text is split on single spaces, and token i gives column i as
     *   `try_cast(token AS DOUBLE)` would
     * - a malformed or missing token gives null, never an error; docs
     *   without a geo span, or whose geo text is null, get four nulls
-    * `spans` passes through untouched. */
+    * `spans` passes through untouched; the four columns are appended. */
   def withAnchor(docs: DataFrame): DataFrame = {
-    val span = docs.select(col("spans")).schema.head.dataType match {
+    val spans = docs.select(col("spans")).schema.head.dataType
+    val span = spans match {
       case ArrayType(s: StructType, _) => s
       case t => throw new IllegalArgumentException(
         s"withAnchor: spans must be array<struct<kind, text, ...>>, not ${t.simpleString}")
@@ -100,9 +109,16 @@ object DocsTable {
         s"withAnchor: span struct has no string field `$name`: ${span.simpleString}")
       Literal(i)
     }
-    val anchor = Bridge.column(AnchorExpr(Bridge.expression(col("spans")),
-      stringField("kind"), stringField("text"), Literal(span.length)))
-    anchorColumns.foldLeft(docs)((d, c) => d.withColumn(c, anchor.getField(c)))
+    val anchor = Bridge.column(StaticInvoke(DocGenKernels.getClass,
+      StructType(anchorColumns.map(StructField(_, DoubleType))), "anchor",
+      Seq(Bridge.expression(col("spans")), stringField("kind"), stringField("text"),
+        Literal(span.length)),
+      Seq(spans, IntegerType, IntegerType, IntegerType)))
+    // one generated row per doc: a filter on the anchor columns (`lon IS
+    // NOT NULL`, or one the optimizer infers from a join key) cannot be
+    // pushed below the generator, so the anchor is parsed once per row,
+    // not once per filter conjunct
+    docs.select(col("*"), inline_outer(array(anchor)))
   }
 
   /** The per-row span-sequence invariant checksum (kind, text, media_ref,
@@ -126,7 +142,8 @@ object DocsTable {
 }
 
 /** Static kernels of the docs table: span generation (spansFor as
-  * Catalyst data) and geo-anchor parsing. */
+  * Catalyst data) and geo-anchor parsing, reached from Catalyst through
+  * the `StaticInvoke`s built by DocsTable. */
 object DocGenKernels {
   def docSpans(docId: Long, seed: Long): ArrayData = {
     val spans = DocsTable.spansFor(docId, seed)
@@ -226,47 +243,4 @@ object DocGenKernels {
       case _: NumberFormatException => Cast.processFloatingPointSpecialLiterals(s, false)
     }
   }
-}
-
-/** doc_id → array<struct<kind, text, media_ref, offset>> — the deterministic
-  * interleaved-span generator as a codegen-able expression. */
-case class DocSpansExpr(id: Expression, seed: Expression) extends MediaStaticCall {
-  override def children: Seq[Expression] = Seq(id, seed)
-  override def inputSpec: Seq[DataType] = Seq(LongType, LongType)
-  override def dataType: DataType = ArrayType(StructType(Seq(
-    StructField("kind", StringType), StructField("text", StringType),
-    StructField("media_ref", StringType), StructField("offset", IntegerType))))
-  override def kernelObject: String = DocGenKernels.getClass.getName + ".MODULE$"
-  override def staticCall: String = "docSpans"
-  override def eval(input: InternalRow): Any = {
-    val a = evalArgs(input)
-    if (a == null) null
-    else DocGenKernels.docSpans(a(0).asInstanceOf[Long], a(1).asInstanceOf[Long])
-  }
-  override protected def withNewChildrenInternal(c: IndexedSeq[Expression]): Expression =
-    copy(c(0), c(1))
-}
-
-/** spans → struct<lon, lat, anchor_h, anchor_epoch> of nullable doubles,
-  * parsed from the first geo span in one pass; null without one. The
-  * ordinals and width are integer literals built by DocsTable.withAnchor,
-  * which also checks the span struct's shape. */
-case class AnchorExpr(spans: Expression, kindOrdinal: Expression,
-                      textOrdinal: Expression, spanWidth: Expression)
-    extends MediaStaticCall {
-  override def children: Seq[Expression] = Seq(spans, kindOrdinal, textOrdinal, spanWidth)
-  override def inputSpec: Seq[DataType] =
-    Seq(spans.dataType, IntegerType, IntegerType, IntegerType)
-  override def dataType: DataType =
-    StructType(DocsTable.anchorColumns.map(StructField(_, DoubleType)))
-  override def kernelObject: String = DocGenKernels.getClass.getName + ".MODULE$"
-  override def staticCall: String = "anchor"
-  override def eval(input: InternalRow): Any = {
-    val a = evalArgs(input)
-    if (a == null) null
-    else DocGenKernels.anchor(a(0).asInstanceOf[ArrayData], a(1).asInstanceOf[Int],
-      a(2).asInstanceOf[Int], a(3).asInstanceOf[Int])
-  }
-  override protected def withNewChildrenInternal(c: IndexedSeq[Expression]): Expression =
-    copy(c(0), c(1), c(2), c(3))
 }

@@ -2,9 +2,8 @@ package graft.spark
 
 import org.apache.spark.sql.Column
 import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.catalyst.expressions._
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
-import org.apache.spark.sql.catalyst.expressions.codegen.Block._
+import org.apache.spark.sql.catalyst.expressions.{Expression, GenericInternalRow, GetStructField}
+import org.apache.spark.sql.catalyst.expressions.objects.StaticInvoke
 import org.apache.spark.sql.catalyst.util.ArrayData
 import org.apache.spark.sql.types._
 
@@ -12,7 +11,8 @@ import graft.core.Geodesic
 import graft.index.{S2CellId, SlippyTile}
 import graft.proj.ops.TmercOps
 
-/** Static per-row kernels reached from generated code. */
+/** Static per-row geo kernels, reached from Catalyst through the
+  * `StaticInvoke`s built by GeoExprs. */
 object GeoKernels {
   def s2Cell(lon: Double, lat: Double, level: Int): Long =
     S2CellId.cellId(lon, lat, level)
@@ -177,259 +177,81 @@ object GeoKernels {
   }
 }
 
-/** Shared base for codegen-able scalar geo expressions: children evaluated,
-  * then one static call into GeoKernels. Declares input types so the
-  * analyzer coerces SQL arguments (e.g. a BIGINT level literal) instead of
-  * crashing codegen / interpreted eval with a ClassCastException. */
-abstract class GeoStaticCall extends Expression
-    with org.apache.spark.sql.graftbridge.PublicInputTypes {
-  def staticCall: String // e.g. "s2Cell"
-  override def nullable: Boolean = children.exists(_.nullable)
+/** Expression-level builders of the geo kernels, shared by the Column API
+  * (GeoFunctions) and the SQL surface (GraftExtensions). Each is one
+  * `StaticInvoke` of a GeoKernels method: the declared input types make the
+  * analyzer coerce SQL arguments (e.g. integer lon/lat literals), a null
+  * argument gives null, and the result is nullable exactly when an
+  * argument is. */
+object GeoExprs {
+  private def call(fn: String, dataType: DataType, args: Seq[Expression],
+                   inputTypes: DataType*): Expression =
+    StaticInvoke(GeoKernels.getClass, dataType, fn, args, inputTypes,
+      returnNullable = false)
 
-  protected def evalArgs(input: InternalRow): Array[Any] = {
-    val out = new Array[Any](children.length)
-    var i = 0
-    while (i < children.length) {
-      val v = children(i).eval(input)
-      if (v == null) return null
-      out(i) = v
-      i += 1
-    }
-    out
-  }
+  private def struct(fields: (String, DataType)*): StructType =
+    StructType(fields.map { case (n, t) => StructField(n, t, nullable = false) })
 
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val codes = children.map(_.genCode(ctx))
-    val kern = GeoKernels.getClass.getName + ".MODULE$"
-    val anyNull = codes.map(_.isNull).mkString(" || ")
-    val args = codes.map(_.value).mkString(", ")
-    val javaType = org.apache.spark.sql.catalyst.expressions.codegen.CodeGenerator.javaType(dataType)
-    val childCode = codes.map(_.code).reduce(_ + _)
-    val code =
-      code"""
-        $childCode
-        boolean ${ev.isNull} = $anyNull;
-        $javaType ${ev.value} = ${org.apache.spark.sql.catalyst.expressions.codegen.CodeGenerator.defaultValue(dataType)};
-        if (!${ev.isNull}) {
-          ${ev.value} = $kern.$staticCall($args);
-        }
-      """
-    ev.copy(code = code)
-  }
-}
+  private val hexType = struct("q" -> IntegerType, "r" -> IntegerType)
+  private val ringType = ArrayType(DoubleType)
 
-case class S2CellExpr(lon: Expression, lat: Expression, level: Expression)
-    extends GeoStaticCall {
-  override def children: Seq[Expression] = Seq(lon, lat, level)
-  override def inputSpec: Seq[DataType] = Seq(DoubleType, DoubleType, IntegerType)
-  override def dataType: DataType = LongType
-  override def staticCall: String = "s2Cell"
-  override def eval(input: InternalRow): Any = {
-    val a = evalArgs(input)
-    if (a == null) null
-    else GeoKernels.s2Cell(a(0).asInstanceOf[Double], a(1).asInstanceOf[Double],
-      a(2).asInstanceOf[Int])
-  }
-  override protected def withNewChildrenInternal(c: IndexedSeq[Expression]): Expression =
-    copy(c(0), c(1), c(2))
-}
+  def s2Cell(lon: Expression, lat: Expression, level: Expression): Expression =
+    call("s2Cell", LongType, Seq(lon, lat, level), DoubleType, DoubleType, IntegerType)
 
-case class TileKeyExpr(lon: Expression, lat: Expression, z: Expression)
-    extends GeoStaticCall {
-  override def children: Seq[Expression] = Seq(lon, lat, z)
-  override def inputSpec: Seq[DataType] = Seq(DoubleType, DoubleType, IntegerType)
-  override def dataType: DataType = LongType
-  override def staticCall: String = "tileKey"
-  override def eval(input: InternalRow): Any = {
-    val a = evalArgs(input)
-    if (a == null) null
-    else GeoKernels.tileKey(a(0).asInstanceOf[Double], a(1).asInstanceOf[Double],
-      a(2).asInstanceOf[Int])
-  }
-  override protected def withNewChildrenInternal(c: IndexedSeq[Expression]): Expression =
-    copy(c(0), c(1), c(2))
-}
+  def tileKey(lon: Expression, lat: Expression, z: Expression): Expression =
+    call("tileKey", LongType, Seq(lon, lat, z), DoubleType, DoubleType, IntegerType)
 
-case class UtmZoneExpr(lon: Expression) extends GeoStaticCall {
-  override def children: Seq[Expression] = Seq(lon)
-  override def inputSpec: Seq[DataType] = Seq(DoubleType)
-  override def dataType: DataType = IntegerType
-  override def staticCall: String = "utmZone"
-  override def eval(input: InternalRow): Any = {
-    val a = evalArgs(input)
-    if (a == null) null else GeoKernels.utmZone(a(0).asInstanceOf[Double])
-  }
-  override protected def withNewChildrenInternal(c: IndexedSeq[Expression]): Expression =
-    copy(c(0))
-}
+  def utmZone(lon: Expression): Expression =
+    call("utmZone", IntegerType, Seq(lon), DoubleType)
 
-case class GeodesicDistExpr(lon1: Expression, lat1: Expression,
-                            lon2: Expression, lat2: Expression)
-    extends GeoStaticCall {
-  override def children: Seq[Expression] = Seq(lon1, lat1, lon2, lat2)
-  override def inputSpec: Seq[DataType] = Seq(DoubleType, DoubleType, DoubleType, DoubleType)
-  override def dataType: DataType = DoubleType
-  override def staticCall: String = "geodesicDist"
-  override def eval(input: InternalRow): Any = {
-    val a = evalArgs(input)
-    if (a == null) null
-    else GeoKernels.geodesicDist(a(0).asInstanceOf[Double], a(1).asInstanceOf[Double],
-      a(2).asInstanceOf[Double], a(3).asInstanceOf[Double])
-  }
-  override protected def withNewChildrenInternal(c: IndexedSeq[Expression]): Expression =
-    copy(c(0), c(1), c(2), c(3))
-}
+  def geodesicDistance(lon1: Expression, lat1: Expression,
+                       lon2: Expression, lat2: Expression): Expression =
+    call("geodesicDist", DoubleType, Seq(lon1, lat1, lon2, lat2),
+      DoubleType, DoubleType, DoubleType, DoubleType)
 
-case class S2FaceUvExpr(lon: Expression, lat: Expression) extends GeoStaticCall {
-  override def children: Seq[Expression] = Seq(lon, lat)
-  override def inputSpec: Seq[DataType] = Seq(DoubleType, DoubleType)
-  override def dataType: DataType = StructType(Seq(
-    StructField("face", IntegerType, nullable = false),
-    StructField("u", DoubleType, nullable = false),
-    StructField("v", DoubleType, nullable = false)))
-  override def staticCall: String = "s2FaceUv"
-  override def eval(input: InternalRow): Any = {
-    val a = evalArgs(input)
-    if (a == null) null
-    else GeoKernels.s2FaceUv(a(0).asInstanceOf[Double], a(1).asInstanceOf[Double])
-  }
-  override protected def withNewChildrenInternal(c: IndexedSeq[Expression]): Expression =
-    copy(c(0), c(1))
-}
+  def pointInRing(lon: Expression, lat: Expression, ring: Expression): Expression =
+    call("pointInRing", BooleanType, Seq(lon, lat, ring), DoubleType, DoubleType, ringType)
 
-case class RingCellsExpr(lon: Expression, lat: Expression,
-                         level: Expression, rings: Expression)
-    extends GeoStaticCall {
-  override def children: Seq[Expression] = Seq(lon, lat, level, rings)
-  override def inputSpec: Seq[DataType] = Seq(DoubleType, DoubleType, IntegerType, IntegerType)
-  override def dataType: DataType = ArrayType(LongType, containsNull = false)
-  override def staticCall: String = "ringCells"
-  override def eval(input: InternalRow): Any = {
-    val a = evalArgs(input)
-    if (a == null) null
-    else GeoKernels.ringCells(a(0).asInstanceOf[Double], a(1).asInstanceOf[Double],
-      a(2).asInstanceOf[Int], a(3).asInstanceOf[Int])
-  }
-  override protected def withNewChildrenInternal(c: IndexedSeq[Expression]): Expression =
-    copy(c(0), c(1), c(2), c(3))
-}
+  def s2FaceUv(lon: Expression, lat: Expression): Expression =
+    call("s2FaceUv", struct("face" -> IntegerType, "u" -> DoubleType, "v" -> DoubleType),
+      Seq(lon, lat), DoubleType, DoubleType)
 
-case class GeodesicWaypointsExpr(lon1: Expression, lat1: Expression,
-                                 lon2: Expression, lat2: Expression,
-                                 n: Expression) extends GeoStaticCall {
-  override def children: Seq[Expression] = Seq(lon1, lat1, lon2, lat2, n)
-  override def inputSpec: Seq[DataType] = Seq(DoubleType, DoubleType, DoubleType, DoubleType, IntegerType)
-  override def dataType: DataType = ArrayType(DoubleType, containsNull = false)
-  override def staticCall: String = "geodesicWaypoints"
-  override def eval(input: InternalRow): Any = {
-    val a = evalArgs(input)
-    if (a == null) null
-    else GeoKernels.geodesicWaypoints(a(0).asInstanceOf[Double], a(1).asInstanceOf[Double],
-      a(2).asInstanceOf[Double], a(3).asInstanceOf[Double], a(4).asInstanceOf[Int])
-  }
-  override protected def withNewChildrenInternal(c: IndexedSeq[Expression]): Expression =
-    copy(c(0), c(1), c(2), c(3), c(4))
-}
+  def ringCells(lon: Expression, lat: Expression, level: Expression,
+                rings: Expression): Expression =
+    call("ringCells", ArrayType(LongType, containsNull = false),
+      Seq(lon, lat, level, rings), DoubleType, DoubleType, IntegerType, IntegerType)
 
-case class PolygonMetricsExpr(ring: Expression) extends GeoStaticCall {
-  override def children: Seq[Expression] = Seq(ring)
-  override def inputSpec: Seq[DataType] = Seq(ArrayType(DoubleType))
-  override def dataType: DataType = StructType(Seq(
-    StructField("perimeter_m", DoubleType, nullable = false),
-    StructField("area_m2", DoubleType, nullable = false)))
-  override def staticCall: String = "polygonMetrics"
-  override def eval(input: InternalRow): Any = {
-    val a = evalArgs(input)
-    if (a == null) null
-    else GeoKernels.polygonMetrics(a(0).asInstanceOf[ArrayData])
-  }
-  override protected def withNewChildrenInternal(c: IndexedSeq[Expression]): Expression =
-    copy(c(0))
-}
+  def coverCells(ring: Expression, level: Expression): Expression =
+    call("coverCells", ArrayType(LongType, containsNull = false), Seq(ring, level),
+      ringType, IntegerType)
 
-case class CoverCellsExpr(ring: Expression, level: Expression)
-    extends GeoStaticCall {
-  override def children: Seq[Expression] = Seq(ring, level)
-  override def inputSpec: Seq[DataType] = Seq(ArrayType(DoubleType), IntegerType)
-  override def dataType: DataType = ArrayType(LongType, containsNull = false)
-  override def staticCall: String = "coverCells"
-  override def eval(input: InternalRow): Any = {
-    val a = evalArgs(input)
-    if (a == null) null
-    else GeoKernels.coverCells(a(0).asInstanceOf[ArrayData], a(1).asInstanceOf[Int])
-  }
-  override protected def withNewChildrenInternal(c: IndexedSeq[Expression]): Expression =
-    copy(c(0), c(1))
-}
+  def polygonMetrics(ring: Expression): Expression =
+    call("polygonMetrics", struct("perimeter_m" -> DoubleType, "area_m2" -> DoubleType),
+      Seq(ring), ringType)
 
-case class PointInRingExpr(lon: Expression, lat: Expression, ring: Expression)
-    extends GeoStaticCall {
-  override def children: Seq[Expression] = Seq(lon, lat, ring)
-  override def inputSpec: Seq[DataType] = Seq(DoubleType, DoubleType, ArrayType(DoubleType))
-  override def dataType: DataType = BooleanType
-  override def staticCall: String = "pointInRing"
-  override def eval(input: InternalRow): Any = {
-    val a = evalArgs(input)
-    if (a == null) null
-    else GeoKernels.pointInRing(a(0).asInstanceOf[Double], a(1).asInstanceOf[Double],
-      a(2).asInstanceOf[ArrayData])
-  }
-  override protected def withNewChildrenInternal(c: IndexedSeq[Expression]): Expression =
-    copy(c(0), c(1), c(2))
-}
+  def geodesicWaypoints(lon1: Expression, lat1: Expression, lon2: Expression,
+                        lat2: Expression, n: Expression): Expression =
+    call("geodesicWaypoints", ArrayType(DoubleType, containsNull = false),
+      Seq(lon1, lat1, lon2, lat2, n),
+      DoubleType, DoubleType, DoubleType, DoubleType, IntegerType)
 
-case class HexBinExpr(x: Expression, y: Expression, size: Expression)
-    extends GeoStaticCall {
-  override def children: Seq[Expression] = Seq(x, y, size)
-  override def inputSpec: Seq[DataType] = Seq(DoubleType, DoubleType, DoubleType)
-  override def dataType: DataType = StructType(Seq(
-    StructField("q", IntegerType, nullable = false),
-    StructField("r", IntegerType, nullable = false)))
-  override def staticCall: String = "hexBin"
-  override def eval(input: InternalRow): Any = {
-    val a = evalArgs(input)
-    if (a == null) null
-    else GeoKernels.hexBin(a(0).asInstanceOf[Double], a(1).asInstanceOf[Double],
-      a(2).asInstanceOf[Double])
-  }
-  override protected def withNewChildrenInternal(c: IndexedSeq[Expression]): Expression =
-    copy(c(0), c(1), c(2))
-}
+  def hexBin(x: Expression, y: Expression, size: Expression): Expression =
+    call("hexBin", hexType, Seq(x, y, size), DoubleType, DoubleType, DoubleType)
 
-case class HexCenterExpr(q: Expression, r: Expression, size: Expression)
-    extends GeoStaticCall {
-  override def children: Seq[Expression] = Seq(q, r, size)
-  override def inputSpec: Seq[DataType] = Seq(IntegerType, IntegerType, DoubleType)
-  override def dataType: DataType = StructType(Seq(
-    StructField("x", DoubleType, nullable = false),
-    StructField("y", DoubleType, nullable = false)))
-  override def staticCall: String = "hexCenter"
-  override def eval(input: InternalRow): Any = {
-    val a = evalArgs(input)
-    if (a == null) null
-    else GeoKernels.hexCenter(a(0).asInstanceOf[Int], a(1).asInstanceOf[Int],
-      a(2).asInstanceOf[Double])
-  }
-  override protected def withNewChildrenInternal(c: IndexedSeq[Expression]): Expression =
-    copy(c(0), c(1), c(2))
-}
+  def hexCenter(q: Expression, r: Expression, size: Expression): Expression =
+    call("hexCenter", struct("x" -> DoubleType, "y" -> DoubleType), Seq(q, r, size),
+      IntegerType, IntegerType, DoubleType)
 
-case class HexRingExpr(q: Expression, r: Expression, rings: Expression)
-    extends GeoStaticCall {
-  override def children: Seq[Expression] = Seq(q, r, rings)
-  override def inputSpec: Seq[DataType] = Seq(IntegerType, IntegerType, IntegerType)
-  override def dataType: DataType = ArrayType(StructType(Seq(
-    StructField("q", IntegerType, nullable = false),
-    StructField("r", IntegerType, nullable = false))), containsNull = false)
-  override def staticCall: String = "hexRing"
-  override def eval(input: InternalRow): Any = {
-    val a = evalArgs(input)
-    if (a == null) null
-    else GeoKernels.hexRing(a(0).asInstanceOf[Int], a(1).asInstanceOf[Int],
-      a(2).asInstanceOf[Int])
+  def hexRing(q: Expression, r: Expression, rings: Expression): Expression =
+    call("hexRing", ArrayType(hexType, containsNull = false), Seq(q, r, rings),
+      IntegerType, IntegerType, IntegerType)
+
+  /** lon/lat → ISEA plane → hexBin; the one isea transform feeds both
+    * coordinates, so common-subexpression elimination runs it once. */
+  def globalHexCell(lon: Expression, lat: Expression, sizeM: Expression): Expression = {
+    val p = ProjExprs.projTrans2(lon, lat, "proj=isea ellps=WGS84")
+    hexBin(GetStructField(p, 0, Some("x")), GetStructField(p, 1, Some("y")), sizeM)
   }
-  override protected def withNewChildrenInternal(c: IndexedSeq[Expression]): Expression =
-    copy(c(0), c(1), c(2))
 }
 
 /** Column API for the geo expressions. */
@@ -440,56 +262,56 @@ object GeoFunctions {
 
   /** S2 cell id at `level` from lon/lat degree columns. */
   def s2Cell(lon: Column, lat: Column, level: Column): Column =
-    col(S2CellExpr(ex(lon), ex(lat), ex(level)))
+    col(GeoExprs.s2Cell(ex(lon), ex(lat), ex(level)))
 
   /** packed web-mercator tile key (z | x | y). */
   def tileKey(lon: Column, lat: Column, z: Column): Column =
-    col(TileKeyExpr(ex(lon), ex(lat), ex(z)))
+    col(GeoExprs.tileKey(ex(lon), ex(lat), ex(z)))
 
   /** UTM zone 1..60 inferred from longitude (reference tmerc.cpp:656-662). */
-  def utmZone(lon: Column): Column = col(UtmZoneExpr(ex(lon)))
+  def utmZone(lon: Column): Column = col(GeoExprs.utmZone(ex(lon)))
 
   /** Karney geodesic distance in metres on WGS84 between two lon/lat pairs. */
   def geodesicDistance(lon1: Column, lat1: Column, lon2: Column, lat2: Column): Column =
-    col(GeodesicDistExpr(ex(lon1), ex(lat1), ex(lon2), ex(lat2)))
+    col(GeoExprs.geodesicDistance(ex(lon1), ex(lat1), ex(lon2), ex(lat2)))
 
   /** exact even-odd point-in-polygon over a flat [lon,lat,...] ring array. */
   def pointInRing(lon: Column, lat: Column, ring: Column): Column =
-    col(PointInRingExpr(ex(lon), ex(lat), ex(ring)))
+    col(GeoExprs.pointInRing(ex(lon), ex(lat), ex(ring)))
 
   /** S2 face + (u,v) face coordinates: struct(face, u, v). */
   def s2FaceUv(lon: Column, lat: Column): Column =
-    col(S2FaceUvExpr(ex(lon), ex(lat)))
+    col(GeoExprs.s2FaceUv(ex(lon), ex(lat)))
 
   /** array of the point's cell and its `rings` neighbor rings at `level`. */
   def ringCells(lon: Column, lat: Column, level: Column, rings: Column): Column =
-    col(RingCellsExpr(ex(lon), ex(lat), ex(level), ex(rings)))
+    col(GeoExprs.ringCells(ex(lon), ex(lat), ex(level), ex(rings)))
 
   /** S2 cover of a flat-ring polygon's bbox at `level` (executor-side). */
   def coverCells(ring: Column, level: Column): Column =
-    col(CoverCellsExpr(ex(ring), ex(level)))
+    col(GeoExprs.coverCells(ex(ring), ex(level)))
 
   /** geodesic perimeter + area of a flat [lon,lat,...] ring on WGS84:
     * struct(perimeter_m, area_m2); counter-clockwise area is positive. */
-  def polygonMetrics(ring: Column): Column = col(PolygonMetricsExpr(ex(ring)))
+  def polygonMetrics(ring: Column): Column = col(GeoExprs.polygonMetrics(ex(ring)))
 
   /** n+1 equally-spaced waypoints along the WGS84 geodesic between two
     * lon/lat points, as a flat [lon,lat,...] array. */
   def geodesicWaypoints(lon1: Column, lat1: Column,
                         lon2: Column, lat2: Column, n: Column): Column =
-    col(GeodesicWaypointsExpr(ex(lon1), ex(lat1), ex(lon2), ex(lat2), ex(n)))
+    col(GeoExprs.geodesicWaypoints(ex(lon1), ex(lat1), ex(lon2), ex(lat2), ex(n)))
 
   /** flat-top axial hex bin of plane (x, y) at `size`: struct(q, r). */
   def hexBin(x: Column, y: Column, size: Column): Column =
-    col(HexBinExpr(ex(x), ex(y), ex(size)))
+    col(GeoExprs.hexBin(ex(x), ex(y), ex(size)))
 
   /** center (x, y) of axial hex (q, r) at `size`: struct(x, y). */
   def hexCenter(q: Column, r: Column, size: Column): Column =
-    col(HexCenterExpr(ex(q), ex(r), ex(size)))
+    col(GeoExprs.hexCenter(ex(q), ex(r), ex(size)))
 
   /** all hexes within `rings` grid steps of (q, r): array<struct<q, r>>. */
   def hexRing(q: Column, r: Column, rings: Column): Column =
-    col(HexRingExpr(ex(q), ex(r), ex(rings)))
+    col(GeoExprs.hexRing(ex(q), ex(r), ex(rings)))
 
   /** Global equal-area hex cell: lon/lat → ISEA (icosahedral Snyder
     * equal-area, the published substrate of H3-style grids; gie-verified
@@ -497,10 +319,8 @@ object GeoFunctions {
     * cells over the whole globe — the honest H3 alternative (reference
     * src/projections/isea.cpp:962). `sizeM` is the hex circumradius in
     * ISEA plane metres. */
-  def globalHexCell(lon: Column, lat: Column, sizeM: Column): Column = {
-    val p = ProjFunctions.projTrans2(lon, lat, "proj=isea ellps=WGS84")
-    hexBin(p.getField("x"), p.getField("y"), sizeM)
-  }
+  def globalHexCell(lon: Column, lat: Column, sizeM: Column): Column =
+    col(GeoExprs.globalHexCell(ex(lon), ex(lat), ex(sizeM)))
 
   /** full proj pipeline transform — re-export for one-stop import. */
   def projTrans2(lon: Column, lat: Column, pipeline: String): Column =

@@ -2,16 +2,16 @@ package graft.spark
 
 import org.apache.spark.sql.Column
 import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.catalyst.expressions._
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodeGenerator, CodegenContext, ExprCode}
-import org.apache.spark.sql.catalyst.expressions.codegen.Block._
+import org.apache.spark.sql.catalyst.expressions.{Expression, GenericInternalRow}
+import org.apache.spark.sql.catalyst.expressions.objects.StaticInvoke
 import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
 import org.apache.spark.sql.types._
 import org.apache.spark.unsafe.types.UTF8String
 
-/** Static per-row media kernels reached from generated code — the
-  * binary→struct decode/featurize functions behind the multimodal column
-  * path. These are pure functions of the payload bytes, so they live in
+/** Static per-row media kernels, reached from Catalyst through the
+  * `StaticInvoke`s built by MediaExprs — the binary→struct
+  * decode/featurize functions behind the multimodal column path. These
+  * are pure functions of the payload bytes, so they live in
   * whole-stage codegen as ordinary Catalyst expressions (the engine's
   * zero-UDF discipline: no ScalaUDF, no typed mapPartitions with its
   * DeserializeToObject/SerializeFromObject serialization fence).
@@ -76,10 +76,12 @@ object MediaKernels {
     }
 
   /** deterministic baseline JPEG for the content-deep check: dimensions
-    * and DC stream derived from the seed (see MediaCodecs). */
+    * (8..48 px, also for a negative seed) and DC stream derived from the
+    * seed (see MediaCodecs). */
   def encodeJpegForSeed(seed: Long): Array[Byte] =
     MediaCodecs.encodeJpegBaseline(
-      8 * (1 + (seed % 6)).toInt, 8 * (1 + ((seed * 5) % 6)).toInt, seed)
+      8 * (1 + Math.floorMod(seed, 6L)).toInt, 8 * (1 + Math.floorMod(seed * 5, 6L)).toInt,
+      seed)
 
   /** full-content JPEG check: Huffman entropy decode + dequant + IDCT,
     * then fold (n_px, px_sum, px_poly); null when the payload doesn't
@@ -102,7 +104,8 @@ object MediaKernels {
     * check: dimensions and coefficient stream derived from the seed. */
   def encodeJpegProgForSeed(seed: Long): Array[Byte] =
     MediaCodecs.encodeJpegProgressive(
-      8 * (1 + (seed % 6)).toInt, 8 * (1 + ((seed * 7) % 6)).toInt, seed)
+      8 * (1 + Math.floorMod(seed, 6L)).toInt, 8 * (1 + Math.floorMod(seed * 7, 6L)).toInt,
+      seed)
 
   /** full-content progressive-JPEG check: multi-scan coefficient
     * accumulation + IDCT, then fold (n_px, px_sum, px_poly, px_chk) where
@@ -174,8 +177,10 @@ object MediaKernels {
 
   /** content-deep resize check: decode a grayscale JPEG, area-average
     * downscale by `factor`, fold (n_px, px_sum, px_poly) over the resized
-    * plane. Null when the payload doesn't decode to a grayscale plane. */
+    * plane. Null when the payload doesn't decode to a grayscale plane, or
+    * when `factor` is below 1 or above Int.MaxValue. */
   def jpegResizeStats(payload: Array[Byte], factor: Long): InternalRow = {
+    if (factor < 1 || factor > Int.MaxValue) return null
     val info = MediaCodecs.decodeJpeg(payload) match {
       case Some(i) if i.width > 0 && i.height > 0 => i
       case _ => return null
@@ -216,237 +221,62 @@ object MediaKernels {
     }
 }
 
-/** Codegen base for the media kernels: like GeoStaticCall, but a static
-  * call returning an OBJECT may return null for undecodable payloads —
-  * the generated code re-checks nullness after the call. A primitive
-  * return (long, int, ...) is never null, so it gets no re-check. */
-abstract class MediaStaticCall extends Expression
-    with org.apache.spark.sql.graftbridge.PublicInputTypes {
-  def staticCall: String
-  /** fully-qualified kernel object the generated code calls into;
-    * subclasses outside the media family override this. */
-  def kernelObject: String = MediaKernels.getClass.getName + ".MODULE$"
-  override def nullable: Boolean = true
+/** Expression-level builders of the media kernels, one `StaticInvoke` of a
+  * MediaKernels method each. Every result is declared nullable: a payload
+  * that does not decode gives null, and a null argument gives null. */
+object MediaExprs {
+  private def call(fn: String, dataType: DataType, args: Seq[Expression],
+                   inputTypes: DataType*): Expression =
+    StaticInvoke(MediaKernels.getClass, dataType, fn, args, inputTypes)
 
-  protected def evalArgs(input: InternalRow): Array[Any] = {
-    val out = new Array[Any](children.length)
-    var i = 0
-    while (i < children.length) {
-      val v = children(i).eval(input)
-      if (v == null) return null
-      out(i) = v
-      i += 1
-    }
-    out
-  }
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val codes = children.map(_.genCode(ctx))
-    val kern = kernelObject
-    val anyNull = codes.map(_.isNull).mkString(" || ")
-    val args = codes.map(_.value).mkString(", ")
-    val javaType = CodeGenerator.javaType(dataType)
-    val childCode = codes.map(_.code).reduce(_ + _)
-    val nullCheck =
-      if (CodeGenerator.isPrimitiveType(dataType)) ""
-      else s"${ev.isNull} = ${ev.value} == null;"
-    val code =
-      code"""
-        $childCode
-        boolean ${ev.isNull} = $anyNull;
-        $javaType ${ev.value} = ${CodeGenerator.defaultValue(dataType)};
-        if (!${ev.isNull}) {
-          ${ev.value} = $kern.$staticCall($args);
-          $nullCheck
-        }
-      """
-    ev.copy(code = code)
-  }
-}
-
-/** binary payload synthesized from an integer seed (blob-fetch stand-in). */
-case class MediaEncodeExpr(seed: Expression) extends MediaStaticCall {
-  override def children: Seq[Expression] = Seq(seed)
-  override def inputSpec: Seq[DataType] = Seq(LongType)
-  override def dataType: DataType = BinaryType
-  override def staticCall: String = "encodeForSeed"
-  override def eval(input: InternalRow): Any = {
-    val a = evalArgs(input)
-    if (a == null) null else MediaKernels.encodeForSeed(a(0).asInstanceOf[Long])
-  }
-  override protected def withNewChildrenInternal(c: IndexedSeq[Expression]): Expression =
-    copy(c(0))
-}
-
-/** binary payload synthesized from a media_ref string. */
-case class MediaEncodeRefExpr(ref: Expression) extends MediaStaticCall {
-  override def children: Seq[Expression] = Seq(ref)
-  override def inputSpec: Seq[DataType] = Seq(StringType)
-  override def dataType: DataType = BinaryType
-  override def staticCall: String = "encodeForRef"
-  override def eval(input: InternalRow): Any = {
-    val a = evalArgs(input)
-    if (a == null) null else MediaKernels.encodeForRef(a(0).asInstanceOf[UTF8String])
-  }
-  override protected def withNewChildrenInternal(c: IndexedSeq[Expression]): Expression =
-    copy(c(0))
-}
-
-object MediaInfoExpr {
-  val schema: StructType = StructType(Seq(
+  private val infoType: StructType = StructType(Seq(
     StructField("kind", StringType),
     StructField("width", IntegerType, nullable = false),
     StructField("height", IntegerType, nullable = false),
     StructField("sample_rate", IntegerType, nullable = false),
     StructField("channels", IntegerType, nullable = false)))
-}
 
-/** header decode: binary → struct(kind, width, height, sample_rate,
-  * channels), null when the payload parses as none of PNG/WAV/JPEG. */
-case class MediaInfoExpr(payload: Expression) extends MediaStaticCall {
-  override def children: Seq[Expression] = Seq(payload)
-  override def inputSpec: Seq[DataType] = Seq(BinaryType)
-  override def dataType: DataType = MediaInfoExpr.schema
-  override def staticCall: String = "mediaInfo"
-  override def eval(input: InternalRow): Any = {
-    val a = evalArgs(input)
-    if (a == null) null else MediaKernels.mediaInfo(a(0).asInstanceOf[Array[Byte]])
-  }
-  override protected def withNewChildrenInternal(c: IndexedSeq[Expression]): Expression =
-    copy(c(0))
-}
+  /** (n_<p>, <p>_sum, <p>_poly, extra...) longs; the PNG and WAV folds
+    * declare their fields non-null, the JPEG folds nullable. */
+  private def statsType(prefix: String, nullable: Boolean, extra: String*): StructType =
+    StructType((Seq(s"n_$prefix", s"${prefix}_sum", s"${prefix}_poly") ++ extra)
+      .map(StructField(_, LongType, nullable)))
 
-/** L2-normalized byte-histogram feature vector of a binary payload. */
-case class MediaFeatureExpr(payload: Expression, dim: Expression)
-    extends MediaStaticCall {
-  override def children: Seq[Expression] = Seq(payload, dim)
-  override def inputSpec: Seq[DataType] = Seq(BinaryType, IntegerType)
-  override def dataType: DataType = ArrayType(FloatType, containsNull = false)
-  override def staticCall: String = "featurize"
-  override def eval(input: InternalRow): Any = {
-    val a = evalArgs(input)
-    if (a == null) null
-    else MediaKernels.featurize(a(0).asInstanceOf[Array[Byte]], a(1).asInstanceOf[Int])
-  }
-  override protected def withNewChildrenInternal(c: IndexedSeq[Expression]): Expression =
-    copy(c(0), c(1))
-}
+  def mediaEncode(seed: Expression): Expression =
+    call("encodeForSeed", BinaryType, Seq(seed), LongType)
 
-object MediaStatsSchema {
-  def apply(prefix: String): StructType = StructType(Seq(
-    StructField(s"n_$prefix", LongType, nullable = false),
-    StructField(s"${prefix}_sum", LongType, nullable = false),
-    StructField(s"${prefix}_poly", LongType, nullable = false)))
-}
+  def mediaEncodeRef(ref: Expression): Expression =
+    call("encodeForRef", BinaryType, Seq(ref), StringType)
 
-/** content-deep PNG stats: inflate + un-filter, fold (n_px, px_sum,
-  * px_poly) over every recovered pixel byte. */
-case class PngPixelStatsExpr(payload: Expression) extends MediaStaticCall {
-  override def children: Seq[Expression] = Seq(payload)
-  override def inputSpec: Seq[DataType] = Seq(BinaryType)
-  override def dataType: DataType = MediaStatsSchema("px")
-  override def staticCall: String = "pngPixelStats"
-  override def eval(input: InternalRow): Any = {
-    val a = evalArgs(input)
-    if (a == null) null else MediaKernels.pngPixelStats(a(0).asInstanceOf[Array[Byte]])
-  }
-  override protected def withNewChildrenInternal(c: IndexedSeq[Expression]): Expression =
-    copy(c(0))
-}
+  def mediaInfo(payload: Expression): Expression =
+    call("mediaInfo", infoType, Seq(payload), BinaryType)
 
-/** content-deep WAV stats: data-chunk walk + LE int16 decode, fold
-  * (n_smp, smp_sum, smp_poly) over every sample. */
-case class WavSampleStatsExpr(payload: Expression) extends MediaStaticCall {
-  override def children: Seq[Expression] = Seq(payload)
-  override def inputSpec: Seq[DataType] = Seq(BinaryType)
-  override def dataType: DataType = MediaStatsSchema("smp")
-  override def staticCall: String = "wavSampleStats"
-  override def eval(input: InternalRow): Any = {
-    val a = evalArgs(input)
-    if (a == null) null else MediaKernels.wavSampleStats(a(0).asInstanceOf[Array[Byte]])
-  }
-  override protected def withNewChildrenInternal(c: IndexedSeq[Expression]): Expression =
-    copy(c(0))
-}
+  def mediaFeature(payload: Expression, dim: Expression): Expression =
+    call("featurize", ArrayType(FloatType, containsNull = false), Seq(payload, dim),
+      BinaryType, IntegerType)
 
-/** deterministic baseline JPEG payload from a seed */
-case class MediaEncodeJpegExpr(seed: Expression) extends MediaStaticCall {
-  override def children: Seq[Expression] = Seq(seed)
-  override def inputSpec: Seq[DataType] = Seq(LongType)
-  override def dataType: DataType = BinaryType
-  override def staticCall: String = "encodeJpegForSeed"
-  override def eval(input: InternalRow): Any = {
-    val a = evalArgs(input)
-    if (a == null) null else MediaKernels.encodeJpegForSeed(a(0).asInstanceOf[Long])
-  }
-  override protected def withNewChildrenInternal(c: IndexedSeq[Expression]): Expression =
-    copy(c(0))
-}
+  def pngPixelStats(payload: Expression): Expression =
+    call("pngPixelStats", statsType("px", nullable = false), Seq(payload), BinaryType)
 
-/** content-deep JPEG stats: entropy decode + IDCT, fold (n, sum, poly) */
-case class JpegPixelStatsExpr(payload: Expression) extends MediaStaticCall {
-  override def children: Seq[Expression] = Seq(payload)
-  override def inputSpec: Seq[DataType] = Seq(BinaryType)
-  override def dataType: DataType = StructType(Seq(
-    StructField("n_px", LongType), StructField("px_sum", LongType),
-    StructField("px_poly", LongType)))
-  override def staticCall: String = "jpegPixelStats"
-  override def eval(input: InternalRow): Any = {
-    val a = evalArgs(input)
-    if (a == null) null else MediaKernels.jpegPixelStats(a(0).asInstanceOf[Array[Byte]])
-  }
-  override protected def withNewChildrenInternal(c: IndexedSeq[Expression]): Expression =
-    copy(c(0))
-}
+  def wavSampleStats(payload: Expression): Expression =
+    call("wavSampleStats", statsType("smp", nullable = false), Seq(payload), BinaryType)
 
-case class MediaEncodeJpegProgExpr(seed: Expression) extends MediaStaticCall {
-  override def children: Seq[Expression] = Seq(seed)
-  override def inputSpec: Seq[DataType] = Seq(LongType)
-  override def dataType: DataType = BinaryType
-  override def staticCall: String = "encodeJpegProgForSeed"
-  override def eval(input: InternalRow): Any = {
-    val a = evalArgs(input)
-    if (a == null) null else MediaKernels.encodeJpegProgForSeed(a(0).asInstanceOf[Long])
-  }
-  override protected def withNewChildrenInternal(c: IndexedSeq[Expression]): Expression =
-    copy(c(0))
-}
+  def mediaEncodeJpeg(seed: Expression): Expression =
+    call("encodeJpegForSeed", BinaryType, Seq(seed), LongType)
 
-/** content-deep progressive-JPEG stats: multi-scan §G decode + IDCT, fold
-  * (n, sum, poly, chk) — chk uses a quadratic in-block weight that sees
-  * the AC coefficients. */
-case class JpegPixelStatsProgExpr(payload: Expression) extends MediaStaticCall {
-  override def children: Seq[Expression] = Seq(payload)
-  override def inputSpec: Seq[DataType] = Seq(BinaryType)
-  override def dataType: DataType = StructType(Seq(
-    StructField("n_px", LongType), StructField("px_sum", LongType),
-    StructField("px_poly", LongType), StructField("px_chk", LongType)))
-  override def staticCall: String = "jpegPixelStatsProg"
-  override def eval(input: InternalRow): Any = {
-    val a = evalArgs(input)
-    if (a == null) null else MediaKernels.jpegPixelStatsProg(a(0).asInstanceOf[Array[Byte]])
-  }
-  override protected def withNewChildrenInternal(c: IndexedSeq[Expression]): Expression =
-    copy(c(0))
-}
+  def jpegPixelStats(payload: Expression): Expression =
+    call("jpegPixelStats", statsType("px", nullable = true), Seq(payload), BinaryType)
 
-/** content-deep resize stats: decode + area-average downscale + fold */
-case class JpegResizeStatsExpr(payload: Expression, factor: Expression)
-    extends MediaStaticCall {
-  override def children: Seq[Expression] = Seq(payload, factor)
-  override def inputSpec: Seq[DataType] = Seq(BinaryType, LongType)
-  override def dataType: DataType = StructType(Seq(
-    StructField("n_px", LongType), StructField("px_sum", LongType),
-    StructField("px_poly", LongType)))
-  override def staticCall: String = "jpegResizeStats"
-  override def eval(input: InternalRow): Any = {
-    val a = evalArgs(input)
-    if (a == null) null
-    else MediaKernels.jpegResizeStats(a(0).asInstanceOf[Array[Byte]],
-      a(1).asInstanceOf[Long])
-  }
-  override protected def withNewChildrenInternal(c: IndexedSeq[Expression]): Expression =
-    copy(c(0), c(1))
+  def jpegResizeStats(payload: Expression, factor: Expression): Expression =
+    call("jpegResizeStats", statsType("px", nullable = true), Seq(payload, factor),
+      BinaryType, LongType)
+
+  def mediaEncodeJpegProg(seed: Expression): Expression =
+    call("encodeJpegProgForSeed", BinaryType, Seq(seed), LongType)
+
+  def jpegPixelStatsProg(payload: Expression): Expression =
+    call("jpegPixelStatsProg", statsType("px", nullable = true, "px_chk"), Seq(payload),
+      BinaryType)
 }
 
 /** Column API for the media expressions. */
@@ -456,39 +286,40 @@ object MediaFunctions {
   private def ex(c: Column): Expression = Bridge.expression(c)
 
   /** synthesized payload bytes from an integer seed. */
-  def mediaEncode(seed: Column): Column = col(MediaEncodeExpr(ex(seed)))
+  def mediaEncode(seed: Column): Column = col(MediaExprs.mediaEncode(ex(seed)))
 
   /** synthesized payload bytes from a media_ref string. */
-  def mediaEncodeRef(ref: Column): Column = col(MediaEncodeRefExpr(ex(ref)))
+  def mediaEncodeRef(ref: Column): Column = col(MediaExprs.mediaEncodeRef(ex(ref)))
 
   /** header decode struct (kind, width, height, sample_rate, channels). */
-  def mediaInfo(payload: Column): Column = col(MediaInfoExpr(ex(payload)))
+  def mediaInfo(payload: Column): Column = col(MediaExprs.mediaInfo(ex(payload)))
 
   /** L2-normalized byte-histogram feature vector. */
   def mediaFeature(payload: Column, dim: Column): Column =
-    col(MediaFeatureExpr(ex(payload), ex(dim)))
+    col(MediaExprs.mediaFeature(ex(payload), ex(dim)))
 
   /** PNG content stats struct (n_px, px_sum, px_poly). */
-  def pngPixelStats(payload: Column): Column = col(PngPixelStatsExpr(ex(payload)))
+  def pngPixelStats(payload: Column): Column = col(MediaExprs.pngPixelStats(ex(payload)))
 
   /** deterministic baseline JPEG payload from an integer seed. */
-  def mediaEncodeJpeg(seed: Column): Column = col(MediaEncodeJpegExpr(ex(seed)))
+  def mediaEncodeJpeg(seed: Column): Column = col(MediaExprs.mediaEncodeJpeg(ex(seed)))
 
   /** JPEG content stats struct (n_px, px_sum, px_poly). */
-  def jpegPixelStats(payload: Column): Column = col(JpegPixelStatsExpr(ex(payload)))
+  def jpegPixelStats(payload: Column): Column = col(MediaExprs.jpegPixelStats(ex(payload)))
 
-  /** resized-plane content stats (area-average downscale by factor). */
+  /** resized-plane content stats (area-average downscale by factor); null
+    * for a factor below 1 or above Int.MaxValue. */
   def jpegResizeStats(payload: Column, factor: Column): Column =
-    col(JpegResizeStatsExpr(ex(payload), ex(factor)))
+    col(MediaExprs.jpegResizeStats(ex(payload), ex(factor)))
 
   /** deterministic progressive (SOF2) JPEG payload from an integer seed. */
   def mediaEncodeJpegProg(seed: Column): Column =
-    col(MediaEncodeJpegProgExpr(ex(seed)))
+    col(MediaExprs.mediaEncodeJpegProg(ex(seed)))
 
   /** progressive-JPEG content stats struct (n_px, px_sum, px_poly, px_chk). */
   def jpegPixelStatsProg(payload: Column): Column =
-    col(JpegPixelStatsProgExpr(ex(payload)))
+    col(MediaExprs.jpegPixelStatsProg(ex(payload)))
 
   /** WAV content stats struct (n_smp, smp_sum, smp_poly). */
-  def wavSampleStats(payload: Column): Column = col(WavSampleStatsExpr(ex(payload)))
+  def wavSampleStats(payload: Column): Column = col(MediaExprs.wavSampleStats(ex(payload)))
 }

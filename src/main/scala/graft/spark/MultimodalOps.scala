@@ -44,7 +44,7 @@ object MultimodalOps {
   }
 
   /** Decode/feature-extract pass: pure binary→struct Catalyst expressions
-    * (MediaInfoExpr / MediaFeatureExpr), so the whole decode stays inside
+    * (MediaFunctions.mediaInfo / mediaFeature), so the whole decode stays inside
     * whole-stage codegen — no typed mapPartitions serialization fence.
     * Header fields come from real parsing; the feature vector is an
     * L2-normalized byte histogram of the payload. Unparseable payloads

@@ -2,9 +2,8 @@ package graft.spark
 
 import org.apache.spark.sql.Column
 import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.catalyst.expressions._
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
-import org.apache.spark.sql.catalyst.expressions.codegen.Block._
+import org.apache.spark.sql.catalyst.expressions.{Expression, Literal, SpecificInternalRow}
+import org.apache.spark.sql.catalyst.expressions.objects.Invoke
 import org.apache.spark.sql.types._
 import org.apache.spark.sql.functions.lit
 
@@ -47,8 +46,8 @@ object ProjPipeline {
   }
 }
 
-/** Row-level entry points called from generated code (one static call per
-  * row; constants live in the referenced ProjPipeline). */
+/** Row-level transform entry point (one call per row; constants live in
+  * the ProjPipeline), reached from Catalyst through ProjTransCall. */
 object ProjKernels {
   private val outType: StructType = StructType(Seq(
     StructField("x", DoubleType, nullable = false),
@@ -62,7 +61,7 @@ object ProjKernels {
   /** per-thread, per-EXPRESSION scratch: the dominant transform path
     * allocates nothing per row — a typed SpecificInternalRow avoids even
     * the Double boxing an Array[Any]-backed row would pay. The scratch is
-    * owned by the expression instance (not this object): two transform
+    * owned by the ProjTransCall instance (not this object): two transform
     * columns in one projection must not alias one row (consumers that
     * buffer the struct copy it — Spark's own UnsafeProjection reuse
     * contract covers the per-row reuse). */
@@ -179,57 +178,6 @@ object TransBoundsKernels {
   }
 }
 
-case class TransBoundsExpr(lonMin: Expression, latMin: Expression,
-                           lonMax: Expression, latMax: Expression,
-                           projString: String) extends Expression
-    with org.apache.spark.sql.graftbridge.PublicInputTypes {
-  @transient private lazy val pipeline = new ProjPipeline(projString)
-  @transient private lazy val scratch = new TransBoundsKernels.ScratchRef
-
-  override def children: Seq[Expression] = Seq(lonMin, latMin, lonMax, latMax)
-  override def inputSpec: Seq[DataType] = Seq(DoubleType, DoubleType, DoubleType, DoubleType)
-  override def dataType: DataType = TransBoundsKernels.resultType
-  override def nullable: Boolean = children.exists(_.nullable)
-
-  override def eval(input: InternalRow): Any = {
-    val vs = children.map(_.eval(input))
-    if (vs.contains(null)) null
-    else TransBoundsKernels.eval(pipeline, vs(0).asInstanceOf[Double],
-      vs(1).asInstanceOf[Double], vs(2).asInstanceOf[Double],
-      vs(3).asInstanceOf[Double], scratch)
-  }
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val pipeRef = ctx.addReferenceObj("projPipeline", pipeline, classOf[ProjPipeline].getName)
-    val scrRef = ctx.addReferenceObj("tbScratch", scratch,
-      classOf[TransBoundsKernels.ScratchRef].getName)
-    val cs = children.map(_.genCode(ctx))
-    val kern = TransBoundsKernels.getClass.getName + ".MODULE$"
-    val anyNull = cs.map(_.isNull).mkString(" || ")
-    val childCode = cs.map(_.code).reduce(_ + _)
-    val code =
-      code"""
-        $childCode
-        boolean ${ev.isNull} = $anyNull;
-        InternalRow ${ev.value} = null;
-        if (!${ev.isNull}) {
-          ${ev.value} = $kern.eval($pipeRef, ${cs(0).value}, ${cs(1).value},
-            ${cs(2).value}, ${cs(3).value}, $scrRef);
-        }
-      """
-    ev.copy(code = code)
-  }
-
-  override protected def withNewChildrenInternal(c: IndexedSeq[Expression]): Expression =
-    copy(c(0), c(1), c(2), c(3))
-}
-
-/** Per-row UTM zone dispatch: 120 precompiled pipelines (zone 1..60 ×
-  * north/south), selected per row from the point's inferred zone — the
-  * north-star "per-row zone inference for scattered points" wired all the
-  * way to the transform (reference zone logic src/projections/tmerc.cpp:
-  * 630-672). Pipelines are plan-time constants; PJs build lazily once per
-  * executor JVM via the ProjPipeline cache. */
 /** Per-row coordinate-operation dispatch — the reference's per-point
   * alternative-operation selection (src/trans.cpp pj_get_suggested_operation)
   * compiled into a column expression. Candidates are planned ONCE on the
@@ -394,51 +342,12 @@ object RegistryDispatchKernels {
   }
 }
 
-/** Catalyst expression: per-row registry dispatch (x, y in the source CRS's
-  * GIS units) -> struct(op, x, y, z). */
-case class CrsDispatchExpr(xExpr: Expression, yExpr: Expression,
-                           srcSpec: String, dstSpec: String) extends Expression
-    with org.apache.spark.sql.graftbridge.PublicInputTypes {
-  @transient private lazy val dispatch = new RegistryDispatch(srcSpec, dstSpec)
-  @transient private lazy val scratch = new RegistryDispatchKernels.ScratchRef
-
-  override def children: Seq[Expression] = Seq(xExpr, yExpr)
-  override def inputSpec: Seq[DataType] = Seq(DoubleType, DoubleType)
-  override def dataType: DataType = RegistryDispatchKernels.resultType
-  override def nullable: Boolean = children.exists(_.nullable)
-
-  override def eval(input: InternalRow): Any = {
-    val x = xExpr.eval(input); val y = yExpr.eval(input)
-    if (x == null || y == null) null
-    else RegistryDispatchKernels.eval(dispatch,
-      x.asInstanceOf[Double], y.asInstanceOf[Double], scratch)
-  }
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    // force driver-side planning so executors deserialize plain data
-    val dRef = ctx.addReferenceObj("crsDispatch", dispatch,
-      classOf[RegistryDispatch].getName)
-    val scrRef = ctx.addReferenceObj("dispScratch", scratch,
-      classOf[RegistryDispatchKernels.ScratchRef].getName)
-    val xC = xExpr.genCode(ctx); val yC = yExpr.genCode(ctx)
-    val kern = RegistryDispatchKernels.getClass.getName + ".MODULE$"
-    val code =
-      code"""
-        ${xC.code}
-        ${yC.code}
-        boolean ${ev.isNull} = ${xC.isNull} || ${yC.isNull};
-        InternalRow ${ev.value} = null;
-        if (!${ev.isNull}) {
-          ${ev.value} = $kern.eval($dRef, ${xC.value}, ${yC.value}, $scrRef);
-        }
-      """
-    ev.copy(code = code)
-  }
-
-  override protected def withNewChildrenInternal(newChildren: IndexedSeq[Expression]): Expression =
-    copy(xExpr = newChildren(0), yExpr = newChildren(1))
-}
-
+/** Per-row UTM zone dispatch: 120 precompiled pipelines (zone 1..60 ×
+  * north/south), selected per row from the point's inferred zone — the
+  * north-star "per-row zone inference for scattered points" wired all the
+  * way to the transform (reference zone logic src/projections/tmerc.cpp:
+  * 630-672). Pipelines are plan-time constants; PJs build lazily once per
+  * executor JVM via the ProjPipeline cache. */
 final class UtmDispatch(val ellps: String) extends Serializable {
   @transient private lazy val pipes: Array[ProjPipeline] = {
     val arr = new Array[ProjPipeline](120)
@@ -487,173 +396,105 @@ object UtmNativeKernels {
   }
 }
 
-/** Catalyst expression: (lonDeg, latDeg) -> struct(zone, south, x, y) in the
-  * point's own inferred UTM zone CRS. */
-case class UtmNativeExpr(lonExpr: Expression, latExpr: Expression,
-                         ellps: String) extends Expression
-    with org.apache.spark.sql.graftbridge.PublicInputTypes {
-  @transient private lazy val dispatch = new UtmDispatch(ellps)
-  @transient private lazy val scratch = new UtmNativeKernels.ScratchRef
-
-  override def children: Seq[Expression] = Seq(lonExpr, latExpr)
-  override def inputSpec: Seq[DataType] = Seq(DoubleType, DoubleType)
-  override def dataType: DataType = UtmNativeKernels.resultType
-  override def nullable: Boolean = children.exists(_.nullable)
-
-  override def eval(input: InternalRow): Any = {
-    val lon = lonExpr.eval(input); val lat = latExpr.eval(input)
-    if (lon == null || lat == null) null
-    else UtmNativeKernels.eval(dispatch, lon.asInstanceOf[Double],
-      lat.asInstanceOf[Double], scratch)
-  }
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val dRef = ctx.addReferenceObj("utmDispatch", dispatch, classOf[UtmDispatch].getName)
-    val scrRef = ctx.addReferenceObj("utmScratch", scratch,
-      classOf[UtmNativeKernels.ScratchRef].getName)
-    val lonC = lonExpr.genCode(ctx); val latC = latExpr.genCode(ctx)
-    val kern = UtmNativeKernels.getClass.getName + ".MODULE$"
-    val code =
-      code"""
-        ${lonC.code}
-        ${latC.code}
-        boolean ${ev.isNull} = ${lonC.isNull} || ${latC.isNull};
-        InternalRow ${ev.value} = null;
-        if (!${ev.isNull}) {
-          ${ev.value} = $kern.eval($dRef, ${lonC.value}, ${latC.value}, $scrRef);
-        }
-      """
-    ev.copy(code = code)
-  }
-
-  override protected def withNewChildrenInternal(newChildren: IndexedSeq[Expression]): Expression =
-    copy(lonExpr = newChildren(0), latExpr = newChildren(1))
+/** Invoke targets of the stateful proj kernels (built by ProjExprs). Each
+  * owns its pipeline or dispatch table and a per-thread scratch row, ships
+  * with the plan as an object literal, and is equal by its plan-time
+  * inputs: equal transforms are one common subexpression, while two
+  * transform columns each hold their own instance and never share a
+  * scratch row. */
+final case class ProjTransCall(projString: String, forward: Boolean, degIO: Boolean) {
+  private val pipeline = new ProjPipeline(projString)
+  private val scratch = new ProjKernels.ScratchRef
+  def eval(x: Double, y: Double, z: Double, t: Double): InternalRow =
+    ProjKernels.eval(pipeline, forward, degIO, x, y, z, t, scratch)
 }
 
-/** Catalyst expression: (lonDeg, latDeg) -> struct(h,k,s,omega,conv). */
-case class ProjFactorsExpr(lonExpr: Expression, latExpr: Expression,
-                           projString: String) extends Expression
-    with org.apache.spark.sql.graftbridge.PublicInputTypes {
-  @transient private lazy val pipeline = new ProjPipeline(projString)
-  @transient private lazy val scratch = new FactorsKernels.ScratchRef
-
-  override def children: Seq[Expression] = Seq(lonExpr, latExpr)
-  override def inputSpec: Seq[DataType] = Seq(DoubleType, DoubleType)
-  override def dataType: DataType = FactorsKernels.resultType
-  override def nullable: Boolean = children.exists(_.nullable)
-
-  override def eval(input: InternalRow): Any = {
-    val lon = lonExpr.eval(input); val lat = latExpr.eval(input)
-    if (lon == null || lat == null) null
-    else FactorsKernels.eval(pipeline, lon.asInstanceOf[Double],
-      lat.asInstanceOf[Double], scratch)
-  }
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val pipeRef = ctx.addReferenceObj("projPipeline", pipeline,
-      classOf[ProjPipeline].getName)
-    val scrRef = ctx.addReferenceObj("facScratch", scratch,
-      classOf[FactorsKernels.ScratchRef].getName)
-    val lonC = lonExpr.genCode(ctx); val latC = latExpr.genCode(ctx)
-    val kern = FactorsKernels.getClass.getName + ".MODULE$"
-    val code =
-      code"""
-        ${lonC.code}
-        ${latC.code}
-        boolean ${ev.isNull} = ${lonC.isNull} || ${latC.isNull};
-        InternalRow ${ev.value} = null;
-        if (!${ev.isNull}) {
-          ${ev.value} = $kern.eval($pipeRef, ${lonC.value}, ${latC.value}, $scrRef);
-        }
-      """
-    ev.copy(code = code)
-  }
-
-  override protected def withNewChildrenInternal(newChildren: IndexedSeq[Expression]): Expression =
-    copy(lonExpr = newChildren(0), latExpr = newChildren(1))
+final case class FactorsCall(projString: String) {
+  private val pipeline = new ProjPipeline(projString)
+  private val scratch = new FactorsKernels.ScratchRef
+  def eval(lonDeg: Double, latDeg: Double): InternalRow =
+    FactorsKernels.eval(pipeline, lonDeg, latDeg, scratch)
 }
 
-/** Catalyst expression: (x, y, z, t) --proj pipeline--> struct(x,y,z,t,err).
-  *
-  * Codegen-friendly: emits a single static call into ProjKernels with the
-  * pipeline attached via addReferenceObj, so it participates in whole-stage
-  * codegen (same shape as Spark's own Invoke-based expressions).
-  */
-case class ProjTransformExpr(
-    xExpr: Expression, yExpr: Expression, zExpr: Expression, tExpr: Expression,
-    projString: String, forward: Boolean, degIO: Boolean)
-    extends Expression
-    with org.apache.spark.sql.graftbridge.PublicInputTypes {
+final case class TransBoundsCall(projString: String) {
+  private val pipeline = new ProjPipeline(projString)
+  private val scratch = new TransBoundsKernels.ScratchRef
+  def eval(lonMin: Double, latMin: Double, lonMax: Double, latMax: Double): InternalRow =
+    TransBoundsKernels.eval(pipeline, lonMin, latMin, lonMax, latMax, scratch)
+}
 
-  @transient private lazy val pipeline = new ProjPipeline(projString)
-  @transient private lazy val scratch = new ProjKernels.ScratchRef
+final case class UtmNativeCall(ellps: String) {
+  private val dispatch = new UtmDispatch(ellps)
+  private val scratch = new UtmNativeKernels.ScratchRef
+  def eval(lonDeg: Double, latDeg: Double): InternalRow =
+    UtmNativeKernels.eval(dispatch, lonDeg, latDeg, scratch)
+}
 
-  override def children: Seq[Expression] = Seq(xExpr, yExpr, zExpr, tExpr)
-  override def inputSpec: Seq[DataType] = Seq(DoubleType, DoubleType, DoubleType, DoubleType)
-  override def dataType: DataType = ProjKernels.resultType
-  override def nullable: Boolean = children.exists(_.nullable)
+/** Plans the registry candidates on construction (driver side), so
+  * executors deserialize plain data. */
+final case class CrsDispatchCall(srcSpec: String, dstSpec: String) {
+  private val dispatch = new RegistryDispatch(srcSpec, dstSpec)
+  private val scratch = new RegistryDispatchKernels.ScratchRef
+  def eval(x: Double, y: Double): InternalRow =
+    RegistryDispatchKernels.eval(dispatch, x, y, scratch)
+}
 
-  override def eval(input: InternalRow): Any = {
-    val x = xExpr.eval(input); val y = yExpr.eval(input)
-    val z = zExpr.eval(input); val t = tExpr.eval(input)
-    if (x == null || y == null || z == null || t == null) null
-    else ProjKernels.eval(pipeline, forward, degIO,
-      x.asInstanceOf[Double], y.asInstanceOf[Double],
-      z.asInstanceOf[Double], t.asInstanceOf[Double], scratch)
-  }
+/** Expression-level builders of the proj kernels, shared by the Column API
+  * (ProjFunctions) and the SQL surface (GraftExtensions): one `Invoke` of
+  * a call object's `eval` over double arguments, which the analyzer
+  * coerces to double; a null argument gives null. */
+object ProjExprs {
+  private def invoke(call: Product, dataType: DataType, args: Expression*): Expression =
+    Invoke(Literal.fromObject(call), "eval", dataType, args, args.map(_ => DoubleType),
+      returnNullable = false)
 
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val pipeRef = ctx.addReferenceObj("projPipeline", pipeline,
-      classOf[ProjPipeline].getName)
-    val scrRef = ctx.addReferenceObj("projScratch", scratch,
-      classOf[ProjKernels.ScratchRef].getName)
-    val xC = xExpr.genCode(ctx); val yC = yExpr.genCode(ctx)
-    val zC = zExpr.genCode(ctx); val tC = tExpr.genCode(ctx)
-    val kern = ProjKernels.getClass.getName + ".MODULE$"
-    val code =
-      code"""
-        ${xC.code}
-        ${yC.code}
-        ${zC.code}
-        ${tC.code}
-        boolean ${ev.isNull} = ${xC.isNull} || ${yC.isNull} || ${zC.isNull} || ${tC.isNull};
-        InternalRow ${ev.value} = null;
-        if (!${ev.isNull}) {
-          ${ev.value} = $kern.eval($pipeRef, $forward, $degIO,
-            ${xC.value}, ${yC.value}, ${zC.value}, ${tC.value}, $scrRef);
-        }
-      """
-    ev.copy(code = code)
-  }
+  def projTrans(x: Expression, y: Expression, z: Expression, t: Expression,
+                pipeline: String, forward: Boolean, degIO: Boolean): Expression =
+    invoke(ProjTransCall(pipeline, forward, degIO), ProjKernels.resultType, x, y, z, t)
 
-  override protected def withNewChildrenInternal(newChildren: IndexedSeq[Expression]): Expression =
-    copy(xExpr = newChildren(0), yExpr = newChildren(1),
-      zExpr = newChildren(2), tExpr = newChildren(3))
+  def projTrans2(lon: Expression, lat: Expression, pipeline: String): Expression =
+    projTrans(lon, lat, Literal(0.0), Literal(0.0), pipeline, forward = true, degIO = true)
+
+  def crsToCrsRegistry(x: Expression, y: Expression, srcCrs: String, dstCrs: String): Expression =
+    projTrans2(x, y, graft.proj.CrsToCrs.pipelineRegistry(srcCrs, dstCrs)
+      .getOrElse(throw new IllegalArgumentException(
+        s"crsToCrsRegistry: unsupported pair $srcCrs -> $dstCrs")))
+
+  def crsToCrsDispatch(x: Expression, y: Expression, srcCrs: String, dstCrs: String): Expression =
+    invoke(CrsDispatchCall(srcCrs, dstCrs), RegistryDispatchKernels.resultType, x, y)
+
+  def utmNative(lon: Expression, lat: Expression, ellps: String): Expression =
+    invoke(UtmNativeCall(ellps), UtmNativeKernels.resultType, lon, lat)
+
+  def projFactors(lon: Expression, lat: Expression, pipeline: String): Expression =
+    invoke(FactorsCall(pipeline), FactorsKernels.resultType, lon, lat)
+
+  def projTransBounds(lonMin: Expression, latMin: Expression, lonMax: Expression,
+                      latMax: Expression, pipeline: String): Expression =
+    invoke(TransBoundsCall(pipeline), TransBoundsKernels.resultType,
+      lonMin, latMin, lonMax, latMax)
 }
 
 /** Column-level API of the engine. */
 object ProjFunctions {
-  import org.apache.spark.sql.catalyst.expressions.{Expression => CExpr}
-
-  private def col(e: CExpr): Column = org.apache.spark.sql.graftbridge.Bridge.column(e)
-  private def expr(c: Column): CExpr = org.apache.spark.sql.graftbridge.Bridge.expression(c)
+  private def col(e: Expression): Column = org.apache.spark.sql.graftbridge.Bridge.column(e)
+  private def expr(c: Column): Expression = org.apache.spark.sql.graftbridge.Bridge.expression(c)
 
   /** Cartographic distortion factors (meridional/parallel/areal scale,
     * angular distortion, convergence) of a projection at lon/lat degrees. */
   def projFactors(lon: Column, lat: Column, pipeline: String): Column =
-    col(ProjFactorsExpr(expr(lon), expr(lat), pipeline))
+    col(ProjExprs.projFactors(expr(lon), expr(lat), pipeline))
 
   /** Full 4D pipeline transform. Angular IO is exposed in degrees when
     * degIO = true (the natural fit for lon/lat columns). */
   def projTrans(x: Column, y: Column, z: Column, t: Column,
                 pipeline: String, forward: Boolean = true,
                 degIO: Boolean = true): Column =
-    col(ProjTransformExpr(expr(x), expr(y), expr(z), expr(t),
-      pipeline, forward, degIO))
+    col(ProjExprs.projTrans(expr(x), expr(y), expr(z), expr(t), pipeline, forward, degIO))
 
   /** 2D convenience: lon/lat in degrees -> struct(x, y, z, t, err). */
   def projTrans2(lon: Column, lat: Column, pipeline: String): Column =
-    projTrans(lon, lat, lit(0.0), lit(0.0), pipeline)
+    col(ProjExprs.projTrans2(expr(lon), expr(lat), pipeline))
 
   def projTransInv2(x: Column, y: Column, pipeline: String): Column =
     projTrans(x, y, lit(0.0), lit(0.0), pipeline, forward = false)
@@ -676,25 +517,24 @@ object ProjFunctions {
     * the reference's per-point proj_trans selection as a codegen'd
     * expression. struct(op, x, y, z). */
   def crsToCrsDispatch(x: Column, y: Column, srcCrs: String, dstCrs: String): Column =
-    col(CrsDispatchExpr(expr(x), expr(y), srcCrs, dstCrs))
+    col(ProjExprs.crsToCrsDispatch(expr(x), expr(y), srcCrs, dstCrs))
 
   /** Registry-grade CRS→CRS: the best-accuracy instantiable coordinate
     * operation from the EPSG/IGNF operation database
     * (CrsToCrs.pipelineRegistry — grid shifts, similarity transforms,
     * compound codes, CRS names), planned once at PLAN time. */
   def crsToCrsRegistry(x: Column, y: Column, srcCrs: String, dstCrs: String): Column =
-    projTrans2(x, y, graft.proj.CrsToCrs.pipelineRegistry(srcCrs, dstCrs)
-      .getOrElse(throw new IllegalArgumentException(
-        s"crsToCrsRegistry: unsupported pair $srcCrs -> $dstCrs")))
+    col(ProjExprs.crsToCrsRegistry(expr(x), expr(y), srcCrs, dstCrs))
 
   /** Reproject a point into its own inferred UTM zone CRS (per-row zone
     * dispatch over 120 precompiled pipelines): struct(zone, south, x, y). */
   def utmNative(lon: Column, lat: Column, ellps: String = "WGS84"): Column =
-    col(UtmNativeExpr(expr(lon), expr(lat), ellps))
+    col(ProjExprs.utmNative(expr(lon), expr(lat), ellps))
 
   /** proj_trans_bounds: lon/lat degree extent -> target-CRS envelope
     * struct(xmin, ymin, xmax, ymax), densified-edge semantics. */
   def projTransBounds(lonMin: Column, latMin: Column,
                       lonMax: Column, latMax: Column, pipeline: String): Column =
-    col(TransBoundsExpr(expr(lonMin), expr(latMin), expr(lonMax), expr(latMax), pipeline))
+    col(ProjExprs.projTransBounds(expr(lonMin), expr(latMin), expr(lonMax), expr(latMax),
+      pipeline))
 }

@@ -182,7 +182,7 @@ object SpatialJoins {
     * flat-array) → points with matched zone_id (inner).
     *
     * Two-phase: S2 cover pre-join on `cell`, then the exact ray-cast
-    * expression. Covers are built EXECUTOR-side (CoverCellsExpr explode —
+    * expression. Covers are built EXECUTOR-side (coverCells explode —
     * no driver collect, so a million-polygon zones table works), and the
     * cover side rides as a broadcast when `broadcastZones` (the default:
     * polygon sets are usually small relative to points); pass false to get

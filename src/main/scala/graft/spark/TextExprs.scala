@@ -3,12 +3,14 @@ package graft.spark
 import org.apache.spark.sql.Column
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.{Expression, GenericInternalRow}
+import org.apache.spark.sql.catalyst.expressions.objects.StaticInvoke
 import org.apache.spark.sql.catalyst.util.ArrayData
 import org.apache.spark.sql.types._
 import org.apache.spark.unsafe.types.UTF8String
 
 /** Single-pass text kernels: SimHash voting and language-id trigram
-  * scoring as one-scan Catalyst expressions.
+  * scoring as one-scan Catalyst expressions, reached through the
+  * `StaticInvoke`s built by TextExprs.
   *
   * The column-formula versions these replace were correct but re-scanned
   * their input per bit / per trigram: the 64-bit SimHash built 64
@@ -153,93 +155,51 @@ object TextKernels {
   }
 }
 
-/** 64-bit SimHash of a words array (one pass, xxhash64 seed 42 per word). */
-case class SimHash64Expr(words: Expression) extends MediaStaticCall {
-  override def children: Seq[Expression] = Seq(words)
-  override def inputSpec: Seq[DataType] = Seq(ArrayType(StringType))
-  override def dataType: DataType = LongType
-  override def nullable: Boolean = words.nullable
-  override def kernelObject: String = TextKernels.getClass.getName + ".MODULE$"
-  override def staticCall: String = "simhash64"
-  override def eval(input: InternalRow): Any = {
-    val a = evalArgs(input)
-    if (a == null) null else TextKernels.simhash64(a(0).asInstanceOf[ArrayData])
-  }
-  override protected def withNewChildrenInternal(c: IndexedSeq[Expression]): Expression =
-    copy(c(0))
-}
+/** Expression-level builders of the text kernels, one `StaticInvoke` of a
+  * TextKernels method each; a result is nullable exactly when an argument
+  * is. */
+object TextExprs {
+  private def call(fn: String, dataType: DataType, args: Seq[Expression],
+                   inputTypes: DataType*): Expression =
+    StaticInvoke(TextKernels.getClass, dataType, fn, args, inputTypes,
+      returnNullable = false)
 
-/** 16-bit shared (md5-derived) SimHash bucket of a words array. */
-case class SimHashSharedExpr(words: Expression) extends MediaStaticCall {
-  override def children: Seq[Expression] = Seq(words)
-  override def inputSpec: Seq[DataType] = Seq(ArrayType(StringType))
-  override def dataType: DataType = LongType
-  override def nullable: Boolean = words.nullable
-  override def kernelObject: String = TextKernels.getClass.getName + ".MODULE$"
-  override def staticCall: String = "simhashBucketShared"
-  override def eval(input: InternalRow): Any = {
-    val a = evalArgs(input)
-    if (a == null) null
-    else TextKernels.simhashBucketShared(a(0).asInstanceOf[ArrayData])
-  }
-  override protected def withNewChildrenInternal(c: IndexedSeq[Expression]): Expression =
-    copy(c(0))
-}
-
-object LangScoresExpr {
-  val schema: StructType = StructType(
+  private val langScoresType: StructType = StructType(
     TextKernels.langProfiles.map(p =>
       StructField(p._1, IntegerType, nullable = false)) :+
       StructField("pred", StringType, nullable = false))
-}
 
-/** trigram-profile language scores + argmax prediction in one text scan;
-  * input must already be " " + lower(text) + " " (prepared Spark-side so
-  * the kernel stays a pure byte scan). */
-case class LangScoresExpr(prepared: Expression) extends MediaStaticCall {
-  override def children: Seq[Expression] = Seq(prepared)
-  override def inputSpec: Seq[DataType] = Seq(StringType)
-  override def dataType: DataType = LangScoresExpr.schema
-  override def nullable: Boolean = prepared.nullable
-  override def kernelObject: String = TextKernels.getClass.getName + ".MODULE$"
-  override def staticCall: String = "langScores"
-  override def eval(input: InternalRow): Any = {
-    val a = evalArgs(input)
-    if (a == null) null
-    else TextKernels.langScores(a(0).asInstanceOf[UTF8String])
-  }
-  override protected def withNewChildrenInternal(c: IndexedSeq[Expression]): Expression =
-    copy(c(0))
+  /** 64-bit SimHash of a words array (one pass, xxhash64 seed 42 per word). */
+  def simhash64(words: Expression): Expression =
+    call("simhash64", LongType, Seq(words), ArrayType(StringType))
+
+  /** 16-bit shared (md5-derived) SimHash bucket of a words array. */
+  def simhashBucketShared(words: Expression): Expression =
+    call("simhashBucketShared", LongType, Seq(words), ArrayType(StringType))
+
+  /** trigram-profile language scores + argmax prediction in one text scan;
+    * input must already be " " + lower(text) + " " (prepared Spark-side so
+    * the kernel stays a pure byte scan). */
+  def langScores(prepared: Expression): Expression =
+    call("langScores", langScoresType, Seq(prepared), StringType)
+
+  /** seeded sampling hash in [0, m): Java two's-complement LCG wrap +
+    * sign-safe mod — ANSI-mode Column arithmetic would raise on the
+    * intentional overflow, so the wrap lives in the kernel. */
+  def sampleHash(key: Expression, m: Expression): Expression =
+    call("sampleHash", LongType, Seq(key, m), LongType, LongType)
 }
 
 /** Column API for the single-pass text expressions. */
-/** seeded sampling hash in [0, m): Java two's-complement LCG wrap +
-  * sign-safe mod — ANSI-mode Column arithmetic would raise on the
-  * intentional overflow, so the wrap lives in a codegen'd kernel. */
-case class SampleHashExpr(key: Expression, m: Expression) extends MediaStaticCall {
-  override def children: Seq[Expression] = Seq(key, m)
-  override def inputSpec: Seq[DataType] = Seq(LongType, LongType)
-  override def dataType: DataType = LongType
-  override def nullable: Boolean = key.nullable || m.nullable
-  override def kernelObject: String = TextKernels.getClass.getName + ".MODULE$"
-  override def staticCall: String = "sampleHash"
-  override def eval(input: InternalRow): Any = {
-    val a = evalArgs(input)
-    if (a == null) null
-    else TextKernels.sampleHash(a(0).asInstanceOf[Long], a(1).asInstanceOf[Long])
-  }
-  override protected def withNewChildrenInternal(c: IndexedSeq[Expression]): Expression =
-    copy(c(0), c(1))
-}
-
 object TextFunctions {
   import org.apache.spark.sql.graftbridge.Bridge
   private def col(e: Expression): Column = Bridge.column(e)
   private def ex(c: Column): Expression = Bridge.expression(c)
 
-  def simhash64(words: Column): Column = col(SimHash64Expr(ex(words)))
+  def simhash64(words: Column): Column = col(TextExprs.simhash64(ex(words)))
   def sampleHash(key: Column, m: Column): Column =
-    col(SampleHashExpr(ex(key), ex(m)))
-  def simhashBucketShared(words: Column): Column = col(SimHashSharedExpr(ex(words)))
-  def langScores(prepared: Column): Column = col(LangScoresExpr(ex(prepared)))
+    col(TextExprs.sampleHash(ex(key), ex(m)))
+  def simhashBucketShared(words: Column): Column =
+    col(TextExprs.simhashBucketShared(ex(words)))
+  def langScores(prepared: Column): Column = col(TextExprs.langScores(ex(prepared)))
 }

@@ -1,7 +1,9 @@
 package graft.spark
 
 import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.catalyst.expressions.{Expression, Literal, RegExpReplace}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graftbridge.Bridge
 import org.apache.spark.sql.expressions.Window
 
 /** Large-scale training-data pipeline operators over the `documents` /
@@ -113,7 +115,7 @@ object TrainingOps {
 
   /** n-gram-frequency language id heuristic: scores per language from
     * characteristic trigram hit counts. One single-pass expression
-    * (LangScoresExpr) scans the text once for all 26 patterns — the
+    * (TextFunctions.langScores) scans the text once for all 26 patterns — the
     * column-formula version ran one regexp_replace per trigram (26 scans
     * per row); outputs locked equal in TextExprsSpec. */
   def withLangId(docs: DataFrame, textCol: String = "text"): DataFrame =
@@ -425,14 +427,19 @@ object TrainingOps {
     * phones, then bare long ids. The phone run must span >= 11 chars so
     * ISO dates (2024-08-17, 10 chars) and dd-mm-yyyy survive — dates are
     * signal in training text, not PII. */
-  private[spark] val PiiEmailRe = "[A-Za-z0-9._%+-]+@[A-Za-z0-9.-]+\\.[A-Za-z]{2,}"
-  private[spark] val PiiPhoneRe = "\\+?\\d[\\d\\-]{9,}\\d"
-  private[spark] val PiiIdRe = "\\d{6,}"
+  private val PiiEmailRe = "[A-Za-z0-9._%+-]+@[A-Za-z0-9.-]+\\.[A-Za-z]{2,}"
+  private val PiiPhoneRe = "\\+?\\d[\\d\\-]{9,}\\d"
+  private val PiiIdRe = "\\d{6,}"
 
-  def scrubPii(text: Column): Column = {
-    val email = regexp_replace(text, PiiEmailRe, "<EMAIL>")
-    val phone = regexp_replace(email, PiiPhoneRe, "<PHONE>")
-    regexp_replace(phone, PiiIdRe, "<NUM>")
+  def scrubPii(text: Column): Column = Bridge.column(scrubPiiExpr(Bridge.expression(text)))
+
+  /** scrubPii as a resolved Catalyst tree, shared with graft_scrub_pii (a
+    * Column built from `regexp_replace` would carry UnresolvedFunction
+    * nodes, which an injected SQL function cannot return). */
+  private[spark] def scrubPiiExpr(text: Expression): Expression = {
+    val email = RegExpReplace(text, Literal(PiiEmailRe), Literal("<EMAIL>"))
+    val phone = RegExpReplace(email, Literal(PiiPhoneRe), Literal("<PHONE>"))
+    RegExpReplace(phone, Literal(PiiIdRe), Literal("<NUM>"))
   }
 
   /** whole-document md5 fingerprint over whitespace-normalized text —

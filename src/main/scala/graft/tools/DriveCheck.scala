@@ -103,7 +103,7 @@ object DriveCheck {
     kernelAllocCheck()
   }
 
-  /** Drives the generated-code entry points (ProjKernels / UtmNativeKernels /
+  /** Drives the row-kernel entry points (ProjKernels / UtmNativeKernels /
     * RegistryDispatchKernels / FactorsKernels) for 1M rows each and reports
     * per-row allocation from ThreadMXBean.getThreadAllocatedBytes. */
   private def kernelAllocCheck(): Unit = {

@@ -12,15 +12,3 @@ object Bridge {
   def column(e: Expression): Column = ExpressionUtils.column(e)
   def expression(c: Column): Expression = ExpressionUtils.expression(c)
 }
-
-/** ImplicitCastInputTypes with a PUBLIC-types spec: AbstractDataType is
-  * private[sql], so third-party expressions declare `inputSpec` in plain
-  * DataType terms and this same-package trait adapts it — giving graft's
-  * SQL-registered expressions analyzer-driven argument coercion (BIGINT
-  * levels, integer lon/lat literals, ...). */
-trait PublicInputTypes
-    extends org.apache.spark.sql.catalyst.expressions.ImplicitCastInputTypes {
-  /** expected child types, in order (public DataType only). */
-  def inputSpec: Seq[org.apache.spark.sql.types.DataType]
-  override def inputTypes: Seq[org.apache.spark.sql.types.AbstractDataType] = inputSpec
-}

@@ -5,13 +5,13 @@ import java.util.Locale
 import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
 import org.apache.spark.sql.catalyst.expressions.GenericInternalRow
 import org.apache.spark.sql.catalyst.util.GenericArrayData
-import org.apache.spark.sql.execution.{FilterExec, ProjectExec}
+import org.apache.spark.sql.execution.{FilterExec, GenerateExec, ProjectExec}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 import org.apache.spark.unsafe.types.UTF8String
 import org.scalatest.funsuite.AnyFunSuite
 
-/** DocsTable.withAnchor (AnchorExpr) against the column formula it
+/** DocsTable.withAnchor against the column formula it
   * replaced, with `try_cast` in place of `cast`:
   * `try_cast(try_element_at(split(text, ' '), i) AS DOUBLE)` over the text
   * of the first geo span. Every comparison is bit for bit, through both
@@ -60,7 +60,7 @@ class AnchorSpec extends AnyFunSuite {
     val df = DocsTable.withAnchor(docs).select(col("doc_id") +: DocsTable.anchorColumns.map(col): _*)
     val got = perDoc(df)
     if (path == "codegen")
-      assert(EvalPaths.inCodegenStage(df).exists(_.isInstanceOf[ProjectExec]),
+      assert(EvalPaths.inCodegenStage(df).exists(_.isInstanceOf[GenerateExec]),
         df.queryExecution.executedPlan.toString)
     val want = perDoc(docs.select(col("doc_id") +: reference(col("spans")): _*))
     assert(got.keySet == want.keySet)
@@ -169,14 +169,15 @@ class AnchorSpec extends AnyFunSuite {
       case e: org.apache.spark.sql.catalyst.expressions.codegen.CodegenFallback => e.prettyName
     }))
     assert(fallbacks.isEmpty, s"CodegenFallback expressions in the executed plan: $fallbacks")
-    // the anchor is parsed in a Filter (lon IS NOT NULL, pushed down to
-    // the scan) and in the Project that adds lon/lat
+    // the anchor is parsed once in a Generate, filtered on `lon IS NOT
+    // NULL` and projected with the kernels
     val anchorOps = ops.filter {
-      case _: FilterExec => true
+      case _: GenerateExec | _: FilterExec => true
       case p: ProjectExec => p.projectList.exists(_.name == "lon")
       case _ => false
     }
-    assert(anchorOps.exists(_.isInstanceOf[FilterExec]) &&
+    assert(anchorOps.exists(_.isInstanceOf[GenerateExec]) &&
+      anchorOps.exists(_.isInstanceOf[FilterExec]) &&
       anchorOps.exists(_.isInstanceOf[ProjectExec]), df.queryExecution.executedPlan.toString)
     val staged = EvalPaths.inCodegenStage(df)
     anchorOps.foreach(op => assert(staged.exists(_ eq op),

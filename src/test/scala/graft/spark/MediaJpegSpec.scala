@@ -1,5 +1,7 @@
 package graft.spark
 
+import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
 /** Baseline JPEG entropy decode: canonical Huffman tables from DHT, DC
@@ -8,6 +10,11 @@ import org.scalatest.funsuite.AnyFunSuite
   * encoder's closed form and against a hand-crafted bit stream with
   * nonzero AC coefficients. */
 class MediaJpegSpec extends AnyFunSuite {
+  lazy val spark: SparkSession = SparkSession.builder()
+    .master("local[4]")
+    .config("spark.sql.shuffle.partitions", "8")
+    .config("spark.ui.enabled", "false")
+    .getOrCreate()
 
   /** the encoder's DC stream, regenerated independently */
   private def expectedPixels(w: Int, h: Int, seed: Long): Array[Int] = {
@@ -103,6 +110,29 @@ class MediaJpegSpec extends AnyFunSuite {
       }
       val want = math.max(0, math.min(255, math.round(sum / 4 + 128).toInt))
       assert((px(y * 8 + x) & 0xff) == want, s"pixel ($x,$y)")
+    }
+  }
+
+  test("negative seeds encode 8..48-pixel JPEGs through both eval paths") {
+    val seeds = Seq(-1L, -5L, -6L, -7L, -12345L, Long.MinValue, 0L, 5L)
+    for ((path, s) <- Seq("interpreted" -> EvalPaths.interpreted(spark),
+                          "codegen" -> EvalPaths.codegenOnly(spark))) {
+      import s.implicits._
+      val rows = seeds.toDF("seed").select(col("seed"),
+        MediaFunctions.mediaInfo(MediaFunctions.mediaEncodeJpeg(col("seed"))).as("base"),
+        MediaFunctions.jpegPixelStats(MediaFunctions.mediaEncodeJpeg(col("seed"))).as("px"),
+        MediaFunctions.mediaInfo(MediaFunctions.mediaEncodeJpegProg(col("seed"))).as("prog"),
+        MediaFunctions.jpegPixelStatsProg(MediaFunctions.mediaEncodeJpegProg(col("seed")))
+          .as("prog_px")).collect()
+      for (r <- rows) {
+        val seed = r.getLong(0)
+        def dims(i: Int) = (r.getStruct(i).getInt(1), r.getStruct(i).getInt(2))
+        val w = 8 * (1 + Math.floorMod(seed, 6L)).toInt
+        assert(dims(1) == (w, 8 * (1 + Math.floorMod(seed * 5, 6L)).toInt), s"$path seed $seed")
+        assert(dims(3) == (w, 8 * (1 + Math.floorMod(seed * 7, 6L)).toInt), s"$path seed $seed")
+        assert(r.getStruct(2).getLong(0) == dims(1)._1 * dims(1)._2, s"$path seed $seed")
+        assert(r.getStruct(4).getLong(0) == dims(3)._1 * dims(3)._2, s"$path seed $seed")
+      }
     }
   }
 }

@@ -1,5 +1,7 @@
 package graft.spark
 
+import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
 /** Area-average resize: exact fractional edge weights (the anti-aliased
@@ -7,6 +9,11 @@ import org.scalatest.funsuite.AnyFunSuite
   * non-aligned ratios, plus the aligned flat-block exactness the
   * media_resize oracle relies on. */
 class MediaResizeSpec extends AnyFunSuite {
+  lazy val spark: SparkSession = SparkSession.builder()
+    .master("local[4]")
+    .config("spark.sql.shuffle.partitions", "8")
+    .config("spark.ui.enabled", "false")
+    .getOrCreate()
 
   private def ref(px: Array[Byte], w: Int, h: Int, w2: Int, h2: Int): Array[Int] = {
     val out = new Array[Int](w2 * h2)
@@ -44,6 +51,24 @@ class MediaResizeSpec extends AnyFunSuite {
       val v = px(by * 8 * 24 + bx * 8) & 0xff
       for (dy <- 0 until 4; dx <- 0 until 4)
         assert((r((by * 4 + dy) * 12 + bx * 4 + dx) & 0xff) == v)
+    }
+  }
+
+  test("a factor below 1 or above Int.MaxValue gives null through both eval paths") {
+    val bytes = MediaCodecs.encodeJpegBaseline(24, 16, 11L)
+    val bad = Seq(0L, -1L, -2L, Long.MinValue, Int.MaxValue.toLong + 1, (1L << 32) + 2)
+    bad.foreach(f => assert(MediaKernels.jpegResizeStats(bytes, f) == null, s"factor $f"))
+    // a factor larger than the image leaves no pixel: also null
+    val want = Map(1L -> 24L * 16, 2L -> 12L * 8, 8L -> 3L * 2, 17L -> -1L,
+      Int.MaxValue.toLong -> -1L) ++ bad.map(_ -> -1L)
+    for ((path, s) <- Seq("interpreted" -> EvalPaths.interpreted(spark),
+                          "codegen" -> EvalPaths.codegenOnly(spark))) {
+      import s.implicits._
+      val got = want.keys.toSeq.toDF("factor")
+        .select(col("factor"), MediaFunctions.jpegResizeStats(lit(bytes), col("factor")))
+        .collect().map(r => r.getLong(0) -> (if (r.isNullAt(1)) -1L else r.getStruct(1).getLong(0)))
+        .toMap
+      assert(got == want, path)
     }
   }
 }

@@ -1,15 +1,13 @@
 package graft.spark
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
-import org.apache.spark.sql.execution.ProjectExec
+import org.apache.spark.sql.{Column, SparkSession}
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
-/** Locks the single-pass text expressions (SimHash64Expr,
-  * SimHashSharedExpr, LangScoresExpr) bit-for-bit against the multi-scan
-  * column formulas they replaced — the formulas are reproduced here
-  * verbatim as the reference implementation — and checks that the
-  * primitive-return kernels compile as generated code. */
+/** Locks the single-pass text kernels (simhash64, simhashBucketShared,
+  * langScores) bit-for-bit against the multi-scan column formulas they
+  * replaced — the formulas are reproduced here verbatim as the reference
+  * implementation. KernelCallSpec runs them through generated code. */
 class TextExprsSpec extends AnyFunSuite {
   lazy val spark: SparkSession = SparkSession.builder()
     .master("local[4]")
@@ -93,25 +91,5 @@ class TextExprsSpec extends AnyFunSuite {
     val newRows = newScored.collect().map(r =>
       (r.getString(0), r.getMap[String, Int](1).toMap, r.getString(2)))
     assert(oldRows.sortBy(_._1).toSeq == newRows.sortBy(_._1).toSeq)
-  }
-
-  test("primitive-return kernels run under CODEGEN_ONLY and match the interpreted path") {
-    def run(s: SparkSession): (Seq[Seq[Any]], DataFrame) = {
-      val words = when(col("id") % 10 === 0, lit(null)).otherwise(
-        split(format_string("w%d x%d w%d y%d",
-          col("id") % 7, col("id") % 13, col("id") % 5, col("id")), " "))
-      val df = s.range(0, 500).select(col("id"),
-        TextFunctions.simhash64(words), TextFunctions.simhashBucketShared(words),
-        TextFunctions.sampleHash(col("id"), lit(97L)),
-        TextFunctions.sampleHash(col("id"), lit(null).cast("long")))
-      (df.collect().map(_.toSeq).toSeq, df)
-    }
-    val (cg, cgDf) = run(EvalPaths.codegenOnly(spark))
-    val (interp, _) = run(EvalPaths.interpreted(spark))
-    assert(EvalPaths.inCodegenStage(cgDf).exists(_.isInstanceOf[ProjectExec]),
-      cgDf.queryExecution.executedPlan.toString)
-    assert(cg == interp)
-    assert(cg.count(_(1) == null) == 50 && cg.forall(_(4) == null))
-    assert(cg.forall(r => r(3).asInstanceOf[Long] >= 0 && r(3).asInstanceOf[Long] < 97))
   }
 }
