@@ -2,7 +2,8 @@ package graft.spark
 
 import org.apache.spark.sql.Column
 import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.catalyst.expressions.{Expression, Literal, SpecificInternalRow}
+import org.apache.spark.sql.catalyst.expressions.{Expression, ImplicitCastInputTypes, Literal,
+  RuntimeReplaceable, SpecificInternalRow}
 import org.apache.spark.sql.catalyst.expressions.objects.Invoke
 import org.apache.spark.sql.types._
 import org.apache.spark.sql.functions.lit
@@ -61,8 +62,9 @@ object ProjKernels {
   /** per-thread, per-EXPRESSION scratch: the dominant transform path
     * allocates nothing per row — a typed SpecificInternalRow avoids even
     * the Double boxing an Array[Any]-backed row would pay. The scratch is
-    * owned by the ProjTransCall instance (not this object): two transform
-    * columns in one projection must not alias one row (consumers that
+    * owned by the ProjTransCall of one plan node (StatefulInvoke), not this
+    * object: two transform columns in one projection must not alias one
+    * row (consumers that
     * buffer the struct copy it — Spark's own UnsafeProjection reuse
     * contract covers the per-row reuse). */
   final class Scratch {
@@ -399,58 +401,85 @@ object UtmNativeKernels {
 /** Invoke targets of the stateful proj kernels (built by ProjExprs). Each
   * owns its pipeline or dispatch table and a per-thread scratch row, ships
   * with the plan as an object literal, and is equal by its plan-time
-  * inputs: equal transforms are one common subexpression, while two
-  * transform columns each hold their own instance and never share a
-  * scratch row. */
-final case class ProjTransCall(projString: String, forward: Boolean, degIO: Boolean) {
+  * inputs, so equal transforms are one common subexpression. */
+sealed trait ProjCall extends Product with Serializable {
+  def resultType: StructType
+  /** an equal call with its own scratch row */
+  def fresh: ProjCall
+}
+
+final case class ProjTransCall(projString: String, forward: Boolean, degIO: Boolean)
+    extends ProjCall {
   private val pipeline = new ProjPipeline(projString)
   private val scratch = new ProjKernels.ScratchRef
+  def resultType: StructType = ProjKernels.resultType
+  def fresh: ProjCall = copy()
   def eval(x: Double, y: Double, z: Double, t: Double): InternalRow =
     ProjKernels.eval(pipeline, forward, degIO, x, y, z, t, scratch)
 }
 
-final case class FactorsCall(projString: String) {
+final case class FactorsCall(projString: String) extends ProjCall {
   private val pipeline = new ProjPipeline(projString)
   private val scratch = new FactorsKernels.ScratchRef
+  def resultType: StructType = FactorsKernels.resultType
+  def fresh: ProjCall = copy()
   def eval(lonDeg: Double, latDeg: Double): InternalRow =
     FactorsKernels.eval(pipeline, lonDeg, latDeg, scratch)
 }
 
-final case class TransBoundsCall(projString: String) {
+final case class TransBoundsCall(projString: String) extends ProjCall {
   private val pipeline = new ProjPipeline(projString)
   private val scratch = new TransBoundsKernels.ScratchRef
+  def resultType: StructType = TransBoundsKernels.resultType
+  def fresh: ProjCall = copy()
   def eval(lonMin: Double, latMin: Double, lonMax: Double, latMax: Double): InternalRow =
     TransBoundsKernels.eval(pipeline, lonMin, latMin, lonMax, latMax, scratch)
 }
 
-final case class UtmNativeCall(ellps: String) {
+final case class UtmNativeCall(ellps: String) extends ProjCall {
   private val dispatch = new UtmDispatch(ellps)
   private val scratch = new UtmNativeKernels.ScratchRef
+  def resultType: StructType = UtmNativeKernels.resultType
+  def fresh: ProjCall = copy()
   def eval(lonDeg: Double, latDeg: Double): InternalRow =
     UtmNativeKernels.eval(dispatch, lonDeg, latDeg, scratch)
 }
 
 /** Plans the registry candidates on construction (driver side), so
-  * executors deserialize plain data. */
-final case class CrsDispatchCall(srcSpec: String, dstSpec: String) {
-  private val dispatch = new RegistryDispatch(srcSpec, dstSpec)
+  * executors deserialize plain data; fresh copies share the plan. */
+final case class CrsDispatchCall(srcSpec: String, dstSpec: String)(
+    dispatch: RegistryDispatch = new RegistryDispatch(srcSpec, dstSpec)) extends ProjCall {
   private val scratch = new RegistryDispatchKernels.ScratchRef
+  def resultType: StructType = RegistryDispatchKernels.resultType
+  def fresh: ProjCall = CrsDispatchCall(srcSpec, dstSpec)(dispatch)
   def eval(x: Double, y: Double): InternalRow =
     RegistryDispatchKernels.eval(dispatch, x, y, scratch)
 }
 
-/** Expression-level builders of the proj kernels, shared by the Column API
-  * (ProjFunctions) and the SQL surface (GraftExtensions): one `Invoke` of
-  * a call object's `eval` over double arguments, which the analyzer
-  * coerces to double; a null argument gives null. */
-object ProjExprs {
-  private def invoke(call: Product, dataType: DataType, args: Expression*): Expression =
-    Invoke(Literal.fromObject(call), "eval", dataType, args, args.map(_ => DoubleType),
-      returnNullable = false)
+/** A stateful proj kernel column over double arguments (the analyzer
+  * coerces others; a null argument gives null). Before optimizing, Spark
+  * replaces it by an `Invoke` of `eval` on a fresh copy of `call`, so every
+  * node of an analyzed plan owns its scratch row: one Column used twice
+  * over different inputs (the analyzer resolves each use into its own
+  * node) never has one value overwrite the other, neither in one generated
+  * stage nor in a folded constant. Equal by the call's plan-time inputs
+  * and the arguments, so equal transforms stay one common subexpression. */
+case class StatefulInvoke(call: ProjCall, children: Seq[Expression])
+    extends RuntimeReplaceable with ImplicitCastInputTypes {
+  override def inputTypes: Seq[DataType] = children.map(_ => DoubleType)
+  override lazy val replacement: Expression =
+    Invoke(Literal.fromObject(call.fresh), "eval", call.resultType, children,
+      children.map(_ => DoubleType), returnNullable = false)
+  override protected def withNewChildrenInternal(
+      newChildren: IndexedSeq[Expression]): StatefulInvoke = copy(children = newChildren)
+}
 
+/** Expression-level builders of the proj kernels, shared by the Column API
+  * (ProjFunctions) and the SQL surface (GraftExtensions). */
+object ProjExprs {
   def projTrans(x: Expression, y: Expression, z: Expression, t: Expression,
                 pipeline: String, forward: Boolean, degIO: Boolean): Expression =
-    invoke(ProjTransCall(pipeline, forward, degIO), ProjKernels.resultType, x, y, z, t)
+    StatefulInvoke(ProjTransCall(pipeline, forward, degIO), Seq(x, y, z, t))
 
   def projTrans2(lon: Expression, lat: Expression, pipeline: String): Expression =
     projTrans(lon, lat, Literal(0.0), Literal(0.0), pipeline, forward = true, degIO = true)
@@ -461,18 +490,17 @@ object ProjExprs {
         s"crsToCrsRegistry: unsupported pair $srcCrs -> $dstCrs")))
 
   def crsToCrsDispatch(x: Expression, y: Expression, srcCrs: String, dstCrs: String): Expression =
-    invoke(CrsDispatchCall(srcCrs, dstCrs), RegistryDispatchKernels.resultType, x, y)
+    StatefulInvoke(CrsDispatchCall(srcCrs, dstCrs)(), Seq(x, y))
 
   def utmNative(lon: Expression, lat: Expression, ellps: String): Expression =
-    invoke(UtmNativeCall(ellps), UtmNativeKernels.resultType, lon, lat)
+    StatefulInvoke(UtmNativeCall(ellps), Seq(lon, lat))
 
   def projFactors(lon: Expression, lat: Expression, pipeline: String): Expression =
-    invoke(FactorsCall(pipeline), FactorsKernels.resultType, lon, lat)
+    StatefulInvoke(FactorsCall(pipeline), Seq(lon, lat))
 
   def projTransBounds(lonMin: Expression, latMin: Expression, lonMax: Expression,
                       latMax: Expression, pipeline: String): Expression =
-    invoke(TransBoundsCall(pipeline), TransBoundsKernels.resultType,
-      lonMin, latMin, lonMax, latMax)
+    StatefulInvoke(TransBoundsCall(pipeline), Seq(lonMin, latMin, lonMax, latMax))
 }
 
 /** Column-level API of the engine. */

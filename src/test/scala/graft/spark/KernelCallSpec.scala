@@ -233,6 +233,43 @@ class KernelCallSpec extends AnyFunSuite {
     }
   }
 
+  test("one kernel column used twice over shadowed arguments in one stage keeps each value") {
+    val codegen = EvalPaths.codegenOnly(spark)
+    val b = base(codegen)
+    def shift(c: Column): Column = c * 0.5 + 1.0
+    val unchanged = kernels.filter(k => b.schema(k.args.head).dataType == DoubleType).filter { k =>
+      val doubles = k.args.take(2).filter(a => b.schema(a).dataType == DoubleType)
+      val c = k.call(args(k))
+      val reused = doubles.foldLeft(b.withColumn("a", c))((df, a) => df.withColumn(a, shift(col(a))))
+        .withColumn("b", c).select("id", "a", "b").orderBy("id")
+      val apart = b.select(col("id"), k.call(args(k)).as("a"),
+        k.call(k.args.map(a => if (doubles.contains(a)) shift(col(a)) else col(a))).as("b"))
+        .orderBy("id")
+      val got = reused.collect().toSeq
+      assert(EvalPaths.inCodegenStage(reused).exists(_.isInstanceOf[ProjectExec]),
+        s"${k.name}: ${reused.queryExecution.executedPlan}")
+      assert(got == apart.collect().toSeq, k.name)
+      got.forall(r => r.get(1) == r.get(2))
+    }
+    // pointInRing's shifted points stay outside the rings
+    assert(unchanged.map(_.name) == Seq("pointInRing"))
+  }
+
+  test("one kernel column folded in two queries keeps each query's value") {
+    kernels.filter(k => k.args == Seq("lon", "lat")).foreach { k =>
+      val c = k.call(args(k))
+      def at(lon: Double): DataFrame =
+        spark.range(1).select(lit(lon).as("lon"), lit(10.0).as("lat")).select(c)
+      val first = at(1.0)
+      assert(first.queryExecution.optimizedPlan.expressions
+        .forall(_.find(_.isInstanceOf[InvokeLike]).isEmpty), k.name)
+      val want = first.collect().toSeq
+      val second = at(2.0)
+      assert(second.collect().toSeq != want, k.name)
+      assert(first.collect().toSeq == want, k.name)
+    }
+  }
+
   test("every graft_* SQL function builds the expression of its Column function") {
     val withSql = kernels.filter(_.sql.isDefined)
     assert(withSql.map(_.sql.get.takeWhile(_ != '(')).toSet ==
