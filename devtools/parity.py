@@ -44,9 +44,18 @@ def main():
             continue
         if only and name not in only:
             continue
+        failed = os.path.join(qdir, "_FAILED")
+        if os.path.exists(failed):
+            print(f"{name}: VERIFY FAILED: {open(failed).readline().strip()}")
+            n_fail += 1
+            continue
         spark_df = load_spark(con, qdir)
+        if spark_df is None:
+            print(f"{name}: NO PARQUET OUTPUT")
+            n_fail += 1
+            continue
         if name not in oracles:
-            print(f"{name}: NO_ORACLE (spark rows={len(spark_df) if spark_df is not None else '?'})")
+            print(f"{name}: NO_ORACLE (spark rows={len(spark_df)})")
             n_noor += 1
             continue
         try:

@@ -128,20 +128,13 @@ object Bench {
     val spark = session(cpus)
     // headline = the SCALE paths (LSH-bucketed ANN, ring-join kNN, per-row
     // UTM dispatch); the crossJoin baselines (ann_brute, geo_knn) stay
-    // oracle-only — they are correctness anchors, not 100-TB plans
-    // round-5 additions (kept identifiable so cross-round totals stay
-    // comparable: "total" spans the legacy 22-query set, "total_r5" adds
-    // the round-5 operators on top)
-    val round5 = Seq("geo_global_hex", "geo_range_partition", "text_decontam",
-      "q_mixture", "media_resize", "media_jpeg_prog")
+    // oracle-only — they are correctness anchors, not 100-TB plans.
+    // Round-5 additions stay identifiable so cross-round totals stay
+    // comparable: "total" spans the legacy set, "total_r5" adds them.
     val headline =
-      if (scalingOnly) Seq.empty[String]
-      else Seq("q1_agg", "q3_join", "q_window", "geo_webmerc",
-        "geo_pip", "geo_knn_geodesic", "geo_tile_agg", "geo_datum_shift",
-        "geo_utm_native", "geo_hexbin", "geo_hot_salted", "docs_spans",
-        "dedup_exact", "dedup_minhash", "text_metrics", "text_chunks",
-        "q_sessions", "pii_scrub", "ann_lsh", "ann_index", "media_features",
-        "geo_dispatch") ++ round5
+      if (scalingOnly) Seq.empty[DriverQuery]
+      else SparkEntry.driverQueries.filter(_.bench != DriverQuery.NotBenched)
+    val round5 = headline.filter(_.bench == DriverQuery.Round5).map(_.name).toSet
     def force(df: org.apache.spark.sql.DataFrame): Long = {
       // hash-of-all-columns aggregate so column pruning can't skip work
       df.select(count(lit(1)), sum(pmod(xxhash64(struct(df.columns.map(col): _*)), lit(1000000007L))))
@@ -158,8 +151,7 @@ object Bench {
     // later runs are the steady-state query (a versioned reuse hit runs
     // zero jobs over the corpus). Mixing the two into one min() lied in
     // cross-round comparisons, so they report as separate metrics.
-    val coldWarm = headline.flatMap { name =>
-      val fn = SparkEntry.queries(name)
+    val coldWarm = headline.flatMap { case DriverQuery(name, fn, _, _, _) =>
       if (name == "ann_index") {
         val (_, build) = time { force(fn(spark, sfDir)) } // index build + first query
         val (_, q1) = time { force(fn(spark, sfDir)) }    // reuse-hit query
@@ -251,7 +243,7 @@ object Bench {
     val loadEnd = loadavg()
     val qs = results.map { case (k, v) => "\"" + k + f"\":$v%.3f" }
       .mkString("{", ",", "}")
-    // total = steady-state seconds of the legacy 22-query set (cross-round
+    // total = steady-state seconds of the legacy query set (cross-round
     // comparable); total_r5 adds the round-5 operators. The one-time
     // ann_index build leg is reported in queries but folded into neither.
     val steady = results.filterNot(_._1 == "ann_index_build")

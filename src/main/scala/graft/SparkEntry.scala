@@ -4,12 +4,35 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
 
+import graft.DriverQuery.{Headline, Round5}
 import graft.spark.{DocsTable, GeoFunctions, ProjFunctions, SpatialJoins, TrainingOps}
 
-/** Driver contract: one `queries` entry + `oracleSql` entry per operator
-  * family (SURVEY.md §2 + the training-data pipeline ops). Column names are
-  * aligned 1:1 between the Spark plans and the DuckDB SQL — the driver's
-  * compare sorts columns by name before hashing.
+/** One driver query: the builder that runs it over the tables in a scale
+  * factor directory, the DuckDB SQL its rows are hash-compared against
+  * (cross-engine mirrored formulas live in OracleSql), the properties
+  * PlanCheckSpec asserts of its executed plan (label, predicate over the
+  * plan string) and the Bench set it is timed in. */
+final case class DriverQuery(
+    name: String,
+    build: (SparkSession, String) => DataFrame,
+    oracle: String,
+    planWants: Seq[(String, String => Boolean)] = Nil,
+    bench: DriverQuery.BenchSet = DriverQuery.NotBenched)
+
+object DriverQuery {
+  /** Bench's `total` spans the `Headline` set; `total_with_r5_ops` adds the
+    * `Round5` set, kept apart so cross-round totals stay comparable. */
+  sealed trait BenchSet
+  case object NotBenched extends BenchSet
+  case object Headline extends BenchSet
+  case object Round5 extends BenchSet
+}
+
+/** Driver contract: one `DriverQuery` per operator family (SURVEY.md §2 +
+  * the training-data pipeline ops), read by the driver through `queries`
+  * and `oracleSql`. Column names are aligned 1:1 between the Spark plans
+  * and the DuckDB SQL — the driver's compare sorts columns by name before
+  * hashing.
   *
   * Geo queries derive deterministic lon/lat from table keys with integer
   * arithmetic that DuckDB reproduces bit-for-bit, then compare our Catalyst
@@ -76,9 +99,9 @@ object SparkEntry {
 
   // ---------------------------------------------------------------- queries
 
-  def queries: Map[String, (SparkSession, String) => DataFrame] = Map(
+  val driverQueries: Seq[DriverQuery] = Seq(
     // ---- relational plumbing (Catalyst does the heavy lifting) ----
-    "q1_agg" -> ((s, dir) => {
+    DriverQuery("q1_agg", (s, dir) => {
       t(s, dir, "lineitem")
         .groupBy(col("l_returnflag"), col("l_linestatus"))
         .agg(
@@ -86,9 +109,19 @@ object SparkEntry {
           mmSum(col("l_extendedprice")).as("sum_price"),
           count(lit(1)).as("n_rows"))
         .orderBy("l_returnflag", "l_linestatus")
-    }),
+    }, oracle =
+      """SELECT l_returnflag, l_linestatus,
+         CAST(sum(CAST(round(l_quantity*1000) AS BIGINT)) AS BIGINT) AS sum_qty,
+         CAST(sum(CAST(round(l_extendedprice*1000) AS BIGINT)) AS BIGINT) AS sum_price,
+         count(*) AS n_rows
+         FROM lineitem GROUP BY 1,2 ORDER BY 1,2""",
+      planWants = Seq(
+        "parquet scan with ReadSchema" -> (_.contains("ReadSchema")),
+        "partial aggregation (map-side combine)" -> (p => p.contains("partial") || p.contains("HashAggregate")),
+        "scan present" -> (_.contains("Scan"))),
+      bench = Headline),
 
-    "q3_join" -> ((s, dir) => {
+    DriverQuery("q3_join", (s, dir) => {
       val c = t(s, dir, "customer").where(col("c_mktsegment") === "BUILDING")
       val o = t(s, dir, "orders")
       val l = t(s, dir, "lineitem")
@@ -98,42 +131,70 @@ object SparkEntry {
         .agg(mmSum(col("l_extendedprice") * (lit(1) - col("l_discount"))).as("revenue"))
         .orderBy(col("revenue").desc, col("o_orderkey"))
         .limit(20)
-    }),
+    }, oracle =
+      """SELECT o_orderkey,
+         CAST(sum(CAST(round(l_extendedprice*(1-l_discount)*1000) AS BIGINT)) AS BIGINT) AS revenue
+         FROM customer, orders, lineitem
+         WHERE c_mktsegment='BUILDING' AND c_custkey=o_custkey AND o_orderkey=l_orderkey
+         GROUP BY o_orderkey ORDER BY revenue DESC, o_orderkey LIMIT 20""",
+      planWants = Seq(
+        "broadcast join for small side" -> (_.contains("BroadcastHashJoin")),
+        "pushed filters reach scan" -> (_.contains("PushedFilters: [")),
+        "scan present" -> (_.contains("Scan"))),
+      bench = Headline),
 
-    "q_window" -> ((s, dir) => {
+    DriverQuery("q_window", (s, dir) => {
       val w = Window.partitionBy(col("o_custkey"))
         .orderBy(col("o_totalprice").desc, col("o_orderkey"))
       t(s, dir, "orders")
         .withColumn("rnk", row_number().over(w))
         .where(col("rnk") <= 3)
         .select(col("o_custkey"), col("o_orderkey"), mm(col("o_totalprice")).as("price_mm"), col("rnk"))
-    }),
+    }, oracle =
+      """SELECT o_custkey, o_orderkey,
+         CAST(round(o_totalprice*1000) AS BIGINT) AS price_mm, rnk FROM (
+           SELECT o_custkey, o_orderkey, o_totalprice,
+             row_number() OVER (PARTITION BY o_custkey
+               ORDER BY o_totalprice DESC, o_orderkey) AS rnk
+           FROM orders) WHERE rnk <= 3""",
+      bench = Headline),
 
-    "q_anti" -> ((s, dir) => {
+    DriverQuery("q_anti", (s, dir) => {
       // customers with no high-value order (non-trivial anti-join)
       val c = t(s, dir, "customer")
       val o = t(s, dir, "orders").where(col("o_totalprice") > 400000)
       c.join(o, col("c_custkey") === col("o_custkey"), "left_anti")
         .select(col("c_custkey"))
         .orderBy("c_custkey")
-    }),
+    }, oracle =
+      """SELECT c_custkey FROM customer
+         WHERE c_custkey NOT IN (SELECT o_custkey FROM orders WHERE o_totalprice > 400000)
+         ORDER BY c_custkey"""),
 
-    "q_events" -> ((s, dir) => {
+    DriverQuery("q_events", (s, dir) => {
       t(s, dir, "events")
         .groupBy(col("event_type"))
         .agg(count(lit(1)).as("n"), mmSum(col("value")).as("sum_value_mm"))
         .orderBy("event_type")
-    }),
+    }, oracle =
+      """SELECT event_type, count(*) AS n,
+         CAST(sum(CAST(round(value*1000) AS BIGINT)) AS BIGINT) AS sum_value_mm
+         FROM events GROUP BY 1 ORDER BY 1"""),
 
     // ---- coordinate kernels vs closed-form SQL ----
-    "geo_utm_zone" -> ((s, dir) => {
+    DriverQuery("geo_utm_zone", (s, dir) => {
       custPoints(s, dir)
         .withColumn("utm_zone", GeoFunctions.utmZone(col("lon")))
         .groupBy(col("utm_zone")).agg(count(lit(1)).as("n"))
         .orderBy("utm_zone")
-    }),
+    }, oracle =
+      """SELECT CAST(LEAST(GREATEST(floor((((c_custkey*73)%360)-180+0.5+180)/6),0),59)+1 AS INT) AS utm_zone,
+         count(*) AS n
+         FROM customer GROUP BY 1 ORDER BY 1""",
+      planWants = Seq(
+        "no shuffle for per-row transform" -> (p => !p.contains("Exchange") || p.contains("HashAggregate")))),
 
-    "geo_utm_native" -> ((s, dir) => {
+    DriverQuery("geo_utm_native", (s, dir) => {
       // per-row zone inference driving the transform: each point lands in
       // its OWN zone's CRS (120 precompiled pipelines, selected per row);
       // oracle recomputes zone + Krueger series easting/northing in SQL
@@ -141,43 +202,78 @@ object SparkEntry {
         .withColumn("utm", ProjFunctions.utmNative(col("lon"), col("lat")))
         .select(col("point_id"), col("utm.zone").as("zone"),
           mm(col("utm.x")).as("x_mm"), mm(col("utm.y")).as("y_mm"))
-    }),
+    }, oracle = OracleSql.geoUtmNative,
+      planWants = Seq(
+        "no shuffle for per-row zone dispatch" -> (p => !p.contains("Exchange") || p.contains("TakeOrdered"))),
+      bench = Headline),
 
-    "geo_webmerc" -> ((s, dir) => {
+    DriverQuery("geo_webmerc", (s, dir) => {
       custPoints(s, dir)
         .withColumn("wm", ProjFunctions.projTrans2(col("lon"), col("lat"),
           "proj=webmerc ellps=WGS84"))
         .select(col("point_id"),
           mm(col("wm.x")).as("x_mm"),
           mm(col("wm.y")).as("y_mm"))
-    }),
+    }, oracle =
+      """SELECT c_custkey AS point_id,
+         CAST(round(6378137.0*radians(((c_custkey*73)%360)-180+0.5)*1000) AS BIGINT) AS x_mm,
+         CAST(round(6378137.0*ln(tan(pi()/4+radians(((c_custkey*37)%160)-80+0.25)/2))*1000) AS BIGINT) AS y_mm
+         FROM customer""",
+      bench = Headline),
 
-    "geo_tile" -> ((s, dir) => {
+    DriverQuery("geo_tile", (s, dir) => {
       custPoints(s, dir)
         .withColumn("tile", GeoFunctions.tileKey(col("lon"), col("lat"), lit(8)))
         .select(col("point_id"),
           shiftright(col("tile"), 29).bitwiseAND(lit((1L << 29) - 1)).as("tile_x"),
           col("tile").bitwiseAND(lit((1L << 29) - 1)).as("tile_y"))
-    }),
+    }, oracle =
+      """SELECT c_custkey AS point_id,
+         CAST(LEAST(GREATEST(floor(((((c_custkey*73)%360)-180+0.5)+180)/360*256),0),255) AS BIGINT) AS tile_x,
+         CAST(LEAST(GREATEST(floor((1 - ln(tan(radians(((c_custkey*37)%160)-80+0.25)) + 1/cos(radians(((c_custkey*37)%160)-80+0.25)))/pi())/2*256),0),255) AS BIGINT) AS tile_y
+         FROM customer"""),
 
-    "geo_tile_agg" -> ((s, dir) => {
+    DriverQuery("geo_tile_agg", (s, dir) => {
       // raster-tile <-> vector assignment: per-tile point counts at z6
       custPoints(s, dir)
         .withColumn("tile", GeoFunctions.tileKey(col("lon"), col("lat"), lit(6)))
         .groupBy(col("tile")).agg(count(lit(1)).as("n"))
         .select(shiftright(col("tile"), 29).bitwiseAND(lit((1L << 29) - 1)).as("tile_x"),
           col("tile").bitwiseAND(lit((1L << 29) - 1)).as("tile_y"), col("n"))
-    }),
+    }, oracle =
+      """SELECT tile_x, tile_y, count(*) AS n FROM (
+           SELECT
+             CAST(LEAST(GREATEST(floor(((((c_custkey*73)%360)-180+0.5)+180)/360*64),0),63) AS BIGINT) AS tile_x,
+             CAST(LEAST(GREATEST(floor((1 - ln(tan(radians(((c_custkey*37)%160)-80+0.25)) + 1/cos(radians(((c_custkey*37)%160)-80+0.25)))/pi())/2*64),0),63) AS BIGINT) AS tile_y
+           FROM customer)
+         GROUP BY 1,2""",
+      bench = Headline),
 
-    "geo_pip" -> ((s, dir) => {
+    DriverQuery("geo_pip", (s, dir) => {
       // point-in-polygon via S2 cover + exact ray-cast, vs SQL bbox test
       val zones = DocsTable.zones(s, halfDeg = 8.0)
       SpatialJoins.pipJoin(custPoints(s, dir), zones, level = 6)
         .select(col("point_id"), col("zone_id"))
         .orderBy("point_id", "zone_id")
-    }),
+    }, oracle =
+      """WITH pts AS (
+           SELECT c_custkey AS point_id,
+             (((c_custkey*73)%360)-180+0.5)::DOUBLE AS lon,
+             (((c_custkey*37)%160)-80+0.25)::DOUBLE AS lat
+           FROM customer),
+         zones(zone_id, zlon, zlat) AS (VALUES
+           (0, 139.69, 35.69), (1, 77.10, 28.70), (2, -46.63, -23.55),
+           (3, 3.38, 6.52), (4, -74.01, 40.71))
+         SELECT point_id, zone_id FROM pts, zones
+         WHERE lon > zlon-8.0 AND lon < zlon+8.0
+           AND lat > zlat-8.0 AND lat < zlat+8.0
+         ORDER BY point_id, zone_id""",
+      planWants = Seq(
+        "broadcast of polygon cover" -> (_.contains("Broadcast")),
+        "scan present" -> (_.contains("Scan"))),
+      bench = Headline),
 
-    "geo_knn" -> ((s, dir) => {
+    DriverQuery("geo_knn", (s, dir) => {
       // 10 fixed queries, top-5 by haversine (SQL-replicable brute force)
       val q = s.range(1, 11).select(
         col("id").as("q_id"),
@@ -197,9 +293,32 @@ object SparkEntry {
         .withColumn("rnk", row_number().over(w))
         .where(col("rnk") <= 5)
         .select(col("q_id"), col("point_id"), col("rnk"))
-    }),
+    }, oracle =
+      """WITH q AS (
+           SELECT id AS q_id,
+             ((id*31)%360-180+0.5)::DOUBLE AS q_lon,
+             ((id*17)%160-80+0.25)::DOUBLE AS q_lat
+           FROM range(1, 11) t(id)),
+         pts AS (
+           SELECT c_custkey AS point_id,
+             (((c_custkey*73)%360)-180+0.5)::DOUBLE AS lon,
+             (((c_custkey*37)%160)-80+0.25)::DOUBLE AS lat
+           FROM customer),
+         scored AS (
+           SELECT q_id, point_id,
+             2*6371000.0*asin(sqrt(
+               pow(sin(radians(lat-q_lat)/2),2) +
+               cos(radians(q_lat))*cos(radians(lat))*pow(sin(radians(lon-q_lon)/2),2))) AS dist_m
+           FROM pts, q)
+         SELECT q_id, point_id, rnk FROM (
+           SELECT q_id, point_id,
+             row_number() OVER (PARTITION BY q_id ORDER BY dist_m, point_id) AS rnk
+           FROM scored) WHERE rnk <= 5""",
+      planWants = Seq(
+        "ring-cell equi-join" -> (p => p.contains("Join") || p.contains("join")),
+        "windowed top-k" -> (_.contains("Window")))),
 
-    "geo_knn_geodesic" -> ((s, dir) => {
+    DriverQuery("geo_knn_geodesic", (s, dir) => {
       // exact Karney scoring through the cell-ring join, against an
       // INDEPENDENT ellipsoidal oracle: DuckDB re-solves every pair's WGS84
       // inverse problem with fully converged Vincenty (recursive CTE) —
@@ -231,9 +350,10 @@ object SparkEntry {
       SpatialJoins.knnJoin(q, pts, k = 5, level = level, rings = 2,
         distQuantM = 1.0)
         .select("q_id", "point_id", "dist_q", "rnk")
-    }),
+    }, oracle = OracleSql.geoKnnGeodesic,
+      bench = Headline),
 
-    "geo_hex_knn" -> ((s, dir) => {
+    DriverQuery("geo_hex_knn", (s, dir) => {
       // the hex-grid kNN path (webmerc + flat-top axial hex ring join +
       // Karney ranking) against the SAME independent fully-converged
       // Vincenty oracle geo_knn_geodesic uses: two different engine cell
@@ -271,9 +391,9 @@ object SparkEntry {
         .where(col("rnk2") <= 5)
         .select(col("q_id"), col("point_id"), col("dist_q"),
           col("rnk2").as("rnk"))
-    }),
+    }, oracle = OracleSql.geoHexKnn),
 
-    "geo_s2_cells" -> ((s, dir) => {
+    DriverQuery("geo_s2_cells", (s, dir) => {
       // S2 face + (u,v) — the closed-form projection half of the cell
       // mapping, oracle-checked in SQL; the Hilbert-curve id itself is
       // ScalaCheck'd (bijectivity/hierarchy) in S2CellSpec and exercised by
@@ -283,9 +403,9 @@ object SparkEntry {
         .select(col("point_id"), col("fuv.face").as("face"),
           round(col("fuv.u") * 1e9).cast("long").as("u_nano"),
           round(col("fuv.v") * 1e9).cast("long").as("v_nano"))
-    }),
+    }, oracle = OracleSql.geoS2Cells),
 
-    "geo_range_partition" -> ((s, dir) => {
+    DriverQuery("geo_range_partition", (s, dir) => {
       // Hilbert-locality storage partitioning: range-partition on the full
       // s2 cell id (level 10) and verify the operator contract from the
       // actual partition layout — every partition internally sorted, the
@@ -318,9 +438,10 @@ object SparkEntry {
         min(col("mn")).as("min_cell"), max(col("mx")).as("max_cell"))
       val dist = pts.agg(countDistinct(col("cell")).as("n_cells"))
       invariants.crossJoin(dist)
-    }),
+    }, oracle = OracleSql.geoRangePartition,
+      bench = Round5),
 
-    "geo_global_hex" -> ((s, dir) => {
+    DriverQuery("geo_global_hex", (s, dir) => {
       // global equal-area hex cells: lon/lat -> ISEA (icosahedral Snyder
       // equal-area, plane mode) -> flat-top axial hex at 500 km — the
       // honest H3 alternative. Oracled per point against a full SQL mirror
@@ -337,9 +458,10 @@ object SparkEntry {
           mm(col("isea.x")).as("x_mm"), mm(col("isea.y")).as("y_mm"),
           col("cell.q").cast("long").as("q"), col("cell.r").cast("long").as("r"))
         .orderBy("point_id")
-    }),
+    }, oracle = OracleSql.geoGlobalHex,
+      bench = Round5),
 
-    "geo_waypoints" -> ((s, dir) => {
+    DriverQuery("geo_waypoints", (s, dir) => {
       // geodesic line walking: n+1 equally-spaced waypoints between point
       // pairs. The contract is analytic — waypoint k sits ON the geodesic
       // (detour (d1+d2-s)/s = 0) at exactly k/n of the arc — so the oracle
@@ -371,9 +493,13 @@ object SparkEntry {
           round((col("d1") + col("d2") - col("s12")) / col("s12") * 1e6)
             .cast("long").as("detour_ppm"))
         .orderBy("pair_id", "k")
-    }),
+    }, oracle =
+      """SELECT c_custkey AS pair_id, CAST(j AS BIGINT) AS k,
+         CAST(j AS BIGINT) AS spacing_idx, CAST(0 AS BIGINT) AS detour_ppm
+         FROM customer, range(0, 9) t(j)
+         WHERE c_custkey % 75 = 3 ORDER BY pair_id, k"""),
 
-    "geo_tile_qa" -> ((s, dir) => {
+    DriverQuery("geo_tile_qa", (s, dir) => {
       // tile QA metrics: web-mercator distortion factors per point. For the
       // spherical webmerc kernel the parallel scale is exactly sec(lat), so
       // this one IS oracle-checkable in SQL despite the numeric derivation.
@@ -382,9 +508,17 @@ object SparkEntry {
           "proj=webmerc ellps=WGS84"))
         .select(col("point_id"),
           round(col("f.k") * 1e6).cast("long").as("k_ppm"))
-    }),
+    },
+      // webmerc runs the spherical kernel on the WGS84 ellipsoid (es != 0),
+      // so proj_factors applies the ellipsoidal correction: k =
+      // sqrt(1 - es sin^2(lat)) / cos(lat) — closed form, checkable in SQL
+      oracle = ("SELECT point_id, CAST(round(1000000.0*" +
+      "sqrt(1 - 0.0066943799901413165*sin(radians(lat))*sin(radians(lat)))" +
+      "/cos(radians(lat))) AS BIGINT) AS k_ppm " +
+      "FROM (SELECT c_custkey AS point_id, " +
+      "((c_custkey*37)%160)-80+0.25 AS lat FROM customer)")),
 
-    "geo_gridshift" -> ((s, dir) => {
+    DriverQuery("geo_gridshift", (s, dir) => {
       // NADCON5 GeoTIFF grid shift (NAD83(2007)->NAD83(2011)) applied to
       // derived points inside the grid extent; the grid loads once per
       // executor JVM and the lookup runs inside whole-stage codegen.
@@ -399,9 +533,9 @@ object SparkEntry {
         .select(col("point_id"),
           round((col("shifted.x") - col("lon_g")) * 1e10).cast("long").as("dlon_e10"),
           round((col("shifted.y") - col("lat_g")) * 1e10).cast("long").as("dlat_e10"))
-    }),
+    }, oracle = OracleSql.geoGridshift),
 
-    "geo_geoid" -> ((s, dir) => {
+    DriverQuery("geo_geoid", (s, dir) => {
       // EGM96 geoid undulation as an orthometric-height column via
       // +proj=vgridshift (broadcast-grid style vertical datum change).
       // Oracle: DuckDB bilinear over the dumped GTX nodes (OracleSql).
@@ -412,9 +546,9 @@ object SparkEntry {
         .withColumn("ortho",
           ProjFunctions.projTrans2(col("lon_g"), col("lat_g"), pipeline))
         .select(col("point_id"), mm(col("ortho.z")).as("undulation_mm"))
-    }),
+    }, oracle = OracleSql.geoGeoid),
 
-    "geo_datum_shift" -> ((s, dir) => {
+    DriverQuery("geo_datum_shift", (s, dir) => {
       // full datum pipeline cart -> helmert(7) -> cart^-1 on derived points;
       // oracle mirrors the closed-form chain in SQL at micro-degree (~0.1 m)
       // quantization
@@ -427,9 +561,10 @@ object SparkEntry {
         .select(col("point_id"),
           round(col("gda2020.x") * 1e6).cast("long").as("lon_udeg"),
           round(col("gda2020.y") * 1e6).cast("long").as("lat_udeg"))
-    }),
+    }, oracle = OracleSql.geoDatumShift,
+      bench = Headline),
 
-    "geo_geodesic_meridian" -> ((s, dir) => {
+    DriverQuery("geo_geodesic_meridian", (s, dir) => {
       // exact Karney inverse between same-meridian point pairs; the oracle
       // is the closed-form Helmert meridian-arc series (error ~1e-10 m),
       // so the geodesic kernel gets a driver-side hard signal at mm level
@@ -439,19 +574,25 @@ object SparkEntry {
         .select(col("point_id"),
           round(GeoFunctions.geodesicDistance(lit(12.5), col("lat1"),
             lit(12.5), col("lat2")) * 1000).cast("long").as("dist_mm"))
-    }),
+    }, oracle = OracleSql.geoGeodesicMeridian),
 
     // ---- training-data pipeline ops over documents/embeddings ----
-    "text_metrics" -> ((s, dir) => {
+    DriverQuery("text_metrics", (s, dir) => {
       TrainingOps.withQuality(t(s, dir, "documents"))
         .groupBy(col("lang"))
         .agg(count(lit(1)).as("n_docs"),
           sum(col("n_tokens")).as("sum_tokens"),
           mm(avg(col("n_chars_m"))).as("avg_chars_mm"))
         .orderBy("lang")
-    }),
+    }, oracle =
+      """SELECT lang, count(*) AS n_docs,
+         sum(CASE WHEN length(trim(text))=0 THEN 0
+             ELSE length(trim(text)) - length(replace(trim(text),' ','')) + 1 END)::BIGINT AS sum_tokens,
+         CAST(round(avg(length(text))*1000) AS BIGINT) AS avg_chars_mm
+         FROM documents GROUP BY 1 ORDER BY 1""",
+      bench = Headline),
 
-    "dedup_exact" -> ((s, dir) => {
+    DriverQuery("dedup_exact", (s, dir) => {
       // inject deterministic duplicates (every 7th doc re-appears with a
       // shifted id) so the dup-detection path is actually exercised
       val d = t(s, dir, "documents")
@@ -462,9 +603,17 @@ object SparkEntry {
         .groupBy(col("source"))
         .agg(count(lit(1)).as("n_dups"))
         .orderBy("source")
-    }),
+    }, oracle =
+      """SELECT source, count(*) AS n_dups FROM (
+           SELECT source,
+             row_number() OVER (PARTITION BY md5(text) ORDER BY doc_id) AS rn
+           FROM (SELECT * FROM documents UNION ALL
+                 SELECT doc_id + 1000000, text, lang, source, n_chars
+                 FROM documents WHERE doc_id % 7 = 0))
+         WHERE rn > 1 GROUP BY 1 ORDER BY 1""",
+      bench = Headline),
 
-    "dedup_minhash" -> ((s, dir) => {
+    DriverQuery("dedup_minhash", (s, dir) => {
       // MinHash+LSH near-dup pairs with the shared md5 hash family (DuckDB
       // computes identical signatures); near-dups injected (every 11th doc
       // re-appears with one word appended) so sub-1.0 Jaccard paths run.
@@ -476,9 +625,13 @@ object SparkEntry {
         .withColumn("text", concat(col("text"), lit(" extra")))
       TrainingOps.minhashDedupShared(d.unionByName(nearDups),
         numHashes = 16, bands = 4, threshold = 0.5)
-    }),
+    }, oracle = OracleSql.dedupMinhash(numHashes = 16, bands = 4, thresholdPpm = 500000L),
+      planWants = Seq(
+        "shuffle on band bucket only" -> (_.contains("Exchange")),
+        "scan present" -> (_.contains("Scan"))),
+      bench = Headline),
 
-    "dedup_clusters" -> ((s, dir) => {
+    DriverQuery("dedup_clusters", (s, dir) => {
       // near-dup CLUSTERS: the minhash pairs become connected components
       // (iterative min-label propagation) labelled with min doc_id +
       // cluster size — the keep-one-representative dedup input. Oracle
@@ -490,9 +643,9 @@ object SparkEntry {
         .withColumn("text", concat(col("text"), lit(" extra")))
       TrainingOps.dedupClustersShared(d.unionByName(nearDups),
         numHashes = 16, bands = 4, threshold = 0.5)
-    }),
+    }, oracle = OracleSql.dedupClusters(numHashes = 16, bands = 4, thresholdPpm = 500000L)),
 
-    "dedup_keep" -> ((s, dir) => {
+    DriverQuery("dedup_keep", (s, dir) => {
       // end-to-end near-dup dedup: survivors = corpus minus cluster
       // members plus one representative per cluster (longest text, min
       // doc_id) — the table the next pipeline stage actually reads
@@ -502,34 +655,38 @@ object SparkEntry {
         .withColumn("text", concat(col("text"), lit(" extra")))
       TrainingOps.dedupNearShared(d.unionByName(nearDups),
         numHashes = 16, bands = 4, threshold = 0.5)
-    }),
+    }, oracle = OracleSql.dedupKeep(numHashes = 16, bands = 4, thresholdPpm = 500000L)),
 
-    "dedup_simhash" -> ((s, dir) => {
+    DriverQuery("dedup_simhash", (s, dir) => {
       // 16-bit SimHash candidate buckets from the shared md5-derived hash
       // (cross-engine identical); the xxhash64 64-bit engine path is
       // sbt-verified in TrainingSpec
       TrainingOps.withSimhashBucketShared(t(s, dir, "documents"))
         .groupBy("bucket").agg(count(lit(1)).as("n"))
-    }),
+    }, oracle = OracleSql.dedupSimhash),
 
-    "ann_brute" -> ((s, dir) => {
+    DriverQuery("ann_brute", (s, dir) => {
       // brute-force cosine top-3 for the first 10 vectors over double-cast
       // embeddings, ranked on ppm-quantized similarity (cross-engine-stable)
       val emb = t(s, dir, "embeddings")
       val q = emb.where(col("vec_id") < 10)
       TrainingOps.annBruteQuantized(q, emb, k = 3)
-    }),
+    }, oracle = OracleSql.annBrute(k = 3)),
 
-    "ann_lsh" -> ((s, dir) => {
+    DriverQuery("ann_lsh", (s, dir) => {
       // LSH-bucketed ANN scale path with shared md5-derived hyperplanes
       // (bucketing + scoring reproduced in the DuckDB oracle); the gaussian
       // engine path keeps its recall-vs-brute assertion in TrainingSpec
       val emb = t(s, dir, "embeddings")
       val q = emb.where(col("vec_id") < 10)
       TrainingOps.annLshShared(q, emb, k = 3, planes = 6, tables = 8)
-    }),
+    }, oracle = OracleSql.annLsh(k = 3, planes = 6, tables = 8),
+      planWants = Seq(
+        "bucket equi-join" -> (p => p.contains("Join")),
+        "scan present" -> (_.contains("Scan"))),
+      bench = Headline),
 
-    "ann_index" -> ((s, dir) => {
+    DriverQuery("ann_index", (s, dir) => {
       // persisted ANN: hash the corpus once into a (tbl, bucket)-partitioned
       // on-disk index, then answer the query batch off the PRUNED index
       // scan (static partition filters from the batch's bucket set).
@@ -551,23 +708,38 @@ object SparkEntry {
       graft.spark.AnnIndex.build(emb, path, planes = 6, tables = 8,
         reuse = true, version = dir)
       graft.spark.AnnIndex.query(s, path, emb.where(col("vec_id") < 10), k = 3)
-    }),
+    },
+      // same bucketing family + scoring as ann_lsh — the persisted index must
+      // reproduce the in-memory path's rows exactly
+      oracle = OracleSql.annLsh(k = 3, planes = 6, tables = 8),
+      planWants = Seq(
+        "static partition filters prune the index scan" ->
+          (p => "PartitionFilters: \\[[^\\]]".r.findFirstIn(p).isDefined),
+        "bucket equi-join" -> (p => p.contains("Join")),
+        "no cross product" -> (p => !p.contains("CartesianProduct"))),
+      bench = Headline),
 
-    "lang_id" -> ((s, dir) => {
+    DriverQuery("lang_id", (s, dir) => {
       TrainingOps.withLangId(t(s, dir, "documents"))
         .groupBy(col("lang_pred")).agg(count(lit(1)).as("n"))
-    }),
+    }, oracle = OracleSql.langId),
 
-    "ann_ivf" -> ((s, dir) => {
+    DriverQuery("ann_ivf", (s, dir) => {
       // IVF scale path: fixed seed centroids (iters = 0 so the list
       // assignment is closed-form and replicated by the DuckDB oracle);
       // k-means-refined centroids are exercised in TrainingSpec
       val emb = t(s, dir, "embeddings")
       val q = emb.where(col("vec_id") < 10)
       TrainingOps.annIvf(q, emb, k = 3, nlist = 16, nprobe = 4, iters = 0)
-    }),
+    }, oracle = OracleSql.annIvf(k = 3, nlist = 16, nprobe = 4),
+      planWants = Seq(
+        "cluster-id equi-join (no cross product on corpus)" -> (p => p.contains("Join")),
+        "nearest-centroid assignment is a map-side argmax aggregate (max_by), " +
+          "not a window over nlist x N rows" -> (p =>
+            p.contains("max_by") && "partial_max_by|max_by.*\\bmerge".r.findFirstIn(p).isDefined),
+        "windowed top-k" -> (_.contains("Window")))),
 
-    "dedup_embedding" -> ((s, dir) => {
+    DriverQuery("dedup_embedding", (s, dir) => {
       // embedding-cosine near-dup: perturbed copies injected (every 13th
       // vector re-appears with +0.01 on its first component), candidates
       // from shared-hyperplane LSH buckets, exact cosine >= 0.9 confirm
@@ -578,9 +750,12 @@ object SparkEntry {
           concat(array(element_at(col("embedding"), 1) + 0.01),
             slice(col("embedding"), 2, 63)).as("embedding"))
       TrainingOps.embeddingDedupShared(emb.unionByName(pert), thresholdPpm = 900000L)
-    }),
+    }, oracle = OracleSql.dedupEmbedding(thresholdPpm = 900000L, planes = 6, tables = 8),
+      planWants = Seq(
+        "bucket equi-join" -> (p => p.contains("Join")),
+        "no cross product" -> (p => !p.contains("CartesianProduct")))),
 
-    "text_decontam" -> ((s, dir) => {
+    DriverQuery("text_decontam", (s, dir) => {
       // benchmark decontamination: 13-gram overlap against an eval set
       // (deterministically derived: the leading 13-gram of every doc_id %
       // 97 == 5 doc). The eval set broadcasts, corpus windows generate
@@ -590,9 +765,30 @@ object SparkEntry {
       val eval = TrainingOps.evalSnippets(d.where(col("doc_id") % 97 === 5))
       TrainingOps.decontaminate(d, eval)
         .orderBy("doc_id")
-    }),
+    }, oracle =
+      """WITH toks AS (
+           SELECT doc_id,
+             string_split(regexp_replace(lower(trim(text)), '\s+', ' ', 'g'), ' ') AS t
+           FROM documents),
+         ev AS (
+           SELECT DISTINCT array_to_string(t[1:13], ' ') AS gram
+           FROM toks WHERE doc_id % 97 = 5 AND len(t) >= 13),
+         pos AS (
+           SELECT doc_id, t, unnest(generate_series(1, len(t) - 12)) AS i
+           FROM toks WHERE len(t) >= 13),
+         win AS (
+           SELECT doc_id, array_to_string(t[i:i+12], ' ') AS gram FROM pos)
+         SELECT doc_id, count(*) AS n_hits
+         FROM win JOIN ev USING (gram)
+         GROUP BY doc_id ORDER BY doc_id""",
+      planWants = Seq(
+        "eval set broadcasts (corpus never shuffles for the probe)" ->
+          (_.contains("BroadcastHashJoin")),
+        "no cross product" -> (p => !p.contains("CartesianProduct")),
+        "window explode stays in the plan" -> (_.contains("Generate"))),
+      bench = Round5),
 
-    "q_mixture" -> ((s, dir) => {
+    DriverQuery("q_mixture", (s, dir) => {
       // domain-mixing: per-source keep rates ((k+1)*5% for srck) applied
       // via the seeded integer hash — deterministic sampling the oracle
       // replays exactly (HUGEINT wrap + signed pmod). Broadcast rates,
@@ -605,9 +801,29 @@ object SparkEntry {
         .groupBy("source")
         .agg(count(lit(1)).as("n_kept"), sum(col("doc_id")).as("sum_ids"))
         .orderBy("source")
-    }),
+    }, oracle =
+      """WITH h AS (
+           SELECT doc_id, source,
+             (CAST(doc_id AS HUGEINT) * 6364136223846793005
+              + 1442695040888963407) % 18446744073709551616 AS hu
+           FROM documents),
+         sv AS (
+           SELECT doc_id, source,
+             CASE WHEN hu >= 9223372036854775808
+                  THEN hu - 18446744073709551616 ELSE hu END AS s
+           FROM h)
+         SELECT source, count(*) AS n_kept,
+           CAST(sum(doc_id) AS BIGINT) AS sum_ids
+         FROM sv
+         WHERE ((s % 1000000) + 1000000) % 1000000 <
+           (CAST(substring(source, 4) AS INT) + 1) * 50000
+         GROUP BY source ORDER BY source""",
+      planWants = Seq(
+        "rates broadcast + map-side filter" -> (_.contains("BroadcastHashJoin")),
+        "no cross product" -> (p => !p.contains("CartesianProduct"))),
+      bench = Round5),
 
-    "text_tokens" -> ((s, dir) => {
+    DriverQuery("text_tokens", (s, dir) => {
       // BPE-ish pre-tokenizer counts (letter runs / digit runs / marks)
       // next to whitespace tokens, per source
       val d = t(s, dir, "documents")
@@ -618,9 +834,15 @@ object SparkEntry {
           sum(col("n_bpe")).as("sum_bpe_tokens"),
           count(lit(1)).as("n_docs"))
         .orderBy("source")
-    }),
+    }, oracle =
+      """SELECT source,
+         sum(CASE WHEN length(trim(text))=0 THEN 0
+             ELSE length(trim(text)) - length(replace(trim(text),' ','')) + 1 END)::BIGINT AS sum_ws_tokens,
+         sum(len(regexp_extract_all(lower(text), '[a-z]+|[0-9]+|[^a-z0-9 ]')))::BIGINT AS sum_bpe_tokens,
+         count(*) AS n_docs
+         FROM documents GROUP BY source ORDER BY source"""),
 
-    "pii_scrub" -> ((s, dir) => {
+    DriverQuery("pii_scrub", (s, dir) => {
       // PII redaction over real document text with deterministic synthetic
       // PII injected (email/phone/id derived from doc_id), so the scrub
       // path actually fires; DuckDB re-runs the same regex chain (RE2 vs
@@ -635,9 +857,24 @@ object SparkEntry {
         md5(TrainingOps.scrubPii(col("txt"))).as("scrub_md5"),
         length(col("txt")).as("raw_len"))
         .orderBy("doc_id")
-    }),
+    }, oracle =
+      """WITH injected AS (
+           SELECT doc_id,
+             text || ' contact user' || CAST(doc_id AS VARCHAR) ||
+               '@ex.org call +1-202-555-' ||
+               lpad(CAST(doc_id % 10000 AS VARCHAR), 4, '0') ||
+               ' id ' || CAST(doc_id*doc_id AS VARCHAR) AS txt
+           FROM documents)
+         SELECT doc_id,
+           md5(regexp_replace(regexp_replace(regexp_replace(txt,
+             '[A-Za-z0-9._%+-]+@[A-Za-z0-9.-]+\.[A-Za-z]{2,}', '<EMAIL>', 'g'),
+             '\+?\d[\d\-]{9,}\d', '<PHONE>', 'g'),
+             '\d{6,}', '<NUM>', 'g')) AS scrub_md5,
+           CAST(length(txt) AS INT) AS raw_len
+         FROM injected ORDER BY doc_id""",
+      bench = Headline),
 
-    "text_chunks" -> ((s, dir) => {
+    DriverQuery("text_chunks", (s, dir) => {
       // fixed-size overlapping character windows (64 chars, 16 overlap)
       // over the real document text; every chunk's content and position
       // is hash-compared (md5) against DuckDB's independent reconstruction
@@ -646,9 +883,20 @@ object SparkEntry {
           md5(col("chunk")).as("chunk_md5"),
           length(col("chunk")).as("chunk_len"))
         .orderBy("doc_id", "chunk_idx")
-    }),
+    }, oracle =
+      """WITH chunked AS (
+           SELECT doc_id, u.i AS chunk_idx, u.c AS chunk
+           FROM (
+             SELECT doc_id,
+               unnest([{'i': i, 'c': substring(text, 1 + i*48, 64)}
+                       for i in range(0, greatest((length(text) - 16 + 47) // 48, 1))]) AS u
+             FROM documents WHERE length(text) > 0))
+         SELECT doc_id, chunk_idx, md5(chunk) AS chunk_md5,
+           CAST(length(chunk) AS INT) AS chunk_len
+         FROM chunked ORDER BY doc_id, chunk_idx""",
+      bench = Headline),
 
-    "doc_fingerprint" -> ((s, dir) => {
+    DriverQuery("doc_fingerprint", (s, dir) => {
       // whole-doc fingerprinting with injected exact dups: per-source doc
       // and distinct-fingerprint counts
       val d = t(s, dir, "documents")
@@ -659,9 +907,9 @@ object SparkEntry {
         .groupBy("source")
         .agg(count(lit(1)).as("n_docs"), countDistinct(col("fp")).as("n_unique"))
         .orderBy("source")
-    }),
+    }, oracle = OracleSql.docFingerprint),
 
-    "q_asof" -> ((s, dir) => {
+    DriverQuery("q_asof", (s, dir) => {
       // as-of join: each event picks the latest per-user state with
       // valid_from <= ts (union + ordered window: one shuffle, no range
       // cross-product); oracle is DuckDB's native ASOF JOIN
@@ -675,9 +923,22 @@ object SparkEntry {
           ((col("user_id") * 31 + col("k")) % 4).as("tier"))
       graft.spark.TemporalJoins.asofJoin(ev, states, "user_id", "t", "valid_from")
         .select(col("event_id"), col("user_id"), col("tier"), col("valid_from"))
-    }),
+    }, oracle =
+      """WITH ev AS (
+           SELECT event_id, user_id, CAST(floor(epoch(ts)) AS BIGINT) AS t FROM events),
+         states AS (
+           SELECT user_id, 1704067200 + k*3600*(6 + user_id%5) AS valid_from,
+                  (user_id*31 + k) % 4 AS tier
+           FROM range(0, 160) u(user_id), range(0, 10) kk(k))
+         SELECT event_id, ev.user_id, tier, valid_from
+         FROM ev ASOF JOIN states
+           ON ev.user_id = states.user_id AND ev.t >= states.valid_from
+         ORDER BY event_id""",
+      planWants = Seq(
+        "single window carry-forward (no range join)" -> (p =>
+          p.contains("Window") && !p.contains("CartesianProduct") && !p.contains("BroadcastNestedLoop")))),
 
-    "q_sessions" -> ((s, dir) => {
+    DriverQuery("q_sessions", (s, dir) => {
       // gap-based sessionization of the events stream (30-min gap): per
       // (user, session) event counts and durations — the lag + running-sum
       // plan, reproduced independently by DuckDB's window functions
@@ -689,9 +950,28 @@ object SparkEntry {
         .agg(count(lit(1)).as("n_events"),
           (max(col("t")) - min(col("t"))).as("dur_s"))
         .orderBy("user_id", "session_seq")
-    }),
+    }, oracle =
+      """WITH ev AS (
+           SELECT event_id, user_id, CAST(floor(epoch(ts)) AS BIGINT) AS t
+           FROM events),
+         marked AS (
+           SELECT user_id, t,
+             CASE WHEN lag(t) OVER (PARTITION BY user_id ORDER BY t, event_id) IS NULL
+                   OR t - lag(t) OVER (PARTITION BY user_id ORDER BY t, event_id) > 1800
+                  THEN 1 ELSE 0 END AS ns,
+             event_id
+           FROM ev),
+         sess AS (
+           SELECT user_id, t,
+             CAST(sum(ns) OVER (PARTITION BY user_id ORDER BY t, event_id
+               ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS BIGINT) AS session_seq
+           FROM marked)
+         SELECT user_id, session_seq, count(*) AS n_events,
+           CAST(max(t) - min(t) AS BIGINT) AS dur_s
+         FROM sess GROUP BY 1,2 ORDER BY 1,2""",
+      bench = Headline),
 
-    "q_snapshot_compact" -> ((s, dir) => {
+    DriverQuery("q_snapshot_compact", (s, dir) => {
       // snapshot layer end-to-end: fragmented ingest commit -> bin-packing
       // compaction as a NEW snapshot -> read back the compacted table. The
       // oracle recomputes the per-bucket metrics straight from the source
@@ -721,9 +1001,17 @@ object SparkEntry {
           min("event_id").as("min_id"), max("event_id").as("max_id"),
           sum("user_id").as("user_sum"))
         .orderBy("bucket")
-    }),
+    },
+      // row identity across snapshot commit + compaction: the oracle computes
+      // the per-bucket metrics from the SOURCE table; the Spark side reads
+      // them off the compacted snapshot
+      oracle =
+      """SELECT event_id % 8 AS bucket, count(*) AS n_rows,
+           min(event_id) AS min_id, max(event_id) AS max_id,
+           CAST(sum(user_id) AS BIGINT) AS user_sum
+         FROM events GROUP BY 1 ORDER BY 1"""),
 
-    "q_stream_dedup" -> ((s, dir) => {
+    DriverQuery("q_stream_dedup", (s, dir) => {
       // the streaming watermark-bounded dedup replayed over a bounded batch
       // of the documents feed (with dedup_exact's duplicate injection),
       // three micro-batches apart in event time:
@@ -758,9 +1046,19 @@ object SparkEntry {
       s.table(sinkName)
         .groupBy("fp").agg(count(lit(1)).as("n_emits"))
         .orderBy("fp")
-    }),
+    },
+      // watermark-bounded streaming dedup over a bounded 3-batch replay:
+      // every distinct normalized-text fingerprint is emitted exactly twice
+      // (once new, once after state eviction; the +1h duplicates are dropped)
+      oracle =
+      """SELECT DISTINCT
+           md5(regexp_replace(lower(trim(text)), '\s+', ' ', 'g')) AS fp,
+           CAST(2 AS BIGINT) AS n_emits
+         FROM (SELECT text FROM documents UNION ALL
+               SELECT text FROM documents WHERE doc_id % 7 = 0)
+         ORDER BY fp"""),
 
-    "q_stream_window" -> ((s, dir) => {
+    DriverQuery("q_stream_window", (s, dir) => {
       // watermarked tumbling-window per-cell counts, replayed over bounded
       // batches with an explicit LATE-DATA proof:
       //   batch A (t=0..9min):  customer cells, two 5-min windows W0/W1
@@ -798,9 +1096,9 @@ object SparkEntry {
         .select((col("window.start").cast("long")).as("win_start"),
           col("cell"), col("n"))
         .orderBy("win_start", "cell")
-    }),
+    }, oracle = OracleSql.streamWindow),
 
-    "geo_trans_bounds" -> ((s, dir) => {
+    DriverQuery("geo_trans_bounds", (s, dir) => {
       // per-row tile-extent reprojection (partition-pruning primitive):
       // webmerc is monotone in both axes, so the densified-edge envelope is
       // closed-form (the corners) — SQL-checkable
@@ -812,9 +1110,20 @@ object SparkEntry {
         .select(col("point_id"),
           mm(col("b.xmin")).as("xmin_mm"), mm(col("b.ymin")).as("ymin_mm"),
           mm(col("b.xmax")).as("xmax_mm"), mm(col("b.ymax")).as("ymax_mm"))
-    }),
+    }, oracle =
+      """WITH pts AS (
+           SELECT c_custkey AS point_id,
+             ((((c_custkey*73)%300)-150+0.5))::DOUBLE AS lon0,
+             ((((c_custkey*37)%130)-65+0.25))::DOUBLE AS lat0
+           FROM customer)
+         SELECT point_id,
+           CAST(round(6378137.0*(lon0*(pi()/180))*1000) AS BIGINT) AS xmin_mm,
+           CAST(round(6378137.0*ln(tan(pi()/4 + (lat0*(pi()/180))/2))*1000) AS BIGINT) AS ymin_mm,
+           CAST(round(6378137.0*((lon0+6.0)*(pi()/180))*1000) AS BIGINT) AS xmax_mm,
+           CAST(round(6378137.0*ln(tan(pi()/4 + ((lat0+10.0)*(pi()/180))/2))*1000) AS BIGINT) AS ymax_mm
+         FROM pts ORDER BY point_id"""),
 
-    "geo_epsg" -> ((s, dir) => {
+    DriverQuery("geo_epsg", (s, dir) => {
       // EPSG:xxxx alias front-end driving the transforms (web mercator +
       // geocentric), plus the generic EPSG-table CRS→CRS planner
       // (CrsToCrs.pipelineGis): Lambert-93 (LCC 2SP behind a WGS84→GRS80
@@ -839,9 +1148,9 @@ object SparkEntry {
           mm(col("gc.z")).as("gc_z_mm"),
           mm(col("l93.x")).as("l93_x_mm"), mm(col("l93.y")).as("l93_y_mm"),
           mm(col("bng.x")).as("bng_x_mm"), mm(col("bng.y")).as("bng_y_mm"))
-    }),
+    }, oracle = OracleSql.geoEpsg),
 
-    "geo_dispatch" -> ((s, dir) => {
+    DriverQuery("geo_dispatch", (s, dir) => {
       // per-row coordinate-operation dispatch: every point picks the best
       // EPSG operation for ITS location (ED50 -> WGS 84 has 33 regional
       // helmerts with overlapping extents plus the ballpark) — the
@@ -857,9 +1166,10 @@ object SparkEntry {
         .select(col("point_id"), col("r.op").as("op"),
           round(col("r.x") * 1e8).cast("long").as("x_e8"),
           round(col("r.y") * 1e8).cast("long").as("y_e8"))
-    }),
+    }, oracle = OracleSql.geoDispatch,
+      bench = Headline),
 
-    "geo_registry" -> ((s, dir) => {
+    DriverQuery("geo_registry", (s, dir) => {
       // registry-grade CRS→CRS on the Spark surface: the coordinate-
       // operation database (graft.proj.OpFactory over the generated EPSG
       // sidecar) picks "ED50 / UTM zone 31N to ETRS89 / UTM zone 31N (1)"
@@ -874,9 +1184,9 @@ object SparkEntry {
           "EPSG:23031", "EPSG:25831"))
         .select(col("point_id"),
           mm(col("r.x")).as("reg_x_mm"), mm(col("r.y")).as("reg_y_mm"))
-    }),
+    }, oracle = OracleSql.geoRegistry),
 
-    "zone_area" -> ((s, dir) => {
+    DriverQuery("zone_area", (s, dir) => {
       // geodesic polygon perimeter/area (Karney planimeter) on the polygon
       // set GeographicLib publishes results for — the oracle is those
       // independent published values (geodtest.c Planimeter0/5/12/13),
@@ -896,9 +1206,24 @@ object SparkEntry {
           round(col("m.perimeter_m") / 100).cast("long").as("per_hm"),
           round(col("m.area_m2") / 100).cast("long").as("area_dam2"))
         .orderBy("poly_id")
-    }),
+    },
+      // independent published values (GeographicLib geodtest.c planimeter
+      // cases) — not a mirrored formula: a genuine cross-implementation check
+      oracle =
+      """SELECT poly_id,
+         CAST(round(CAST(per AS DOUBLE)/100) AS BIGINT) AS per_hm,
+         CAST(round(CAST(area AS DOUBLE)/100) AS BIGINT) AS area_dam2
+         FROM (VALUES
+           ('pa', 631819.8745, 24952305678.0),
+           ('pb', 631819.8745, -24952305678.0),
+           ('pc', 627598.2731, 24619419146.0),
+           ('pd', 30022685.0, 63758202715511.0),
+           ('p5', 539297.0, 12476152838.5),
+           ('p12', 10465729.0, 0.0),
+           ('p13', 1160741.0, 32415230256.0)) t(poly_id, per, area)
+         ORDER BY poly_id"""),
 
-    "docs_spans" -> ((s, dir) => {
+    DriverQuery("docs_spans", (s, dir) => {
       // the interleaved-document contract as a hard driver signal: build a
       // spans array per doc (text span carries the REAL document text, geo
       // span an integer-rendered anchor, media span a derived ref), push it
@@ -928,9 +1253,35 @@ object SparkEntry {
           col("col.media_ref").as("media_ref"),
           col("col.offset").as("offset"), col("x_mm"), col("y_mm"))
         .orderBy("doc_id", "pos")
-    }),
+    }, oracle =
+      """WITH base AS (
+           SELECT doc_id, text,
+             (doc_id*73)%360-180 AS lon_i, (doc_id*37)%160-80 AS lat_i
+           FROM documents),
+         sp AS (
+           SELECT doc_id, 0 AS pos, 'text' AS kind, md5(text) AS text_md5,
+                  '' AS media_ref, CAST(0 AS INT) AS "offset", lon_i, lat_i
+           FROM base
+           UNION ALL
+           SELECT doc_id, 1, 'geo',
+                  md5(CAST(lon_i AS VARCHAR) || ' ' || CAST(lat_i AS VARCHAR)),
+                  '', CAST(7 AS INT), lon_i, lat_i
+           FROM base
+           UNION ALL
+           SELECT doc_id, 2, 'media', md5(''),
+                  'media://' || CAST(doc_id*31 AS VARCHAR),
+                  CAST(doc_id%100 AS INT), lon_i, lat_i
+           FROM base)
+         SELECT doc_id, pos, kind, text_md5, media_ref, "offset",
+           CAST(round(6378137.0*radians(CAST(lon_i AS DOUBLE))*1000) AS BIGINT) AS x_mm,
+           CAST(round(6378137.0*ln(tan(pi()/4+radians(CAST(lat_i AS DOUBLE))/2))*1000) AS BIGINT) AS y_mm
+         FROM sp ORDER BY doc_id, pos""",
+      planWants = Seq(
+        "generate (span explode) stays in the plan" -> (_.contains("Generate")),
+        "scan present" -> (_.contains("Scan"))),
+      bench = Headline),
 
-    "geo_hexbin" -> ((s, dir) => {
+    DriverQuery("geo_hexbin", (s, dir) => {
       // hexagonal tiling (flat-top axial grid with cube rounding over
       // web-mercator metres — the published hex-grid algebra, not an H3
       // bit-clone): points -> webmerc -> hex(q, r) at 250 km -> per-hex
@@ -948,9 +1299,35 @@ object SparkEntry {
         .select(col("q"), col("r"), col("n"),
           mm(col("c.x")).as("cx_mm"), mm(col("c.y")).as("cy_mm"))
         .orderBy("q", "r")
-    }),
+    }, oracle =
+      """WITH pts AS (
+           SELECT c_custkey AS point_id,
+             6378137.0*radians((((c_custkey*73)%360)-180+0.5)) AS x,
+             6378137.0*ln(tan(pi()/4+radians((((c_custkey*37)%160)-80+0.25))/2)) AS y
+           FROM customer),
+         frac AS (
+           SELECT point_id,
+             (2.0/3.0*x)/250000.0 AS fq,
+             (-1.0/3.0*x + sqrt(3.0)/3.0*y)/250000.0 AS fr,
+             -fq - fr AS fs,
+             floor(fq + 0.5) AS rq, floor(fr + 0.5) AS rr, floor(fs + 0.5) AS rs,
+             abs(rq - fq) AS dq, abs(rr - fr) AS dr, abs(rs - fs) AS ds
+           FROM pts),
+         hexed AS (
+           SELECT point_id,
+             CASE WHEN dq > dr AND dq > ds THEN -rr - rs ELSE rq END AS q,
+             CASE WHEN NOT (dq > dr AND dq > ds) AND dr > ds THEN -rq - rs ELSE rr END AS r
+           FROM frac)
+         SELECT CAST(q AS BIGINT) AS q, CAST(r AS BIGINT) AS r, count(*) AS n,
+           CAST(round(250000.0*1.5*q*1000) AS BIGINT) AS cx_mm,
+           CAST(round(250000.0*sqrt(3.0)*(r + q/2.0)*1000) AS BIGINT) AS cy_mm
+         FROM hexed GROUP BY q, r ORDER BY q, r""",
+      planWants = Seq(
+        "partial aggregation (map-side combine)" -> (_.contains("HashAggregate")),
+        "scan present" -> (_.contains("Scan"))),
+      bench = Headline),
 
-    "geo_hot_salted" -> ((s, dir) => {
+    DriverQuery("geo_hot_salted", (s, dir) => {
       // salted-key skew mitigation on a hot cell, end-to-end: 80% of points
       // land in ONE z6 web-mercator tile (Tokyo); the dense side salts its
       // tile key 16 ways (saltCells) while the per-tile weight table
@@ -980,408 +1357,7 @@ object SparkEntry {
         .groupBy(col("tile_x"), col("tile_y"))
         .agg(count(lit(1)).as("n"), sum(col("weight")).cast("long").as("wsum"))
         .orderBy("tile_x", "tile_y")
-    }),
-
-    "media_pixels" -> ((s, dir) => {
-      // CONTENT-deep multimodal check: encode a real PNG per doc (zlib
-      // IDAT), decode it back through the full chunk-walk + inflate +
-      // un-filter path, and emit per-image pixel statistics; the oracle
-      // re-generates every pixel independently (the encoder's LCG emulated
-      // with HUGEINT wrap-around arithmetic) — a wrong inflate, filter or
-      // byte-order bug changes the hash. Encode + decode + fold are all
-      // Catalyst expressions, so the whole query is one codegen stage.
-      import graft.spark.MediaFunctions._
-      t(s, dir, "documents").select(col("doc_id"))
-        .where(col("doc_id") % 3 === 0)
-        .select(col("doc_id"),
-          pngPixelStats(mediaEncode(col("doc_id"))).as("st"))
-        .select(col("doc_id"), col("st.n_px").as("n_px"),
-          col("st.px_sum").as("px_sum"), col("st.px_poly").as("px_poly"))
-        .orderBy("doc_id")
-    }),
-
-    "media_jpeg" -> ((s, dir) => {
-      // CONTENT-deep JPEG check: encode a real baseline JFIF per doc, then
-      // decode it through the full entropy path (canonical Huffman tables
-      // built from DHT, DC prediction, EOB runs, byte unstuffing, dequant,
-      // IDCT, level shift) and fold per-pixel statistics; the DC-only
-      // synthetic makes the IDCT output integer-exact, so the oracle
-      // regenerates every pixel from the seed stream in closed form — a
-      // wrong Huffman table, sign decode or block raster changes the hash
-      import graft.spark.MediaFunctions._
-      t(s, dir, "documents").select(col("doc_id"))
-        .where(col("doc_id") % 3 === 2)
-        .select(col("doc_id"),
-          jpegPixelStats(mediaEncodeJpeg(col("doc_id"))).as("st"))
-        .select(col("doc_id"), col("st.n_px").as("n_px"),
-          col("st.px_sum").as("px_sum"), col("st.px_poly").as("px_poly"))
-        .orderBy("doc_id")
-    }),
-
-    "media_jpeg_prog" -> ((s, dir) => {
-      // CONTENT-deep progressive JPEG (ITU T.81 §G): encode a real
-      // four-scan SOF2 stream per doc (DC first/refine with successive
-      // approximation, AC first with EOBRUN and ZRL, AC refinement with
-      // the correction-bit protocol), decode it through the multi-scan
-      // coefficient accumulator + IDCT, and fold per-pixel statistics
-      // including a quadratic in-block weight (px_chk) that sees the AC
-      // coefficients; the oracle regenerates everything from the seed
-      // stream in closed form
-      import graft.spark.MediaFunctions._
-      t(s, dir, "documents").select(col("doc_id"))
-        .where(col("doc_id") % 3 === 0)
-        .select(col("doc_id"),
-          jpegPixelStatsProg(mediaEncodeJpegProg(col("doc_id"))).as("st"))
-        .select(col("doc_id"), col("st.n_px").as("n_px"),
-          col("st.px_sum").as("px_sum"), col("st.px_poly").as("px_poly"),
-          col("st.px_chk").as("px_chk"))
-        .orderBy("doc_id")
-    }),
-
-    "media_frames" -> ((s, dir) => {
-      // frame-sampling shape over video-like payloads: decode headers,
-      // filter to image kinds, explode one row per sampled frame with a
-      // byte-length-derived stride. The JPEG-header family has a constant
-      // 41-byte payload, so the stride arithmetic (min(maxFrames,
-      // floor(bytes/everyN)) = 4) and the contiguous frame_idx contract
-      // are exact in the oracle; lineage (doc_id, media_ref) preserved.
-      val media = t(s, dir, "documents").select(col("doc_id"),
-        concat(lit("media://"), col("doc_id")).as("media_ref"),
-        graft.spark.MediaFunctions.mediaEncode(col("doc_id")).as("payload"))
-        .where(col("doc_id") % 3 === 2)
-      val frames = graft.spark.MultimodalOps.sampleFrames(
-        graft.spark.MultimodalOps.decodeAndFeaturize(media))
-      frames.groupBy(col("doc_id")).agg(
-          count(lit(1)).as("n_frames"),
-          min(col("frame_idx")).cast("long").as("first_idx"),
-          max(col("frame_idx")).cast("long").as("last_idx"),
-          countDistinct(col("frame_idx")).as("n_distinct"),
-          countDistinct(col("media_ref")).as("n_refs"))
-        .orderBy("doc_id")
-    }),
-
-    "media_resize" -> ((s, dir) => {
-      // content-deep image resize: decode the baseline JPEG, area-average
-      // downscale by 2 (the standard anti-aliased box filter, fractional
-      // edge weights in general; here the windows align with the flat DC
-      // blocks so every resized pixel is exactly the block value), fold
-      // per-pixel statistics over the RESIZED plane — the oracle
-      // reconstructs it block-by-block in closed form
-      import graft.spark.MediaFunctions._
-      t(s, dir, "documents").select(col("doc_id"))
-        .where(col("doc_id") % 3 === 2)
-        .select(col("doc_id"),
-          jpegResizeStats(mediaEncodeJpeg(col("doc_id")), lit(2L)).as("st"))
-        .select(col("doc_id"), col("st.n_px").as("n_px"),
-          col("st.px_sum").as("px_sum"), col("st.px_poly").as("px_poly"))
-        .orderBy("doc_id")
-    }),
-
-    "media_samples" -> ((s, dir) => {
-      // audio counterpart of media_pixels: real RIFF data-chunk walk +
-      // little-endian PCM sample decode, verified per-sample against the
-      // oracle's HUGEINT LCG emulation (signed 16-bit this time); encode +
-      // decode + fold all Catalyst expressions, one codegen stage
-      import graft.spark.MediaFunctions._
-      t(s, dir, "documents").select(col("doc_id"))
-        .where(col("doc_id") % 3 === 1)
-        .select(col("doc_id"),
-          wavSampleStats(mediaEncode(col("doc_id"))).as("st"))
-        .select(col("doc_id"), col("st.n_smp").as("n_smp"),
-          col("st.smp_sum").as("smp_sum"), col("st.smp_poly").as("smp_poly"))
-        .orderBy("doc_id")
-    }),
-
-    "media_features" -> ((s, dir) => {
-      // multimodal: synthesize REAL PNG/WAV/JPEG byte streams per doc
-      // (parameters derived from doc_id), then parse them back with the
-      // real header decoders; the oracle recomputes the parameters in SQL,
-      // so a wrong byte layout or parser fails the hash
-      val media = t(s, dir, "documents").select(col("doc_id"),
-        concat(lit("media://"), col("doc_id")).as("media_ref"),
-        graft.spark.MediaFunctions.mediaEncode(col("doc_id")).as("payload"))
-      graft.spark.MultimodalOps.decodeAndFeaturize(media)
-        .select(col("doc_id"), col("media_kind"),
-          col("width").cast("long").as("width"),
-          col("height").cast("long").as("height"),
-          col("sample_rate").cast("long").as("sample_rate"),
-          col("channels").cast("long").as("channels"))
-    })
-  )
-
-  // ---------------------------------------------------------------- oracles
-
-  /** DuckDB-runnable SQL over the same parquet tables; column names match
-    * the Spark plans exactly. Entries absent here are rows-only checks. */
-  def oracleSql: Map[String, String] = Map(
-    // webmerc runs the spherical kernel on the WGS84 ellipsoid (es != 0),
-    // so proj_factors applies the ellipsoidal correction: k =
-    // sqrt(1 - es sin^2(lat)) / cos(lat) — closed form, checkable in SQL
-    "geo_tile_qa" -> ("SELECT point_id, CAST(round(1000000.0*" +
-      "sqrt(1 - 0.0066943799901413165*sin(radians(lat))*sin(radians(lat)))" +
-      "/cos(radians(lat))) AS BIGINT) AS k_ppm " +
-      "FROM (SELECT c_custkey AS point_id, " +
-      "((c_custkey*37)%160)-80+0.25 AS lat FROM customer)"),
-    "q1_agg" ->
-      """SELECT l_returnflag, l_linestatus,
-         CAST(sum(CAST(round(l_quantity*1000) AS BIGINT)) AS BIGINT) AS sum_qty,
-         CAST(sum(CAST(round(l_extendedprice*1000) AS BIGINT)) AS BIGINT) AS sum_price,
-         count(*) AS n_rows
-         FROM lineitem GROUP BY 1,2 ORDER BY 1,2""",
-
-    "q3_join" ->
-      """SELECT o_orderkey,
-         CAST(sum(CAST(round(l_extendedprice*(1-l_discount)*1000) AS BIGINT)) AS BIGINT) AS revenue
-         FROM customer, orders, lineitem
-         WHERE c_mktsegment='BUILDING' AND c_custkey=o_custkey AND o_orderkey=l_orderkey
-         GROUP BY o_orderkey ORDER BY revenue DESC, o_orderkey LIMIT 20""",
-
-    "q_window" ->
-      """SELECT o_custkey, o_orderkey,
-         CAST(round(o_totalprice*1000) AS BIGINT) AS price_mm, rnk FROM (
-           SELECT o_custkey, o_orderkey, o_totalprice,
-             row_number() OVER (PARTITION BY o_custkey
-               ORDER BY o_totalprice DESC, o_orderkey) AS rnk
-           FROM orders) WHERE rnk <= 3""",
-
-    "q_anti" ->
-      """SELECT c_custkey FROM customer
-         WHERE c_custkey NOT IN (SELECT o_custkey FROM orders WHERE o_totalprice > 400000)
-         ORDER BY c_custkey""",
-
-    "q_events" ->
-      """SELECT event_type, count(*) AS n,
-         CAST(sum(CAST(round(value*1000) AS BIGINT)) AS BIGINT) AS sum_value_mm
-         FROM events GROUP BY 1 ORDER BY 1""",
-
-    "geo_utm_zone" ->
-      """SELECT CAST(LEAST(GREATEST(floor((((c_custkey*73)%360)-180+0.5+180)/6),0),59)+1 AS INT) AS utm_zone,
-         count(*) AS n
-         FROM customer GROUP BY 1 ORDER BY 1""",
-
-    "geo_webmerc" ->
-      """SELECT c_custkey AS point_id,
-         CAST(round(6378137.0*radians(((c_custkey*73)%360)-180+0.5)*1000) AS BIGINT) AS x_mm,
-         CAST(round(6378137.0*ln(tan(pi()/4+radians(((c_custkey*37)%160)-80+0.25)/2))*1000) AS BIGINT) AS y_mm
-         FROM customer""",
-
-    "geo_tile" ->
-      """SELECT c_custkey AS point_id,
-         CAST(LEAST(GREATEST(floor(((((c_custkey*73)%360)-180+0.5)+180)/360*256),0),255) AS BIGINT) AS tile_x,
-         CAST(LEAST(GREATEST(floor((1 - ln(tan(radians(((c_custkey*37)%160)-80+0.25)) + 1/cos(radians(((c_custkey*37)%160)-80+0.25)))/pi())/2*256),0),255) AS BIGINT) AS tile_y
-         FROM customer""",
-
-    "geo_tile_agg" ->
-      """SELECT tile_x, tile_y, count(*) AS n FROM (
-           SELECT
-             CAST(LEAST(GREATEST(floor(((((c_custkey*73)%360)-180+0.5)+180)/360*64),0),63) AS BIGINT) AS tile_x,
-             CAST(LEAST(GREATEST(floor((1 - ln(tan(radians(((c_custkey*37)%160)-80+0.25)) + 1/cos(radians(((c_custkey*37)%160)-80+0.25)))/pi())/2*64),0),63) AS BIGINT) AS tile_y
-           FROM customer)
-         GROUP BY 1,2""",
-
-    "geo_pip" ->
-      """WITH pts AS (
-           SELECT c_custkey AS point_id,
-             (((c_custkey*73)%360)-180+0.5)::DOUBLE AS lon,
-             (((c_custkey*37)%160)-80+0.25)::DOUBLE AS lat
-           FROM customer),
-         zones(zone_id, zlon, zlat) AS (VALUES
-           (0, 139.69, 35.69), (1, 77.10, 28.70), (2, -46.63, -23.55),
-           (3, 3.38, 6.52), (4, -74.01, 40.71))
-         SELECT point_id, zone_id FROM pts, zones
-         WHERE lon > zlon-8.0 AND lon < zlon+8.0
-           AND lat > zlat-8.0 AND lat < zlat+8.0
-         ORDER BY point_id, zone_id""",
-
-    "geo_knn" ->
-      """WITH q AS (
-           SELECT id AS q_id,
-             ((id*31)%360-180+0.5)::DOUBLE AS q_lon,
-             ((id*17)%160-80+0.25)::DOUBLE AS q_lat
-           FROM range(1, 11) t(id)),
-         pts AS (
-           SELECT c_custkey AS point_id,
-             (((c_custkey*73)%360)-180+0.5)::DOUBLE AS lon,
-             (((c_custkey*37)%160)-80+0.25)::DOUBLE AS lat
-           FROM customer),
-         scored AS (
-           SELECT q_id, point_id,
-             2*6371000.0*asin(sqrt(
-               pow(sin(radians(lat-q_lat)/2),2) +
-               cos(radians(q_lat))*cos(radians(lat))*pow(sin(radians(lon-q_lon)/2),2))) AS dist_m
-           FROM pts, q)
-         SELECT q_id, point_id, rnk FROM (
-           SELECT q_id, point_id,
-             row_number() OVER (PARTITION BY q_id ORDER BY dist_m, point_id) AS rnk
-           FROM scored) WHERE rnk <= 5""",
-
-    "text_metrics" ->
-      """SELECT lang, count(*) AS n_docs,
-         sum(CASE WHEN length(trim(text))=0 THEN 0
-             ELSE length(trim(text)) - length(replace(trim(text),' ','')) + 1 END)::BIGINT AS sum_tokens,
-         CAST(round(avg(length(text))*1000) AS BIGINT) AS avg_chars_mm
-         FROM documents GROUP BY 1 ORDER BY 1""",
-
-    "dedup_exact" ->
-      """SELECT source, count(*) AS n_dups FROM (
-           SELECT source,
-             row_number() OVER (PARTITION BY md5(text) ORDER BY doc_id) AS rn
-           FROM (SELECT * FROM documents UNION ALL
-                 SELECT doc_id + 1000000, text, lang, source, n_chars
-                 FROM documents WHERE doc_id % 7 = 0))
-         WHERE rn > 1 GROUP BY 1 ORDER BY 1""",
-
-    // cross-engine mirrored formulas (see OracleSql for the conventions)
-    "lang_id" -> OracleSql.langId,
-    "dedup_simhash" -> OracleSql.dedupSimhash,
-    "dedup_minhash" -> OracleSql.dedupMinhash(numHashes = 16, bands = 4, thresholdPpm = 500000L),
-    "dedup_clusters" -> OracleSql.dedupClusters(numHashes = 16, bands = 4, thresholdPpm = 500000L),
-    "dedup_keep" -> OracleSql.dedupKeep(numHashes = 16, bands = 4, thresholdPpm = 500000L),
-    "ann_brute" -> OracleSql.annBrute(k = 3),
-    "ann_lsh" -> OracleSql.annLsh(k = 3, planes = 6, tables = 8),
-    // same bucketing family + scoring as ann_lsh — the persisted index must
-    // reproduce the in-memory path's rows exactly
-    "ann_index" -> OracleSql.annLsh(k = 3, planes = 6, tables = 8),
-    "ann_ivf" -> OracleSql.annIvf(k = 3, nlist = 16, nprobe = 4),
-    "dedup_embedding" -> OracleSql.dedupEmbedding(thresholdPpm = 900000L, planes = 6, tables = 8),
-    "doc_fingerprint" -> OracleSql.docFingerprint,
-
-    "pii_scrub" ->
-      """WITH injected AS (
-           SELECT doc_id,
-             text || ' contact user' || CAST(doc_id AS VARCHAR) ||
-               '@ex.org call +1-202-555-' ||
-               lpad(CAST(doc_id % 10000 AS VARCHAR), 4, '0') ||
-               ' id ' || CAST(doc_id*doc_id AS VARCHAR) AS txt
-           FROM documents)
-         SELECT doc_id,
-           md5(regexp_replace(regexp_replace(regexp_replace(txt,
-             '[A-Za-z0-9._%+-]+@[A-Za-z0-9.-]+\.[A-Za-z]{2,}', '<EMAIL>', 'g'),
-             '\+?\d[\d\-]{9,}\d', '<PHONE>', 'g'),
-             '\d{6,}', '<NUM>', 'g')) AS scrub_md5,
-           CAST(length(txt) AS INT) AS raw_len
-         FROM injected ORDER BY doc_id""",
-
-    "text_chunks" ->
-      """WITH chunked AS (
-           SELECT doc_id, u.i AS chunk_idx, u.c AS chunk
-           FROM (
-             SELECT doc_id,
-               unnest([{'i': i, 'c': substring(text, 1 + i*48, 64)}
-                       for i in range(0, greatest((length(text) - 16 + 47) // 48, 1))]) AS u
-             FROM documents WHERE length(text) > 0))
-         SELECT doc_id, chunk_idx, md5(chunk) AS chunk_md5,
-           CAST(length(chunk) AS INT) AS chunk_len
-         FROM chunked ORDER BY doc_id, chunk_idx""",
-
-    "text_decontam" ->
-      """WITH toks AS (
-           SELECT doc_id,
-             string_split(regexp_replace(lower(trim(text)), '\s+', ' ', 'g'), ' ') AS t
-           FROM documents),
-         ev AS (
-           SELECT DISTINCT array_to_string(t[1:13], ' ') AS gram
-           FROM toks WHERE doc_id % 97 = 5 AND len(t) >= 13),
-         pos AS (
-           SELECT doc_id, t, unnest(generate_series(1, len(t) - 12)) AS i
-           FROM toks WHERE len(t) >= 13),
-         win AS (
-           SELECT doc_id, array_to_string(t[i:i+12], ' ') AS gram FROM pos)
-         SELECT doc_id, count(*) AS n_hits
-         FROM win JOIN ev USING (gram)
-         GROUP BY doc_id ORDER BY doc_id""",
-
-    "q_mixture" ->
-      """WITH h AS (
-           SELECT doc_id, source,
-             (CAST(doc_id AS HUGEINT) * 6364136223846793005
-              + 1442695040888963407) % 18446744073709551616 AS hu
-           FROM documents),
-         sv AS (
-           SELECT doc_id, source,
-             CASE WHEN hu >= 9223372036854775808
-                  THEN hu - 18446744073709551616 ELSE hu END AS s
-           FROM h)
-         SELECT source, count(*) AS n_kept,
-           CAST(sum(doc_id) AS BIGINT) AS sum_ids
-         FROM sv
-         WHERE ((s % 1000000) + 1000000) % 1000000 <
-           (CAST(substring(source, 4) AS INT) + 1) * 50000
-         GROUP BY source ORDER BY source""",
-
-    "text_tokens" ->
-      """SELECT source,
-         sum(CASE WHEN length(trim(text))=0 THEN 0
-             ELSE length(trim(text)) - length(replace(trim(text),' ','')) + 1 END)::BIGINT AS sum_ws_tokens,
-         sum(len(regexp_extract_all(lower(text), '[a-z]+|[0-9]+|[^a-z0-9 ]')))::BIGINT AS sum_bpe_tokens,
-         count(*) AS n_docs
-         FROM documents GROUP BY source ORDER BY source""",
-    "geo_datum_shift" -> OracleSql.geoDatumShift,
-    "geo_utm_native" -> OracleSql.geoUtmNative,
-    "geo_s2_cells" -> OracleSql.geoS2Cells,
-    "geo_gridshift" -> OracleSql.geoGridshift,
-    "geo_range_partition" -> OracleSql.geoRangePartition,
-    "q_stream_window" -> OracleSql.streamWindow,
-    "geo_waypoints" ->
-      """SELECT c_custkey AS pair_id, CAST(j AS BIGINT) AS k,
-         CAST(j AS BIGINT) AS spacing_idx, CAST(0 AS BIGINT) AS detour_ppm
-         FROM customer, range(0, 9) t(j)
-         WHERE c_custkey % 75 = 3 ORDER BY pair_id, k""",
-    "geo_global_hex" -> OracleSql.geoGlobalHex,
-    "geo_geoid" -> OracleSql.geoGeoid,
-    "geo_geodesic_meridian" -> OracleSql.geoGeodesicMeridian,
-    "geo_knn_geodesic" -> OracleSql.geoKnnGeodesic,
-    "geo_hex_knn" -> OracleSql.geoHexKnn,
-
-    "docs_spans" ->
-      """WITH base AS (
-           SELECT doc_id, text,
-             (doc_id*73)%360-180 AS lon_i, (doc_id*37)%160-80 AS lat_i
-           FROM documents),
-         sp AS (
-           SELECT doc_id, 0 AS pos, 'text' AS kind, md5(text) AS text_md5,
-                  '' AS media_ref, CAST(0 AS INT) AS "offset", lon_i, lat_i
-           FROM base
-           UNION ALL
-           SELECT doc_id, 1, 'geo',
-                  md5(CAST(lon_i AS VARCHAR) || ' ' || CAST(lat_i AS VARCHAR)),
-                  '', CAST(7 AS INT), lon_i, lat_i
-           FROM base
-           UNION ALL
-           SELECT doc_id, 2, 'media', md5(''),
-                  'media://' || CAST(doc_id*31 AS VARCHAR),
-                  CAST(doc_id%100 AS INT), lon_i, lat_i
-           FROM base)
-         SELECT doc_id, pos, kind, text_md5, media_ref, "offset",
-           CAST(round(6378137.0*radians(CAST(lon_i AS DOUBLE))*1000) AS BIGINT) AS x_mm,
-           CAST(round(6378137.0*ln(tan(pi()/4+radians(CAST(lat_i AS DOUBLE))/2))*1000) AS BIGINT) AS y_mm
-         FROM sp ORDER BY doc_id, pos""",
-
-    "geo_hexbin" ->
-      """WITH pts AS (
-           SELECT c_custkey AS point_id,
-             6378137.0*radians((((c_custkey*73)%360)-180+0.5)) AS x,
-             6378137.0*ln(tan(pi()/4+radians((((c_custkey*37)%160)-80+0.25))/2)) AS y
-           FROM customer),
-         frac AS (
-           SELECT point_id,
-             (2.0/3.0*x)/250000.0 AS fq,
-             (-1.0/3.0*x + sqrt(3.0)/3.0*y)/250000.0 AS fr,
-             -fq - fr AS fs,
-             floor(fq + 0.5) AS rq, floor(fr + 0.5) AS rr, floor(fs + 0.5) AS rs,
-             abs(rq - fq) AS dq, abs(rr - fr) AS dr, abs(rs - fs) AS ds
-           FROM pts),
-         hexed AS (
-           SELECT point_id,
-             CASE WHEN dq > dr AND dq > ds THEN -rr - rs ELSE rq END AS q,
-             CASE WHEN NOT (dq > dr AND dq > ds) AND dr > ds THEN -rq - rs ELSE rr END AS r
-           FROM frac)
-         SELECT CAST(q AS BIGINT) AS q, CAST(r AS BIGINT) AS r, count(*) AS n,
-           CAST(round(250000.0*1.5*q*1000) AS BIGINT) AS cx_mm,
-           CAST(round(250000.0*sqrt(3.0)*(r + q/2.0)*1000) AS BIGINT) AS cy_mm
-         FROM hexed GROUP BY q, r ORDER BY q, r""",
-
-    "geo_hot_salted" ->
+    }, oracle =
       """WITH pts AS (
            SELECT c_custkey AS point_id,
              CASE WHEN c_custkey % 5 <> 0
@@ -1403,100 +1379,155 @@ object SparkEntry {
            CAST(sum(weight) AS BIGINT) AS wsum
          FROM tiled JOIN w USING (tile_x, tile_y)
          GROUP BY 1,2 ORDER BY 1,2""",
-    "media_features" -> OracleSql.mediaFeatures,
-    "media_pixels" -> OracleSql.mediaPixels,
-    "media_jpeg" -> OracleSql.mediaJpeg,
-    "media_jpeg_prog" -> OracleSql.mediaJpegProg,
-    "media_resize" -> OracleSql.mediaResize,
-    "media_frames" ->
+      planWants = Seq(
+        "shuffled hash join (not broadcast: salting must spread reducers)" ->
+          (_.contains("ShuffledHashJoin")),
+        "salt_id participates in the join keys" -> (_.contains("salt_id")),
+        "no cross product" -> (p => !p.contains("CartesianProduct"))),
+      bench = Headline),
+
+    DriverQuery("media_pixels", (s, dir) => {
+      // CONTENT-deep multimodal check: encode a real PNG per doc (zlib
+      // IDAT), decode it back through the full chunk-walk + inflate +
+      // un-filter path, and emit per-image pixel statistics; the oracle
+      // re-generates every pixel independently (the encoder's LCG emulated
+      // with HUGEINT wrap-around arithmetic) — a wrong inflate, filter or
+      // byte-order bug changes the hash. Encode + decode + fold are all
+      // Catalyst expressions, so the whole query is one codegen stage.
+      import graft.spark.MediaFunctions._
+      t(s, dir, "documents").select(col("doc_id"))
+        .where(col("doc_id") % 3 === 0)
+        .select(col("doc_id"),
+          pngPixelStats(mediaEncode(col("doc_id"))).as("st"))
+        .select(col("doc_id"), col("st.n_px").as("n_px"),
+          col("st.px_sum").as("px_sum"), col("st.px_poly").as("px_poly"))
+        .orderBy("doc_id")
+    }, oracle = OracleSql.mediaPixels),
+
+    DriverQuery("media_jpeg", (s, dir) => {
+      // CONTENT-deep JPEG check: encode a real baseline JFIF per doc, then
+      // decode it through the full entropy path (canonical Huffman tables
+      // built from DHT, DC prediction, EOB runs, byte unstuffing, dequant,
+      // IDCT, level shift) and fold per-pixel statistics; the DC-only
+      // synthetic makes the IDCT output integer-exact, so the oracle
+      // regenerates every pixel from the seed stream in closed form — a
+      // wrong Huffman table, sign decode or block raster changes the hash
+      import graft.spark.MediaFunctions._
+      t(s, dir, "documents").select(col("doc_id"))
+        .where(col("doc_id") % 3 === 2)
+        .select(col("doc_id"),
+          jpegPixelStats(mediaEncodeJpeg(col("doc_id"))).as("st"))
+        .select(col("doc_id"), col("st.n_px").as("n_px"),
+          col("st.px_sum").as("px_sum"), col("st.px_poly").as("px_poly"))
+        .orderBy("doc_id")
+    }, oracle = OracleSql.mediaJpeg),
+
+    DriverQuery("media_jpeg_prog", (s, dir) => {
+      // CONTENT-deep progressive JPEG (ITU T.81 §G): encode a real
+      // four-scan SOF2 stream per doc (DC first/refine with successive
+      // approximation, AC first with EOBRUN and ZRL, AC refinement with
+      // the correction-bit protocol), decode it through the multi-scan
+      // coefficient accumulator + IDCT, and fold per-pixel statistics
+      // including a quadratic in-block weight (px_chk) that sees the AC
+      // coefficients; the oracle regenerates everything from the seed
+      // stream in closed form
+      import graft.spark.MediaFunctions._
+      t(s, dir, "documents").select(col("doc_id"))
+        .where(col("doc_id") % 3 === 0)
+        .select(col("doc_id"),
+          jpegPixelStatsProg(mediaEncodeJpegProg(col("doc_id"))).as("st"))
+        .select(col("doc_id"), col("st.n_px").as("n_px"),
+          col("st.px_sum").as("px_sum"), col("st.px_poly").as("px_poly"),
+          col("st.px_chk").as("px_chk"))
+        .orderBy("doc_id")
+    }, oracle = OracleSql.mediaJpegProg,
+      bench = Round5),
+
+    DriverQuery("media_frames", (s, dir) => {
+      // frame-sampling shape over video-like payloads: decode headers,
+      // filter to image kinds, explode one row per sampled frame with a
+      // byte-length-derived stride. The JPEG-header family has a constant
+      // 41-byte payload, so the stride arithmetic (min(maxFrames,
+      // floor(bytes/everyN)) = 4) and the contiguous frame_idx contract
+      // are exact in the oracle; lineage (doc_id, media_ref) preserved.
+      val media = t(s, dir, "documents").select(col("doc_id"),
+        concat(lit("media://"), col("doc_id")).as("media_ref"),
+        graft.spark.MediaFunctions.mediaEncode(col("doc_id")).as("payload"))
+        .where(col("doc_id") % 3 === 2)
+      val frames = graft.spark.MultimodalOps.sampleFrames(
+        graft.spark.MultimodalOps.decodeAndFeaturize(media))
+      frames.groupBy(col("doc_id")).agg(
+          count(lit(1)).as("n_frames"),
+          min(col("frame_idx")).cast("long").as("first_idx"),
+          max(col("frame_idx")).cast("long").as("last_idx"),
+          countDistinct(col("frame_idx")).as("n_distinct"),
+          countDistinct(col("media_ref")).as("n_refs"))
+        .orderBy("doc_id")
+    }, oracle =
       """SELECT doc_id, CAST(4 AS BIGINT) AS n_frames,
          CAST(0 AS BIGINT) AS first_idx, CAST(3 AS BIGINT) AS last_idx,
          CAST(4 AS BIGINT) AS n_distinct, CAST(1 AS BIGINT) AS n_refs
-         FROM documents WHERE doc_id % 3 = 2 ORDER BY doc_id""",
-    "media_samples" -> OracleSql.mediaSamples,
-    // row identity across snapshot commit + compaction: the oracle computes
-    // the per-bucket metrics from the SOURCE table; the Spark side reads
-    // them off the compacted snapshot
-    "q_snapshot_compact" ->
-      """SELECT event_id % 8 AS bucket, count(*) AS n_rows,
-           min(event_id) AS min_id, max(event_id) AS max_id,
-           CAST(sum(user_id) AS BIGINT) AS user_sum
-         FROM events GROUP BY 1 ORDER BY 1""",
+         FROM documents WHERE doc_id % 3 = 2 ORDER BY doc_id"""),
 
-    // watermark-bounded streaming dedup over a bounded 3-batch replay:
-    // every distinct normalized-text fingerprint is emitted exactly twice
-    // (once new, once after state eviction; the +1h duplicates are dropped)
-    "q_stream_dedup" ->
-      """SELECT DISTINCT
-           md5(regexp_replace(lower(trim(text)), '\s+', ' ', 'g')) AS fp,
-           CAST(2 AS BIGINT) AS n_emits
-         FROM (SELECT text FROM documents UNION ALL
-               SELECT text FROM documents WHERE doc_id % 7 = 0)
-         ORDER BY fp""",
+    DriverQuery("media_resize", (s, dir) => {
+      // content-deep image resize: decode the baseline JPEG, area-average
+      // downscale by 2 (the standard anti-aliased box filter, fractional
+      // edge weights in general; here the windows align with the flat DC
+      // blocks so every resized pixel is exactly the block value), fold
+      // per-pixel statistics over the RESIZED plane — the oracle
+      // reconstructs it block-by-block in closed form
+      import graft.spark.MediaFunctions._
+      t(s, dir, "documents").select(col("doc_id"))
+        .where(col("doc_id") % 3 === 2)
+        .select(col("doc_id"),
+          jpegResizeStats(mediaEncodeJpeg(col("doc_id")), lit(2L)).as("st"))
+        .select(col("doc_id"), col("st.n_px").as("n_px"),
+          col("st.px_sum").as("px_sum"), col("st.px_poly").as("px_poly"))
+        .orderBy("doc_id")
+    }, oracle = OracleSql.mediaResize,
+      bench = Round5),
 
-    "geo_epsg" -> OracleSql.geoEpsg,
-    "geo_registry" -> OracleSql.geoRegistry,
-    "geo_dispatch" -> OracleSql.geoDispatch,
+    DriverQuery("media_samples", (s, dir) => {
+      // audio counterpart of media_pixels: real RIFF data-chunk walk +
+      // little-endian PCM sample decode, verified per-sample against the
+      // oracle's HUGEINT LCG emulation (signed 16-bit this time); encode +
+      // decode + fold all Catalyst expressions, one codegen stage
+      import graft.spark.MediaFunctions._
+      t(s, dir, "documents").select(col("doc_id"))
+        .where(col("doc_id") % 3 === 1)
+        .select(col("doc_id"),
+          wavSampleStats(mediaEncode(col("doc_id"))).as("st"))
+        .select(col("doc_id"), col("st.n_smp").as("n_smp"),
+          col("st.smp_sum").as("smp_sum"), col("st.smp_poly").as("smp_poly"))
+        .orderBy("doc_id")
+    }, oracle = OracleSql.mediaSamples),
 
-    "geo_trans_bounds" ->
-      """WITH pts AS (
-           SELECT c_custkey AS point_id,
-             ((((c_custkey*73)%300)-150+0.5))::DOUBLE AS lon0,
-             ((((c_custkey*37)%130)-65+0.25))::DOUBLE AS lat0
-           FROM customer)
-         SELECT point_id,
-           CAST(round(6378137.0*(lon0*(pi()/180))*1000) AS BIGINT) AS xmin_mm,
-           CAST(round(6378137.0*ln(tan(pi()/4 + (lat0*(pi()/180))/2))*1000) AS BIGINT) AS ymin_mm,
-           CAST(round(6378137.0*((lon0+6.0)*(pi()/180))*1000) AS BIGINT) AS xmax_mm,
-           CAST(round(6378137.0*ln(tan(pi()/4 + ((lat0+10.0)*(pi()/180))/2))*1000) AS BIGINT) AS ymax_mm
-         FROM pts ORDER BY point_id""",
-
-    "q_sessions" ->
-      """WITH ev AS (
-           SELECT event_id, user_id, CAST(floor(epoch(ts)) AS BIGINT) AS t
-           FROM events),
-         marked AS (
-           SELECT user_id, t,
-             CASE WHEN lag(t) OVER (PARTITION BY user_id ORDER BY t, event_id) IS NULL
-                   OR t - lag(t) OVER (PARTITION BY user_id ORDER BY t, event_id) > 1800
-                  THEN 1 ELSE 0 END AS ns,
-             event_id
-           FROM ev),
-         sess AS (
-           SELECT user_id, t,
-             CAST(sum(ns) OVER (PARTITION BY user_id ORDER BY t, event_id
-               ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS BIGINT) AS session_seq
-           FROM marked)
-         SELECT user_id, session_seq, count(*) AS n_events,
-           CAST(max(t) - min(t) AS BIGINT) AS dur_s
-         FROM sess GROUP BY 1,2 ORDER BY 1,2""",
-
-    "q_asof" ->
-      """WITH ev AS (
-           SELECT event_id, user_id, CAST(floor(epoch(ts)) AS BIGINT) AS t FROM events),
-         states AS (
-           SELECT user_id, 1704067200 + k*3600*(6 + user_id%5) AS valid_from,
-                  (user_id*31 + k) % 4 AS tier
-           FROM range(0, 160) u(user_id), range(0, 10) kk(k))
-         SELECT event_id, ev.user_id, tier, valid_from
-         FROM ev ASOF JOIN states
-           ON ev.user_id = states.user_id AND ev.t >= states.valid_from
-         ORDER BY event_id""",
-
-    // independent published values (GeographicLib geodtest.c planimeter
-    // cases) — not a mirrored formula: a genuine cross-implementation check
-    "zone_area" ->
-      """SELECT poly_id,
-         CAST(round(CAST(per AS DOUBLE)/100) AS BIGINT) AS per_hm,
-         CAST(round(CAST(area AS DOUBLE)/100) AS BIGINT) AS area_dam2
-         FROM (VALUES
-           ('pa', 631819.8745, 24952305678.0),
-           ('pb', 631819.8745, -24952305678.0),
-           ('pc', 627598.2731, 24619419146.0),
-           ('pd', 30022685.0, 63758202715511.0),
-           ('p5', 539297.0, 12476152838.5),
-           ('p12', 10465729.0, 0.0),
-           ('p13', 1160741.0, 32415230256.0)) t(poly_id, per, area)
-         ORDER BY poly_id"""
+    DriverQuery("media_features", (s, dir) => {
+      // multimodal: synthesize REAL PNG/WAV/JPEG byte streams per doc
+      // (parameters derived from doc_id), then parse them back with the
+      // real header decoders; the oracle recomputes the parameters in SQL,
+      // so a wrong byte layout or parser fails the hash
+      val media = t(s, dir, "documents").select(col("doc_id"),
+        concat(lit("media://"), col("doc_id")).as("media_ref"),
+        graft.spark.MediaFunctions.mediaEncode(col("doc_id")).as("payload"))
+      graft.spark.MultimodalOps.decodeAndFeaturize(media)
+        .select(col("doc_id"), col("media_kind"),
+          col("width").cast("long").as("width"),
+          col("height").cast("long").as("height"),
+          col("sample_rate").cast("long").as("sample_rate"),
+          col("channels").cast("long").as("channels"))
+    }, oracle = OracleSql.mediaFeatures,
+      planWants = Seq(
+        "scan present" -> (_.contains("Scan"))),
+      bench = Headline)
   )
+
+  /** The driver's view of the registry: builders by name. */
+  def queries: Map[String, (SparkSession, String) => DataFrame] =
+    driverQueries.map(q => q.name -> q.build).toMap
+
+  /** The driver's view of the registry: DuckDB SQL by name, over the same
+    * parquet tables, column names matching the Spark plans exactly. */
+  def oracleSql: Map[String, String] =
+    driverQueries.map(q => q.name -> q.oracle).toMap
 }

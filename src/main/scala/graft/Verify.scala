@@ -1,8 +1,12 @@
 package graft
 import org.apache.spark.sql.SparkSession
-import java.nio.file.{Files, Paths}
-/** Driver-run correctness dump: each SparkEntry.queries result → parquet,
-  * plus oracle_sql.json, for the driver's DuckDB compare. */
+import java.nio.file.{Files, Path, Paths}
+import scala.jdk.CollectionConverters._
+/** Driver-run correctness dump: each driver query's result → parquet under
+  * `<out>/<name>`, plus oracle_sql.json, for the driver's DuckDB compare.
+  * A query that throws leaves `<out>/<name>/_FAILED` (exception class and
+  * message) in place of its output, and the run ends with one line naming
+  * every failed query. */
 object Verify {
   def main(args: Array[String]): Unit = {
     val Array(sfDir, outDir) = args
@@ -14,29 +18,31 @@ object Verify {
       .config("spark.ui.enabled", "false")
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
-    new java.io.File(outDir).mkdirs()
-    SparkEntry.queries.foreach { case (name, fn) =>
-      try fn(spark, sfDir).coalesce(1).write.mode("overwrite")
-        .parquet(s"$outDir/$name")
-      catch { case e: Throwable =>
-        System.err.println(s"[verify] $name failed: ${e.getMessage}")
+    val out = Paths.get(outDir)
+    Files.createDirectories(out)
+    val failed = SparkEntry.driverQueries.flatMap { q =>
+      val dir = out.resolve(q.name)
+      try {
+        q.build(spark, sfDir).coalesce(1).write.mode("overwrite").parquet(dir.toString)
+        None
+      } catch { case e: Throwable =>
+        System.err.println(s"[verify] ${q.name} failed: ${e.getMessage}")
+        org.apache.commons.io.FileUtils.deleteDirectory(dir.toFile)
+        Files.createDirectories(dir)
+        Files.writeString(dir.resolve("_FAILED"), s"${e.getClass.getName}: ${e.getMessage}\n")
+        Some(q.name)
       }
     }
-    // JSON string escape: backslash, quote, and ALL control chars (<0x20)
-    // — a tab or CR in builder-authored SQL would otherwise make the
-    // driver's json.load fail and silently zero the round's correctness.
-    def q(s: String): String = "\"" + s.flatMap {
-      case '"'  => "\\\""
-      case '\\' => "\\\\"
-      case '\n' => "\\n"
-      case '\r' => "\\r"
-      case '\t' => "\\t"
-      case c if c < ' ' => f"\\u${c.toInt}%04x"
-      case c => c.toString
-    } + "\""
-    val json = SparkEntry.oracleSql
-      .map { case (k, v) => s"${q(k)}: ${q(v)}" }.mkString("{", ",", "}")
-    Files.writeString(Paths.get(s"$outDir/oracle_sql.json"), json)
+    writeOracleSql(out.resolve("oracle_sql.json"))
     spark.stop()
+    val n = SparkEntry.driverQueries.size
+    System.err.println(
+      if (failed.isEmpty) s"[verify] all $n queries written"
+      else s"[verify] ${failed.size} of $n queries failed: ${failed.mkString(", ")}")
   }
+
+  /** `SparkEntry.oracleSql` as one JSON object, name → SQL, sorted by name. */
+  def writeOracleSql(path: Path): Unit =
+    new com.fasterxml.jackson.databind.ObjectMapper()
+      .writeValue(path.toFile, new java.util.TreeMap(SparkEntry.oracleSql.asJava))
 }

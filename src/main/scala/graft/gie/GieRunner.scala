@@ -419,7 +419,7 @@ object GieRunner {
           // skip only when the named grid genuinely is not available
           val names = cmd.args.split("[,\\s]+").filter(_.nonEmpty)
           val available = names.forall { n =>
-            Seq(s"/root/reference/data/$n", s"/root/reference/data/tests/$n")
+            Seq(s"${ReferenceTree.data}/$n", s"${ReferenceTree.data}/tests/$n")
               .exists(pth => java.nio.file.Files.isReadable(java.nio.file.Paths.get(pth)))
           }
           if (!available) st.skipTest = true
@@ -439,11 +439,11 @@ object GieRunner {
       "defmodel", "deformation", "DHDN_ETRS89", "GDA", "4D-API_cs2cs-style",
       "ellipsoid", "axisswap", "unitconvert", "adams_hemi", "adams_ws1",
       "adams_ws2", "guyou", "peirce_q", "spilhaus"
-    ).map(n => s"/root/reference/test/gie/$n.gie") ++ Seq(
+    ).map(n => s"${ReferenceTree.test}/gie/$n.gie") ++ Seq(
       "5101.1-jhs", "5101.2-jhs", "5101.3-jhs", "5101.4-jhs-etmerc",
       "5102.1", "5102.2", "5103.1", "5103.2", "5103.3", "5104", "5105.2",
       "5106", "5107", "5108", "5109", "5111.1", "5112", "5113", "5201", "5208"
-    ).map(n => s"/root/reference/test/gigs/$n.gie")
+    ).map(n => s"${ReferenceTree.test}/gigs/$n.gie")
     val total = new Stats
     for (f <- files) {
       val s = runFile(f)

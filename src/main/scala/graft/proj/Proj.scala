@@ -207,7 +207,7 @@ object Proj {
         if (file == "epsg") epsgInit.getOrElse(key, epsgGenerated.getOrElse(key,
           throw ProjError(ProjErr.INVALID_OP_FILE_NOT_FOUND_OR_INVALID, s"unknown epsg:$key")))
         else {
-          val path = java.nio.file.Paths.get(s"/root/reference/data/$file")
+          val path = java.nio.file.Paths.get(s"${ReferenceTree.data}/$file")
           if (!java.nio.file.Files.isReadable(path))
             throw ProjError(ProjErr.INVALID_OP_FILE_NOT_FOUND_OR_INVALID, s"no init file $file")
           val text = new String(java.nio.file.Files.readAllBytes(path), "UTF-8")

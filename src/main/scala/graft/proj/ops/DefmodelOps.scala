@@ -287,7 +287,7 @@ object DefmodelOps {
       val cached = modelCache.get(modelName)
       if (cached != null) cached
       else {
-        val path = Seq(s"/root/reference/data/$modelName", modelName)
+        val path = Seq(s"${ReferenceTree.data}/$modelName", modelName)
           .map(java.nio.file.Paths.get(_))
           .find(java.nio.file.Files.isReadable)
           .getOrElse(throw ProjError(ProjErr.INVALID_OP_FILE_NOT_FOUND_OR_INVALID,

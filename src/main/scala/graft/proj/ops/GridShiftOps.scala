@@ -201,7 +201,7 @@ object GridShiftOps {
 
   private def defaultRoots: Seq[String] =
     sys.props.get("graft.grid.paths").toSeq.flatMap(_.split(',').toSeq.map(_.trim)) ++
-      Seq("/root/reference/data", "/root/reference/data/tests")
+      Seq(ReferenceTree.data, s"${ReferenceTree.data}/tests")
 
   @volatile var gridSource: GridSource = new FileGridSource(defaultRoots)
 

@@ -375,7 +375,7 @@ object TinshiftOps {
       val cached = cache.get(filename)
       if (cached != null) cached
       else {
-        val path = Seq(s"/root/reference/data/$filename", filename)
+        val path = Seq(s"${ReferenceTree.data}/$filename", filename)
           .map(java.nio.file.Paths.get(_))
           .find(java.nio.file.Files.isReadable)
           .getOrElse(throw ProjError(ProjErr.INVALID_OP_FILE_NOT_FOUND_OR_INVALID,

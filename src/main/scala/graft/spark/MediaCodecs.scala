@@ -529,6 +529,7 @@ object MediaCodecs {
           var p = pos + 4
           while (p < pos + 2 + len) {
             val pq = (bytes(p) & 0xf0) >> 4; val tq = bytes(p) & 0x0f
+            if (tq > 3) return None // T.81 B.2.4.1: Tq is 0-3
             p += 1
             var i = 0
             while (i < 64) {
@@ -550,6 +551,7 @@ object MediaCodecs {
             compH(c) = (bytes(base + 1) & 0xf0) >> 4
             compV(c) = bytes(base + 1) & 0x0f
             compQ(c) = bytes(base + 2) & 0x0f
+            if (compQ(c) > 3) return None // T.81 B.2.2: Tq is 0-3
             c += 1
           }
         case 0xC2 => return decodeJpegProgressivePixels(bytes) // §G path
@@ -557,6 +559,7 @@ object MediaCodecs {
           var p = pos + 4
           while (p < pos + 2 + len) {
             val tc = (bytes(p) & 0xf0) >> 4; val th = bytes(p) & 0x0f
+            if (th > 3) return None // T.81 B.2.4.2: Th is 0-3
             val bits = new Array[Int](16)
             var total = 0
             var i = 0
@@ -575,6 +578,8 @@ object MediaCodecs {
           while (c < ns) {
             compDc(c) = (bytes(pos + 6 + 2 * c) & 0xf0) >> 4
             compAc(c) = bytes(pos + 6 + 2 * c) & 0x0f
+            // T.81 B.2.3: Td and Ta are 0-3
+            if (compDc(c) > 3 || compAc(c) > 3) return None
             c += 1
           }
           scanStart = pos + 2 + len
@@ -958,6 +963,7 @@ object MediaCodecs {
             var p = pos + 4
             while (p < pos + 2 + len) {
               val pq = (bytes(p) & 0xf0) >> 4; val tq = bytes(p) & 0x0f
+              if (tq > 3) return None // T.81 B.2.4.1: Tq is 0-3
               p += 1
               var i = 0
               while (i < 64) {
@@ -980,6 +986,7 @@ object MediaCodecs {
               compH(c) = (bytes(base + 1) & 0xf0) >> 4
               compV(c) = bytes(base + 1) & 0x0f
               compQ(c) = bytes(base + 2) & 0x0f
+              if (compQ(c) > 3) return None // T.81 B.2.2: Tq is 0-3
               c += 1
             }
             hMax = (0 until nComp).map(compH).max
@@ -1001,6 +1008,7 @@ object MediaCodecs {
             var p = pos + 4
             while (p < pos + 2 + len) {
               val tc = (bytes(p) & 0xf0) >> 4; val th = bytes(p) & 0x0f
+              if (th > 3) return None // T.81 B.2.4.2: Th is 0-3
               val bits = new Array[Int](16)
               var total = 0
               var i = 0
@@ -1027,6 +1035,8 @@ object MediaCodecs {
               scanC(i) = c
               scanDc(i) = (bytes(pos + 6 + 2 * i) & 0xf0) >> 4
               scanAc(i) = bytes(pos + 6 + 2 * i) & 0x0f
+              // T.81 B.2.3: Td and Ta are 0-3
+              if (scanDc(i) > 3 || scanAc(i) > 3) return None
               i += 1
             }
             val ss = bytes(pos + 5 + 2 * ns) & 0xff

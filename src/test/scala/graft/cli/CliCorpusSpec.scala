@@ -1,6 +1,7 @@
 package graft.cli
 
 import org.scalatest.funsuite.AnyFunSuite
+import graft.proj.ReferenceFiles
 import CliHarness._
 
 /** Replays the reference's CLI expectation corpus (test/cli yaml files) against
@@ -63,10 +64,12 @@ class CliCorpusSpec extends AnyFunSuite {
   }
 
   test("test_proj_nad27: SPCS zones on NAD27 (test27 corpus)") {
+    ReferenceFiles("data/nad27") // the +init=nad27: file
     check("test_proj_nad27", projApp("proj"), expectedPass = 265, skips = Map.empty)
   }
 
   test("test_proj_nad83: SPCS zones on NAD83 (test83 corpus)") {
+    ReferenceFiles("data/nad83") // the +init=nad83: file
     check("test_proj_nad83", projApp("proj"), expectedPass = 225, skips = Map.empty)
   }
 
@@ -88,6 +91,7 @@ class CliCorpusSpec extends AnyFunSuite {
   }
 
   test("test_cs2cs_various: datum-file-free transformations") {
+    ReferenceFiles("data/tests") // the geoid grids of the vertical cases
     check("test_cs2cs_various", cs2csApp, expectedPass = 143 - variousSkips.size,
       skips = variousSkips)
   }
@@ -102,6 +106,7 @@ class CliCorpusSpec extends AnyFunSuite {
   }
 
   test("test_cs2cs_datumfile: grid-based datum shifts (NTv1/conus/MD/NTv2/GTX)") {
+    ReferenceFiles("data/tests") // the datum grids
     check("test_cs2cs_datumfile", cs2csApp, expectedPass = 12, skips = Map.empty)
   }
 
@@ -119,11 +124,13 @@ class CliCorpusSpec extends AnyFunSuite {
   }
 
   test("test_cs2cs_ignf: IGNF registry pairs (legacy +init=IGNF:)") {
+    ReferenceFiles("data/tests/ntf_r93.gsb") // the NTF grid of the NTF pairs
     check("test_cs2cs_ignf", cs2csApp, expectedPass = 34 - ignfSkips.size,
       skips = ignfSkips)
   }
 
   test("test_cs2cs_ntv2: NTv2 subgrids and grid-list fallback") {
+    ReferenceFiles("data/tests") // the NTv2 grids
     check("test_cs2cs_ntv2", cs2csApp, expectedPass = 6, skips = Map.empty)
   }
 

@@ -130,7 +130,7 @@ object CliHarness {
     // the reference's test/cli directory (the runner's cwd)
     val onDisk = t.args.filter(a => !a.startsWith("-") && !a.startsWith("+") &&
         a.contains(".txt")).flatMap { name =>
-      val p = java.nio.file.Paths.get(s"/root/reference/test/cli/$name")
+      val p = java.nio.file.Paths.get(graft.proj.ReferenceTree.test, "cli", name)
       if (java.nio.file.Files.isReadable(p))
         Some(name -> new String(java.nio.file.Files.readAllBytes(p), "UTF-8"))
       else None

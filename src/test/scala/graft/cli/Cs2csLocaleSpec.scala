@@ -69,8 +69,7 @@ class Cs2csLocaleSpec extends AnyFunSuite {
           "0d00'00.000\"W 90d00'00.000\"N 0.0\n"))
 
     val dist = new String(java.nio.file.Files.readAllBytes(
-      java.nio.file.Paths.get(
-        "/root/reference/test/cli/test_cs2cs_locale_out.dist")), "UTF-8")
+      graft.proj.ReferenceFiles("test/cli/test_cs2cs_locale_out.dist")), "UTF-8")
 
     // the script compares with `diff -u -b`: whitespace runs equal
     def norm(s: String): Seq[String] = s.linesIterator

@@ -24,6 +24,7 @@ class CrsRegistrySpec extends AnyFunSuite {
   }
 
   test("NTF to RGF93 picks the horizontal grid operation") {
+    ReferenceFiles("data/tests/ntf_r93.gsb") // the grid the operation needs
     val pipe = CrsToCrs.pipelineRegistry("NTF", "RGF93")
       .getOrElse(fail("NTF->RGF93 did not resolve"))
     assert(pipe.contains("hgridshift"))
@@ -61,8 +62,8 @@ class CrsRegistrySpec extends AnyFunSuite {
     // with the same grid: the vertical leg must be h = H + N (orthometric
     // up to ellipsoidal), applied at the same position
     import graft.proj.ops.GridShiftOps
-    val bytes = java.nio.file.Files.readAllBytes(java.nio.file.Paths.get(
-      "/root/reference/data/tests/egm96_15_downsampled.gtx"))
+    val bytes = java.nio.file.Files.readAllBytes(
+      ReferenceFiles("data/tests/egm96_15_downsampled.gtx"))
     val src = new GridShiftOps.GridSource {
       def fetch(name: String): Option[Array[Byte]] =
         if (name == "egm96_15.gtx" || name == "us_nga_egm96_15.tif")

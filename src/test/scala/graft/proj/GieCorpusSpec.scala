@@ -34,7 +34,7 @@ class GieCorpusSpec extends AnyFunSuite {
   for ((name, expectedOk) <- files.map { case (n, c) => (s"gie/$n", c) } ++
                              gigsFiles.map { case (n, c) => (s"gigs/$n", c) }) {
     test(s"$name.gie passes completely ($expectedOk asserts)") {
-      val stats = GieRunner.runFile(s"/root/reference/test/$name.gie")
+      val stats = GieRunner.runFile(ReferenceFiles(s"test/$name.gie").toString)
       val detail = stats.failures.take(3)
         .map(f => s"${f.file}:${f.lineno} ${f.msg.take(80)}").mkString("; ")
       assert(stats.ko == 0, s"failures: $detail")

@@ -10,10 +10,12 @@ import graft.proj.ops.GridShiftOps
   * serve a second fetch without touching the server. */
 class HttpGridSpec extends AnyFunSuite {
 
-  private val gridBytes = java.nio.file.Files.readAllBytes(
-    java.nio.file.Paths.get("/root/reference/data/tests/ntv2_0_downsampled.gsb"))
+  /** The served grid, read from the reference tree when a server starts. */
+  private val servedGrid = "data/tests/ntv2_0_downsampled.gsb"
+  private lazy val gridBytes = java.nio.file.Files.readAllBytes(ReferenceFiles(servedGrid))
 
   private def withServer[A](f: (String, () => Int) => A): A = {
+    ReferenceFiles(servedGrid)
     val server = com.sun.net.httpserver.HttpServer.create(
       new java.net.InetSocketAddress("127.0.0.1", 0), 0)
     val hits = new java.util.concurrent.atomic.AtomicInteger(0)
@@ -41,6 +43,7 @@ class HttpGridSpec extends AnyFunSuite {
   }
 
   test("grids fetched over HTTP shift identically to the file source") {
+    ReferenceFiles(servedGrid)
     val fileResult = shiftThrough("ntv2_0_downsampled.gsb")
     withServer { (base, hits) =>
       val saved = GridShiftOps.gridSource
@@ -60,6 +63,7 @@ class HttpGridSpec extends AnyFunSuite {
   /** Range-honoring endpoint (the CDN contract networkfilemanager talks
     * to): 206 + Content-Range for ranged requests, 200 full body else. */
   private def withRangeServer[A](name: String)(f: (String, () => Int) => A): A = {
+    ReferenceFiles(servedGrid)
     val server = com.sun.net.httpserver.HttpServer.create(
       new java.net.InetSocketAddress("127.0.0.1", 0), 0)
     val hits = new java.util.concurrent.atomic.AtomicInteger(0)

@@ -42,8 +42,8 @@ class SqliteSpec extends AnyFunSuite {
   }
 
   test("GeoPackage triangulation reassembly feeds the JSON model") {
-    val bytes = java.nio.file.Files.readAllBytes(java.nio.file.Paths.get(
-      "/root/reference/data/tests/tinshift_crs_implicit.gpkg"))
+    val bytes = java.nio.file.Files.readAllBytes(
+      ReferenceFiles("data/tests/tinshift_crs_implicit.gpkg"))
     val json = TinshiftGpkg.toTriangulationJson(bytes)
     assert(json.contains("\"vertices_columns\":[\"source_x\",\"source_y\",\"target_x\",\"target_y\"]"))
     assert(json.contains("\"triangles\":[[0,1,2]]"))

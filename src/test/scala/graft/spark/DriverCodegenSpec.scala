@@ -8,7 +8,7 @@ import graft.SparkEntry
 /** The north-star entry and every driver query, collected with generated
   * code only (CODEGEN_ONLY, no fallback), so a kernel whose generated Java
   * does not compile fails here instead of running interpreted. Reads the
-  * tables under SPARK_GRAFT_SF_DIR, as PlanCheck does. */
+  * tables under SPARK_GRAFT_SF_DIR, as PlanCheckSpec does. */
 class DriverCodegenSpec extends AnyFunSuite {
   lazy val spark: SparkSession = SparkSession.builder()
     .master("local[4]")
@@ -27,9 +27,9 @@ class DriverCodegenSpec extends AnyFunSuite {
     assert(SparkEntry.entry(codegen).collect().nonEmpty)
   }
 
-  SparkEntry.queries.keys.toSeq.sorted.filterNot(needGrids).foreach { name =>
-    test(s"$name runs under CODEGEN_ONLY") {
-      SparkEntry.queries(name)(codegen, dir).collect()
+  SparkEntry.driverQueries.sortBy(_.name).filterNot(q => needGrids(q.name)).foreach { q =>
+    test(s"${q.name} runs under CODEGEN_ONLY") {
+      q.build(codegen, dir).collect()
     }
   }
 }

@@ -1,5 +1,6 @@
 package graft.spark
 
+import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
 
 /** Progressive JPEG (ITU T.81 §G): four-scan successive-approximation +
@@ -10,6 +11,11 @@ import org.scalatest.funsuite.AnyFunSuite
   * refinement correction-bit protocol (newly-nonzero ±1 codes, history
   * correction bits buffered across EOB runs). */
 class MediaJpegProgSpec extends AnyFunSuite {
+  lazy val spark: SparkSession = SparkSession.builder()
+    .master("local[4]")
+    .config("spark.sql.shuffle.partitions", "8")
+    .config("spark.ui.enabled", "false")
+    .getOrCreate()
 
   /** the ± column/checker patterns of the (4,0) and (4,4) DCT bases */
   private val sgn = Array(1, -1, -1, 1, 1, -1, -1, 1)
@@ -73,5 +79,11 @@ class MediaJpegProgSpec extends AnyFunSuite {
       val want = expectedPixels(8, 8, seed)
       for (i <- px.indices) assert((px(i) & 0xff) == want(i))
     }
+  }
+
+  test("table ids above 3 decode to null through both eval paths") {
+    val good = MediaCodecs.encodeJpegProgressive(16, 16, 9L)
+    MediaJpegSpec.checkBadTableIds(spark, good, MediaFunctions.jpegPixelStats)
+    MediaJpegSpec.checkBadTableIds(spark, good, MediaFunctions.jpegPixelStatsProg)
   }
 }

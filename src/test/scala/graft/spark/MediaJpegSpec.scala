@@ -135,4 +135,45 @@ class MediaJpegSpec extends AnyFunSuite {
       }
     }
   }
+
+  test("table ids above 3 decode to null through both eval paths") {
+    MediaJpegSpec.checkBadTableIds(spark,
+      MediaCodecs.encodeJpegBaseline(16, 16, 9L), MediaFunctions.jpegPixelStats)
+  }
+}
+
+object MediaJpegSpec {
+  /** `good` with one 4-bit table id raised above 3 (T.81 B.2: ids are
+    * 0-3): DQT Tq=5, DHT Th=7, the frame component's Tq=9 and the first
+    * scan's Td/Ta=5. */
+  def badTableIds(good: Array[Byte]): Seq[(String, Array[Byte])] = {
+    def patch(marker: Int, offset: Int, f: Int => Int): Array[Byte] = {
+      val at = good.indices.find(i => (good(i) & 0xff) == 0xff && i + 1 < good.length &&
+        (good(i + 1) & 0xff) == marker).get + offset
+      val bad = good.clone()
+      bad(at) = f(bad(at) & 0xff).toByte
+      bad
+    }
+    val sof = if (good.indices.exists(i => (good(i) & 0xff) == 0xff &&
+      i + 1 < good.length && (good(i + 1) & 0xff) == 0xc2)) 0xc2 else 0xc0
+    Seq(
+      "DQT Tq=5" -> patch(0xdb, 4, b => (b & 0xf0) | 5),
+      "DHT Th=7" -> patch(0xc4, 4, b => (b & 0xf0) | 7),
+      "SOF Tq=9" -> patch(sof, 12, _ => 9),
+      "SOS Td/Ta=5" -> patch(0xda, 6, _ => 0x55))
+  }
+
+  /** The untouched payload decodes and every bad-id variant gives a null
+    * struct, interpreted and under generated code alike. */
+  def checkBadTableIds(spark: SparkSession, good: Array[Byte],
+      stats: org.apache.spark.sql.Column => org.apache.spark.sql.Column): Unit = {
+    val cases = ("untouched" -> good) +: badTableIds(good)
+    for (s <- Seq(EvalPaths.interpreted(spark), EvalPaths.codegenOnly(spark))) {
+      import s.implicits._
+      val got = cases.map(_._2).toDF("payload").select(stats(col("payload")))
+        .collect().map(_.isNullAt(0))
+      assert(got.toSeq == cases.map(_._1 != "untouched"),
+        s"${cases.map(_._1).zip(got).mkString(", ")} (null?) in ${s.conf.get("spark.sql.codegen.factoryMode")}")
+    }
+  }
 }

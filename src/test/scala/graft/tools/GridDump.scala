@@ -1,5 +1,6 @@
 package graft.tools
 
+import graft.proj.ReferenceFiles
 import graft.proj.grids.GenericGrids
 import graft.proj.ops.GridShiftOps
 
@@ -14,8 +15,8 @@ object GridDump {
 
   def main(args: Array[String]): Unit = {
     // --- NADCON5 conus extract (gridshift oracle window) ---
-    val tifPath = "/root/reference/data/tests/us_noaa_nadcon5_nad83_2007_nad83_2011_conus_extract.tif"
-    val bytes = java.nio.file.Files.readAllBytes(java.nio.file.Paths.get(tifPath))
+    val bytes = java.nio.file.Files.readAllBytes(
+      ReferenceFiles("data/tests/us_noaa_nadcon5_nad83_2007_nad83_2011_conus_extract.tif"))
     val g = GenericGrids.open(bytes, "nadcon5").head
     println(f"TIF west=${g.west * R2D}%.17g south=${g.south * R2D}%.17g " +
       f"resX=${g.resX * R2D}%.17g resY=${g.resY * R2D}%.17g w=${g.width} h=${g.height} spp=${g.samplesPerPixel}")
@@ -36,7 +37,7 @@ object GridDump {
 
     // --- EGM96 downsampled GTX (geoid oracle window) ---
     val gtxBytes = java.nio.file.Files.readAllBytes(
-      java.nio.file.Paths.get("/root/reference/data/tests/egm96_15_downsampled.gtx"))
+      ReferenceFiles("data/tests/egm96_15_downsampled.gtx"))
     val v = new GridShiftOps.GtxGrid(gtxBytes)
     println(f"GTX west=${v.west * R2D}%.17g south=${v.south * R2D}%.17g " +
       f"resX=${v.resX * R2D}%.17g resY=${v.resY * R2D}%.17g w=${v.width} h=${v.height}")

@@ -5,7 +5,7 @@ import graft.proj.OpFactory
 /** Dump the candidate-operation list for a CRS pair — the debugging
   * equivalent of `projinfo -s ... -t ...` over the generated EPSG sidecar.
   *
-  *   runMain graft.tools.OpProbe EPSG:23031 EPSG:25831 [lon lat]
+  *   Test/runMain graft.tools.OpProbe EPSG:23031 EPSG:25831 [lon lat]
   */
 object OpProbe {
   def main(args: Array[String]): Unit = {

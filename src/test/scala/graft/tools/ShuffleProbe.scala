@@ -5,7 +5,7 @@ import org.apache.spark.sql.SparkSession
 
 /** Dev probe: run one SparkEntry query by name and print the total shuffle
   * write/read bytes and records (per-run accounting for exchange-slimming
-  * work: `runMain graft.tools.ShuffleProbe dedup_minhash [sfDir]`). */
+  * work: `Test/runMain graft.tools.ShuffleProbe dedup_minhash [sfDir]`). */
 object ShuffleProbe {
   def main(args: Array[String]): Unit = {
     val name = args.headOption.getOrElse("dedup_minhash")
