@@ -395,13 +395,17 @@ object MediaCodecs {
       math.cos((2 * x + 1) * u * math.Pi / 16)
   }
 
-  /** Separable 2-D inverse DCT (T.81 A.3.3): rows then columns over the
-    * precomputed basis — 2*8 multiplies per output sample instead of the
-    * direct form's 64. `tmp` holds dequantized coefficients in natural
-    * order (v*8+u); `work` is a caller-provided 64-slot scratch; output
-    * samples (level-shifted, clamped) land in `plane` at (ox, oy). */
-  private def idct8x8Into(tmp: Array[Double], work: Array[Double],
-                          plane: Array[Byte], pw: Int, ox: Int, oy: Int): Unit = {
+  /** Dequantization and separable 2-D inverse DCT (T.81 A.3.3): rows then
+    * columns over the precomputed basis — 2*8 multiplies per output sample
+    * instead of the direct form's 64. `coef` holds a block's coefficients
+    * in natural order (v*8+u) from `off`, `q` its quantizers; `tmp` and
+    * `work` are caller-provided 64-slot scratch; output samples
+    * (level-shifted, clamped) land in `plane` at (ox, oy). */
+  private def idct8x8Into(coef: Array[Int], off: Int, q: Array[Int], tmp: Array[Double],
+                          work: Array[Double], plane: Array[Byte], pw: Int, ox: Int,
+                          oy: Int): Unit = {
+    var i = 0
+    while (i < 64) { tmp(i) = coef(off + i).toDouble * q(i); i += 1 }
     // pass 1: for each row v, resolve u -> x:  work(v*8+x) = sum_u C(x,u) F(v,u)
     var v = 0
     while (v < 8) {
@@ -501,181 +505,322 @@ object MediaCodecs {
     }
   }
 
-  /** full baseline JFIF decode: Huffman entropy decode (DC prediction, AC
-    * runs, EOB/ZRL), dequantization, zigzag, IDCT, level shift; grayscale
-    * returns luma bytes, 3-component YCbCr converts to interleaved RGB
-    * with box upsampling of subsampled chroma. None on malformed input. */
-  def decodeJpegPixels(bytes: Array[Byte]): Option[Array[Byte]] = {
-    if (bytes.length < 4 || (bytes(0) & 0xff) != 0xff ||
-      (bytes(1) & 0xff) != 0xd8) return None
-    val quant = Array.fill(4)(new Array[Int](64))
+  /** Full JFIF pixel decode of an 8-bit sequential (SOF0/1) or progressive
+    * (SOF2, §G) frame: Huffman entropy decode, dequantization, zigzag,
+    * IDCT, level shift; grayscale returns luma bytes, 3-component YCbCr
+    * converts to interleaved RGB with box upsampling of subsampled chroma.
+    * None on malformed or unsupported input:
+    *  - no SOI, or a broken segment chain: a byte other than 0xFF where a
+    *    marker is due, a length below 2 or past the data, or a table or
+    *    header running past its segment;
+    *  - no frame, a second frame, or one that is not SOF0/1/2, not 8-bit,
+    *    of zero width or height, with other than 1 or 3 components or a
+    *    sampling factor outside 1..4;
+    *  - a frame of more 8x8 blocks than 8 x the payload's byte length
+    *    (every block costs at least one entropy-coded bit);
+    *  - a table class above 1, table id above 3 or DQT precision above 1,
+    *    or a scan or component using a table that was never defined;
+    *  - a nonzero restart interval (DRI): restarts are not decoded;
+    *  - a scan before the frame, naming an unknown component, or with
+    *    parameters outside its mode: sequential scans are Ss=0, Se=63,
+    *    Ah=Al=0; progressive ones have Ss <= Se <= 63, Ah and Al <= 13,
+    *    Se=0 when Ss=0 and one component when Ss > 0;
+    *  - entropy data that does not decode: an invalid Huffman code, a run
+    *    past Se, an EOB run in a sequential scan, a refinement size other
+    *    than 1, or a scan that runs out of data;
+    *  - a component that no DC scan covered (no scan at all, say). */
+  def decodeJpegPixels(bytes: Array[Byte]): Option[Array[Byte]] =
+    decodeJpegFrame(bytes, pixels = true).map(_._2)
+
+  /** scan JPEG markers for a SOFn frame header (excluding DHT/JPG/DAC). */
+  def decodeJpeg(bytes: Array[Byte]): Option[MediaInfo] =
+    decodeJpegFrame(bytes, pixels = false).map(_._1)
+
+  /** The one JPEG decoder: walks the segment chain from SOI, every read
+    * inside its segment. With `pixels` false it stops at the first SOFn
+    * and returns its header with null samples; otherwise it decodes every
+    * scan into per-component coefficient buffers up to EOI or the end of
+    * the data and returns the frame header with its samples (`channels`
+    * bytes per pixel, row-major) — see `decodeJpegPixels` for what gives
+    * None. */
+  private[spark] def decodeJpegFrame(bytes: Array[Byte],
+                                     pixels: Boolean): Option[(MediaInfo, Array[Byte])] = {
+    def u8(p: Int): Int = bytes(p) & 0xff
+    def u16(p: Int): Int = (u8(p) << 8) | u8(p + 1)
+    if (bytes.length < 4 || u16(0) != 0xFFD8) return None
+    val quant = new Array[Array[Int]](4)
     val dcTabs = new Array[HuffTable](4)
     val acTabs = new Array[HuffTable](4)
-    var width = 0; var height = 0; var nComp = 0
-    // per component: id, h, v, quant table; then at SOS: dc/ac table ids
-    val compH = new Array[Int](4); val compV = new Array[Int](4)
-    val compQ = new Array[Int](4)
-    val compDc = new Array[Int](4); val compAc = new Array[Int](4)
-    var pos = 2
-    var scanStart = -1
-    while (scanStart < 0 && pos + 4 <= bytes.length) {
-      if ((bytes(pos) & 0xff) != 0xff) return None
-      val marker = bytes(pos + 1) & 0xff
-      val len = ((bytes(pos + 2) & 0xff) << 8) | (bytes(pos + 3) & 0xff)
-      if (len < 2) return None
-      if (pos + 2 + len > bytes.length) return None // truncated segment
-      marker match {
-        case 0xDB => // DQT
-          var p = pos + 4
-          while (p < pos + 2 + len) {
-            val pq = (bytes(p) & 0xf0) >> 4; val tq = bytes(p) & 0x0f
-            if (tq > 3) return None // T.81 B.2.4.1: Tq is 0-3
-            p += 1
-            var i = 0
-            while (i < 64) {
-              quant(tq)(i) =
-                if (pq == 0) bytes(p + i) & 0xff
-                else ((bytes(p + 2 * i) & 0xff) << 8) | (bytes(p + 2 * i + 1) & 0xff)
-              i += 1
-            }
-            p += (if (pq == 0) 64 else 128)
-          }
-        case 0xC0 | 0xC1 => // SOF0/1 (baseline)
-          height = ((bytes(pos + 5) & 0xff) << 8) | (bytes(pos + 6) & 0xff)
-          width = ((bytes(pos + 7) & 0xff) << 8) | (bytes(pos + 8) & 0xff)
-          nComp = bytes(pos + 9) & 0xff
-          if (nComp != 1 && nComp != 3) return None
-          var c = 0
-          while (c < nComp) {
-            val base = pos + 10 + 3 * c
-            compH(c) = (bytes(base + 1) & 0xf0) >> 4
-            compV(c) = bytes(base + 1) & 0x0f
-            compQ(c) = bytes(base + 2) & 0x0f
-            if (compQ(c) > 3) return None // T.81 B.2.2: Tq is 0-3
-            c += 1
-          }
-        case 0xC2 => return decodeJpegProgressivePixels(bytes) // §G path
-        case 0xC4 => // DHT
-          var p = pos + 4
-          while (p < pos + 2 + len) {
-            val tc = (bytes(p) & 0xf0) >> 4; val th = bytes(p) & 0x0f
-            if (th > 3) return None // T.81 B.2.4.2: Th is 0-3
-            val bits = new Array[Int](16)
-            var total = 0
-            var i = 0
-            while (i < 16) { bits(i) = bytes(p + 1 + i) & 0xff; total += bits(i); i += 1 }
-            val vals = new Array[Int](total)
-            i = 0
-            while (i < total) { vals(i) = bytes(p + 17 + i) & 0xff; i += 1 }
-            val t = new HuffTable(bits, vals)
-            if (tc == 0) dcTabs(th) = t else acTabs(th) = t
-            p += 17 + total
-          }
-        case 0xDA => // SOS
-          val ns = bytes(pos + 4) & 0xff
-          if (ns != nComp) return None
-          var c = 0
-          while (c < ns) {
-            compDc(c) = (bytes(pos + 6 + 2 * c) & 0xf0) >> 4
-            compAc(c) = bytes(pos + 6 + 2 * c) & 0x0f
-            // T.81 B.2.3: Td and Ta are 0-3
-            if (compDc(c) > 3 || compAc(c) > 3) return None
-            c += 1
-          }
-          scanStart = pos + 2 + len
-        case 0xD9 => return None
-        case _ => ()
+    var info: MediaInfo = null
+    var progressive = false
+    var nComp = 0
+    var compId, compH, compV, compQ: Array[Int] = null
+    var hMax = 1; var vMax = 1; var mcusX = 0; var mcusY = 0
+    var bw, bh: Array[Int] = null // MCU-padded block grid per component
+    var bwN, bhN: Array[Int] = null // nominal grid, for non-interleaved scans
+    var coefs: Array[Array[Int]] = null // natural order, 64 per block
+    val dcScanned = new Array[Boolean](3)
+
+    /** one scan's entropy-coded data into `coefs` (T.81 F.2, G.2); a
+      * sequential scan is the DC and AC-first units over Ss..Se = 0..63 at
+      * Ah = Al = 0, without EOB runs. */
+    def decodeScan(reader: BitReader, scanC: Array[Int], dcT: Array[HuffTable],
+                   acT: Array[HuffTable], ss: Int, se: Int, ah: Int, al: Int): Boolean = {
+      val preds = new Array[Int](scanC.length)
+      var eobrun = 0
+
+      def dcUnit(si: Int, base: Int): Boolean = {
+        val co = coefs(scanC(si))
+        if (ah == 0) {
+          if (dcT(si) == null) return false
+          val cat = reader.decode(dcT(si))
+          if (cat < 0) return false
+          var diff = if (cat == 0) 0 else reader.bits(cat)
+          if (cat > 0 && diff < (1 << (cat - 1))) diff -= (1 << cat) - 1
+          preds(si) += diff
+          co(base) = preds(si) << al
+        } else if (reader.bits(1) != 0) co(base) |= 1 << al
+        true
       }
-      if (scanStart < 0) pos += 2 + len
-    }
-    if (scanStart < 0 || width == 0 || height == 0) return None
 
-    val hMax = (0 until nComp).map(compH).max
-    val vMax = (0 until nComp).map(compV).max
-    val mcuW = 8 * hMax; val mcuH = 8 * vMax
-    val mcusX = (width + mcuW - 1) / mcuW
-    val mcusY = (height + mcuH - 1) / mcuH
-    // per-component planes at full MCU-grid resolution
-    val planeW = (0 until nComp).map(c => mcusX * compH(c) * 8).toArray
-    val planeH = (0 until nComp).map(c => mcusY * compV(c) * 8).toArray
-    val planes = (0 until nComp).map(c =>
-      new Array[Byte](planeW(c) * planeH(c))).toArray
-    val preds = new Array[Int](nComp)
-    val reader = new BitReader(bytes, scanStart)
-    val coef = new Array[Int](64)
-    val tmp = new Array[Double](64)
+      def acFirstUnit(si: Int, base: Int, from: Int): Boolean = {
+        if (eobrun > 0) { eobrun -= 1; return true }
+        if (acT(si) == null) return false
+        val co = coefs(scanC(si))
+        var k = from
+        while (k <= se) {
+          val rs = reader.decode(acT(si))
+          if (rs < 0) return false
+          val r = rs >> 4; val sz = rs & 0x0f
+          if (sz == 0) {
+            if (r == 15) k += 16
+            else {
+              if (r > 0 && !progressive) return false // EOBRUN is §G only
+              eobrun = (1 << r) - 1
+              if (r > 0) eobrun += reader.bits(r)
+              k = se + 1
+            }
+          } else {
+            k += r
+            if (k > se) return false
+            var v = reader.bits(sz)
+            if (v < (1 << (sz - 1))) v -= (1 << sz) - 1
+            co(base + zigzag(k)) = v << al
+            k += 1
+          }
+        }
+        true
+      }
 
-    val work = new Array[Double](64)
-    def idctInto(plane: Array[Byte], pw: Int, ox: Int, oy: Int, q: Array[Int]): Unit = {
-      var i = 0
-      while (i < 64) { tmp(i) = coef(i).toDouble * q(i); i += 1 }
-      idct8x8Into(tmp, work, plane, pw, ox, oy)
-    }
-
-    var my = 0
-    while (my < mcusY) {
-      var mx = 0
-      while (mx < mcusX) {
-        var c = 0
-        while (c < nComp) {
-          val dcT = dcTabs(compDc(c)); val acT = acTabs(compAc(c))
-          if (dcT == null || acT == null) return None
-          var by = 0
-          while (by < compV(c)) {
-            var bx = 0
-            while (bx < compH(c)) {
-              java.util.Arrays.fill(coef, 0)
-              val cat = reader.decode(dcT)
-              if (cat < 0) return None
-              var diff = if (cat == 0) 0 else reader.bits(cat)
-              if (cat > 0 && diff < (1 << (cat - 1))) diff -= (1 << cat) - 1
-              preds(c) += diff
-              coef(0) = preds(c)
-              var k = 1
-              var eob = false
-              while (k < 64 && !eob) {
-                val rs = reader.decode(acT)
-                if (rs < 0) return None
-                val run = rs >> 4; val size = rs & 0x0f
-                if (size == 0) {
-                  if (run == 15) k += 16 // ZRL
-                  else eob = true
-                } else {
-                  k += run
-                  if (k > 63) return None
-                  var v = reader.bits(size)
-                  if (v < (1 << (size - 1))) v -= (1 << size) - 1
-                  coef(zigzag(k)) = v
+      def acRefineUnit(si: Int, base: Int): Boolean = {
+        if (acT(si) == null) return false
+        val co = coefs(scanC(si))
+        val p1 = 1 << al; val m1 = -1 << al
+        var k = ss
+        if (eobrun == 0) {
+          var broke = false
+          while (k <= se && !broke) {
+            val rs = reader.decode(acT(si))
+            if (rs < 0) return false
+            var r = rs >> 4; val sz = rs & 0x0f
+            var newVal = 0
+            if (sz != 0) {
+              if (sz != 1) return false // §G.1.2.3: refinement codes s=1 only
+              newVal = if (reader.bits(1) != 0) p1 else m1
+            } else if (r != 15) {
+              eobrun = (1 << r)
+              if (r > 0) eobrun += reader.bits(r)
+              broke = true
+            }
+            if (!broke) {
+              var advancing = true
+              while (k <= se && advancing) {
+                val z = base + zigzag(k)
+                if (co(z) != 0) {
+                  if (reader.bits(1) != 0 && (co(z) & p1) == 0)
+                    co(z) += (if (co(z) >= 0) p1 else m1)
                   k += 1
+                } else {
+                  r -= 1
+                  if (r < 0) advancing = false else k += 1
                 }
               }
-              idctInto(planes(c), planeW(c),
-                (mx * compH(c) + bx) * 8, (my * compV(c) + by) * 8,
-                quant(compQ(c)))
-              bx += 1
+              if (newVal != 0 && k <= se) co(base + zigzag(k)) = newVal
+              k += 1
             }
-            by += 1
           }
-          c += 1
         }
-        mx += 1
+        if (eobrun > 0) {
+          while (k <= se) {
+            val z = base + zigzag(k)
+            if (co(z) != 0 && reader.bits(1) != 0 && (co(z) & p1) == 0)
+              co(z) += (if (co(z) >= 0) p1 else m1)
+            k += 1
+          }
+          eobrun -= 1
+        }
+        true
       }
-      my += 1
+
+      def unit(si: Int, base: Int): Boolean =
+        if (!progressive) dcUnit(si, base) && acFirstUnit(si, base, 1)
+        else if (ss == 0) dcUnit(si, base)
+        else if (ah == 0) acFirstUnit(si, base, ss)
+        else acRefineUnit(si, base)
+      if (scanC.length == 1) { // non-interleaved: the component's own grid (A.2.2)
+        val c = scanC(0)
+        var by = 0
+        while (by < bhN(c)) {
+          var bx = 0
+          while (bx < bwN(c)) {
+            if (!unit(0, (by * bw(c) + bx) * 64)) return false
+            bx += 1
+          }
+          by += 1
+        }
+      } else { // interleaved MCUs (A.2.3)
+        var my = 0
+        while (my < mcusY) {
+          var mx = 0
+          while (mx < mcusX) {
+            var si = 0
+            while (si < scanC.length) {
+              val c = scanC(si)
+              var v = 0
+              while (v < compV(c)) {
+                var h = 0
+                while (h < compH(c)) {
+                  if (!unit(si, ((my * compV(c) + v) * bw(c) + mx * compH(c) + h) * 64))
+                    return false
+                  h += 1
+                }
+                v += 1
+              }
+              si += 1
+            }
+            mx += 1
+          }
+          my += 1
+        }
+      }
+      true
     }
 
-    if (nComp == 1) {
-      // crop to the declared dimensions
-      val outPx = new Array[Byte](width * height)
-      var y = 0
-      while (y < height) {
-        System.arraycopy(planes(0), y * planeW(0), outPx, y * width, width)
-        y += 1
+    var pos = 2
+    while (pos + 2 <= bytes.length && u16(pos) != 0xFFD9) {
+      if (u8(pos) != 0xff || pos + 4 > bytes.length) return None
+      val marker = u8(pos + 1)
+      val start = pos + 4
+      val end = pos + 2 + u16(pos + 2)
+      if (end < start || end > bytes.length) return None
+      pos = end
+      marker match {
+        case m if m >= 0xC0 && m <= 0xCF && m != 0xC4 && m != 0xC8 && m != 0xCC => // SOFn
+          if (end - start < 6 || end - start < 6 + 3 * u8(start + 5)) return None
+          val height = u16(start + 1); val width = u16(start + 3)
+          nComp = u8(start + 5)
+          if (!pixels) return Some((MediaInfo("image", width, height, 0, nComp), null))
+          if (info != null || m > 0xC2 || u8(start) != 8 || width == 0 || height == 0 ||
+            (nComp != 1 && nComp != 3)) return None
+          info = MediaInfo("image", width, height, 0, nComp)
+          progressive = m == 0xC2
+          compId = Array.tabulate(nComp)(c => u8(start + 6 + 3 * c))
+          compH = Array.tabulate(nComp)(c => u8(start + 7 + 3 * c) >> 4)
+          compV = Array.tabulate(nComp)(c => u8(start + 7 + 3 * c) & 0x0f)
+          compQ = Array.tabulate(nComp)(c => u8(start + 8 + 3 * c)) // T.81 B.2.2: Tq is 0-3
+          if ((compH ++ compV).exists(f => f < 1 || f > 4) || compQ.exists(_ > 3)) return None
+          hMax = compH.max; vMax = compV.max
+          mcusX = (width + 8 * hMax - 1) / (8 * hMax)
+          mcusY = (height + 8 * vMax - 1) / (8 * vMax)
+          bw = compH.map(mcusX * _); bh = compV.map(mcusY * _)
+          bwN = compH.map(h => ((width * h + hMax - 1) / hMax + 7) / 8)
+          bhN = compV.map(v => ((height * v + vMax - 1) / vMax + 7) / 8)
+          val blocks = bw.indices.map(c => bw(c).toLong * bh(c)).sum
+          if (blocks > 8L * bytes.length || blocks * 64 > Int.MaxValue) return None
+          coefs = Array.tabulate(nComp)(c => new Array[Int](bw(c) * bh(c) * 64))
+        case _ if !pixels => ()
+        case 0xDB => // DQT: Qk in zigzag order (T.81 B.2.4.1)
+          var p = start
+          while (p < end) {
+            val pq = u8(p) >> 4; val tq = u8(p) & 0x0f
+            if (pq > 1 || tq > 3 || p + 1 + 64 * (pq + 1) > end) return None
+            val q = new Array[Int](64)
+            var k = 0
+            while (k < 64) {
+              q(zigzag(k)) = if (pq == 0) u8(p + 1 + k) else u16(p + 1 + 2 * k)
+              k += 1
+            }
+            quant(tq) = q
+            p += 1 + 64 * (pq + 1)
+          }
+        case 0xC4 => // DHT
+          var p = start
+          while (p < end) {
+            val tc = u8(p) >> 4; val th = u8(p) & 0x0f
+            if (tc > 1 || th > 3 || p + 17 > end) return None // T.81 B.2.4.2
+            val bits = Array.tabulate(16)(i => u8(p + 1 + i))
+            val total = bits.sum
+            if (p + 17 + total > end) return None
+            (if (tc == 0) dcTabs else acTabs)(th) =
+              new HuffTable(bits, Array.tabulate(total)(i => u8(p + 17 + i)))
+            p += 17 + total
+          }
+        case 0xDD => // DRI
+          if (end - start < 2 || u16(start) != 0) return None
+        case 0xDA => // SOS
+          val ns = if (end > start) u8(start) else 0
+          if (coefs == null || ns < 1 || ns > nComp || end - start < 4 + 2 * ns) return None
+          val scanC = new Array[Int](ns)
+          val dcT = new Array[HuffTable](ns); val acT = new Array[HuffTable](ns)
+          var i = 0
+          while (i < ns) {
+            val c = compId.indexOf(u8(start + 1 + 2 * i))
+            val td = u8(start + 2 + 2 * i) >> 4; val ta = u8(start + 2 + 2 * i) & 0x0f
+            if (c < 0 || td > 3 || ta > 3) return None // T.81 B.2.3: Td and Ta are 0-3
+            scanC(i) = c; dcT(i) = dcTabs(td); acT(i) = acTabs(ta)
+            i += 1
+          }
+          val ss = u8(start + 1 + 2 * ns); val se = u8(start + 2 + 2 * ns)
+          val ah = u8(start + 3 + 2 * ns) >> 4; val al = u8(start + 3 + 2 * ns) & 0x0f
+          if (if (progressive) ss > se || se > 63 || ah > 13 || al > 13 ||
+                (ss == 0 && se != 0) || (ss > 0 && ns != 1)
+              else ss != 0 || se != 63 || ah != 0 || al != 0) return None
+          val reader = new BitReader(bytes, end)
+          if (!decodeScan(reader, scanC, dcT, acT, ss, se, ah, al) || reader.eof) return None
+          if (ss == 0) scanC.foreach(dcScanned(_) = true)
+          // resynchronize on the next marker after the entropy data
+          var p = reader.pos
+          while (p + 1 < bytes.length && !(u8(p) == 0xff && u8(p + 1) != 0 &&
+            (u8(p + 1) < 0xd0 || u8(p + 1) > 0xd7))) p += 1
+          pos = p
+        case _ => ()
       }
-      Some(outPx)
-    } else {
-      val outPx = new Array[Byte](width * height * 3)
-      var y = 0
-      while (y < height) {
+    }
+    if (info == null || !dcScanned.take(nComp).forall(identity)) return None
+
+    // dequantize + IDCT every block, then crop and convert
+    val planeW = bw.map(_ * 8)
+    val planes = Array.tabulate(nComp)(c => new Array[Byte](bw(c) * bh(c) * 64))
+    val tmp = new Array[Double](64)
+    val work = new Array[Double](64)
+    var c = 0
+    while (c < nComp) {
+      val q = quant(compQ(c))
+      if (q == null) return None
+      var blk = 0
+      while (blk < bw(c) * bh(c)) {
+        idct8x8Into(coefs(c), blk * 64, q, tmp, work, planes(c), planeW(c), blk % bw(c) * 8,
+          blk / bw(c) * 8)
+        blk += 1
+      }
+      c += 1
+    }
+    val width = info.width; val height = info.height
+    val outPx = new Array[Byte](width * height * nComp)
+    var y = 0
+    while (y < height) {
+      if (nComp == 1) System.arraycopy(planes(0), y * planeW(0), outPx, y * width, width)
+      else {
         var x = 0
         while (x < width) {
           def sample(c: Int): Int = {
@@ -695,10 +840,10 @@ object MediaCodecs {
           outPx(o + 2) = clamp(yy + 1.772 * cb)
           x += 1
         }
-        y += 1
       }
-      Some(outPx)
+      y += 1
     }
+    Some((info, outPx))
   }
 
   // ------------------------------------------------- JPEG progressive (§G)
@@ -922,391 +1067,6 @@ object MediaCodecs {
     out.toByteArray
   }
 
-  /** Progressive (SOF2) decode: accumulates per-block coefficients across
-    * DC/AC first and refinement scans (§G.2: DC successive approximation,
-    * AC spectral selection with EOBRUN, the refinement correction-bit
-    * protocol), then dequantizes and runs the shared IDCT. Interleaved
-    * multi-component DC scans and single-component AC scans per the spec;
-    * grayscale returns luma bytes, 3-component converts YCbCr like the
-    * baseline path. */
-  def decodeJpegProgressivePixels(bytes: Array[Byte]): Option[Array[Byte]] = {
-    if (bytes.length < 4 || (bytes(0) & 0xff) != 0xff ||
-      (bytes(1) & 0xff) != 0xd8) return None
-    val quant = Array.fill(4)(new Array[Int](64))
-    val dcTabs = new Array[HuffTable](4)
-    val acTabs = new Array[HuffTable](4)
-    var width = 0; var height = 0; var nComp = 0
-    val compId = new Array[Int](4)
-    val compH = new Array[Int](4); val compV = new Array[Int](4)
-    val compQ = new Array[Int](4)
-    var hMax = 1; var vMax = 1; var mcusX = 0; var mcusY = 0
-    var bw: Array[Int] = null // MCU-padded block-grid width per component
-    var bhh: Array[Int] = null
-    var bwN: Array[Int] = null // nominal (non-interleaved) block counts
-    var bhN: Array[Int] = null
-    var coefs: Array[Array[Int]] = null
-    val preds = new Array[Int](4)
-
-    var pos = 2
-    var sawEoi = false
-    while (!sawEoi && pos + 2 <= bytes.length) {
-      if ((bytes(pos) & 0xff) != 0xff) return None
-      val marker = bytes(pos + 1) & 0xff
-      if (marker == 0xD9) sawEoi = true
-      else {
-        if (pos + 4 > bytes.length) return None
-        val len = ((bytes(pos + 2) & 0xff) << 8) | (bytes(pos + 3) & 0xff)
-        if (len < 2) return None
-        if (pos + 2 + len > bytes.length) return None // truncated segment
-        marker match {
-          case 0xDB =>
-            var p = pos + 4
-            while (p < pos + 2 + len) {
-              val pq = (bytes(p) & 0xf0) >> 4; val tq = bytes(p) & 0x0f
-              if (tq > 3) return None // T.81 B.2.4.1: Tq is 0-3
-              p += 1
-              var i = 0
-              while (i < 64) {
-                quant(tq)(i) =
-                  if (pq == 0) bytes(p + i) & 0xff
-                  else ((bytes(p + 2 * i) & 0xff) << 8) | (bytes(p + 2 * i + 1) & 0xff)
-                i += 1
-              }
-              p += (if (pq == 0) 64 else 128)
-            }
-          case 0xC2 =>
-            height = ((bytes(pos + 5) & 0xff) << 8) | (bytes(pos + 6) & 0xff)
-            width = ((bytes(pos + 7) & 0xff) << 8) | (bytes(pos + 8) & 0xff)
-            nComp = bytes(pos + 9) & 0xff
-            if (nComp != 1 && nComp != 3) return None
-            var c = 0
-            while (c < nComp) {
-              val base = pos + 10 + 3 * c
-              compId(c) = bytes(base) & 0xff
-              compH(c) = (bytes(base + 1) & 0xf0) >> 4
-              compV(c) = bytes(base + 1) & 0x0f
-              compQ(c) = bytes(base + 2) & 0x0f
-              if (compQ(c) > 3) return None // T.81 B.2.2: Tq is 0-3
-              c += 1
-            }
-            hMax = (0 until nComp).map(compH).max
-            vMax = (0 until nComp).map(compV).max
-            mcusX = (width + 8 * hMax - 1) / (8 * hMax)
-            mcusY = (height + 8 * vMax - 1) / (8 * vMax)
-            bw = (0 until nComp).map(c0 => mcusX * compH(c0)).toArray
-            bhh = (0 until nComp).map(c0 => mcusY * compV(c0)).toArray
-            bwN = (0 until nComp).map { c0 =>
-              ((width * compH(c0) + hMax - 1) / hMax + 7) / 8
-            }.toArray
-            bhN = (0 until nComp).map { c0 =>
-              ((height * compV(c0) + vMax - 1) / vMax + 7) / 8
-            }.toArray
-            coefs = (0 until nComp).map(c0 =>
-              new Array[Int](bw(c0) * bhh(c0) * 64)).toArray
-          case 0xC0 | 0xC1 => return None // baseline frame: wrong path
-          case 0xC4 =>
-            var p = pos + 4
-            while (p < pos + 2 + len) {
-              val tc = (bytes(p) & 0xf0) >> 4; val th = bytes(p) & 0x0f
-              if (th > 3) return None // T.81 B.2.4.2: Th is 0-3
-              val bits = new Array[Int](16)
-              var total = 0
-              var i = 0
-              while (i < 16) { bits(i) = bytes(p + 1 + i) & 0xff; total += bits(i); i += 1 }
-              val vals = new Array[Int](total)
-              i = 0
-              while (i < total) { vals(i) = bytes(p + 17 + i) & 0xff; i += 1 }
-              val t = new HuffTable(bits, vals)
-              if (tc == 0) dcTabs(th) = t else acTabs(th) = t
-              p += 17 + total
-            }
-          case 0xDA =>
-            if (coefs == null) return None
-            val ns = bytes(pos + 4) & 0xff
-            val scanC = new Array[Int](ns)
-            val scanDc = new Array[Int](ns); val scanAc = new Array[Int](ns)
-            var i = 0
-            while (i < ns) {
-              val cid = bytes(pos + 5 + 2 * i) & 0xff
-              var c = -1
-              var j = 0
-              while (j < nComp) { if (compId(j) == cid) c = j; j += 1 }
-              if (c < 0) return None
-              scanC(i) = c
-              scanDc(i) = (bytes(pos + 6 + 2 * i) & 0xf0) >> 4
-              scanAc(i) = bytes(pos + 6 + 2 * i) & 0x0f
-              // T.81 B.2.3: Td and Ta are 0-3
-              if (scanDc(i) > 3 || scanAc(i) > 3) return None
-              i += 1
-            }
-            val ss = bytes(pos + 5 + 2 * ns) & 0xff
-            val se = bytes(pos + 6 + 2 * ns) & 0xff
-            val ah = (bytes(pos + 7 + 2 * ns) & 0xf0) >> 4
-            val al = bytes(pos + 7 + 2 * ns) & 0x0f
-            val reader = new BitReader(bytes, pos + 2 + len)
-            if (!decodeProgScan(reader, ns, scanC, scanDc, scanAc,
-              ss, se, ah, al)) return None
-            // resynchronize on the next marker after the entropy data
-            var p = reader.pos
-            while (p + 1 < bytes.length && !((bytes(p) & 0xff) == 0xff && {
-              val n = bytes(p + 1) & 0xff
-              n != 0x00 && (n < 0xd0 || n > 0xd7)
-            })) p += 1
-            pos = p
-          case _ => ()
-        }
-        if (marker != 0xDA) pos += 2 + len
-      }
-
-      def decodeProgScan(reader: BitReader, ns: Int, scanC: Array[Int],
-                         scanDc: Array[Int], scanAc: Array[Int],
-                         ss: Int, se: Int, ah: Int, al: Int): Boolean = {
-        var eobrun = 0
-        java.util.Arrays.fill(preds, 0)
-
-        def dcUnit(si: Int, blk: Int): Boolean = {
-          val c = scanC(si)
-          val base = blk * 64
-          if (ah == 0) {
-            val dcT = dcTabs(scanDc(si))
-            if (dcT == null) return false
-            val cat = reader.decode(dcT)
-            if (cat < 0) return false
-            var diff = if (cat == 0) 0 else reader.bits(cat)
-            if (cat > 0 && diff < (1 << (cat - 1))) diff -= (1 << cat) - 1
-            preds(si) += diff
-            coefs(c)(base) = preds(si) << al
-          } else {
-            if (reader.bits(1) != 0) coefs(c)(base) |= (1 << al)
-          }
-          !reader.eof || true // eof mid-stream surfaces as decode(-1) later
-        }
-
-        def acFirstUnit(c: Int, blk: Int, acT: HuffTable): Boolean = {
-          val base = blk * 64
-          if (eobrun > 0) { eobrun -= 1; return true }
-          var k = ss
-          while (k <= se) {
-            val rs = reader.decode(acT)
-            if (rs < 0) return false
-            val r = rs >> 4; val sz = rs & 0x0f
-            if (sz == 0) {
-              if (r == 15) k += 16
-              else {
-                eobrun = (1 << r) - 1
-                if (r > 0) eobrun += reader.bits(r)
-                k = se + 1
-              }
-            } else {
-              k += r
-              if (k > se) return false
-              var v = reader.bits(sz)
-              if (v < (1 << (sz - 1))) v -= (1 << sz) - 1
-              coefs(c)(base + zigzag(k)) = v << al
-              k += 1
-            }
-          }
-          true
-        }
-
-        def acRefineUnit(c: Int, blk: Int, acT: HuffTable): Boolean = {
-          val base = blk * 64
-          val p1 = 1 << al; val m1 = -1 << al
-          var k = ss
-          if (eobrun == 0) {
-            var broke = false
-            while (k <= se && !broke) {
-              val rs = reader.decode(acT)
-              if (rs < 0) return false
-              var r = rs >> 4; val sz = rs & 0x0f
-              var newVal = 0
-              if (sz != 0) {
-                if (sz != 1) return false // §G.1.2.3: refinement codes s=1 only
-                newVal = if (reader.bits(1) != 0) p1 else m1
-              } else if (r != 15) {
-                eobrun = (1 << r)
-                if (r > 0) eobrun += reader.bits(r)
-                broke = true
-              }
-              if (!broke) {
-                var advancing = true
-                while (k <= se && advancing) {
-                  val z = base + zigzag(k)
-                  if (coefs(c)(z) != 0) {
-                    if (reader.bits(1) != 0 && (coefs(c)(z) & p1) == 0)
-                      coefs(c)(z) += (if (coefs(c)(z) >= 0) p1 else m1)
-                    k += 1
-                  } else {
-                    r -= 1
-                    if (r < 0) advancing = false else k += 1
-                  }
-                }
-                if (newVal != 0 && k <= se) coefs(c)(base + zigzag(k)) = newVal
-                k += 1
-              }
-            }
-          }
-          if (eobrun > 0) {
-            while (k <= se) {
-              val z = base + zigzag(k)
-              if (coefs(c)(z) != 0) {
-                if (reader.bits(1) != 0 && (coefs(c)(z) & p1) == 0)
-                  coefs(c)(z) += (if (coefs(c)(z) >= 0) p1 else m1)
-              }
-              k += 1
-            }
-            eobrun -= 1
-          }
-          true
-        }
-
-        if (ss == 0) {
-          if (se != 0) return false // DC scans carry only coefficient 0
-          if (ns == 1) {
-            val c = scanC(0)
-            var by = 0
-            while (by < bhN(c)) {
-              var bx = 0
-              while (bx < bwN(c)) {
-                if (!dcUnit(0, by * bw(c) + bx)) return false
-                bx += 1
-              }
-              by += 1
-            }
-          } else {
-            var my = 0
-            while (my < mcusY) {
-              var mx = 0
-              while (mx < mcusX) {
-                var si = 0
-                while (si < ns) {
-                  val c = scanC(si)
-                  var v = 0
-                  while (v < compV(c)) {
-                    var h = 0
-                    while (h < compH(c)) {
-                      val blk = (my * compV(c) + v) * bw(c) + mx * compH(c) + h
-                      if (!dcUnit(si, blk)) return false
-                      h += 1
-                    }
-                    v += 1
-                  }
-                  si += 1
-                }
-                mx += 1
-              }
-              my += 1
-            }
-          }
-        } else {
-          if (ns != 1) return false // AC scans are single-component (§G.1)
-          val c = scanC(0)
-          val acT = acTabs(scanAc(0))
-          if (acT == null) return false
-          var by = 0
-          while (by < bhN(c)) {
-            var bx = 0
-            while (bx < bwN(c)) {
-              val ok = if (ah == 0) acFirstUnit(c, by * bw(c) + bx, acT)
-                else acRefineUnit(c, by * bw(c) + bx, acT)
-              if (!ok) return false
-              bx += 1
-            }
-            by += 1
-          }
-        }
-        true
-      }
-    }
-    if (coefs == null || width == 0 || height == 0) return None
-
-    // all scans absorbed: dequantize + IDCT every block, then assemble
-    val planeW = (0 until nComp).map(c => bw(c) * 8).toArray
-    val planes = (0 until nComp).map(c =>
-      new Array[Byte](bw(c) * 8 * bhh(c) * 8)).toArray
-    val tmp = new Array[Double](64)
-    val work = new Array[Double](64)
-    var c = 0
-    while (c < nComp) {
-      val q = quant(compQ(c))
-      var by = 0
-      while (by < bhh(c)) {
-        var bx = 0
-        while (bx < bw(c)) {
-          val base = (by * bw(c) + bx) * 64
-          var i = 0
-          while (i < 64) { tmp(i) = coefs(c)(base + i).toDouble * q(i); i += 1 }
-          idct8x8Into(tmp, work, planes(c), planeW(c), bx * 8, by * 8)
-          bx += 1
-        }
-        by += 1
-      }
-      c += 1
-    }
-
-    if (nComp == 1) {
-      val outPx = new Array[Byte](width * height)
-      var y = 0
-      while (y < height) {
-        System.arraycopy(planes(0), y * planeW(0), outPx, y * width, width)
-        y += 1
-      }
-      Some(outPx)
-    } else {
-      val outPx = new Array[Byte](width * height * 3)
-      var y = 0
-      while (y < height) {
-        var x = 0
-        while (x < width) {
-          def sample(c0: Int): Int = {
-            val sx = x * compH(c0) / hMax; val sy = y * compV(c0) / vMax
-            planes(c0)(sy * planeW(c0) + sx) & 0xff
-          }
-          val yy = sample(0).toDouble
-          val cb = sample(1) - 128.0
-          val cr = sample(2) - 128.0
-          def clamp(d: Double): Byte = {
-            val v = math.round(d).toInt
-            (if (v < 0) 0 else if (v > 255) 255 else v).toByte
-          }
-          val o = (y * width + x) * 3
-          outPx(o) = clamp(yy + 1.402 * cr)
-          outPx(o + 1) = clamp(yy - 0.344136 * cb - 0.714136 * cr)
-          outPx(o + 2) = clamp(yy + 1.772 * cb)
-          x += 1
-        }
-        y += 1
-      }
-      Some(outPx)
-    }
-  }
-
-  /** scan JPEG markers for a SOFn frame header (excluding DHT/JPG/DAC). */
-  def decodeJpeg(bytes: Array[Byte]): Option[MediaInfo] = {
-    if (bytes.length < 4) return None
-    val bb = ByteBuffer.wrap(bytes).order(ByteOrder.BIG_ENDIAN)
-    if ((bb.getShort(0) & 0xffff) != 0xFFD8) return None
-    var pos = 2
-    while (pos + 4 <= bytes.length) {
-      if ((bytes(pos) & 0xff) != 0xff) return None
-      val marker = bytes(pos + 1) & 0xff
-      if (marker == 0xD9) return None // EOI before any SOF
-      val isSof = marker >= 0xC0 && marker <= 0xCF &&
-        marker != 0xC4 && marker != 0xC8 && marker != 0xCC
-      val len = bb.getShort(pos + 2) & 0xffff
-      if (len < 2) return None // marker length includes itself: never loop
-      if (pos + 2 + len > bytes.length) return None // truncated segment
-      if (isSof) {
-        if (pos + 10 > bytes.length) return None
-        val height = bb.getShort(pos + 5) & 0xffff
-        val width = bb.getShort(pos + 7) & 0xffff
-        val ncomp = bytes(pos + 9) & 0xff
-        return Some(MediaInfo("image", width, height, 0, ncomp))
-      }
-      pos += 2 + len
-    }
-    None
-  }
 
   // ------------------------------------------------------------- dispatch
 

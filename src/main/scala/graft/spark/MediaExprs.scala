@@ -108,23 +108,21 @@ object MediaKernels {
       seed)
 
   /** full-content progressive-JPEG check: multi-scan coefficient
-    * accumulation + IDCT, then fold (n_px, px_sum, px_poly, px_chk) where
-    * px_chk weights each pixel by (1+x%8)^2 * (1+y%8)^2 — a quadratic
-    * in-block weight with nonzero inner product against the (4,0)/(4,4)
-    * DCT bases, so AC coefficient errors (invisible to the constant and
-    * global-linear folds) flip the hash. Null when the payload doesn't
-    * decode. */
-  def jpegPixelStatsProg(payload: Array[Byte]): InternalRow = {
-    val width = MediaCodecs.decodeJpeg(payload) match {
-      case Some(info) if info.width > 0 => info.width
-      case _ => return null
-    }
-    MediaCodecs.decodeJpegPixels(payload) match {
-      case Some(px) =>
+    * accumulation + IDCT, then fold (n_px, px_sum, px_poly, px_chk) over
+    * the decoded samples (bytes, as in `jpegPixelStats`), where px_chk
+    * weights each sample by (1+x%8)^2 * (1+y%8)^2 of its pixel (x, y) — a
+    * quadratic in-block weight with nonzero inner product against the
+    * (4,0)/(4,4) DCT bases, so AC coefficient errors (invisible to the
+    * constant and global-linear folds) flip the hash. Null when the
+    * payload doesn't decode. */
+  def jpegPixelStatsProg(payload: Array[Byte]): InternalRow =
+    MediaCodecs.decodeJpegFrame(payload, pixels = true) match {
+      case Some((info, px)) =>
         var sum = 0L; var poly = 0L; var chk = 0L; var i = 0
         while (i < px.length) {
           val b = px(i) & 0xff
-          val xm = (i % width) % 8; val ym = (i / width) % 8
+          val pixel = i / info.channels
+          val xm = (pixel % info.width) % 8; val ym = (pixel / info.width) % 8
           sum += b
           poly = (poly + b.toLong * (i + 1)) % 1000000007L
           chk = (chk + b.toLong * ((1 + xm) * (1 + xm) * (1 + ym) * (1 + ym))) %
@@ -134,7 +132,6 @@ object MediaKernels {
         new GenericInternalRow(Array[Any](px.length.toLong, sum, poly, chk))
       case None => null
     }
-  }
 
   /** Area-average (box-filter) resize of a grayscale plane: each output
     * pixel integrates its exact source rectangle with fractional edge
@@ -181,12 +178,8 @@ object MediaKernels {
     * when `factor` is below 1 or above Int.MaxValue. */
   def jpegResizeStats(payload: Array[Byte], factor: Long): InternalRow = {
     if (factor < 1 || factor > Int.MaxValue) return null
-    val info = MediaCodecs.decodeJpeg(payload) match {
-      case Some(i) if i.width > 0 && i.height > 0 => i
-      case _ => return null
-    }
-    MediaCodecs.decodeJpegPixels(payload) match {
-      case Some(px) if px.length == info.width * info.height =>
+    MediaCodecs.decodeJpegFrame(payload, pixels = true) match {
+      case Some((info, px)) if info.channels == 1 =>
         val f = factor.toInt
         val w2 = info.width / f; val h2 = info.height / f
         if (w2 == 0 || h2 == 0) return null

@@ -9,10 +9,66 @@ import org.scalatest.funsuite.AnyFunSuite
   * progressive path's interleaved DC scan + per-component AC EOBRUN scans
   * (exercising the nominal vs MCU-padded block grids for chroma). */
 class MediaJpegColorSpec extends AnyFunSuite {
+  import MediaJpegColorSpec._
 
-  private val dcY = Array(10, 20, 30, 40) // blocks (by, bx) row-major
-  private val dcCb = 4
-  private val dcCr = -6
+  private def expectRgb(px: Array[Byte]): Unit = {
+    assert(px.length == 16 * 16 * 3)
+    for (y <- 0 until 16; x <- 0 until 16) {
+      val yy = (dcY((y / 8) * 2 + (x / 8)) + 128).toDouble
+      val cb = dcCb.toDouble; val cr = dcCr.toDouble
+      def clamp(d: Double): Int = {
+        val v = math.round(d).toInt
+        if (v < 0) 0 else if (v > 255) 255 else v
+      }
+      val o = (y * 16 + x) * 3
+      assert((px(o) & 0xff) == clamp(yy + 1.402 * cr), s"R at ($x,$y)")
+      assert((px(o + 1) & 0xff) == clamp(yy - 0.344136 * cb - 0.714136 * cr), s"G at ($x,$y)")
+      assert((px(o + 2) & 0xff) == clamp(yy + 1.772 * cb), s"B at ($x,$y)")
+    }
+  }
+
+  test("baseline 4:2:0 color MCU decodes to the closed-form RGB") {
+    expectRgb(MediaCodecs.decodeJpegPixels(baseline420).getOrElse(fail("decode")))
+  }
+
+  test("progressive 4:2:0 color (interleaved DC + per-component AC EOBRUN scans)") {
+    expectRgb(MediaCodecs.decodeJpegPixels(progressive420).getOrElse(fail("decode")))
+  }
+
+  test("malformed progressive streams return None, never throw") {
+    val good = MediaCodecs.encodeJpegProgressive(16, 16, 7L)
+    // truncations at every marker-ish prefix plus mid-entropy cuts
+    for (cut <- Seq(4, 20, 50, 100, good.length / 2, good.length - 3)) {
+      val t = java.util.Arrays.copyOf(good, cut)
+      // must not throw; None or (for cuts inside trailing entropy) a
+      // partial-but-complete decode are both acceptable outcomes
+      MediaCodecs.decodeJpegPixels(t)
+    }
+    // a scan referencing an undefined Huffman table
+    val noDht = {
+      val out = new java.io.ByteArrayOutputStream()
+      header(out, 0xFFC2, Array(0, 1, 0, 0, 0, 0, 0, 0, 0, 0, 0, 0, 0, 0, 0, 0), Seq(0x00))
+      val bytes = out.toByteArray
+      // strip the DHT segment (find 0xFFC4, remove its span)
+      val i = bytes.indices.find(j => (bytes(j) & 0xff) == 0xff &&
+        j + 1 < bytes.length && (bytes(j + 1) & 0xff) == 0xc4).get
+      val len = ((bytes(i + 2) & 0xff) << 8) | (bytes(i + 3) & 0xff)
+      val sansDht = bytes.take(i) ++ bytes.drop(i + 2 + len)
+      val out2 = new java.io.ByteArrayOutputStream()
+      out2.write(sansDht)
+      out2.write(Array[Byte](0xFF.toByte, 0xDA.toByte, 0, 8, 1, 1, 0, 1, 63, 0))
+      out2.write(Array[Byte](0xFF.toByte, 0xD9.toByte))
+      out2.toByteArray
+    }
+    assert(MediaCodecs.decodeJpegPixels(noDht).isEmpty)
+  }
+}
+
+/** The 4:2:0 color streams: one 16x16 MCU of DC-only blocks. */
+object MediaJpegColorSpec {
+  val dcY = Array(10, 20, 30, 40) // blocks (by, bx) row-major
+  val dcCb = 4
+  val dcCr = -6
 
   private final class BitSink {
     val body = new java.io.ByteArrayOutputStream()
@@ -45,8 +101,8 @@ class MediaJpegColorSpec extends AnyFunSuite {
     if (c > 0) { var d = diff; if (d < 0) d += (1 << c) - 1; b.put(d, c) }
   }
 
-  private def header(out: java.io.ByteArrayOutputStream, sof: Int,
-                     acBits: Array[Int], acVals: Seq[Int]): Unit = {
+  def header(out: java.io.ByteArrayOutputStream, sof: Int,
+             acBits: Array[Int], acVals: Seq[Int]): Unit = {
     def b(v: Int): Unit = out.write(v & 0xff)
     def u16(v: Int): Unit = { b(v >> 8); b(v) }
     u16(0xFFD8)
@@ -62,23 +118,7 @@ class MediaJpegColorSpec extends AnyFunSuite {
     b(0x10); acBits.foreach(b); acVals.foreach(b)
   }
 
-  private def expectRgb(px: Array[Byte]): Unit = {
-    assert(px.length == 16 * 16 * 3)
-    for (y <- 0 until 16; x <- 0 until 16) {
-      val yy = (dcY((y / 8) * 2 + (x / 8)) + 128).toDouble
-      val cb = dcCb.toDouble; val cr = dcCr.toDouble
-      def clamp(d: Double): Int = {
-        val v = math.round(d).toInt
-        if (v < 0) 0 else if (v > 255) 255 else v
-      }
-      val o = (y * 16 + x) * 3
-      assert((px(o) & 0xff) == clamp(yy + 1.402 * cr), s"R at ($x,$y)")
-      assert((px(o + 1) & 0xff) == clamp(yy - 0.344136 * cb - 0.714136 * cr), s"G at ($x,$y)")
-      assert((px(o + 2) & 0xff) == clamp(yy + 1.772 * cb), s"B at ($x,$y)")
-    }
-  }
-
-  test("baseline 4:2:0 color MCU decodes to the closed-form RGB") {
+  def baseline420: Array[Byte] = {
     val out = new java.io.ByteArrayOutputStream()
     // AC table: EOB only, at 2 bits (code 0)
     header(out, 0xFFC0, Array(0, 1, 0, 0, 0, 0, 0, 0, 0, 0, 0, 0, 0, 0, 0, 0), Seq(0x00))
@@ -95,11 +135,10 @@ class MediaJpegColorSpec extends AnyFunSuite {
     bs.flush()
     out.write(bs.body.toByteArray)
     u16(0xFFD9)
-    val px = MediaCodecs.decodeJpegPixels(out.toByteArray).getOrElse(fail("decode"))
-    expectRgb(px)
+    out.toByteArray
   }
 
-  test("progressive 4:2:0 color (interleaved DC + per-component AC EOBRUN scans)") {
+  def progressive420: Array[Byte] = {
     val out = new java.io.ByteArrayOutputStream()
     // AC table: {EOB0, EOB2} at 3 bits (codes 0, 1)
     header(out, 0xFFC2, Array(0, 0, 2, 0, 0, 0, 0, 0, 0, 0, 0, 0, 0, 0, 0, 0), Seq(0x00, 0x20))
@@ -130,35 +169,6 @@ class MediaJpegColorSpec extends AnyFunSuite {
       s.flush(); out.write(s.body.toByteArray)
     }
     u16(0xFFD9)
-    val px = MediaCodecs.decodeJpegPixels(out.toByteArray).getOrElse(fail("decode"))
-    expectRgb(px)
-  }
-
-  test("malformed progressive streams return None, never throw") {
-    val good = MediaCodecs.encodeJpegProgressive(16, 16, 7L)
-    // truncations at every marker-ish prefix plus mid-entropy cuts
-    for (cut <- Seq(4, 20, 50, 100, good.length / 2, good.length - 3)) {
-      val t = java.util.Arrays.copyOf(good, cut)
-      // must not throw; None or (for cuts inside trailing entropy) a
-      // partial-but-complete decode are both acceptable outcomes
-      MediaCodecs.decodeJpegPixels(t)
-    }
-    // a scan referencing an undefined Huffman table
-    val noDht = {
-      val out = new java.io.ByteArrayOutputStream()
-      header(out, 0xFFC2, Array(0, 1, 0, 0, 0, 0, 0, 0, 0, 0, 0, 0, 0, 0, 0, 0), Seq(0x00))
-      val bytes = out.toByteArray
-      // strip the DHT segment (find 0xFFC4, remove its span)
-      val i = bytes.indices.find(j => (bytes(j) & 0xff) == 0xff &&
-        j + 1 < bytes.length && (bytes(j + 1) & 0xff) == 0xc4).get
-      val len = ((bytes(i + 2) & 0xff) << 8) | (bytes(i + 3) & 0xff)
-      val sansDht = bytes.take(i) ++ bytes.drop(i + 2 + len)
-      val out2 = new java.io.ByteArrayOutputStream()
-      out2.write(sansDht)
-      out2.write(Array[Byte](0xFF.toByte, 0xDA.toByte, 0, 8, 1, 1, 0, 1, 63, 0))
-      out2.write(Array[Byte](0xFF.toByte, 0xD9.toByte))
-      out2.toByteArray
-    }
-    assert(MediaCodecs.decodeJpegPixels(noDht).isEmpty)
+    out.toByteArray
   }
 }
