@@ -14,8 +14,8 @@ import OpKernel._
   * adjacent unit mismatches are a setup error.
   *
   * Unlike the reference (which keeps four stacks on the shared pipeline
-  * object), our push/pop stacks live on the per-row Coord — thread-safe in
-  * a 32-thread executor by construction.
+  * object), our push/pop stacks live on the caller's Coord, so one
+  * pipeline is safe to share between threads.
   */
 object PipelineOp {
 

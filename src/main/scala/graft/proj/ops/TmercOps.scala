@@ -38,6 +38,8 @@ object TmercOps {
 
   /** Precomputed constants for the exact (Poder/Engsager) form. */
   final class ExactConsts(P: PJ) extends Serializable {
+    /** the ellipsoid's n, which alone fixes cbg: the LatTerms memo key */
+    val nBits: Long = java.lang.Double.doubleToRawLongBits(P.n)
     val cgb = new Array[Double](AUX_ORDER) // conformal -> geographic
     val cbg = new Array[Double](AUX_ORDER) // geographic -> conformal
     val utg = new Array[Double](AUX_ORDER) // rectifying -> conformal
@@ -172,13 +174,33 @@ object TmercOps {
   /** |Ce| bound: 2.623395162778 rad ~ 150 deg (tmerc.cpp:376). */
   private final val CE_BOUND = 2.623395162778
 
+  /** One thread's last conformal latitude as its sine and cosine, keyed on
+    * the raw bits of phi and of the ellipsoid's n. A row projected into
+    * several zones (its own UTM zone and fixed ones) reaches exactFwd with
+    * one phi on one ellipsoid each time, so it computes them once; they are
+    * what the same arithmetic gives, so results stay bit-identical. */
+  private final class LatTerms {
+    var filled = false
+    var phiBits = 0L
+    var nBits = 0L
+    var sinCn = 0.0
+    var cosCn = 0.0
+  }
+  private val latTerms = ThreadLocal.withInitial[LatTerms](() => new LatTerms)
+
   def exactFwd(q: ExactConsts, c: Coord): Unit = {
     val lam = c.x; val phi = c.y
-    var cn = auxlatConvert(phi, q.cbg)
-    val sinCn = math.sin(cn); val cosCn = math.cos(cn)
+    val m = latTerms.get()
+    val phiBits = java.lang.Double.doubleToRawLongBits(phi)
+    if (!m.filled || m.phiBits != phiBits || m.nBits != q.nBits) {
+      val cn0 = auxlatConvert(phi, q.cbg)
+      m.sinCn = math.sin(cn0); m.cosCn = math.cos(cn0)
+      m.phiBits = phiBits; m.nBits = q.nBits; m.filled = true
+    }
+    val sinCn = m.sinCn; val cosCn = m.cosCn
     val sinCe = math.sin(lam); val cosCe = math.cos(lam)
     val cosCnCosCe = cosCn * cosCe
-    cn = math.atan2(sinCn, cosCnCosCe)
+    var cn = math.atan2(sinCn, cosCnCosCe)
     val invDenomTanCe = 1.0 / math.hypot(sinCn, cosCnCosCe)
     val tanCe = sinCe * cosCn * invDenomTanCe
     var ce = asinh(tanCe)

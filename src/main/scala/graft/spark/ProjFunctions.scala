@@ -13,9 +13,9 @@ import graft.proj.{Dispatch, PJ, Proj}
 
 /** A compiled proj-string pipeline, serialization-friendly: only the string
   * crosses the wire; the PJ (plan-time constants + kernels) is rebuilt once
-  * per executor JVM and cached. Transform calls allocate a per-row Coord on
-  * the stack side, so a shared pipeline is safe under the 32-thread local
-  * executor.
+  * per executor JVM and cached. The pipeline holds no per-call state: the
+  * caller passes the Coord it transforms in place, so one pipeline is safe
+  * to share between threads.
   */
 final class ProjPipeline(val projString: String) extends Serializable {
   @transient private lazy val pj: PJ = ProjPipeline.cached(projString)
@@ -47,6 +47,34 @@ object ProjPipeline {
   }
 }
 
+/** The scratch of one call object (a reused result row and the Coords a
+  * kernel works in). Spark deserializes a plan's call objects anew for
+  * every task and a task evaluates its rows on one thread, so the first
+  * thread that asks owns the scratch as a plain field. Any other thread (a
+  * call object evaluated from two threads at once, e.g. by queries run
+  * concurrently on the driver) gets its own from a ThreadLocal, so no two
+  * threads share a row. Every plan node owns its own call object
+  * (StatefulInvoke), so two columns never alias one row either. A consumer
+  * that buffers the returned struct copies it, as Spark's UnsafeProjection
+  * reuse contract requires. */
+final class CallScratch[S <: AnyRef](make: () => S) extends Serializable {
+  @transient private var owner: Thread = _
+  @transient private var own: S = _
+  @transient private lazy val others: ThreadLocal[S] = ThreadLocal.withInitial[S](() => make())
+
+  def get: S = {
+    val t = Thread.currentThread()
+    if (t eq owner) own
+    else if (owner != null) others.get() // owner is written once, and not by t
+    else claim(t)
+  }
+
+  private def claim(t: Thread): S = synchronized {
+    if (owner == null) { own = make(); owner = t; own }
+    else others.get()
+  }
+}
+
 /** Row-level transform entry point (one call per row; constants live in
   * the ProjPipeline), reached from Catalyst through ProjTransCall. */
 object ProjKernels {
@@ -59,30 +87,19 @@ object ProjKernels {
 
   def resultType: StructType = outType
 
-  /** per-thread, per-EXPRESSION scratch: the dominant transform path
-    * allocates nothing per row — a typed SpecificInternalRow avoids even
-    * the Double boxing an Array[Any]-backed row would pay. The scratch is
-    * owned by the ProjTransCall of one plan node (StatefulInvoke), not this
-    * object: two transform columns in one projection must not alias one
-    * row (consumers that
-    * buffer the struct copy it — Spark's own UnsafeProjection reuse
-    * contract covers the per-row reuse). */
+  /** the transform path allocates nothing per row: a typed
+    * SpecificInternalRow avoids even the Double boxing an Array[Any]-backed
+    * row would pay (held by CallScratch) */
   final class Scratch {
     val c = new Coord
     val row = new SpecificInternalRow(outType.map(_.dataType))
-  }
-  /** serialization-friendly handle: ships with the plan, rebuilds its
-    * per-thread scratch lazily in each JVM */
-  final class ScratchRef extends Serializable {
-    @transient lazy val tl: ThreadLocal[Scratch] =
-      ThreadLocal.withInitial[Scratch](() => new Scratch)
   }
 
   /** degIn/degOut: convert between degrees and the pipeline's angular IO. */
   def eval(p: ProjPipeline, forward: Boolean, degIO: Boolean,
            x: Double, y: Double, z: Double, t: Double,
-           scratch: ScratchRef): InternalRow = {
-    val s = scratch.tl.get()
+           scratch: CallScratch[Scratch]): InternalRow = {
+    val s = scratch.get
     val c = s.c
     var xi = x; var yi = y
     if (degIO && p.angularInput(forward)) {
@@ -117,14 +134,10 @@ object FactorsKernels {
     val row = new SpecificInternalRow(outType.map(_.dataType))
     val m = new graft.proj.Factors.ProjFactorsM
   }
-  final class ScratchRef extends Serializable {
-    @transient lazy val tl: ThreadLocal[Scratch] =
-      ThreadLocal.withInitial[Scratch](() => new Scratch)
-  }
 
   def eval(p: ProjPipeline, lonDeg: Double, latDeg: Double,
-           scratch: ScratchRef): InternalRow = {
-    val s = scratch.tl.get()
+           scratch: CallScratch[Scratch]): InternalRow = {
+    val s = scratch.get
     val r = s.row
     try {
       val f = s.m
@@ -155,17 +168,15 @@ object TransBoundsKernels {
 
   def resultType: StructType = outType
 
-  final class ScratchRef extends Serializable {
-    @transient lazy val tl: ThreadLocal[SpecificInternalRow] =
-      ThreadLocal.withInitial[SpecificInternalRow](
-        () => new SpecificInternalRow(outType.map(_.dataType)))
+  final class Scratch {
+    val row = new SpecificInternalRow(outType.map(_.dataType))
   }
 
   def eval(p: ProjPipeline, lonMin: Double, latMin: Double,
            lonMax: Double, latMax: Double,
-           scratch: ScratchRef): InternalRow = {
+           scratch: CallScratch[Scratch]): InternalRow = {
     val d = math.Pi / 180
-    val r = scratch.tl.get()
+    val r = scratch.get.row
     try {
       val (x0, y0, x1, y1) = graft.proj.Factors.transBounds(p.pjForFactors,
         forward = true, lonMin * d, latMin * d, lonMax * d, latMax * d)
@@ -290,24 +301,18 @@ object RegistryDispatchKernels {
 
   def resultType: StructType = outType
 
-  /** per-thread, per-expression scratch: the dominant dispatch path
-    * allocates nothing per row — a typed SpecificInternalRow instead of
-    * Array[Any] so doubles don't box (a consumer that buffers the struct
-    * copies it — Spark's own UnsafeProjection reuse contract) */
+  /** the dispatch path allocates nothing per row: a typed
+    * SpecificInternalRow instead of Array[Any] so doubles don't box */
   final class Scratch {
     val c = new Coord
     val c2 = new Coord
     val saved = new Coord
     val row = new SpecificInternalRow(outType.map(_.dataType))
   }
-  final class ScratchRef extends Serializable {
-    @transient lazy val tl: ThreadLocal[Scratch] =
-      ThreadLocal.withInitial[Scratch](() => new Scratch)
-  }
 
   def eval(d: RegistryDispatch, xIn: Double, yIn: Double,
-           scratch: ScratchRef): InternalRow = {
-    val s = scratch.tl.get()
+           scratch: CallScratch[Scratch]): InternalRow = {
+    val s = scratch.get
     // the point in source geographic degrees, for extent checks
     var lonDeg = 0.0
     var latDeg = 0.0
@@ -378,16 +383,12 @@ object UtmNativeKernels {
     val c = new Coord
     val row = new SpecificInternalRow(outType.map(_.dataType))
   }
-  final class ScratchRef extends Serializable {
-    @transient lazy val tl: ThreadLocal[Scratch] =
-      ThreadLocal.withInitial[Scratch](() => new Scratch)
-  }
 
   def eval(d: UtmDispatch, lonDeg: Double, latDeg: Double,
-           scratch: ScratchRef): InternalRow = {
+           scratch: CallScratch[Scratch]): InternalRow = {
     val zone = graft.proj.ops.TmercOps.zoneFromLonLat(lonDeg)
     val south = latDeg < 0
-    val s = scratch.tl.get()
+    val s = scratch.get
     val c = s.c
     c.set(lonDeg * (math.Pi / 180), latDeg * (math.Pi / 180), 0.0, 0.0)
     d.pipe(zone, south).trans(c, forward = true)
@@ -399,7 +400,7 @@ object UtmNativeKernels {
 }
 
 /** Invoke targets of the stateful proj kernels (built by ProjExprs). Each
-  * owns its pipeline or dispatch table and a per-thread scratch row, ships
+  * owns its pipeline or dispatch table and a CallScratch, ships
   * with the plan as an object literal, and is equal by its plan-time
   * inputs, so equal transforms are one common subexpression. */
 sealed trait ProjCall extends Product with Serializable {
@@ -411,7 +412,7 @@ sealed trait ProjCall extends Product with Serializable {
 final case class ProjTransCall(projString: String, forward: Boolean, degIO: Boolean)
     extends ProjCall {
   private val pipeline = new ProjPipeline(projString)
-  private val scratch = new ProjKernels.ScratchRef
+  private val scratch = new CallScratch(() => new ProjKernels.Scratch)
   def resultType: StructType = ProjKernels.resultType
   def fresh: ProjCall = copy()
   def eval(x: Double, y: Double, z: Double, t: Double): InternalRow =
@@ -420,7 +421,7 @@ final case class ProjTransCall(projString: String, forward: Boolean, degIO: Bool
 
 final case class FactorsCall(projString: String) extends ProjCall {
   private val pipeline = new ProjPipeline(projString)
-  private val scratch = new FactorsKernels.ScratchRef
+  private val scratch = new CallScratch(() => new FactorsKernels.Scratch)
   def resultType: StructType = FactorsKernels.resultType
   def fresh: ProjCall = copy()
   def eval(lonDeg: Double, latDeg: Double): InternalRow =
@@ -429,7 +430,7 @@ final case class FactorsCall(projString: String) extends ProjCall {
 
 final case class TransBoundsCall(projString: String) extends ProjCall {
   private val pipeline = new ProjPipeline(projString)
-  private val scratch = new TransBoundsKernels.ScratchRef
+  private val scratch = new CallScratch(() => new TransBoundsKernels.Scratch)
   def resultType: StructType = TransBoundsKernels.resultType
   def fresh: ProjCall = copy()
   def eval(lonMin: Double, latMin: Double, lonMax: Double, latMax: Double): InternalRow =
@@ -438,7 +439,7 @@ final case class TransBoundsCall(projString: String) extends ProjCall {
 
 final case class UtmNativeCall(ellps: String) extends ProjCall {
   private val dispatch = new UtmDispatch(ellps)
-  private val scratch = new UtmNativeKernels.ScratchRef
+  private val scratch = new CallScratch(() => new UtmNativeKernels.Scratch)
   def resultType: StructType = UtmNativeKernels.resultType
   def fresh: ProjCall = copy()
   def eval(lonDeg: Double, latDeg: Double): InternalRow =
@@ -449,7 +450,7 @@ final case class UtmNativeCall(ellps: String) extends ProjCall {
   * executors deserialize plain data; fresh copies share the plan. */
 final case class CrsDispatchCall(srcSpec: String, dstSpec: String)(
     dispatch: RegistryDispatch = new RegistryDispatch(srcSpec, dstSpec)) extends ProjCall {
-  private val scratch = new RegistryDispatchKernels.ScratchRef
+  private val scratch = new CallScratch(() => new RegistryDispatchKernels.Scratch)
   def resultType: StructType = RegistryDispatchKernels.resultType
   def fresh: ProjCall = CrsDispatchCall(srcSpec, dstSpec)(dispatch)
   def eval(x: Double, y: Double): InternalRow =

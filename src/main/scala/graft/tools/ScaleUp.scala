@@ -48,7 +48,8 @@ object ScaleUp {
     val Array(inDir, outDir, factorS) = args
     val factor = factorS.toInt
     val spark = SparkSession.builder()
-      .master(s"local[${sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")}]")
+      .master(s"local[${sys.env.getOrElse("SPARK_GRAFT_CPUS",
+        Runtime.getRuntime.availableProcessors.toString)}]")
       .config("spark.sql.shuffle.partitions", "32")
       .config("spark.ui.enabled", "false")
       .getOrCreate()

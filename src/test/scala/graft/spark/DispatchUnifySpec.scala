@@ -14,7 +14,7 @@ import graft.proj.{OpFactory, OpRuntime}
   * verdict's "unify dispatch with OpRuntime" ask.
   */
 class DispatchUnifySpec extends AnyFunSuite {
-  private val dispatchScratch = new RegistryDispatchKernels.ScratchRef
+  private val dispatchScratch = new CallScratch(() => new RegistryDispatchKernels.Scratch)
 
   private val src = "EPSG:4230"
   private val dst = "EPSG:4326"

@@ -99,7 +99,7 @@ object DriveCheck {
     println(f"1M utm fwd in ${(System.nanoTime - t0)/1e9}%.3f s (checksum $acc%.1f)")
 
     // row-kernel hot loops: throughput + bytes allocated per row (the
-    // ThreadLocal-scratch contract — each kernel should report ~0 B/row)
+    // CallScratch contract — each kernel should report ~0 B/row)
     kernelAllocCheck()
   }
 
@@ -125,23 +125,23 @@ object DriveCheck {
         f"$bytesPerRow%.1f B/row alloc (checksum $acc%.1f)")
     }
     val webmerc = new ProjPipeline("proj=webmerc ellps=WGS84")
-    val pkScr = new ProjKernels.ScratchRef
+    val pkScr = new CallScratch(() => new ProjKernels.Scratch)
     measure("ProjKernels webmerc", 1000000) { i =>
       ProjKernels.eval(webmerc, forward = true, degIO = true,
         -179.0 + (i % 358), -85.0 + (i % 170), 0.0, 0.0, pkScr).getDouble(0)
     }
     val utm = new UtmDispatch("WGS84")
-    val utmScr = new UtmNativeKernels.ScratchRef
+    val utmScr = new CallScratch(() => new UtmNativeKernels.Scratch)
     measure("UtmNativeKernels", 1000000) { i =>
       UtmNativeKernels.eval(utm, -179.0 + (i % 358), -80.0 + (i % 160), utmScr).getDouble(2)
     }
     val disp = new RegistryDispatch("EPSG:4267", "EPSG:4326")
-    val dScr = new RegistryDispatchKernels.ScratchRef
+    val dScr = new CallScratch(() => new RegistryDispatchKernels.Scratch)
     measure("RegistryDispatchKernels", 200000) { i =>
       RegistryDispatchKernels.eval(disp, -100.0 + (i % 40), 30.0 + (i % 20), dScr).getDouble(1)
     }
     val merc = new ProjPipeline("proj=merc ellps=WGS84")
-    val fScr = new FactorsKernels.ScratchRef
+    val fScr = new CallScratch(() => new FactorsKernels.Scratch)
     measure("FactorsKernels merc", 200000) { i =>
       FactorsKernels.eval(merc, -179.0 + (i % 358), -80.0 + (i % 160), fScr).getDouble(1)
     }
