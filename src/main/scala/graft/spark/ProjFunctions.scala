@@ -48,31 +48,17 @@ object ProjPipeline {
 }
 
 /** The scratch of one call object (a reused result row and the Coords a
-  * kernel works in). Spark deserializes a plan's call objects anew for
-  * every task and a task evaluates its rows on one thread, so the first
-  * thread that asks owns the scratch as a plain field. Any other thread (a
-  * call object evaluated from two threads at once, e.g. by queries run
-  * concurrently on the driver) gets its own from a ThreadLocal, so no two
-  * threads share a row. Every plan node owns its own call object
-  * (StatefulInvoke), so two columns never alias one row either. A consumer
-  * that buffers the returned struct copies it, as Spark's UnsafeProjection
-  * reuse contract requires. */
+  * kernel works in): each thread that evaluates the call gets its own, so
+  * a call object evaluated from two threads at once (e.g. by queries run
+  * concurrently on the driver) never shares a row between them. Every plan
+  * node owns its own call object (StatefulInvoke), so two columns never
+  * alias one row either. Only the call ships with the plan; each JVM
+  * rebuilds the scratch lazily. A consumer that buffers the returned struct
+  * copies it, as Spark's UnsafeProjection reuse contract requires. */
 final class CallScratch[S <: AnyRef](make: () => S) extends Serializable {
-  @transient private var owner: Thread = _
-  @transient private var own: S = _
-  @transient private lazy val others: ThreadLocal[S] = ThreadLocal.withInitial[S](() => make())
+  @transient private lazy val perThread: ThreadLocal[S] = ThreadLocal.withInitial[S](() => make())
 
-  def get: S = {
-    val t = Thread.currentThread()
-    if (t eq owner) own
-    else if (owner != null) others.get() // owner is written once, and not by t
-    else claim(t)
-  }
-
-  private def claim(t: Thread): S = synchronized {
-    if (owner == null) { own = make(); owner = t; own }
-    else others.get()
-  }
+  def get: S = perThread.get()
 }
 
 /** Row-level transform entry point (one call per row; constants live in

@@ -6,10 +6,10 @@ import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.types.StructType
 import org.scalatest.funsuite.AnyFunSuite
 
-/** A call object's CallScratch gives its first thread a plain field and
-  * every other thread its own scratch. Each call here is evaluated from 4
-  * threads at once, each over its own inputs; every row, read as soon as
-  * the call returns, must equal a serial evaluation of an equal call. */
+/** A call object's CallScratch gives every thread that evaluates it its
+  * own scratch. Each call here is evaluated from 4 threads at once, each
+  * over its own inputs; every row, read as soon as the call returns, must
+  * equal a serial evaluation of an equal call. */
 class CallScratchSpec extends AnyFunSuite {
   private val Threads = 4
 
