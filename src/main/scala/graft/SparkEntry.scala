@@ -617,8 +617,8 @@ object SparkEntry {
       // MinHash+LSH near-dup pairs with the shared md5 hash family (DuckDB
       // computes identical signatures); near-dups injected (every 11th doc
       // re-appears with one word appended) so sub-1.0 Jaccard paths run.
-      // The xxhash64 engine path is separately verified vs exact n-gram
-      // Jaccard in TrainingSpec.
+      // SparkLayerSpec checks the same operator's recall of planted
+      // near-dups against exact n-gram Jaccard.
       val d = t(s, dir, "documents")
       val nearDups = d.where(col("doc_id") % 11 === 0)
         .withColumn("doc_id", col("doc_id") + 2000000)
@@ -659,8 +659,8 @@ object SparkEntry {
 
     DriverQuery("dedup_simhash", (s, dir) => {
       // 16-bit SimHash candidate buckets from the shared md5-derived hash
-      // (cross-engine identical); the xxhash64 64-bit engine path is
-      // sbt-verified in TrainingSpec
+      // (cross-engine identical); TextExprsSpec locks the one-pass kernel
+      // against the 16-aggregate column formula
       TrainingOps.withSimhashBucketShared(t(s, dir, "documents"))
         .groupBy("bucket").agg(count(lit(1)).as("n"))
     }, oracle = OracleSql.dedupSimhash),
@@ -675,8 +675,8 @@ object SparkEntry {
 
     DriverQuery("ann_lsh", (s, dir) => {
       // LSH-bucketed ANN scale path with shared md5-derived hyperplanes
-      // (bucketing + scoring reproduced in the DuckDB oracle); the gaussian
-      // engine path keeps its recall-vs-brute assertion in TrainingSpec
+      // (bucketing + scoring reproduced in the DuckDB oracle); its recall
+      // against brute force is asserted in SparkLayerSpec
       val emb = t(s, dir, "embeddings")
       val q = emb.where(col("vec_id") < 10)
       TrainingOps.annLshShared(q, emb, k = 3, planes = 6, tables = 8)
@@ -727,7 +727,7 @@ object SparkEntry {
     DriverQuery("ann_ivf", (s, dir) => {
       // IVF scale path: fixed seed centroids (iters = 0 so the list
       // assignment is closed-form and replicated by the DuckDB oracle);
-      // k-means-refined centroids are exercised in TrainingSpec
+      // k-means-refined centroids are exercised in SparkLayerSpec
       val emb = t(s, dir, "embeddings")
       val q = emb.where(col("vec_id") < 10)
       TrainingOps.annIvf(q, emb, k = 3, nlist = 16, nprobe = 4, iters = 0)

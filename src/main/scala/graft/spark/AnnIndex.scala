@@ -10,17 +10,17 @@ import org.apache.spark.sql.functions._
   * Scale story (the 10^12-doc path): `build` is a single linear pass over
   * the corpus followed by a partitioned write — after that, a query batch
   * computes its own buckets, ships the (small, by the same broadcast
-  * contract as annLsh) distinct bucket set to the driver, and turns it
+  * contract as annLshShared) distinct bucket set to the driver, and turns it
   * into a STATIC partition filter on the index scan. The scan cost is
   * proportional to the candidate partitions touched (tables x distinct
   * query buckets), never to the corpus. Bucketing is byte-identical to
-  * annLshShared / annLsh (TrainingOps.bucketsFor), so the persisted path
-  * inherits their oracles and recall characteristics.
+  * annLshShared (TrainingOps.bucketsFor, md5-derived hyperplanes), so the
+  * persisted path inherits its oracle and recall characteristics.
   */
 object AnnIndex {
 
-  case class Meta(dim: Int, planes: Int, tables: Int, family: String,
-                  seed: Long, rows: Long, fp: Long, version: String = "")
+  case class Meta(dim: Int, planes: Int, tables: Int, rows: Long, fp: Long,
+                  version: String = "")
 
   private def fs(spark: SparkSession, path: String) =
     org.apache.hadoop.fs.FileSystem.get(new java.net.URI(path),
@@ -29,13 +29,9 @@ object AnnIndex {
   private def metaPath(path: String) =
     new org.apache.hadoop.fs.Path(path, "_graft_ann_meta.json")
 
-  private def hyperFor(m: Meta): Array[Array[Array[Double]]] =
-    m.family match {
-      case "shared" => TrainingOps.sharedHyper(m.dim, m.planes, m.tables)
-      case "gaussian" => TrainingOps.gaussianHyper(m.dim, m.planes, m.tables, m.seed)
-      case other => throw new IllegalArgumentException(
-        s"AnnIndex: unknown hyperplane family '$other'")
-    }
+  /** the hyperplane family every index is built with; the meta file
+    * records it so an index built with any other planes is never queried. */
+  private val Family = "shared"
 
   /** order-independent content fingerprint of the corpus: ONE aggregate
     * job yielding (dim, rows, fp). O(corpus) — the rebuild path and the
@@ -51,9 +47,7 @@ object AnnIndex {
   }
 
   /** Hash the corpus (vec_id, embedding) into the on-disk index at `path`:
-    * one row per (vector, table), partitioned by tbl/bucket. `family` is
-    * "shared" (md5-derived planes, cross-engine verifiable) or "gaussian"
-    * (seeded, engine-only).
+    * one row per (vector, table), partitioned by tbl/bucket.
     *
     * With `reuse = true` an existing index whose meta matches the requested
     * parameters is kept as-is (the resident-service pattern: build once,
@@ -66,14 +60,12 @@ object AnnIndex {
     * `verify` re-checks a versioned index against the corpus on demand. */
   def build(corpus: DataFrame, path: String,
             planes: Int = 6, tables: Int = 8,
-            family: String = "shared", seed: Long = 42L,
             reuse: Boolean = false, version: String = ""): Unit = {
     val spark = corpus.sparkSession
     if (reuse && fs(spark, path).exists(metaPath(path))) {
-      // an unreadable or older-format meta simply means "rebuild"
+      // an unreadable, older-format or other-family meta simply means "rebuild"
       scala.util.Try(readMeta(spark, path)).toOption.foreach { m =>
-        val paramsOk = m.planes == planes && m.tables == tables &&
-          m.family == family && m.seed == seed
+        val paramsOk = m.planes == planes && m.tables == tables
         if (paramsOk && version.nonEmpty && m.version == version) return
         if (paramsOk && version.isEmpty) {
           val (dim, rows, fp) = fingerprint(corpus)
@@ -82,11 +74,9 @@ object AnnIndex {
       }
     }
     val (dim, rows, fp) = fingerprint(corpus)
-    val meta = Meta(dim, planes, tables, family, seed, rows, fp, version)
     corpus
-      .select(col("vec_id").as("c_id"),
-        transform(col("embedding"), x => x.cast("double")).as("c_vec"))
-      .withColumn("bk", explode(TrainingOps.bucketsFor(col("c_vec"), hyperFor(meta))))
+      .select(col("vec_id").as("c_id"), TrainingOps.doubles(col("embedding")).as("c_vec"))
+      .withColumn("bk", explode(TrainingOps.bucketsFor(col("c_vec"), dim, planes, tables)))
       .select(col("c_id"), col("c_vec"),
         col("bk.tbl").as("tbl"), col("bk.b").as("bucket"))
       // co-locate each (tbl, bucket) on one task before the partitioned
@@ -99,7 +89,7 @@ object AnnIndex {
     val out = fs(spark, path).create(metaPath(path), true)
     out.write(
       (s"""{"dim": $dim, "planes": $planes, "tables": $tables, """ +
-        s""""family": "$family", "seed": $seed, "rows": $rows, """ +
+        s""""family": "$Family", "rows": $rows, """ +
         s""""fp": $fp, "version": ${jsonStr(version)}}""")
         .getBytes("UTF-8"))
     out.close()
@@ -122,7 +112,8 @@ object AnnIndex {
     m.dim == dim && m.rows == rows && m.fp == fp
   }
 
-  /** Read the build parameters back from the index directory. */
+  /** Read the build parameters back from the index directory; a meta that
+    * records any hyperplane family but "shared" is refused. */
   def readMeta(spark: SparkSession, path: String): Meta = {
     val in = fs(spark, path).open(metaPath(path))
     val txt = scala.io.Source.fromInputStream(in, "UTF-8").mkString
@@ -131,15 +122,16 @@ object AnnIndex {
       s""""$key":\\s*(-?\\d+)""".r.findFirstMatchIn(txt)
         .getOrElse(throw new IllegalStateException(
           s"AnnIndex meta at $path lacks '$key'")).group(1).toLong
-    val fam = """"family":\s*"([a-z]+)"""".r.findFirstMatchIn(txt)
-      .getOrElse(throw new IllegalStateException(
-        s"AnnIndex meta at $path lacks 'family'")).group(1)
+    val fam = """"family":\s*"([a-z]+)"""".r.findFirstMatchIn(txt).map(_.group(1))
+    if (!fam.contains(Family)) throw new IllegalStateException(
+      s"AnnIndex meta at $path records hyperplane family ${fam.getOrElse("(none)")}, " +
+        s"not '$Family'; rebuild the index")
     // absent in pre-version metas: treated as unversioned (fingerprint path)
     val ver = """"version":\s*"((?:[^"\\]|\\.)*)"""".r.findFirstMatchIn(txt)
       .map(_.group(1).replace("\\\"", "\"").replace("\\\\", "\\"))
       .getOrElse("")
-    Meta(num("dim").toInt, num("planes").toInt, num("tables").toInt, fam,
-      num("seed"), num("rows"), num("fp"), ver)
+    Meta(num("dim").toInt, num("planes").toInt, num("tables").toInt,
+      num("rows"), num("fp"), ver)
   }
 
   /** Top-k by exact cosine over the index's bucket candidates. Output
@@ -158,9 +150,9 @@ object AnnIndex {
             k: Int, maxBroadcastRows: Int = 65536): DataFrame = {
     val meta = readMeta(spark, path)
     val hashed = queries
-      .select(col("vec_id").as("q_id"),
-        transform(col("embedding"), x => x.cast("double")).as("q_vec"))
-      .withColumn("bk", explode(TrainingOps.bucketsFor(col("q_vec"), hyperFor(meta))))
+      .select(col("vec_id").as("q_id"), TrainingOps.doubles(col("embedding")).as("q_vec"))
+      .withColumn("bk", explode(
+        TrainingOps.bucketsFor(col("q_vec"), meta.dim, meta.planes, meta.tables)))
       .select(col("q_id"), col("q_vec"),
         col("bk.tbl").as("tbl"), col("bk.b").as("bucket"))
     // limit-probe: one execution of the hashing subplan tells us whether

@@ -13,16 +13,6 @@ import org.apache.spark.sql.streaming.GroupState
   */
 object StreamingOps {
 
-  /** Stateless geo enrichment of a streaming docs frame (doc_id, spans):
-    * anchor extraction + S2 cell + tile + per-row-zone UTM — identical
-    * semantics to the batch path, same Catalyst expressions. */
-  def geoEnrichStream(docs: DataFrame, cellLevel: Int = 12, tileZ: Int = 12): DataFrame =
-    DocsTable.withAnchor(docs)
-      .where(col("lon").isNotNull)
-      .withColumn("cell", GeoFunctions.s2Cell(col("lon"), col("lat"), lit(cellLevel)))
-      .withColumn("tile", GeoFunctions.tileKey(col("lon"), col("lat"), lit(tileZ)))
-      .withColumn("utm", ProjFunctions.utmNative(col("lon"), col("lat")))
-
   /** Watermarked tumbling-window counts per cell: the streaming form of the
     * per-tile aggregation (late data beyond the watermark is dropped, state
     * is bounded). */
@@ -38,8 +28,10 @@ object StreamingOps {
     * fingerprint arriving within the event-time window are dropped with
     * BOUNDED state (dropDuplicatesWithinWatermark evicts keys once the
     * watermark passes them — a plain dropDuplicates would grow state
-    * forever on an unbounded feed). The fingerprint column mirrors the
-    * batch exact-dedup key (md5 of normalized text). */
+    * forever on an unbounded feed). The fingerprint is the md5 of the
+    * whitespace-normalized text (lower, trim, runs collapsed), so unlike
+    * the batch exactDedup key (md5 of the raw text) it also drops copies
+    * that differ only in case or spacing. */
   def dedupStream(docs: DataFrame, tsCol: String,
                   watermark: String = "10 minutes"): DataFrame =
     docs

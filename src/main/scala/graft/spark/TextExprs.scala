@@ -8,44 +8,19 @@ import org.apache.spark.sql.catalyst.util.ArrayData
 import org.apache.spark.sql.types._
 import org.apache.spark.unsafe.types.UTF8String
 
-/** Single-pass text kernels: SimHash voting and language-id trigram
-  * scoring as one-scan Catalyst expressions, reached through the
-  * `StaticInvoke`s built by TextExprs.
+/** Single-pass text kernels: the md5-derived SimHash bucket vote, the
+  * sampling hash and language-id trigram scoring as one-scan Catalyst
+  * expressions, reached through the `StaticInvoke`s built by TextExprs.
   *
   * The column-formula versions these replace were correct but re-scanned
-  * their input per bit / per trigram: the 64-bit SimHash built 64
-  * independent `aggregate` lambdas (each walking the whole hash array),
-  * the shared 16-bit bucket recomputed one md5 PER WORD PER BIT (16×),
-  * and langId ran one regexp_replace over the text per profile trigram
-  * (26×). On the dominant text pass of a 100 TB corpus that constant
-  * matters; each kernel here reads its input exactly once per row. The
-  * old formulas are locked against these in TextExprsSpec.
+  * their input per bit / per trigram: the 16-bit SimHash bucket
+  * recomputed one md5 PER WORD PER BIT (16×), and langId ran one
+  * regexp_replace over the text per profile trigram (26×). On the
+  * dominant text pass of a 100 TB corpus that constant matters; each
+  * kernel here reads its input exactly once per row. The old formulas are
+  * locked against these in TextExprsSpec.
   */
 object TextKernels {
-
-  /** 64-bit SimHash from per-word xxhash64 (seed 42, Spark's default —
-    * bit-identical to transform(words, xxhash64)): one pass over the
-    * words, 64 vote counters, majority per bit. */
-  def simhash64(words: ArrayData): Long = {
-    val counts = new Array[Int](64)
-    val n = words.numElements()
-    var i = 0
-    while (i < n) {
-      val w = words.getUTF8String(i)
-      val h = org.apache.spark.sql.catalyst.expressions.XXH64
-        .hashUnsafeBytes(w.getBaseObject, w.getBaseOffset, w.numBytes, 42L)
-      var b = 0
-      while (b < 64) {
-        if (((h >>> b) & 1L) == 1L) counts(b) += 1 else counts(b) -= 1
-        b += 1
-      }
-      i += 1
-    }
-    var out = 0L
-    var b = 0
-    while (b < 64) { if (counts(b) > 0) out |= (1L << b); b += 1 }
-    out
-  }
 
   /** seeded uniform in [0, m): the LCG step with Java wrap semantics,
     * then a sign-safe mod (mirrored by the oracle's HUGEINT emulation). */
@@ -169,10 +144,6 @@ object TextExprs {
       StructField(p._1, IntegerType, nullable = false)) :+
       StructField("pred", StringType, nullable = false))
 
-  /** 64-bit SimHash of a words array (one pass, xxhash64 seed 42 per word). */
-  def simhash64(words: Expression): Expression =
-    call("simhash64", LongType, Seq(words), ArrayType(StringType))
-
   /** 16-bit shared (md5-derived) SimHash bucket of a words array. */
   def simhashBucketShared(words: Expression): Expression =
     call("simhashBucketShared", LongType, Seq(words), ArrayType(StringType))
@@ -196,7 +167,6 @@ object TextFunctions {
   private def col(e: Expression): Column = Bridge.column(e)
   private def ex(c: Column): Expression = Bridge.expression(c)
 
-  def simhash64(words: Column): Column = col(TextExprs.simhash64(ex(words)))
   def sampleHash(key: Column, m: Column): Column =
     col(TextExprs.sampleHash(ex(key), ex(m)))
   def simhashBucketShared(words: Column): Column =

@@ -9,12 +9,17 @@ import org.apache.spark.sql.expressions.Window
 /** Large-scale training-data pipeline operators over the `documents` /
   * `embeddings` tables: deduplication (exact, MinHash+LSH, SimHash, n-gram
   * Jaccard), text analysis (language id, quality scoring, token counting,
-  * fingerprinting), and similarity search (brute-force cosine top-k + an
-  * LSH-bucketed scale path).
+  * fingerprinting), and similarity search (brute-force cosine top-k, an
+  * LSH-bucketed scale path and IVF).
+  *
+  * One hash family: every hash that reaches an output (MinHash values,
+  * SimHash bits, LSH hyperplanes, fingerprints) derives from md5, which
+  * every engine computes identically, so the DuckDB oracle reproduces each
+  * operator bit for bit.
   *
   * Scale design: every operator is a map + hash-shuffle aggregation —
   * MinHash banding turns near-dup detection into an equi-join on
-  * (band, signature-slice); SimHash joins on 16-bit chunks; ANN's LSH path
+  * (band, signature-slice); SimHash keys on a 16-bit bucket; ANN's LSH path
   * buckets by random-hyperplane signs so candidate sets stay small no
   * matter the corpus size.
   */
@@ -128,17 +133,11 @@ object TrainingOps {
       .withColumn("lang_pred", col("__ls").getField("pred"))
       .drop("__ls")
 
-  /** rolling-hash document fingerprint (polynomial over bytes, base 257 mod
-    * 2^61-1) — content-defined, shift-stable prefix hash. */
-  def fingerprint(text: Column): Column = {
-    // xxhash64 of the normalized text is the cheap whole-doc fingerprint;
-    // winnowed k-gram minimum is exposed via minhash below
-    xxhash64(regexp_replace(lower(text), "\\s+", " "))
-  }
-
   // ---------------- deduplication ----------------
 
-  /** exact dedup: groups identical normalized text, keeps min doc_id. */
+  /** exact dedup: ranks each group of byte-identical raw text (keyed on
+    * md5 of the text as stored, with no normalization) by id and flags
+    * every row but the group's min id as `is_duplicate`. */
   def exactDedup(docs: DataFrame, idCol: String = "doc_id",
                  textCol: String = "text"): DataFrame = {
     val w = Window.partitionBy(md5(col(textCol))).orderBy(col(idCol))
@@ -147,94 +146,15 @@ object TrainingOps {
       .withColumn("is_duplicate", col("dup_rank") > 1)
   }
 
-  /** MinHash signatures over word 3-shingles: `numHashes` permutations via
-    * (a*x+b) mod p over xxhash64 of each shingle. */
-  def minhashSignature(text: Column, numHashes: Int = 32): Column = {
-    val words = split(regexp_replace(lower(trim(text)), "\\s+", " "), " ")
-    val grams = when(size(words) < 3, array(concat_ws(" ", words)))
-      .otherwise(transform(sequence(lit(0), size(words) - 3),
-        i => concat_ws(" ", element_at(words, i + 1),
-          element_at(words, i + 2), element_at(words, i + 3))))
-    // k independent hash families via per-k salts (overflow-free in ANSI mode)
-    val sig = (0 until numHashes).map { k =>
-      array_min(transform(grams, g => xxhash64(g, lit(k))))
-    }
-    array(sig: _*)
-  }
-
-  /** MinHash + LSH near-dup pairs: band the signature, self-join on
-    * (band_id, band_hash), verify with estimated Jaccard >= threshold.
-    * Returns (doc_a, doc_b, jaccard_est). */
-  def minhashDedup(docs: DataFrame, idCol: String = "doc_id",
-                   textCol: String = "text",
-                   numHashes: Int = 32, bands: Int = 8,
-                   threshold: Double = 0.7): DataFrame = {
-    val rowsPerBand = numHashes / bands
-    val withSig = docs.select(col(idCol).as("id"), col(textCol).as("t"))
-      .withColumn("w", split(regexp_replace(lower(trim(col("t"))), "\\s+", " "), " "))
-      .withColumn("grams", when(size(col("w")) < 3, array(concat_ws(" ", col("w"))))
-        .otherwise(transform(sequence(lit(0), size(col("w")) - 3),
-          i => concat_ws(" ", element_at(col("w"), i + 1),
-            element_at(col("w"), i + 2), element_at(col("w"), i + 3)))))
-      .withColumn("sig", array((0 until numHashes).map(k =>
-        array_min(transform(col("grams"), g => xxhash64(g, lit(k))))): _*))
-      .select(col("id"), col("t"), col("sig"))
-    val banded = withSig.withColumn("band",
-      explode(transform(sequence(lit(0), lit(bands - 1)),
-        b => struct(b.as("band_id"),
-          xxhash64(concat_ws(",",
-            slice(col("sig"), b * rowsPerBand + 1, lit(rowsPerBand)))).as("band_hash")))))
-      .select(col("id"), col("sig"), col("band.band_id"), col("band.band_hash"))
-    val a = banded.alias("a")
-    val b = banded.alias("b")
-    // agreement computed in the join projection; distinct runs on the
-    // 3-column pairs, not on pairs carrying two full signatures
-    a.join(b,
-        col("a.band_id") === col("b.band_id") &&
-        col("a.band_hash") === col("b.band_hash") &&
-        col("a.id") < col("b.id"))
-      .select(col("a.id").as("doc_a"), col("b.id").as("doc_b"),
-        (size(filter(zip_with(col("a.sig"), col("b.sig"), (x, y) => x === y),
-          e => e)).cast("double") / numHashes).as("jaccard_est"))
-      .where(col("jaccard_est") >= threshold)
-      .distinct()
-  }
-
-  /** SimHash (64-bit) over word features: per-bit majority vote of feature
-    * hashes (xxhash64 seed 42 per word, one pass — the column-formula
-    * version re-scanned the hash array once per bit, 64x; outputs locked
-    * equal in TextExprsSpec). Candidates join on 4×16-bit chunks
-    * (hamming<=3-ish recall). */
-  def simhash(text: Column): Column =
-    TextFunctions.simhash64(
-      split(regexp_replace(lower(trim(text)), "\\s+", " "), " "))
-
-  // ---------------- cross-engine-verifiable (shared-hash) variants ----------
-  //
-  // The engine paths above hash with xxhash64 (fastest codegen'd hash Spark
-  // has). For the driver's DuckDB oracle, both engines must compute the SAME
-  // hash bit-for-bit, so these variants derive every hash bit/value from
-  // md5 hex digits — md5 is identical everywhere. Semantics (banding,
-  // voting, thresholds) are the same as the engine paths.
-
-  private def normWords(text: Column): Column =
-    split(regexp_replace(lower(trim(text)), "\\s+", " "), " ")
-
-  /** 16-bit SimHash bucket (bits 48..63 of an md5-digit-derived 64-bit
-    * hash) from a WORDS COLUMN: bit k of the bucket is the majority vote
-    * over words of nibble bit (k%4) of md5 hex digit (13 + k/4). Mirrors
-    * the DuckDB oracle. Single-pass expression: ONE md5 per word (the
-    * 16-aggregate column formula recomputed md5 per word PER BIT, 16x);
-    * outputs locked equal in TextExprsSpec. */
-  def simhashBucketSharedFromWords(words: Column): Column =
-    TextFunctions.simhashBucketShared(words)
-
-  /** simhash bucket over a docs frame, with the tokenization hoisted into a
-    * real column (see simhashBucketSharedFromWords). */
+  /** 16-bit SimHash bucket over a docs frame: bit k is the majority vote
+    * over the normalized words of nibble bit (k%4) of md5 hex digit
+    * (13 + k/4), as the DuckDB oracle computes it, with one md5 per word
+    * (TextKernels.simhashBucketShared). The tokenization is hoisted into a
+    * real column so the kernel reads it once. */
   def withSimhashBucketShared(docs: DataFrame, textCol: String = "text",
                               out: String = "bucket"): DataFrame =
-    docs.withColumn("__w", normWords(col(textCol)))
-      .withColumn(out, simhashBucketSharedFromWords(col("__w")))
+    docs.withColumn("__w", normTokens(col(textCol)))
+      .withColumn(out, TextFunctions.simhashBucketShared(col("__w")))
       .drop("__w")
 
   /** word 3-shingles from a WORDS COLUMN (hoist the split into a real
@@ -246,10 +166,6 @@ object TrainingOps {
         i => concat_ws(" ", element_at(words, i + 1),
           element_at(words, i + 2), element_at(words, i + 3))))
 
-  /** word 3-shingles of the normalized text (column-expression form for
-    * small inputs; prefer hoisting via shinglesFromWords in hot paths). */
-  private def shingles3(text: Column): Column = shinglesFromWords(normWords(text))
-
   /** k-th affine rehash of a base hash (mirrored in the DuckDB oracle). */
   private def affine(h: Column, k: Int): Column =
     (h * (2 * k + 1) + (12345 + 777 * k)) % 1000000007L
@@ -259,10 +175,12 @@ object TrainingOps {
   private def minhashSigFromBase(hs: Column, numHashes: Int): Column =
     array((0 until numHashes).map(k => array_min(transform(hs, h => affine(h, k)))): _*)
 
-  /** MinHash+LSH near-dup pairs with the shared hash family; bands join on
-    * the md5 of the comma-joined signature slice, estimated Jaccard is
-    * quantized to ppm (exact multiples of 1/numHashes, so cross-engine
-    * stable). Returns (doc_a, doc_b, jacc_ppm). */
+  /** MinHash+LSH near-dup pairs over word 3-shingles: each shingle's base
+    * hash comes from its md5, `numHashes` affine rehashes give the
+    * signature, and docs sharing any of `bands` signature slices become
+    * candidates (the band key is an internal shuffle key and never reaches
+    * the output). Estimated Jaccard is quantized to ppm (exact multiples of
+    * 1/numHashes, so cross-engine stable). Returns (doc_a, doc_b, jacc_ppm). */
   def minhashDedupShared(docs: DataFrame, idCol: String = "doc_id",
                          textCol: String = "text",
                          numHashes: Int = 16, bands: Int = 4,
@@ -277,7 +195,7 @@ object TrainingOps {
     // string — same candidate pairs (both key on the slice content), a
     // measurably slimmer shuffle at 10^12 rows
     val withSig = docs.select(col(idCol).as("id"), col(textCol).as("t"))
-      .withColumn("w", normWords(col("t")))
+      .withColumn("w", normTokens(col("t")))
       .withColumn("grams", shinglesFromWords(col("w")))
       .withColumn("hs", transform(col("grams"),
         g => conv(substring(md5(g), 1, 7), 16, 10).cast("long")))
@@ -316,9 +234,8 @@ object TrainingOps {
     * ppm-quantized similarity (cross-engine-stable ordering; ties break on
     * c_id). Returns (q_id, c_id, cos_ppm, rnk). */
   def annBruteQuantized(queries: DataFrame, corpus: DataFrame, k: Int): DataFrame = {
-    def d(c: Column): Column = transform(c, x => x.cast("double"))
-    val q = queries.select(col("vec_id").as("q_id"), d(col("embedding")).as("q_vec"))
-    val c = corpus.select(col("vec_id").as("c_id"), d(col("embedding")).as("c_vec"))
+    val q = queries.select(col("vec_id").as("q_id"), doubles(col("embedding")).as("q_vec"))
+    val c = corpus.select(col("vec_id").as("c_id"), doubles(col("embedding")).as("c_vec"))
     val scored = c.crossJoin(broadcast(q))
       .where(col("q_id") =!= col("c_id"))
       .withColumn("cos_ppm",
@@ -331,19 +248,24 @@ object TrainingOps {
   /** md5-derived rational hyperplane component in [-1, 1]:
     * (first8hex(md5("t,p,d")) % 2001 - 1000) / 1000 — computable identically
     * in SQL, so the LSH bucketing is cross-engine-verifiable. */
-  private[spark] def sharedPlane(t: Int, p: Int, d: Int): Double = {
+  private def sharedPlane(t: Int, p: Int, d: Int): Double = {
     val hex = java.security.MessageDigest.getInstance("MD5")
       .digest(s"$t,$p,$d".getBytes("UTF-8"))
       .take(4).map(b => f"${b & 0xff}%02x").mkString
     (java.lang.Long.parseLong(hex, 16) % 2001 - 1000) / 1000.0
   }
 
-  /** (tbl, b) bucket structs for `vec` under an explicit hyperplane family —
-    * THE one LSH bucketing, shared by annLsh/annLshShared/
-    * embeddingDedupShared and the persisted AnnIndex (identical bucketing
-    * is what lets the index reuse the in-memory paths' oracles). */
-  private[spark] def bucketsFor(vec: Column,
-                                hyper: Array[Array[Array[Double]]]): Column = {
+  /** an embedding array cast element-wise to double. */
+  private[spark] def doubles(c: Column): Column = transform(c, x => x.cast("double"))
+
+  /** (tbl, b) bucket structs for a `dim`-long `vec` under the md5-derived
+    * hyperplanes (`tables` tables of `planes` sign bits) — THE one LSH
+    * bucketing, shared by annLshShared, embeddingDedupShared and the
+    * persisted AnnIndex (identical bucketing is what lets the index reuse
+    * the in-memory paths' oracles). */
+  private[spark] def bucketsFor(vec: Column, dim: Int, planes: Int,
+                                tables: Int): Column = {
+    val hyper = Array.tabulate(tables, planes, dim)((t, p, d) => sharedPlane(t, p, d))
     val perTable = hyper.indices.map { t =>
       val bits = hyper(t).indices.map { p =>
         val dot = aggregate(zip_with(vec,
@@ -355,39 +277,28 @@ object TrainingOps {
     array(perTable: _*)
   }
 
-  /** md5-derived hyperplane family (cross-engine reproducible). */
-  private[spark] def sharedHyper(dim: Int, planes: Int,
-                                 tables: Int): Array[Array[Array[Double]]] =
-    Array.tabulate(tables, planes, dim)((t, p, d) => sharedPlane(t, p, d))
-
-  /** seeded gaussian hyperplane family (the fast engine-only default). */
-  private[spark] def gaussianHyper(dim: Int, planes: Int, tables: Int,
-                                   seed: Long): Array[Array[Array[Double]]] = {
-    val rnd = new java.util.Random(seed)
-    Array.fill(tables, planes, dim)(rnd.nextGaussian())
-  }
-
-  /** LSH-bucketed ANN with shared md5-derived hyperplanes and quantized
-    * ranking — same bucketing structure as annLsh (the scale path), but
-    * every number is reproducible in the DuckDB oracle. */
+  /** LSH-bucketed ANN (the scale path): `tables` independent
+    * random-hyperplane hash tables of `planes` sign bits each, with the
+    * md5-derived planes of bucketsFor; a query probes its bucket in every
+    * table and candidates are deduped before exact cosine scoring on the
+    * ppm-quantized similarity, so every number is reproducible in the
+    * DuckDB oracle. Recall ~ 1-(1-p^planes)^tables. */
   def annLshShared(queries: DataFrame, corpus: DataFrame, k: Int,
                    planes: Int = 6, tables: Int = 8): DataFrame = {
-    def dd(c: Column): Column = transform(c, x => x.cast("double"))
     val dim = corpus.select(size(col("embedding"))).head().getInt(0)
-    def buckets(vec: Column): Column =
-      bucketsFor(vec, sharedHyper(dim, planes, tables))
-    val c = corpus.select(col("vec_id").as("c_id"), dd(col("embedding")).as("c_vec"))
+    def buckets(vec: Column): Column = bucketsFor(vec, dim, planes, tables)
+    val c = corpus.select(col("vec_id").as("c_id"), doubles(col("embedding")).as("c_vec"))
       .withColumn("bucket", explode(buckets(col("c_vec"))))
-    val q = queries.select(col("vec_id").as("q_id"), dd(col("embedding")).as("q_vec"))
+    val q = queries.select(col("vec_id").as("q_id"), doubles(col("embedding")).as("q_vec"))
       .withColumn("bucket", explode(buckets(col("q_vec"))))
     scoreTopK(c.join(broadcast(q), Seq("bucket")), k)
   }
 
-  /** Shared exact-scoring tail of the shared-hyperplane LSH paths:
-    * self-filter, candidate dedup, ppm-quantized cosine, per-query top-k
-    * with c_id tie-breaks. annLshShared and the persisted AnnIndex both
-    * call THIS — their rows must stay byte-identical (they share one
-    * oracle), so the ranking logic must never fork. Input needs columns
+  /** Shared exact-scoring tail of the candidate ANN paths: self-filter,
+    * candidate dedup, ppm-quantized cosine, per-query top-k with c_id
+    * tie-breaks. annLshShared, annIvf and the persisted AnnIndex all call
+    * THIS — annLshShared and AnnIndex must stay byte-identical (they share
+    * one oracle), so the ranking logic must never fork. Input needs columns
     * (q_id, q_vec, c_id, c_vec). */
   private[spark] def scoreTopK(cand: DataFrame, k: Int): DataFrame = {
     val scored = cand
@@ -443,8 +354,7 @@ object TrainingOps {
   }
 
   /** whole-document md5 fingerprint over whitespace-normalized text —
-    * cross-engine identical (the xxhash64 `fingerprint` stays the fast
-    * engine path). */
+    * cross-engine identical. */
   def fingerprintShared(text: Column): Column =
     md5(regexp_replace(lower(text), "\\s+", " "))
 
@@ -454,12 +364,9 @@ object TrainingOps {
     * Scale: candidates come from bucket equi-joins, never all-pairs. */
   def embeddingDedupShared(vectors: DataFrame, thresholdPpm: Long,
                            planes: Int = 6, tables: Int = 8): DataFrame = {
-    def dd(c: Column): Column = transform(c, x => x.cast("double"))
     val dim = vectors.select(size(col("embedding"))).head().getInt(0)
-    def buckets(vec: Column): Column =
-      bucketsFor(vec, sharedHyper(dim, planes, tables))
-    val v = vectors.select(col("vec_id"), dd(col("embedding")).as("v"))
-      .withColumn("bucket", explode(buckets(col("v"))))
+    val v = vectors.select(col("vec_id"), doubles(col("embedding")).as("v"))
+      .withColumn("bucket", explode(bucketsFor(col("v"), dim, planes, tables)))
     val a = v.select(col("vec_id").as("vec_a"), col("v").as("va"), col("bucket"))
     val b = v.select(col("vec_id").as("vec_b"), col("v").as("vb"), col("bucket"))
     a.join(b, Seq("bucket"))
@@ -483,8 +390,7 @@ object TrainingOps {
              nlist: Int = 16, nprobe: Int = 4, iters: Int = 0): DataFrame = {
     val spark = corpus.sparkSession
     import spark.implicits._
-    def dd(c: Column): Column = transform(c, x => x.cast("double"))
-    val corp = corpus.select(col("vec_id").as("c_id"), dd(col("embedding")).as("cv"))
+    val corp = corpus.select(col("vec_id").as("c_id"), doubles(col("embedding")).as("cv"))
 
     var centroids: Seq[(Int, Seq[Double])] = corp.where(col("c_id") < nlist)
       .orderBy("c_id").collect()
@@ -533,25 +439,18 @@ object TrainingOps {
     }
 
     val assigned = assign(corp.withColumnRenamed("c_id", "cv_id"), "cv", centroids, 1)
-      .select(col("cv_id").as("c_id"), col("cv"), col("cid"))
-    val q = queries.select(col("vec_id").as("q_id"), dd(col("embedding")).as("qv"))
+      .select(col("cv_id").as("c_id"), col("cv").as("c_vec"), col("cid"))
+    val q = queries.select(col("vec_id").as("q_id"), doubles(col("embedding")).as("qv"))
     val probes = assign(q.withColumnRenamed("q_id", "qv_id"), "qv", centroids, nprobe)
-      .select(col("qv_id").as("q_id"), col("qv"), col("cid"))
-    val cand = assigned.join(broadcast(probes), Seq("cid"))
-      .where(col("q_id") =!= col("c_id"))
-      .select("q_id", "qv", "c_id", "cv")
-      .dropDuplicates("q_id", "c_id")
-    val w = Window.partitionBy("q_id").orderBy(col("cos_ppm").desc, col("c_id"))
-    cand.withColumn("cos_ppm", round(cosine(col("qv"), col("cv")) * 1e6).cast("long"))
-      .withColumn("rnk", row_number().over(w)).where(col("rnk") <= k)
-      .select("q_id", "c_id", "cos_ppm", "rnk")
+      .select(col("qv_id").as("q_id"), col("qv").as("q_vec"), col("cid"))
+    scoreTopK(assigned.join(broadcast(probes), Seq("cid")), k)
   }
 
   /** n-gram Jaccard similarity between two text columns (exact, for the
     * verify phase of near-dup candidates). */
   def ngramJaccard(a: Column, b: Column, n: Int = 3): Column = {
     def grams(t: Column) = {
-      val words = split(regexp_replace(lower(trim(t)), "\\s+", " "), " ")
+      val words = normTokens(t)
       array_distinct(when(size(words) < n, array(concat_ws(" ", words)))
         .otherwise(transform(sequence(lit(0), size(words) - n),
           i => concat_ws(" ", (0 until n).map(j => element_at(words, i + j + 1)): _*))))
@@ -582,30 +481,6 @@ object TrainingOps {
     val scored = c.crossJoin(broadcast(q))
       .where(col("q_id") =!= col("c_id"))
       .withColumn("cos", cosine(col("q_vec"), col("c_vec")))
-    val w = Window.partitionBy("q_id").orderBy(col("cos").desc, col("c_id"))
-    scored.withColumn("rnk", row_number().over(w)).where(col("rnk") <= k)
-      .select("q_id", "c_id", "cos", "rnk")
-  }
-
-  /** LSH-bucketed ANN (scale path): `tables` independent random-hyperplane
-    * hash tables of `planes` sign bits each; a query probes its bucket in
-    * every table and candidates are deduped before exact cosine scoring.
-    * Recall ~ 1-(1-p^planes)^tables; at 100 TB the corpus side is shuffled
-    * once by (table, bucket) and reused across query batches. */
-  def annLsh(queries: DataFrame, corpus: DataFrame, k: Int,
-             planes: Int = 8, tables: Int = 8, seed: Long = 42): DataFrame = {
-    val dim = corpus.select(size(col("embedding"))).head().getInt(0)
-    def buckets(vec: Column): Column =
-      bucketsFor(vec, gaussianHyper(dim, planes, tables, seed))
-    val c = corpus.select(col("vec_id").as("c_id"), col("embedding").as("c_vec"))
-      .withColumn("bucket", explode(buckets(col("c_vec"))))
-    val q = queries.select(col("vec_id").as("q_id"), col("embedding").as("q_vec"))
-      .withColumn("bucket", explode(buckets(col("q_vec"))))
-    val cand = c.join(broadcast(q), Seq("bucket"))
-      .where(col("q_id") =!= col("c_id"))
-      .select("q_id", "q_vec", "c_id", "c_vec")
-      .dropDuplicates("q_id", "c_id")
-    val scored = cand.withColumn("cos", cosine(col("q_vec"), col("c_vec")))
     val w = Window.partitionBy("q_id").orderBy(col("cos").desc, col("c_id"))
     scored.withColumn("rnk", row_number().over(w)).where(col("rnk") <= k)
       .select("q_id", "c_id", "cos", "rnk")

@@ -87,15 +87,37 @@ class AnnIndexSpec extends AnyFunSuite {
     } finally spark.conf.set("spark.sql.autoBroadcastJoinThreshold", thresholdBefore)
   }
 
-  test("meta round-trips and rejects unknown family") {
+  test("meta round-trips dim, planes, tables and rows") {
     built
     val m = AnnIndex.readMeta(spark, path)
-    assert((m.dim, m.planes, m.tables, m.family, m.seed, m.rows) ==
-      (16, 6, 8, "shared", 42L, 400L))
+    assert((m.dim, m.planes, m.tables, m.rows) == (16, 6, 8, 400L))
     assert(m.fp != 0L)
-    intercept[IllegalArgumentException] {
-      AnnIndex.build(corpus, path + "_bad", family = "banana")
-    }
+  }
+
+  test("an index whose meta records another hyperplane family is refused, then rebuilt") {
+    val fPath = java.nio.file.Files
+      .createTempDirectory("graft-ann-fam").toString + "/idx"
+    AnnIndex.build(corpus, fPath, planes = 6, tables = 8)
+    // as an index hashed with other (e.g. seeded gaussian) planes records it;
+    // written through Hadoop's local FS so its checksum sidecar stays valid
+    val metaFile = java.nio.file.Paths.get(fPath, "_graft_ann_meta.json")
+    val meta = java.nio.file.Files.readString(metaFile)
+    assert(meta.contains("\"family\": \"shared\""), meta)
+    val out = org.apache.hadoop.fs.FileSystem.getLocal(spark.sparkContext.hadoopConfiguration)
+      .create(new org.apache.hadoop.fs.Path(metaFile.toUri), true)
+    out.write(meta.replace("\"family\": \"shared\"", "\"family\": \"gaussian\"")
+      .getBytes("UTF-8"))
+    out.close()
+    val q = corpus.where(col("vec_id") < 6)
+    intercept[IllegalStateException] { AnnIndex.query(spark, fPath, q, k = 4) }
+    AnnIndex.build(corpus, fPath, planes = 6, tables = 8, reuse = true)
+    assert(java.nio.file.Files.readString(metaFile).contains("\"family\": \"shared\""))
+    val fromIndex = AnnIndex.query(spark, fPath, q, k = 4)
+      .as[(Long, Long, Long, Int)].collect().toSet
+    val inMemory = TrainingOps.annLshShared(q, corpus, k = 4, planes = 6, tables = 8)
+      .as[(Long, Long, Long, Int)].collect().toSet
+    assert(fromIndex == inMemory)
+    assert(fromIndex.nonEmpty)
   }
 
   test("empty query batch yields an empty result, not an error") {

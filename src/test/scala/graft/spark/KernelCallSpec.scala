@@ -157,8 +157,6 @@ class KernelCallSpec extends AnyFunSuite {
     Kernel("jpegPixelStatsProg", Seq("jpeg_prog"),
       a => MediaFunctions.jpegPixelStatsProg(a(0)), None,
       "struct<n_px:bigint,px_sum:bigint,px_poly:bigint,px_chk:bigint> true true"),
-    Kernel("simhash64", Seq("words"), a => TextFunctions.simhash64(a(0)), None,
-      "bigint false true"),
     Kernel("simhashBucketShared", Seq("words"),
       a => TextFunctions.simhashBucketShared(a(0)), None, "bigint false true"),
     Kernel("langScores", Seq("prepared"), a => TextFunctions.langScores(a(0)), None,

@@ -200,7 +200,8 @@ class SparkLayerSpec extends AnyFunSuite {
     val nearDups = (0 until 20).map(i =>
       (s"dup_$i", s"the quick brown fox jumps over the lazy dog number $i end of line"))
     val df = (base ++ nearDups).toDF("doc_id", "text")
-    val pairs = TrainingOps.minhashDedup(df, numHashes = 32, bands = 16, threshold = 0.4)
+    val pairs = TrainingOps.minhashDedupShared(df, "doc_id", "text",
+      numHashes = 32, bands = 16, threshold = 0.4)
     val verified = pairs
       .join(df.select($"doc_id".as("doc_a"), $"text".as("ta")), "doc_a")
       .join(df.select($"doc_id".as("doc_b"), $"text".as("tb")), "doc_b")
@@ -220,7 +221,7 @@ class SparkLayerSpec extends AnyFunSuite {
     val q = emb.where($"vec_id" < 5)
     val brute = TrainingOps.annBruteForce(q, emb, k = 5)
       .select("q_id", "c_id").collect().map(r => (r.getLong(0), r.getLong(1))).toSet
-    val lsh = TrainingOps.annLsh(q, emb, k = 5, planes = 4, tables = 12)
+    val lsh = TrainingOps.annLshShared(q, emb, k = 5, planes = 4, tables = 12)
       .select("q_id", "c_id").collect().map(r => (r.getLong(0), r.getLong(1))).toSet
     val recall = (brute intersect lsh).size.toDouble / brute.size
     assert(recall >= 0.5, s"LSH recall too low: $recall") // 12 tables x 4 planes

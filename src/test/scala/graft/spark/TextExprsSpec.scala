@@ -4,10 +4,10 @@ import org.apache.spark.sql.{Column, SparkSession}
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
-/** Locks the single-pass text kernels (simhash64, simhashBucketShared,
-  * langScores) bit-for-bit against the multi-scan column formulas they
-  * replaced — the formulas are reproduced here verbatim as the reference
-  * implementation. KernelCallSpec runs them through generated code. */
+/** Locks the single-pass text kernels (simhashBucketShared, langScores)
+  * bit-for-bit against the multi-scan column formulas they replaced — the
+  * formulas are reproduced here verbatim as the reference implementation.
+  * KernelCallSpec runs them through generated code. */
 class TextExprsSpec extends AnyFunSuite {
   lazy val spark: SparkSession = SparkSession.builder()
     .master("local[4]")
@@ -35,20 +35,6 @@ class TextExprsSpec extends AnyFunSuite {
   private def normWords(text: Column): Column =
     split(regexp_replace(lower(trim(text)), "\\s+", " "), " ")
 
-  test("SimHash64Expr equals the 64-aggregate column formula") {
-    val words = normWords(col("text"))
-    val hashes = transform(words, w => xxhash64(w))
-    val oldBits = (0 until 64).map { bit =>
-      val votes = aggregate(hashes, lit(0),
-        (acc, h) => acc + when(shiftright(h, bit).bitwiseAND(1) === 1, 1).otherwise(-1))
-      when(votes > 0, lit(1L) * lit(1L << bit)).otherwise(0L)
-    }.reduce(_ + _)
-    val rows = texts.toDF("text")
-      .select(oldBits.as("old"), TrainingOps.simhash(col("text")).as("neu"))
-      .collect()
-    rows.foreach(r => assert(r.getLong(0) == r.getLong(1), r.toString))
-  }
-
   test("SimHashSharedExpr equals the 16-aggregate md5 column formula") {
     val words = normWords(col("text"))
     val oldBits = (0 until 16).map { k =>
@@ -62,7 +48,7 @@ class TextExprsSpec extends AnyFunSuite {
     }.reduce(_ + _)
     val rows = texts.toDF("text")
       .select(oldBits.as("old"),
-        TrainingOps.simhashBucketSharedFromWords(words).as("neu"))
+        TextFunctions.simhashBucketShared(words).as("neu"))
       .collect()
     rows.foreach(r => assert(r.getLong(0) == r.getLong(1), r.toString))
   }
