@@ -87,21 +87,11 @@ object AnnIndex {
       .repartition(col("tbl"), col("bucket"))
       .write.mode("overwrite").partitionBy("tbl", "bucket").parquet(path)
     val out = fs(spark, path).create(metaPath(path), true)
-    out.write(
-      (s"""{"dim": $dim, "planes": $planes, "tables": $tables, """ +
-        s""""family": "$Family", "rows": $rows, """ +
-        s""""fp": $fp, "version": ${jsonStr(version)}}""")
-        .getBytes("UTF-8"))
+    out.write(Snapshots.jsonLine(Snapshots.json.createObjectNode()
+      .put("dim", dim).put("planes", planes).put("tables", tables).put("family", Family)
+      .put("rows", rows).put("fp", fp).put("version", version)).getBytes("UTF-8"))
     out.close()
   }
-
-  private def jsonStr(s: String): String =
-    "\"" + s.flatMap {
-      case '"' => "\\\""
-      case '\\' => "\\\\"
-      case c if c < ' ' => f"\\u${c.toInt}%04x"
-      case c => c.toString
-    } + "\""
 
   /** Recompute the corpus fingerprint and compare it to the stored meta —
     * the explicit integrity check a versioned resident service runs on its
@@ -116,22 +106,20 @@ object AnnIndex {
     * records any hyperplane family but "shared" is refused. */
   def readMeta(spark: SparkSession, path: String): Meta = {
     val in = fs(spark, path).open(metaPath(path))
-    val txt = scala.io.Source.fromInputStream(in, "UTF-8").mkString
-    in.close()
-    def num(key: String): Long =
-      s""""$key":\\s*(-?\\d+)""".r.findFirstMatchIn(txt)
-        .getOrElse(throw new IllegalStateException(
-          s"AnnIndex meta at $path lacks '$key'")).group(1).toLong
-    val fam = """"family":\s*"([a-z]+)"""".r.findFirstMatchIn(txt).map(_.group(1))
+    val m = try Snapshots.json.readTree(in) finally in.close()
+    def num(key: String): Long = {
+      val n = m.path(key)
+      if (!n.isIntegralNumber) throw new IllegalStateException(
+        s"AnnIndex meta at $path lacks '$key'")
+      n.asLong
+    }
+    val fam = Option(m.path("family").textValue)
     if (!fam.contains(Family)) throw new IllegalStateException(
       s"AnnIndex meta at $path records hyperplane family ${fam.getOrElse("(none)")}, " +
         s"not '$Family'; rebuild the index")
     // absent in pre-version metas: treated as unversioned (fingerprint path)
-    val ver = """"version":\s*"((?:[^"\\]|\\.)*)"""".r.findFirstMatchIn(txt)
-      .map(_.group(1).replace("\\\"", "\"").replace("\\\\", "\\"))
-      .getOrElse("")
     Meta(num("dim").toInt, num("planes").toInt, num("tables").toInt,
-      num("rows"), num("fp"), ver)
+      num("rows"), num("fp"), m.path("version").asText(""))
   }
 
   /** Top-k by exact cosine over the index's bucket candidates. Output

@@ -12,6 +12,13 @@ import java.util.zip.{CRC32, Deflater}
   * SOF0/EOI markers); decoders parse the real byte layout — byte order,
   * chunk walking, marker scanning — so a wrong parser fails loudly against
   * the driver oracle's closed-form expectations.
+  *
+  * Each container has one walk, and its public decoders are projections
+  * of it: `pngFrame` (the PNG chunk chain, header and pixels), `wavChunk`
+  * (the RIFF chunk chain, `fmt ` header or `data` samples) and
+  * `decodeJpegFrame` (the JPEG segment chain, header and pixels). Every
+  * read stays inside the payload, so malformed input gives None and never
+  * throws or loops.
   */
 object MediaCodecs {
 
@@ -111,37 +118,53 @@ object MediaCodecs {
     out.toByteArray
   }
 
-  /** FULL PNG pixel decode for 8-bit color types 0/2/4/6: walks the chunk
-    * chain, concatenates IDAT data, inflates the real zlib stream, and
-    * reconstructs every scanline through the five PNG filter types
-    * (None/Sub/Up/Average/Paeth, spec §6). Returns the w*h*channels pixel
-    * bytes in scanline order. None for anything structurally off — wrong
-    * dims, truncated stream, palette/16-bit profiles, unknown filter. */
-  def decodePngPixels(bytes: Array[Byte]): Option[Array[Byte]] = {
-    val info = decodePng(bytes).getOrElse(return None)
+  /** FULL PNG pixel decode for 8-bit color types 0/2/4/6: the w*h*channels
+    * pixel bytes in scanline order, or None — see `pngFrame`. */
+  def decodePngPixels(bytes: Array[Byte]): Option[Array[Byte]] =
+    pngFrame(bytes, pixels = true).map(_._2)
+
+  /** parse a PNG's first IHDR — see `pngFrame`. */
+  def decodePng(bytes: Array[Byte]): Option[MediaInfo] =
+    pngFrame(bytes, pixels = false).map(_._1)
+
+  /** The one PNG decoder: checks the signature and walks the chunk chain,
+    * every `pos + 8 + len` in Long so no length wraps the walk. The first
+    * IHDR gives the header; with `pixels` false the walk stops there and
+    * returns it with null pixels. Otherwise it gathers every IDAT, inflates
+    * the zlib stream and reconstructs each scanline through the five PNG
+    * filter types (None/Sub/Up/Average/Paeth, spec §6). None for a
+    * negative chunk length, a short IHDR or a truncated IDAT, no IHDR, and
+    * with `pixels` for other than 8-bit colour types 0/2/4/6, non-positive
+    * dimensions or more than 64 MiB of pixels, a stream that is truncated,
+    * corrupt or asks for a preset dictionary, or an unknown filter type. */
+  private def pngFrame(bytes: Array[Byte], pixels: Boolean): Option[(MediaInfo, Array[Byte])] = {
+    if (bytes.length < 33) return None
+    var i = 0
+    while (i < 8) { if (bytes(i) != PNG_SIG(i)) return None; i += 1 }
     val bb = ByteBuffer.wrap(bytes).order(ByteOrder.BIG_ENDIAN)
-    var pos = 8
-    var depth = -1; var colorType = -1
-    var idat = new java.io.ByteArrayOutputStream()
+    var info: MediaInfo = null
+    var depth = -1
+    val idat = new java.io.ByteArrayOutputStream()
+    var pos = 8L
     while (pos + 8 <= bytes.length) {
-      val len = bb.getInt(pos)
-      if (len < 0) return None
-      val typ = new String(bytes, pos + 4, 4, "ASCII")
-      if (typ == "IHDR") {
-        // bounds-guard: a truncated trailing chunk typed IHDR must yield
-        // None, not an out-of-bounds read
-        if (len < 13 || pos + 8 + 13 > bytes.length) return None
-        depth = bytes(pos + 16) & 0xff
-        colorType = bytes(pos + 17) & 0xff
-      }
-      if (typ == "IDAT") {
+      val p = pos.toInt
+      val len = bb.getInt(p)
+      if (len < 0) return None // hostile chunk length: never loop in place
+      val typ = new String(bytes, p + 4, 4, "ASCII")
+      if (typ == "IHDR" && info == null) {
+        if (len < 13 || p + 8 + 13 > bytes.length) return None
+        depth = bytes(p + 16) & 0xff
+        info = MediaInfo("image", bb.getInt(p + 8), bb.getInt(p + 12), 0,
+          pngChannels(bytes(p + 17) & 0xff))
+        if (!pixels) return Some((info, null))
+      } else if (typ == "IDAT" && pixels) {
         if (pos + 8 + len > bytes.length) return None
-        idat.write(bytes, pos + 8, len)
+        idat.write(bytes, p + 8, len)
       }
-      pos += 8 + len + 4
+      pos += 8L + len + 4
     }
-    if (depth != 8) return None
-    val ch = pngChannels(colorType)
+    if (info == null || depth != 8) return None
+    val ch = info.channels
     if (ch == 0) return None
     val w = info.width; val h = info.height
     if (w <= 0 || h <= 0 || w.toLong * h * ch > 64L * 1024 * 1024) return None
@@ -153,7 +176,8 @@ object MediaCodecs {
     try {
       while (off < raw.length && !inf.finished()) {
         val n = inf.inflate(raw, off, raw.length - off)
-        if (n == 0 && inf.needsInput()) return None // truncated stream
+        // truncated stream, or a preset dictionary (RFC 1950 §2.2) we lack
+        if (n == 0 && (inf.needsInput() || inf.needsDictionary())) return None
         off += n
       }
     } catch { case _: java.util.zip.DataFormatException => return None }
@@ -182,28 +206,7 @@ object MediaCodecs {
       }
       r += 1
     }
-    Some(px)
-  }
-
-  /** parse a PNG's IHDR: walks the chunk chain for real. */
-  def decodePng(bytes: Array[Byte]): Option[MediaInfo] = {
-    if (bytes.length < 33) return None
-    var i = 0
-    while (i < 8) { if (bytes(i) != PNG_SIG(i)) return None; i += 1 }
-    val bb = ByteBuffer.wrap(bytes).order(ByteOrder.BIG_ENDIAN)
-    var pos = 8
-    while (pos + 8 <= bytes.length) {
-      val len = bb.getInt(pos)
-      if (len < 0) return None // hostile chunk length: never loop in place
-      val typ = new String(bytes, pos + 4, 4, "ASCII")
-      if (typ == "IHDR") {
-        if (len < 13 || pos + 8 + 13 > bytes.length) return None
-        return Some(MediaInfo("image", bb.getInt(pos + 8), bb.getInt(pos + 12), 0,
-          pngChannels(bytes(pos + 17) & 0xff)))
-      }
-      pos += 8 + len + 4
-    }
-    None
+    Some((info, px))
   }
 
   // ------------------------------------------------------------------ WAV
@@ -241,49 +244,40 @@ object MediaCodecs {
     bb.array()
   }
 
-  /** parse RIFF/WAVE: walks chunks to fmt . */
-  def decodeWav(bytes: Array[Byte]): Option[MediaInfo] = {
-    if (bytes.length < 44) return None
-    val bb = ByteBuffer.wrap(bytes).order(ByteOrder.LITTLE_ENDIAN)
-    if (new String(bytes, 0, 4, "ASCII") != "RIFF") return None
-    if (new String(bytes, 8, 4, "ASCII") != "WAVE") return None
-    var pos = 12
-    while (pos + 8 <= bytes.length) {
-      val id = new String(bytes, pos, 4, "ASCII")
-      val len = bb.getInt(pos + 4)
-      if (len < 0) return None // hostile chunk length: never loop in place
-      if (id == "fmt ") {
-        if (len < 16 || pos + 8 + 16 > bytes.length) return None
-        val channels = bb.getShort(pos + 10).toInt
-        val rate = bb.getInt(pos + 12)
-        return Some(MediaInfo("audio", 0, 0, rate, channels))
-      }
-      pos += 8 + len + (len & 1) // RIFF chunks are word-aligned
+  /** parse RIFF/WAVE: the first `fmt ` chunk's channels and sample rate;
+    * None when that chunk is shorter than 16 bytes — see `wavChunk`. */
+  def decodeWav(bytes: Array[Byte]): Option[MediaInfo] =
+    wavChunk(bytes, "fmt ").collect { case (p, len) if len >= 16 && p + 16 <= bytes.length =>
+      val bb = ByteBuffer.wrap(bytes).order(ByteOrder.LITTLE_ENDIAN)
+      MediaInfo("audio", 0, 0, bb.getInt(p + 4), bb.getShort(p + 2).toInt)
     }
-    None
-  }
 
-  /** FULL PCM sample decode: walks the RIFF chunk chain to `data` and
-    * reads the little-endian 16-bit samples — the audio counterpart of
-    * decodePngPixels. None for truncated or structurally-off streams. */
-  def decodeWavSamples(bytes: Array[Byte]): Option[Array[Short]] = {
+  /** FULL PCM sample decode: the first `data` chunk's little-endian 16-bit
+    * samples; None when that chunk runs past the data — see `wavChunk`. */
+  def decodeWavSamples(bytes: Array[Byte]): Option[Array[Short]] =
+    wavChunk(bytes, "data").collect { case (p, len) if p.toLong + len <= bytes.length =>
+      val bb = ByteBuffer.wrap(bytes, p, len).order(ByteOrder.LITTLE_ENDIAN)
+      Array.fill(len / 2)(bb.getShort())
+    }
+
+  /** The one RIFF/WAVE walk: the body offset and declared length of the
+    * first chunk `id`, stepping over each chunk's word-alignment pad byte
+    * (len + len&1) with every `pos + 8 + len` in Long. None for fewer than
+    * 44 bytes, no RIFF/WAVE header, a negative chunk length before `id`,
+    * or no such chunk. The header and sample decodes each find their own
+    * chunk, so neither needs the other's to be present or well formed. */
+  private def wavChunk(bytes: Array[Byte], id: String): Option[(Int, Int)] = {
     if (bytes.length < 44) return None
-    val bb = ByteBuffer.wrap(bytes).order(ByteOrder.LITTLE_ENDIAN)
     if (new String(bytes, 0, 4, "ASCII") != "RIFF") return None
     if (new String(bytes, 8, 4, "ASCII") != "WAVE") return None
-    var pos = 12
+    val bb = ByteBuffer.wrap(bytes).order(ByteOrder.LITTLE_ENDIAN)
+    var pos = 12L
     while (pos + 8 <= bytes.length) {
-      val id = new String(bytes, pos, 4, "ASCII")
-      val len = bb.getInt(pos + 4)
-      if (len < 0) return None
-      if (id == "data") {
-        if (pos + 8 + len > bytes.length) return None
-        val out = new Array[Short](len / 2)
-        var i = 0
-        while (i < out.length) { out(i) = bb.getShort(pos + 8 + 2 * i); i += 1 }
-        return Some(out)
-      }
-      pos += 8 + len + (len & 1)
+      val p = pos.toInt
+      val len = bb.getInt(p + 4)
+      if (len < 0) return None // hostile chunk length: never loop in place
+      if (new String(bytes, p, 4, "ASCII") == id) return Some((p + 8, len))
+      pos += 8L + len + (len & 1)
     }
     None
   }

@@ -40,8 +40,9 @@ object MediaKernels {
     }
 
   /** L2-normalized byte histogram of the payload — the feature vector the
-    * decode pass attaches to every media row. */
+    * decode pass attaches to every media row; null for `dim` below 1. */
   def featurize(payload: Array[Byte], dim: Int): ArrayData = {
+    if (dim < 1) return null
     val feat = new Array[Float](dim)
     var i = 0
     while (i < payload.length) {
@@ -62,18 +63,7 @@ object MediaKernels {
     * (n_px, px_sum, px_poly) over the recovered pixel bytes; null when the
     * payload doesn't decode. */
   def pngPixelStats(payload: Array[Byte]): InternalRow =
-    MediaCodecs.decodePngPixels(payload) match {
-      case Some(px) =>
-        var sum = 0L; var poly = 0L; var i = 0
-        while (i < px.length) {
-          val b = px(i) & 0xff
-          sum += b
-          poly = (poly + b.toLong * (i + 1)) % 1000000007L
-          i += 1
-        }
-        new GenericInternalRow(Array[Any](px.length.toLong, sum, poly))
-      case None => null
-    }
+    MediaCodecs.decodePngPixels(payload).map(byteStats).orNull
 
   /** deterministic baseline JPEG for the content-deep check: dimensions
     * (8..48 px, also for a negative seed) and DC stream derived from the
@@ -87,18 +77,7 @@ object MediaKernels {
     * then fold (n_px, px_sum, px_poly); null when the payload doesn't
     * decode. */
   def jpegPixelStats(payload: Array[Byte]): InternalRow =
-    MediaCodecs.decodeJpegPixels(payload) match {
-      case Some(px) =>
-        var sum = 0L; var poly = 0L; var i = 0
-        while (i < px.length) {
-          val b = px(i) & 0xff
-          sum += b
-          poly = (poly + b.toLong * (i + 1)) % 1000000007L
-          i += 1
-        }
-        new GenericInternalRow(Array[Any](px.length.toLong, sum, poly))
-      case None => null
-    }
+    MediaCodecs.decodeJpegPixels(payload).map(byteStats).orNull
 
   /** deterministic progressive (SOF2, §G) JPEG for the content-deep
     * check: dimensions and coefficient stream derived from the seed. */
@@ -118,18 +97,15 @@ object MediaKernels {
   def jpegPixelStatsProg(payload: Array[Byte]): InternalRow =
     MediaCodecs.decodeJpegFrame(payload, pixels = true) match {
       case Some((info, px)) =>
-        var sum = 0L; var poly = 0L; var chk = 0L; var i = 0
+        var chk = 0L; var i = 0
         while (i < px.length) {
-          val b = px(i) & 0xff
           val pixel = i / info.channels
           val xm = (pixel % info.width) % 8; val ym = (pixel / info.width) % 8
-          sum += b
-          poly = (poly + b.toLong * (i + 1)) % 1000000007L
-          chk = (chk + b.toLong * ((1 + xm) * (1 + xm) * (1 + ym) * (1 + ym))) %
+          chk = (chk + (px(i) & 0xff).toLong * ((1 + xm) * (1 + xm) * (1 + ym) * (1 + ym))) %
             1000000007L
           i += 1
         }
-        new GenericInternalRow(Array[Any](px.length.toLong, sum, poly, chk))
+        new GenericInternalRow(fold(px.length, px(_) & 0xff) :+ chk)
       case None => null
     }
 
@@ -183,15 +159,7 @@ object MediaKernels {
         val f = factor.toInt
         val w2 = info.width / f; val h2 = info.height / f
         if (w2 == 0 || h2 == 0) return null
-        val r = resizeGray(px, info.width, info.height, w2, h2)
-        var sum = 0L; var poly = 0L; var i = 0
-        while (i < r.length) {
-          val b = r(i) & 0xff
-          sum += b
-          poly = (poly + b.toLong * (i + 1)) % 1000000007L
-          i += 1
-        }
-        new GenericInternalRow(Array[Any](r.length.toLong, sum, poly))
+        byteStats(resizeGray(px, info.width, info.height, w2, h2))
       case _ => null
     }
   }
@@ -200,18 +168,25 @@ object MediaKernels {
     * fold (n_smp, smp_sum, smp_poly); null when the payload doesn't
     * decode. */
   def wavSampleStats(payload: Array[Byte]): InternalRow =
-    MediaCodecs.decodeWavSamples(payload) match {
-      case Some(smp) =>
-        var sum = 0L; var poly = 0L; var i = 0
-        while (i < smp.length) {
-          val v = smp(i).toLong
-          sum += v
-          poly = (poly + v * (i + 1)) % 1000000007L
-          i += 1
-        }
-        new GenericInternalRow(Array[Any](smp.length.toLong, sum, poly))
-      case None => null
+    MediaCodecs.decodeWavSamples(payload)
+      .map(smp => new GenericInternalRow(fold(smp.length, smp(_).toLong))).orNull
+
+  /** the (n, sum, poly) stats fold of every content kernel over `n` values
+    * v(0) .. v(n-1), with poly = sum of v(i) * (i + 1) mod 1e9+7. */
+  private def fold(n: Int, v: Int => Long): Array[Any] = {
+    var sum = 0L; var poly = 0L; var i = 0
+    while (i < n) {
+      val b = v(i)
+      sum += b
+      poly = (poly + b * (i + 1)) % 1000000007L
+      i += 1
     }
+    Array[Any](n.toLong, sum, poly)
+  }
+
+  /** `fold` over unsigned sample bytes. */
+  private def byteStats(px: Array[Byte]): InternalRow =
+    new GenericInternalRow(fold(px.length, px(_) & 0xff))
 }
 
 /** Expression-level builders of the media kernels, one `StaticInvoke` of a
@@ -287,7 +262,7 @@ object MediaFunctions {
   /** header decode struct (kind, width, height, sample_rate, channels). */
   def mediaInfo(payload: Column): Column = col(MediaExprs.mediaInfo(ex(payload)))
 
-  /** L2-normalized byte-histogram feature vector. */
+  /** L2-normalized byte-histogram feature vector; null for a dim below 1. */
   def mediaFeature(payload: Column, dim: Column): Column =
     col(MediaExprs.mediaFeature(ex(payload), ex(dim)))
 

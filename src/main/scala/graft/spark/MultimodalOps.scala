@@ -28,19 +28,20 @@ object MultimodalOps {
     * (the same parameter derivation the driver oracle replicates). PNGs
     * cycle through color types gray/RGB/RGBA by (seed/3) % 3 — multi-
     * channel images halve each dimension so the pixel-byte budget stays
-    * in the grayscale range. */
-  def encodeFor(seed: Long): Array[Byte] = (seed % 3) match {
+    * in the grayscale range. Every choice and dimension is a `floorMod`,
+    * so a negative seed gives a valid payload too. */
+  def encodeFor(seed: Long): Array[Byte] = Math.floorMod(seed, 3L) match {
     case 0 =>
-      val colorType = Seq(0, 2, 6)(((seed / 3) % 3).toInt)
+      val colorType = Seq(0, 2, 6)(Math.floorMod(seed / 3, 3L).toInt)
       val div = if (colorType == 0) 1 else 2
       MediaCodecs.encodePng(
-        (16 + (seed % 16).toInt * 4) / div, (16 + ((seed * 7) % 16).toInt * 4) / div,
-        seed, colorType)
+        (16 + Math.floorMod(seed, 16L).toInt * 4) / div,
+        (16 + Math.floorMod(seed * 7, 16L).toInt * 4) / div, seed, colorType)
     case 1 => MediaCodecs.encodeWav(
-      8000 * (1 + (seed % 6)).toInt, 1 + (seed % 2).toInt,
-      64 + (seed % 64).toInt, seed)
+      8000 * (1 + Math.floorMod(seed, 6L)).toInt, 1 + Math.floorMod(seed, 2L).toInt,
+      64 + Math.floorMod(seed, 64L).toInt, seed)
     case _ => MediaCodecs.encodeJpegHeader(
-      32 + (seed % 100).toInt, 32 + ((seed * 13) % 100).toInt)
+      32 + Math.floorMod(seed, 100L).toInt, 32 + Math.floorMod(seed * 13, 100L).toInt)
   }
 
   /** Decode/feature-extract pass: pure binary→struct Catalyst expressions

@@ -1,5 +1,8 @@
 package graft.spark
 
+import com.fasterxml.jackson.core.JsonGenerator
+import com.fasterxml.jackson.core.util.MinimalPrettyPrinter
+import com.fasterxml.jackson.databind.{JsonNode, ObjectMapper}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import java.nio.file.{Files, Paths, StandardOpenOption}
@@ -28,7 +31,16 @@ object Snapshots {
   final case class PartitionMetric(partition: String, rows: Long,
                                    minKey: Long, maxKey: Long)
 
-  private def q(s: String) = "\"" + s.replace("\\", "\\\\").replace("\"", "\\\"") + "\""
+  /** Jackson, for the manifests and the ANN index meta file. */
+  private[spark] val json = new ObjectMapper()
+
+  /** `node` as one line of JSON with `": "` and `", "` separators. */
+  private[spark] def jsonLine(node: JsonNode): String =
+    json.writer(new MinimalPrettyPrinter {
+      override def writeObjectFieldValueSeparator(g: JsonGenerator): Unit = g.writeRaw(": ")
+      override def writeObjectEntrySeparator(g: JsonGenerator): Unit = g.writeRaw(", ")
+      override def writeArrayValueSeparator(g: JsonGenerator): Unit = g.writeRaw(", ")
+    }).writeValueAsString(node)
 
   /** Commit `df` as the next snapshot of `table`, partitioned by
     * `partitionCol` (a stable bucketing key, e.g. an S2 cell prefix), with
@@ -54,23 +66,19 @@ object Snapshots {
         r.getLong(1), r.getAs[Any]("min_key").toString.toDouble.toLong,
         r.getAs[Any]("max_key").toString.toDouble.toLong))
 
-    val schemaJson = df.schema.json
-    val manifest =
-      s"""{
-         |  "snapshot": $id,
-         |  "committed_at_epoch_ms": ${System.currentTimeMillis()},
-         |  "lineage": ${q(lineage)},
-         |  "partition_col": ${q(partitionCol)},
-         |  "metric_key": ${q(metricKey)},
-         |  "total_rows": ${metrics.map(_.rows).sum},
-         |  "partitions": [
-         |${metrics.sortBy(_.partition).map(m =>
-             s"""    {"partition": ${q(m.partition)}, "rows": ${m.rows}, "min_key": ${m.minKey}, "max_key": ${m.maxKey}}""")
-             .mkString(",\n")}
-         |  ],
-         |  "schema": $schemaJson
-         |}""".stripMargin
-    atomicWrite(Paths.get(s"$table/manifest-${"%06d".format(id)}.json"), manifest)
+    val manifest = json.createObjectNode()
+      .put("snapshot", id)
+      .put("committed_at_epoch_ms", System.currentTimeMillis())
+      .put("lineage", lineage)
+      .put("partition_col", partitionCol)
+      .put("metric_key", metricKey)
+      .put("total_rows", metrics.map(_.rows).sum)
+    val partitions = manifest.putArray("partitions")
+    metrics.sortBy(_.partition).foreach(m => partitions.addObject()
+      .put("partition", m.partition).put("rows", m.rows)
+      .put("min_key", m.minKey).put("max_key", m.maxKey))
+    manifest.set[JsonNode]("schema", json.readTree(df.schema.json))
+    atomicWrite(Paths.get(s"$table/manifest-${"%06d".format(id)}.json"), jsonLine(manifest))
     // the commit point: an atomic rename onto the latest pointer — readers
     // either see the previous snapshot or this one, never a torn pointer;
     // a crash between manifest write and this rename leaves an orphan
@@ -129,14 +137,9 @@ object Snapshots {
 
     // partition/metric columns come from the manifest, not the caller —
     // compaction must not be able to change the table layout
-    import graft.proj.ops.TinshiftOps.{JObj, JStr, Json}
-    val m = Json.parse(manifest(table, id)).asInstanceOf[JObj]
-    def field(k: String): String = m.fields(k) match {
-      case JStr(s) => s
-      case other => other.toString
-    }
-    val partitionCol = field("partition_col")
-    val metricKey = field("metric_key")
+    val m = json.readTree(manifest(table, id))
+    val partitionCol = m.get("partition_col").asText
+    val metricKey = m.get("metric_key").asText
 
     val df = read(spark, table, id)
       .repartition(numFiles, col(partitionCol))

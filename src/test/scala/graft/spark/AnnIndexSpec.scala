@@ -178,4 +178,38 @@ class AnnIndexSpec extends AnyFunSuite {
     assert(AnnIndex.verify(corpus.limit(50), vPath))
     assert(!AnnIndex.verify(corpus, vPath))
   }
+
+  test("a version with quotes, backslashes and control characters is a reuse hit") {
+    val vPath = java.nio.file.Files
+      .createTempDirectory("graft-ann-esc").toString + "/idx"
+    val version = "a\n\tb\u0001\"\\"
+    AnnIndex.build(corpus, vPath, planes = 6, tables = 8, version = version)
+    val metaFile = java.nio.file.Paths.get(vPath, "_graft_ann_meta.json")
+    val meta = new com.fasterxml.jackson.databind.ObjectMapper().readTree(metaFile.toFile)
+    assert(meta.get("version").asText == version)
+    assert(AnnIndex.readMeta(spark, vPath).version == version)
+    val before = java.nio.file.Files.getLastModifiedTime(metaFile)
+    AnnIndex.build(corpus, vPath, planes = 6, tables = 8, reuse = true, version = version)
+    assert(java.nio.file.Files.getLastModifiedTime(metaFile) == before,
+      "an equal version must be a reuse hit")
+  }
+
+  test("a meta without a version reads as unversioned; one without a numeric key is refused") {
+    val mPath = java.nio.file.Files
+      .createTempDirectory("graft-ann-key").toString + "/idx"
+    AnnIndex.build(corpus.limit(20), mPath, planes = 6, tables = 8, version = "v1")
+    val metaFile = java.nio.file.Paths.get(mPath, "_graft_ann_meta.json")
+    val meta = java.nio.file.Files.readString(metaFile)
+    def rewrite(txt: String): Unit = {
+      val out = org.apache.hadoop.fs.FileSystem.getLocal(spark.sparkContext.hadoopConfiguration)
+        .create(new org.apache.hadoop.fs.Path(metaFile.toUri), true)
+      out.write(txt.getBytes("UTF-8"))
+      out.close()
+    }
+    rewrite(meta.replace(", \"version\": \"v1\"", ""))
+    assert(AnnIndex.readMeta(spark, mPath).version == "")
+    rewrite(meta.replace("\"tables\"", "\"tbls\""))
+    val e = intercept[IllegalStateException](AnnIndex.readMeta(spark, mPath))
+    assert(e.getMessage.contains("'tables'"), e.getMessage)
+  }
 }

@@ -78,6 +78,19 @@ class SnapshotSpec extends AnyFunSuite {
     assert(!found)
   }
 
+  test("a manifest whose context has quotes, backslashes and control characters parses") {
+    val dir = Files.createTempDirectory("snaptest").toString + "/tbl4"
+    val context = "a\n\tb\u0001\"\\"
+    def proc(s: Long, e: Long) = spark.range(s, e)
+      .select(col("id"), (col("id") % 2).as("bucket"))
+    Snapshots.resumableRun(spark, dir, 0, 100, 100, proc, "bucket", "id", context = context)
+    val m = new com.fasterxml.jackson.databind.ObjectMapper().readTree(Snapshots.manifest(dir))
+    assert(m.get("lineage").asText == s"batch 0: ids [0, 100) of [0, 100); $context")
+    assert(m.get("total_rows").asLong == 100L)
+    assert(m.get("partitions").size == 2)
+    assert(m.get("schema").get("type").asText == "struct")
+  }
+
   test("compact bin-packs a fragmented snapshot without changing rows") {
     val dir = Files.createTempDirectory("snapcompact").toString + "/tbl"
     // a deliberately fragmented commit: 16 shuffle files per partition dir

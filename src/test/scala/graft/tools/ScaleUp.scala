@@ -8,7 +8,7 @@ import org.apache.spark.sql.functions._
   * i * max(key)), so the headline suite can be exercised above the largest
   * driver-provided SF on this host. Usage:
   *
-  *   runMain graft.tools.ScaleUp <inDir> <outDir> <factor>
+  *   sbt "Test/runMain graft.tools.ScaleUp <inDir> <outDir> <factor>"
   *
   * Value distributions are preserved exactly; keys stay unique and FK
   * relations (customer->orders->lineitem, part/supplier) stay consistent
