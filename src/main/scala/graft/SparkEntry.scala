@@ -65,6 +65,24 @@ object SparkEntry {
       lonOf(col("c_custkey")).cast("double").as("lon"),
       latOf(col("c_custkey")).cast("double").as("lat"))
 
+  /** The kNN queries' inputs: a dense customer-derived point lattice near
+    * Tokyo (16 per customer, integer arithmetic DuckDB replicates
+    * bit-for-bit), and 20 queries that sit off-lattice so no pair is
+    * coincident. */
+  private def tokyoLattice(s: SparkSession, dir: String): (DataFrame, DataFrame) = {
+    val pts = t(s, dir, "customer")
+      .select(col("c_custkey"), explode(sequence(lit(0), lit(15))).as("j"))
+      .select((col("c_custkey") * 16 + col("j")).as("point_id"))
+      .select(col("point_id"),
+        (lit(139.49) + (col("point_id") * 193 % 4000) * 0.0001).as("lon"),
+        (lit(35.49) + (col("point_id") * 149 % 4000) * 0.0001).as("lat"))
+    val q = s.range(0, 20).select(
+      col("id").as("q_id"),
+      (lit(139.59005) + (col("id") * 37 % 100) * 0.001031).as("lon"),
+      (lit(35.59005) + (col("id") * 59 % 100) * 0.001073).as("lat"))
+    (pts, q)
+  }
+
   /** integer-millimetre quantization (ulp-safe cross-engine compare). */
   private def mm(c: Column): Column = round(c * 1000).cast("long")
 
@@ -325,20 +343,8 @@ object SparkEntry {
       // a cross-implementation check, not a mirrored formula. Both engines
       // rank on metre-quantized distance (the two solutions agree to
       // ~1e-5 m at this <60 km range, so a 1 m bucket cannot flip), ties
-      // by point_id. Points: a dense
-      // customer-derived lattice near Tokyo (16 per customer, integer
-      // arithmetic DuckDB replicates bit-for-bit); queries sit off-lattice
-      // so no pair is coincident.
-      val pts = t(s, dir, "customer")
-        .select(col("c_custkey"), explode(sequence(lit(0), lit(15))).as("j"))
-        .select((col("c_custkey") * 16 + col("j")).as("point_id"))
-        .select(col("point_id"),
-          (lit(139.49) + (col("point_id") * 193 % 4000) * 0.0001).as("lon"),
-          (lit(35.49) + (col("point_id") * 149 % 4000) * 0.0001).as("lat"))
-      val q = s.range(0, 20).select(
-        col("id").as("q_id"),
-        (lit(139.59005) + (col("id") * 37 % 100) * 0.001031).as("lon"),
-        (lit(35.59005) + (col("id") * 59 % 100) * 0.001073).as("lat"))
+      // by point_id.
+      val (pts, q) = tokyoLattice(s, dir)
       // density-adaptive cell level: candidate count per query is
       // density x reach^2, so a level tuned for the sparsest corpus makes
       // every point a candidate at 100x density. Guaranteed ring reach
@@ -361,21 +367,12 @@ object SparkEntry {
       // reproduce the brute-force ellipsoidal answer. Output re-ranked on
       // metre-quantized distance with point_id ties, matching the
       // oracle's bucketing convention.
-      val pts = t(s, dir, "customer")
-        .select(col("c_custkey"), explode(sequence(lit(0), lit(15))).as("j"))
-        .select((col("c_custkey") * 16 + col("j")).as("point_id"))
-        .select(col("point_id"),
-          (lit(139.49) + (col("point_id") * 193 % 4000) * 0.0001).as("lon"),
-          (lit(35.49) + (col("point_id") * 149 % 4000) * 0.0001).as("lat"))
-      val q = s.range(0, 20).select(
-        col("id").as("q_id"),
-        (lit(139.59005) + (col("id") * 37 % 100) * 0.001031).as("lon"),
-        (lit(35.59005) + (col("id") * 59 % 100) * 0.001073).as("lat"))
-        // sparse outlier ~30 km southwest of the cloud: its true neighbors
-        // lie far outside the starting 2-ring reach, so this row is exact
-        // ONLY under the adaptive ring-expansion contract
-        .unionByName(s.range(20, 21).select(col("id").as("q_id"),
-          lit(139.30).as("lon"), lit(35.30).as("lat")))
+      val (pts, dense) = tokyoLattice(s, dir)
+      // sparse outlier ~30 km southwest of the cloud: its true neighbors
+      // lie far outside the starting 2-ring reach, so this row is exact
+      // ONLY under the adaptive ring-expansion contract
+      val q = dense.unionByName(s.range(20, 21).select(col("id").as("q_id"),
+        lit(139.30).as("lon"), lit(35.30).as("lat")))
       // density-adaptive hex size: guaranteed ring reach (2 rings of
       // inradius sqrt(3)/2 * sizeM, deflated by webmerc's 1/cos(35.6°))
       // keeps >= 2.5x margin over the worst-case 5th-neighbor radius for

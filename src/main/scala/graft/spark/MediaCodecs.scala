@@ -133,10 +133,11 @@ object MediaCodecs {
     * returns it with null pixels. Otherwise it gathers every IDAT, inflates
     * the zlib stream and reconstructs each scanline through the five PNG
     * filter types (None/Sub/Up/Average/Paeth, spec §6). None for a
-    * negative chunk length, a short IHDR or a truncated IDAT, no IHDR, and
-    * with `pixels` for other than 8-bit colour types 0/2/4/6, non-positive
-    * dimensions or more than 64 MiB of pixels, a stream that is truncated,
-    * corrupt or asks for a preset dictionary, or an unknown filter type. */
+    * negative chunk length, a short IHDR or a truncated IDAT, no IHDR, a
+    * width or height below 1, and with `pixels` for other than 8-bit
+    * colour types 0/2/4/6 or more than 64 MiB of pixels, a stream that is
+    * truncated, corrupt or asks for a preset dictionary, or an unknown
+    * filter type. */
   private def pngFrame(bytes: Array[Byte], pixels: Boolean): Option[(MediaInfo, Array[Byte])] = {
     if (bytes.length < 33) return None
     var i = 0
@@ -156,6 +157,7 @@ object MediaCodecs {
         depth = bytes(p + 16) & 0xff
         info = MediaInfo("image", bb.getInt(p + 8), bb.getInt(p + 12), 0,
           pngChannels(bytes(p + 17) & 0xff))
+        if (info.width < 1 || info.height < 1) return None
         if (!pixels) return Some((info, null))
       } else if (typ == "IDAT" && pixels) {
         if (pos + 8 + len > bytes.length) return None
@@ -167,7 +169,7 @@ object MediaCodecs {
     val ch = info.channels
     if (ch == 0) return None
     val w = info.width; val h = info.height
-    if (w <= 0 || h <= 0 || w.toLong * h * ch > 64L * 1024 * 1024) return None
+    if (w.toLong * h * ch > 64L * 1024 * 1024) return None
     val stride = w * ch
     val raw = new Array[Byte](h * (1 + stride))
     val inf = new java.util.zip.Inflater()
@@ -245,12 +247,13 @@ object MediaCodecs {
   }
 
   /** parse RIFF/WAVE: the first `fmt ` chunk's channels and sample rate;
-    * None when that chunk is shorter than 16 bytes — see `wavChunk`. */
+    * None when that chunk is shorter than 16 bytes or gives a channel count
+    * or rate below 1 — see `wavChunk`. */
   def decodeWav(bytes: Array[Byte]): Option[MediaInfo] =
     wavChunk(bytes, "fmt ").collect { case (p, len) if len >= 16 && p + 16 <= bytes.length =>
       val bb = ByteBuffer.wrap(bytes).order(ByteOrder.LITTLE_ENDIAN)
       MediaInfo("audio", 0, 0, bb.getInt(p + 4), bb.getShort(p + 2).toInt)
-    }
+    }.filter(i => i.channels >= 1 && i.sampleRate >= 1)
 
   /** FULL PCM sample decode: the first `data` chunk's little-endian 16-bit
     * samples; None when that chunk runs past the data — see `wavChunk`. */

@@ -1,6 +1,7 @@
 package graft.spark
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 import graft.index.S2CellId
@@ -21,21 +22,47 @@ import graft.index.S2CellId
   */
 object SpatialJoins {
 
+  /** Conservative min S2 cell extent in degrees at `level` over latitudes
+    * minLat..maxLat, as (lon pitch, lat pitch): a face spans 90° over
+    * 2^level cells; the uv->st quadratic transform shrinks edge cells by up
+    * to ~1.7x, and high-latitude lon extent shrinks by cos(lat). */
+  private def cellPitch(minLat: Double, maxLat: Double, level: Int): (Double, Double) = {
+    val maxAbsLat = math.min(89.9, math.max(math.abs(minLat), math.abs(maxLat)))
+    val pitchLat = 90.0 / (1L << math.min(level, 28)) / 1.7
+    (pitchLat * math.max(0.05, math.cos(maxAbsLat.toRadians)), pitchLat)
+  }
+
+  /** Sample steps along `span` degrees: two per cell `pitch`, at least `least`. */
+  private def steps(span: Double, pitch: Double, least: Int): Int =
+    math.max(least, math.ceil(2.0 * span / pitch).toInt)
+
+  /** Add to `cells` the `level` cell of every point of an (si+1) x (sj+1)
+    * grid over the rectangle (x0, y0)-(x1, y1), each with its neighbor ring. */
+  private def sampleRect(cells: collection.mutable.LinkedHashSet[Long],
+                         x0: Double, y0: Double, x1: Double, y1: Double,
+                         si: Int, sj: Int, level: Int): Unit = {
+    var i = 0
+    while (i <= si) {
+      var j = 0
+      while (j <= sj) {
+        val c = S2CellId.cellId(x0 + (x1 - x0) * i / si, y0 + (y1 - y0) * j / sj, level)
+        cells += c
+        cells ++= S2CellId.allNeighbors(c)
+        j += 1
+      }
+      i += 1
+    }
+  }
+
   /** Cover a lon/lat bbox with S2 cells at `level`. Grid sampling of the box
     * plus one neighbor ring per sample; the step count adapts to the bbox
     * extent vs the cell pitch at `level` so interior cells can't fall
     * between samples (a fixed grid silently under-covered large boxes). */
   def coverBBox(minLon: Double, minLat: Double, maxLon: Double, maxLat: Double,
                 level: Int): Seq[Long] = {
-    val cells = collection.mutable.LinkedHashSet[Long]()
-    // conservative min cell extent in degrees at `level`: a face spans 90°
-    // over 2^level cells; the uv->st quadratic transform shrinks edge cells
-    // by up to ~1.7x, and high-latitude lon extent shrinks by cos(lat)
-    val maxAbsLat = math.min(89.9, math.max(math.abs(minLat), math.abs(maxLat)))
-    val pitchLat = 90.0 / (1L << math.min(level, 28)) / 1.7
-    val pitchLon = pitchLat * math.max(0.05, math.cos(maxAbsLat.toRadians))
+    val (pitchLon, pitchLat) = cellPitch(minLat, maxLat, level)
     def stepsFor(span: Double, pitch: Double): Int = {
-      val need = math.max(8, math.ceil(2.0 * span / pitch).toInt)
+      val need = steps(span, pitch, 8)
       // fail LOUD instead of silently under-covering: a bbox needing more
       // than 4096 cells per axis means `level` is far too fine for the
       // polygon scale (16M+ cover cells per polygon would also be the
@@ -47,19 +74,8 @@ object SpatialJoins {
     }
     val stepsI = stepsFor(maxLon - minLon, pitchLon)
     val stepsJ = stepsFor(maxLat - minLat, pitchLat)
-    var i = 0
-    while (i <= stepsI) {
-      var j = 0
-      while (j <= stepsJ) {
-        val lon = minLon + (maxLon - minLon) * i / stepsI
-        val lat = minLat + (maxLat - minLat) * j / stepsJ
-        val c = S2CellId.cellId(lon, lat, level)
-        cells += c
-        cells ++= S2CellId.allNeighbors(c)
-        j += 1
-      }
-      i += 1
-    }
+    val cells = collection.mutable.LinkedHashSet[Long]()
+    sampleRect(cells, minLon, minLat, maxLon, maxLat, stepsI, stepsJ, level)
     cells.toSeq
   }
 
@@ -84,11 +100,8 @@ object SpatialJoins {
       if (lats(i) > maxLat) maxLat = lats(i)
       i += 1
     }
-    val maxAbsLat = math.min(89.9, math.max(math.abs(minLat), math.abs(maxLat)))
-    val pitchLat = 90.0 / (1L << math.min(level, 28)) / 1.7
-    val pitchLon = pitchLat * math.max(0.05, math.cos(maxAbsLat.toRadians))
-    def stepsNeeded(span: Double, pitch: Double): Int =
-      math.max(1, math.ceil(2.0 * span / pitch).toInt)
+    val (pitchLon, pitchLat) = cellPitch(minLat, maxLat, level)
+    def stepsNeeded(span: Double, pitch: Double): Int = steps(span, pitch, 1)
     // same loud-failure contract as coverBBox: a level far too fine for
     // the polygon scale is a wrong plan, not a silent 16M-cell cover
     require(stepsNeeded(maxLon - minLon, pitchLon) <= 4096 &&
@@ -150,26 +163,11 @@ object SpatialJoins {
       false
     }
     val cells = collection.mutable.LinkedHashSet[Long]()
-    def emit(rx0: Double, ry0: Double, rx1: Double, ry1: Double): Unit = {
-      val si = stepsNeeded(rx1 - rx0, pitchLon)
-      val sj = stepsNeeded(ry1 - ry0, pitchLat)
-      var a = 0
-      while (a <= si) {
-        var b = 0
-        while (b <= sj) {
-          val c = S2CellId.cellId(rx0 + (rx1 - rx0) * a / si,
-            ry0 + (ry1 - ry0) * b / sj, level)
-          cells += c
-          cells ++= S2CellId.allNeighbors(c)
-          b += 1
-        }
-        a += 1
-      }
-    }
     def descend(rx0: Double, ry0: Double, rx1: Double, ry1: Double): Unit = {
       if (!rectIntersects(rx0, ry0, rx1, ry1)) return
-      if (stepsNeeded(rx1 - rx0, pitchLon) <= 16 &&
-          stepsNeeded(ry1 - ry0, pitchLat) <= 16) { emit(rx0, ry0, rx1, ry1); return }
+      val si = stepsNeeded(rx1 - rx0, pitchLon)
+      val sj = stepsNeeded(ry1 - ry0, pitchLat)
+      if (si <= 16 && sj <= 16) { sampleRect(cells, rx0, ry0, rx1, ry1, si, sj, level); return }
       val mx = (rx0 + rx1) / 2; val my = (ry0 + ry1) / 2
       descend(rx0, ry0, mx, my); descend(mx, ry0, rx1, my)
       descend(rx0, my, mx, ry1); descend(mx, my, rx1, ry1)
@@ -205,29 +203,32 @@ object SpatialJoins {
     * nearest points per query by exact geodesic distance.
     *
     * Candidates: each query expands to its cell + `rings` rings at `level`;
-    * points are bucketed once by the same level. The expansion is a
-    * broadcast when queries are small, a shuffle equi-join otherwise.
-    */
-  /** `distQuantM` > 0 ranks on the distance quantized to that many metres
-    * (emitted as `dist_q` = round(dist_m / distQuantM), ties broken by
-    * point_id) — a deterministic ordering that an independent engine can
-    * reproduce despite libm ulp differences; 0 ranks on the raw double. */
+    * points are bucketed once by the same level, and the expanded queries
+    * ride as a broadcast. `distQuantM` > 0 ranks on the distance quantized
+    * to that many metres (emitted as `dist_q` = round(dist_m / distQuantM),
+    * ties broken by point_id) — a deterministic ordering that an
+    * independent engine can reproduce despite libm ulp differences; 0 ranks
+    * on the raw double. */
   def knnJoin(queries: DataFrame, points: DataFrame, k: Int,
               level: Int = 8, rings: Int = 2,
-              broadcastQueries: Boolean = true,
-              distQuantM: Double = 0.0): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
+              distQuantM: Double = 0.0): DataFrame =
+    ringJoin(
+      points.withColumn("cell", GeoFunctions.s2Cell(col("lon"), col("lat"), lit(level))),
+      queries
+        .withColumn("cell", explode(GeoFunctions.ringCells(
+          col("lon"), col("lat"), lit(level), lit(rings))))
+        .withColumnRenamed("lon", "q_lon")
+        .withColumnRenamed("lat", "q_lat"),
+      Seq("cell"), k, distQuantM)
 
-    val q = queries
-      .withColumn("cell", explode(GeoFunctions.ringCells(
-        col("lon"), col("lat"), lit(level), lit(rings))))
-      .withColumnRenamed("lon", "q_lon")
-      .withColumnRenamed("lat", "q_lat")
-    val p = points.withColumn("cell",
-      GeoFunctions.s2Cell(col("lon"), col("lat"), lit(level)))
-
-    val joined = (if (broadcastQueries) p.join(broadcast(q), Seq("cell"))
-                  else p.join(q, Seq("cell")))
+  /** The ring join both kNN joins run: points `p` (point_id, lon, lat,
+    * `keys`) meet the broadcast query ring keys `q` (q_id, q_lon, q_lat,
+    * `keys`) in an equi-join on `keys`; each candidate gets its geodesic
+    * `dist_m` (and `dist_q`, see knnJoin), and each q_id keeps its k best
+    * by (distance, point_id), numbered `rnk`. */
+  private def ringJoin(p: DataFrame, q: DataFrame, keys: Seq[String], k: Int,
+                       distQuantM: Double): DataFrame = {
+    val joined = p.join(broadcast(q), keys)
       .withColumn("dist_m", GeoFunctions.geodesicDistance(
         col("q_lon"), col("q_lat"), col("lon"), col("lat")))
     val (ranked, order) =
@@ -240,86 +241,76 @@ object SpatialJoins {
     ranked
       .withColumn("rnk", row_number().over(w))
       .where(col("rnk") <= k)
-      .drop("cell")
+      .drop(keys: _*)
   }
+
+  /** Ring doublings stop here: hexKnnJoin fails rather than widen further. */
+  private val MaxHexRings = 256
 
   /** Hex-grid kNN: the hex analogue of knnJoin. Both sides bin into the
     * flat-top axial hex grid over web-mercator metres (plane x/y columns);
-    * queries expand hexRing(rings), points bucket once, candidates meet in
-    * an equi-join on (hq, hr), exact Karney distance ranks.
+    * queries expand hexRing(rings), points bin into the same grid,
+    * candidates meet in the ring join on (hq, hr), exact Karney distance
+    * ranks.
     *
-    * Exactness contract (adaptive = true, the default): a query's top-k is
-    * accepted only when k candidates were found AND the k-th distance is
-    * within the ring set's lower bound — any point outside `rings` grid
-    * steps sits at planar distance ≥ (rings − 0.5)·sizeM from the query
-    * (outside hexes are ≥ rings+1 steps away; centers of hexes n steps
-    * apart are ≥ 1.5·n·sizeM apart, minus one circumradius per endpoint),
-    * deflated to ground metres by web-mercator's cos(lat) at the ring
-    * extent's worst latitude. Unsatisfied queries re-run with doubled
-    * rings until exact (loud failure past maxRings). Fixed-ring behavior
-    * (the silent bounded-candidate approximation) is adaptive = false. */
+    * Exactness contract: a query's top-k is accepted only when k
+    * candidates were found AND the k-th distance is within the ring set's
+    * lower bound — any point outside `rings` grid steps sits at planar
+    * distance ≥ (rings − 0.5)·sizeM from the query (outside hexes are
+    * ≥ rings+1 steps away; centers of hexes n steps apart are ≥ 1.5·n·sizeM
+    * apart, minus one circumradius per endpoint), deflated to ground metres
+    * by web-mercator's cos(lat) at the ring extent's worst latitude.
+    * Unsatisfied queries re-run with doubled rings until exact (loud failure
+    * past 256 rings). Each round's ranked rows and the next round's
+    * pending queries are local checkpoints, so no round re-runs an earlier
+    * one and the job count grows linearly with the rounds. */
   def hexKnnJoin(queries: DataFrame, points: DataFrame, k: Int,
-                 sizeM: Double, rings: Int = 2,
-                 broadcastQueries: Boolean = true,
-                 adaptive: Boolean = true, maxRings: Int = 256): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
-
-    def webmerc(df: DataFrame): DataFrame = df
-      .withColumn("wm", ProjFunctions.projTrans2(col("lon"), col("lat"),
-        "proj=webmerc ellps=WGS84"))
-    val p = webmerc(points)
-      .withColumn("hex", GeoFunctions.hexBin(col("wm.x"), col("wm.y"), lit(sizeM)))
-      .select(col("point_id"), col("lon"), col("lat"),
-        col("hex.q").as("hq"), col("hex.r").as("hr"))
-
-    def fixedRing(qdf: DataFrame, r: Int): DataFrame = {
-      val q = webmerc(qdf)
-        .withColumn("hex0", GeoFunctions.hexBin(col("wm.x"), col("wm.y"), lit(sizeM)))
-        .withColumn("hex", explode(GeoFunctions.hexRing(
-          col("hex0.q"), col("hex0.r"), lit(r))))
-        .select(col("q_id"), col("lon").as("q_lon"), col("lat").as("q_lat"),
-          col("hex.q").as("hq"), col("hex.r").as("hr"))
-      val joined = (if (broadcastQueries) p.join(broadcast(q), Seq("hq", "hr"))
-                    else p.join(q, Seq("hq", "hr")))
-        .withColumn("dist_m", GeoFunctions.geodesicDistance(
-          col("q_lon"), col("q_lat"), col("lon"), col("lat")))
-      val w = Window.partitionBy(col("q_id")).orderBy(col("dist_m"), col("point_id"))
-      joined
-        .withColumn("rnk", row_number().over(w))
-        .where(col("rnk") <= k)
-        .drop("hq", "hr")
-    }
-
-    if (!adaptive) return fixedRing(queries, rings)
-
-    var r = rings
-    var pending = queries
-    val parts = scala.collection.mutable.ListBuffer.empty[DataFrame]
-    var done = false
-    while (!done) {
-      val res = fixedRing(pending, r)
+                 sizeM: Double, rings: Int = 2): DataFrame = {
+    def rounds(pending: DataFrame, r: Int): List[DataFrame] = {
       // ground-metre lower bound to anything outside the ring set: the
       // planar (r − 0.5)·sizeM, deflated by cos at the worst latitude the
       // ring extent can reach (web-mercator ground = planar · cos(lat))
       val padDeg = math.toDegrees((r + 2) * math.sqrt(3.0) * sizeM / 6378137.0)
-      val okIds = res.groupBy("q_id")
-        .agg(max("dist_m").as("kth"), count(lit(1)).as("cnt"),
-          first("q_lat").as("ql"))
-        .where(col("cnt") === k && col("kth") <=
-          lit((r - 0.5) * sizeM) *
-            cos(radians(least(lit(89.5), abs(col("ql")) + lit(padDeg)))))
-        .select("q_id")
-      parts += res.join(broadcast(okIds), Seq("q_id"))
-      pending = pending.join(broadcast(okIds), Seq("q_id"), "left_anti")
-      if (pending.isEmpty) done = true
+      val w = Window.partitionBy(col("q_id"))
+      val res = hexKnnRound(pending, points, k, sizeM, r)
+        .withColumn("exact", count(lit(1)).over(w) === k &&
+          max(col("dist_m")).over(w) <= lit((r - 0.5) * sizeM) *
+            cos(radians(least(lit(89.5), abs(col("q_lat")) + lit(padDeg)))))
+        .localCheckpoint(true)
+      val exact = res.where(col("exact"))
+        .select("q_id", "point_id", "lon", "lat", "q_lon", "q_lat", "dist_m", "rnk")
+      val okIds = res.where(col("exact") && col("rnk") === 1).select("q_id")
+      val next = pending.join(broadcast(okIds), Seq("q_id"), "left_anti")
+        .localCheckpoint(true)
+      if (next.isEmpty) List(exact)
       else {
-        require(r < maxRings,
-          s"hexKnnJoin: k=$k not provably exact within $maxRings rings of " +
-            s"sizeM=$sizeM — raise maxRings/sizeM or check point density")
-        r = math.min(maxRings, r * 2)
+        require(r < MaxHexRings,
+          s"hexKnnJoin: k=$k not provably exact within $MaxHexRings rings of " +
+            s"sizeM=$sizeM — raise sizeM or check point density")
+        exact :: rounds(next, math.min(MaxHexRings, r * 2))
       }
     }
-    parts.reduce(_ unionByName _)
+    rounds(queries, rings).reduce(_ unionByName _)
+  }
+
+  /** One hexKnnJoin round: the top-k within a fixed `rings` reach, with no
+    * exactness test — a query whose neighbors lie farther out gets wrong or
+    * too few rows. */
+  private[spark] def hexKnnRound(queries: DataFrame, points: DataFrame, k: Int,
+                                 sizeM: Double, rings: Int): DataFrame = {
+    def withHex(df: DataFrame): DataFrame = df
+      .withColumn("wm", ProjFunctions.projTrans2(col("lon"), col("lat"),
+        "proj=webmerc ellps=WGS84"))
+      .withColumn("hex", GeoFunctions.hexBin(col("wm.x"), col("wm.y"), lit(sizeM)))
+    ringJoin(
+      withHex(points).select(col("point_id"), col("lon"), col("lat"),
+        col("hex.q").as("hq"), col("hex.r").as("hr")),
+      withHex(queries)
+        .select(col("q_id"), col("lon").as("q_lon"), col("lat").as("q_lat"),
+          explode(GeoFunctions.hexRing(col("hex.q"), col("hex.r"), lit(rings))).as("ring"))
+        .select(col("q_id"), col("q_lon"), col("q_lat"),
+          col("ring.q").as("hq"), col("ring.r").as("hr")),
+      Seq("hq", "hr"), k, 0.0)
   }
 
   /** Raster-tile ↔ vector assignment: tag each point with its z/x/y tile and

@@ -1,5 +1,6 @@
 package graft.spark
 
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
@@ -135,8 +136,8 @@ class HexGridSpec extends AnyFunSuite {
       }.toSet
 
     // fixed 2 rings: the sparse query's candidate set is empty or wrong
-    val fixed = SpatialJoins.hexKnnJoin(queries, points, k = 3,
-      sizeM = 500.0, rings = 2, adaptive = false)
+    val fixed = SpatialJoins.hexKnnRound(queries, points, k = 3,
+      sizeM = 500.0, rings = 2)
       .select("q_id", "point_id", "rnk").as[(Long, Long, Int)]
       .collect().toSet
     assert(fixed != brute(3), "fixed rings should be wrong for the sparse query")
@@ -147,6 +148,79 @@ class HexGridSpec extends AnyFunSuite {
       .select("q_id", "point_id", "rnk").as[(Long, Long, Int)]
       .collect().toSet
     assert(adaptiveRes == brute(3))
+  }
+
+  /** Spark jobs started while `body` runs. A listener counts job starts
+    * between a start and an end marker job; the listener bus delivers
+    * events in order, so when the end marker arrives every job of `body`
+    * has been counted. */
+  private def jobsOf(body: => Unit): Int = {
+    val sc = spark.sparkContext
+    val jobs = new java.util.concurrent.atomic.AtomicInteger
+    val ended = new java.util.concurrent.CountDownLatch(1)
+    @volatile var counting = false
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        Option(e.properties).map(_.getProperty("jobsOf")).orNull match {
+          case "start" => counting = true
+          case "end" => ended.countDown()
+          case _ => if (counting) jobs.incrementAndGet()
+        }
+    }
+    def marker(phase: String): Unit = {
+      sc.setLocalProperty("jobsOf", phase)
+      try sc.parallelize(Seq(1), 1).count() finally sc.setLocalProperty("jobsOf", null)
+    }
+    sc.addSparkListener(listener)
+    try {
+      marker("start")
+      body
+      marker("end")
+      assert(ended.await(60, java.util.concurrent.TimeUnit.SECONDS))
+      jobs.get
+    } finally sc.removeSparkListener(listener)
+  }
+
+  test("hexKnnJoin runs a number of jobs linear in its ring doublings") {
+    // a dense cloud and one query ~4.5 km west of it: at sizeM=500 its
+    // 3rd neighbor is provably exact only at 16 rings, the 4th round
+    val rnd = new scala.util.Random(5)
+    val pts = (0 until 2000).map { i =>
+      (i.toLong, 139.6 + rnd.nextDouble() * 0.2, 35.6 + rnd.nextDouble() * 0.2)
+    }
+    val qs = Seq((0L, 139.7, 35.7), (1L, 139.55, 35.7))
+    val (k, sizeM) = (3, 500.0)
+    val g = graft.core.Geodesic.WGS84
+    val want = qs.flatMap { case (qid, qlon, qlat) =>
+      pts.map { case (pid, plon, plat) => (pid, g.distance(qlat, qlon, plat, plon)) }
+        .sortBy { case (pid, d) => (d, pid) }.take(k).zipWithIndex.map {
+          case ((pid, d), idx) => (qid, qlat, pid, idx + 1, d)
+        }
+    }
+    // the round that proves a query exact, by hexKnnJoin's contract
+    def roundsFor(qlat: Double, kth: Double): Int =
+      Iterator.iterate(2)(_ * 2).indexWhere { r =>
+        val padDeg = math.toDegrees((r + 2) * math.sqrt(3.0) * sizeM / 6378137.0)
+        kth <= (r - 0.5) * sizeM * math.cos(math.toRadians(math.min(89.5, qlat.abs + padDeg)))
+      } + 1
+    val rounds = want.filter(_._4 == k).map(w => roundsFor(w._2, w._5)).max
+    assert(rounds == 4)
+
+    val points = pts.toDF("point_id", "lon", "lat")
+    val queries = qs.toDF("q_id", "lon", "lat")
+    var got = Set.empty[(Long, Long, Int)]
+    val jobs = jobsOf {
+      got = SpatialJoins.hexKnnJoin(queries, points, k = k, sizeM = sizeM, rings = 2)
+        .select("q_id", "point_id", "rnk").as[(Long, Long, Int)]
+        .collect().toSet
+    }
+    assert(got == want.map(w => (w._1, w._3, w._4)).toSet)
+    info(s"$jobs jobs for $rounds rounds")
+    // a round runs 6 jobs: the ranked rows' checkpoint (query broadcast,
+    // window shuffle, result), the pending set's checkpoint (id broadcast,
+    // result) and its emptiness test; the bound leaves one spare a round.
+    // A loop whose rounds re-run earlier rounds grows with their square.
+    assert(jobs <= 7 * rounds + 2, s"$jobs jobs for $rounds rounds")
   }
 
   test("globalHexCell (isea + hex bin) is deterministic and spreads cells") {

@@ -66,6 +66,16 @@ class MediaPngWavSweepSpec extends AnyFunSuite {
     }
   }
 
+  test("every header a mutant decodes to has positive dimensions, channels and rate") {
+    for (((name, m), i) <- mutants.zipWithIndex; info <- MediaCodecs.decode(m)) {
+      val ok = info.kind match {
+        case "image" => info.width >= 1 && info.height >= 1
+        case _ => info.channels >= 1 && info.sampleRate >= 1
+      }
+      assert(ok, s"$name mutant $i decodes to $info")
+    }
+  }
+
   test("a zlib stream that asks for a preset dictionary decodes to None") {
     for ((name, good) <- pngs; flg <- Seq(0x20, 0x3f)) {
       val m = good.clone()
