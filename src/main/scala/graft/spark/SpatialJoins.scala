@@ -101,16 +101,15 @@ object SpatialJoins {
       i += 1
     }
     val (pitchLon, pitchLat) = cellPitch(minLat, maxLat, level)
-    def stepsNeeded(span: Double, pitch: Double): Int = steps(span, pitch, 1)
+    val stepsLon = steps(maxLon - minLon, pitchLon, 1)
+    val stepsLat = steps(maxLat - minLat, pitchLat, 1)
     // same loud-failure contract as coverBBox: a level far too fine for
     // the polygon scale is a wrong plan, not a silent 16M-cell cover
-    require(stepsNeeded(maxLon - minLon, pitchLon) <= 4096 &&
-            stepsNeeded(maxLat - minLat, pitchLat) <= 4096,
+    require(stepsLon <= 4096 && stepsLat <= 4096,
       f"coverRing: bbox span needs > 4096 sample steps at S2 level $level — " +
         "use a coarser level for polygons this large")
     // fast path: small boxes gain nothing from pruning
-    if (stepsNeeded(maxLon - minLon, pitchLon).toLong *
-        stepsNeeded(maxLat - minLat, pitchLat) <= 1024)
+    if (stepsLon.toLong * stepsLat <= 1024)
       return coverBBox(minLon, minLat, maxLon, maxLat, level)
 
     def inRing(lon: Double, lat: Double): Boolean = {
@@ -165,8 +164,8 @@ object SpatialJoins {
     val cells = collection.mutable.LinkedHashSet[Long]()
     def descend(rx0: Double, ry0: Double, rx1: Double, ry1: Double): Unit = {
       if (!rectIntersects(rx0, ry0, rx1, ry1)) return
-      val si = stepsNeeded(rx1 - rx0, pitchLon)
-      val sj = stepsNeeded(ry1 - ry0, pitchLat)
+      val si = steps(rx1 - rx0, pitchLon, 1)
+      val sj = steps(ry1 - ry0, pitchLat, 1)
       if (si <= 16 && sj <= 16) { sampleRect(cells, rx0, ry0, rx1, ry1, si, sj, level); return }
       val mx = (rx0 + rx1) / 2; val my = (ry0 + ry1) / 2
       descend(rx0, ry0, mx, my); descend(mx, ry0, rx1, my)
