@@ -133,17 +133,6 @@ object GeoMath {
   def phi2(ts0: Double, e: Double): Double =
     math.atan(sinhpsi2tanphi((1 / ts0 - ts0) / 2, e))
 
-  /** Authalic q (Snyder 3-11/3-12); reference src/latitudes.cpp
-    * pj_authalic_lat_q. */
-  def authalicQ(sinphi: Double, e: Double, oneEs: Double): Double = {
-    if (e >= 1e-7) {
-      val eSin = e * sinphi
-      val den = 1.0 - eSin * eSin
-      if (den == 0.0) Double.PositiveInfinity
-      else oneEs * (sinphi / den + atanh(eSin) / e)
-    } else 2 * sinphi
-  }
-
   // ---------------------------------------------------------------------
   // Auxiliary latitudes: order-6 series engine (Karney 2024, arXiv:2212.05818)
   // ---------------------------------------------------------------------
@@ -279,13 +268,6 @@ object GeoMath {
 
   def auxlatConvert(zeta: Double, szeta: Double, czeta: Double, F: Array[Double]): Double =
     zeta + clenshaw(szeta, czeta, F, AUX_ORDER)
-
-  /** sine/cosine form (high relative accuracy near poles): returns (seta, ceta). */
-  def auxlatConvertSC(szeta: Double, czeta: Double, F: Array[Double]): (Double, Double) = {
-    val delta = clenshaw(szeta, czeta, F, AUX_ORDER)
-    val sd = math.sin(delta); val cd = math.cos(delta)
-    (szeta * cd + czeta * sd, czeta * cd - szeta * sd)
-  }
 
   /** Rectifying radius = quarter meridian / (pi/2 * (a+b)/2 * ... ); series
     * coefficients ((2k-3)!!/(2k)!!)^2. */

@@ -20,7 +20,7 @@ object Factors {
       dxDlam: Double, dxDphi: Double, dyDlam: Double, dyDphi: Double)
 
   /** mutable mirror of ProjFactors for allocation-free per-row callers
-    * (the Spark FactorsKernels path). */
+    * (the Spark FactorsCall path). */
   final class ProjFactorsM {
     var meridionalScale = 0.0; var parallelScale = 0.0; var arealScale = 0.0
     var angularDistortion = 0.0; var meridianParallelAngle = 0.0
@@ -115,43 +115,53 @@ object Factors {
     out.dxDlam = xl; out.dxDphi = xp; out.dyDlam = yl; out.dyDphi = yp
   }
 
+  /** mutable envelope for allocation-free per-row callers (the Spark
+    * TransBoundsCall path), with the Coord each edge point is transformed
+    * in. */
+  final class BoundsM {
+    var xmin = 0.0; var ymin = 0.0; var xmax = 0.0; var ymax = 0.0
+    val c = new Coord
+  }
+
   /** Transform a bounding box by transforming densified edges — the
     * driver-side partition-pruning helper (reference src/trans_bounds.cpp:
     * 21x21 default densification; output bbox = min/max over all edge
-    * points that transform successfully). */
+    * points that transform successfully), into `out`, allocating nothing. */
   def transBounds(P: PJ, forward: Boolean,
                   xmin: Double, ymin: Double, xmax: Double, ymax: Double,
-                  densifyPts: Int = 21): (Double, Double, Double, Double) = {
+                  out: BoundsM, densifyPts: Int = 21): Unit = {
     require(densifyPts >= 2, "densify_pts must be >= 2")
-    var oxMin = Double.PositiveInfinity
-    var oyMin = Double.PositiveInfinity
-    var oxMax = Double.NegativeInfinity
-    var oyMax = Double.NegativeInfinity
+    out.xmin = Double.PositiveInfinity; out.ymin = Double.PositiveInfinity
+    out.xmax = Double.NegativeInfinity; out.ymax = Double.NegativeInfinity
     var any = false
     val n = densifyPts
-    def visit(x: Double, y: Double): Unit = {
-      val c = new Coord
-      c.set(x, y, 0, 0)
-      Dispatch.trans(P, forward, c)
-      if (!c.isError && c.x != Double.PositiveInfinity) {
-        any = true
-        if (c.x < oxMin) oxMin = c.x
-        if (c.x > oxMax) oxMax = c.x
-        if (c.y < oyMin) oyMin = c.y
-        if (c.y > oyMax) oyMax = c.y
-      }
-    }
     var i = 0
     while (i < n) {
       val fx = xmin + (xmax - xmin) * i / (n - 1)
       val fy = ymin + (ymax - ymin) * i / (n - 1)
-      visit(fx, ymin); visit(fx, ymax) // bottom + top edges
-      visit(xmin, fy); visit(xmax, fy) // left + right edges
+      any |= visitEdge(P, forward, fx, ymin, out) // bottom edge
+      any |= visitEdge(P, forward, fx, ymax, out) // top edge
+      any |= visitEdge(P, forward, xmin, fy, out) // left edge
+      any |= visitEdge(P, forward, xmax, fy, out) // right edge
       i += 1
     }
     if (!any)
       throw ProjError(ProjErr.COORD_TRANSFM_OUTSIDE_PROJECTION_DOMAIN,
         "trans_bounds: no edge point transformed successfully")
-    (oxMin, oyMin, oxMax, oyMax)
+  }
+
+  /** Transform one edge point and grow `out` by it; false when it fails. */
+  private def visitEdge(P: PJ, forward: Boolean, x: Double, y: Double, out: BoundsM): Boolean = {
+    val c = out.c
+    c.set(x, y, 0, 0)
+    Dispatch.trans(P, forward, c)
+    val ok = !c.isError && c.x != Double.PositiveInfinity
+    if (ok) {
+      if (c.x < out.xmin) out.xmin = c.x
+      if (c.x > out.xmax) out.xmax = c.x
+      if (c.y < out.ymin) out.ymin = c.y
+      if (c.y > out.ymax) out.ymax = c.y
+    }
+    ok
   }
 }

@@ -2,7 +2,7 @@ package graft.spark
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.catalyst.expressions.{Cast, GenericInternalRow, Literal}
+import org.apache.spark.sql.catalyst.expressions.{Cast, Expression, GenericInternalRow, Literal}
 import org.apache.spark.sql.catalyst.expressions.objects.StaticInvoke
 import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
 import org.apache.spark.sql.functions._
@@ -88,8 +88,8 @@ object DocsTable {
   val anchorColumns: Seq[String] = Seq("lon", "lat", "anchor_h", "anchor_epoch")
 
   /** Extract the geo anchor (lon, lat, anchor_h, anchor_epoch) in one
-    * codegen'd pass over `spans` (a `StaticInvoke` of DocGenKernels.anchor;
-    * FIXTURES.md §1 geo-anchor convention):
+    * codegen'd pass over the spans' kind and text fields (a `StaticInvoke`
+    * of DocGenKernels.anchor; FIXTURES.md §1 geo-anchor convention):
     * - the first span with `kind = 'geo'` is used
     * - its text is split on single spaces, and token i gives column i as
     *   `try_cast(token AS DOUBLE)` would
@@ -97,23 +97,22 @@ object DocsTable {
     *   without a geo span, or whose geo text is null, get four nulls
     * `spans` passes through untouched; the four columns are appended. */
   def withAnchor(docs: DataFrame): DataFrame = {
-    val spans = docs.select(col("spans")).schema.head.dataType
-    val span = spans match {
+    val span = docs.select(col("spans")).schema.head.dataType match {
       case ArrayType(s: StructType, _) => s
       case t => throw new IllegalArgumentException(
         s"withAnchor: spans must be array<struct<kind, text, ...>>, not ${t.simpleString}")
     }
-    def stringField(name: String): Literal = {
-      val i = span.fieldNames.indexOf(name)
-      require(i >= 0 && span(i).dataType.isInstanceOf[StringType],
+    // only `spans.kind` and `spans.text` are read, so nested-column pruning
+    // drops the other span fields from the scan
+    def stringField(name: String): Expression = {
+      require(span.fieldNames.contains(name) && span(name).dataType.isInstanceOf[StringType],
         s"withAnchor: span struct has no string field `$name`: ${span.simpleString}")
-      Literal(i)
+      Bridge.expression(col("spans").getField(name))
     }
     val anchor = Bridge.column(StaticInvoke(DocGenKernels.getClass,
       StructType(anchorColumns.map(StructField(_, DoubleType))), "anchor",
-      Seq(Bridge.expression(col("spans")), stringField("kind"), stringField("text"),
-        Literal(span.length)),
-      Seq(spans, IntegerType, IntegerType, IntegerType)))
+      Seq(stringField("kind"), stringField("text")),
+      Seq(ArrayType(StringType), ArrayType(StringType))))
     // one generated row per doc: a filter on the anchor columns (`lon IS
     // NOT NULL`, or one the optimizer infers from a join key) cannot be
     // pushed below the generator, so the anchor is parsed once per row,
@@ -163,19 +162,13 @@ object DocGenKernels {
 
   /** The anchor of the first span whose kind is "geo", as a row of
     * DocsTable.anchorColumns; null when there is no such span or its text
-    * is null. The kind and text ordinals and the field count locate the
-    * fields in the span struct. */
-  def anchor(spans: ArrayData, kindOrdinal: Int, textOrdinal: Int,
-             spanWidth: Int): InternalRow = {
-    val n = spans.numElements()
+    * is null. `kinds` and `texts` are the spans' kind and text fields. */
+  def anchor(kinds: ArrayData, texts: ArrayData): InternalRow = {
+    val n = kinds.numElements()
     var i = 0
     while (i < n) {
-      if (!spans.isNullAt(i)) {
-        val s = spans.getStruct(i, spanWidth)
-        if (!s.isNullAt(kindOrdinal) && s.getUTF8String(kindOrdinal) == Geo)
-          return if (s.isNullAt(textOrdinal)) null
-          else parseAnchor(s.getUTF8String(textOrdinal))
-      }
+      if (!kinds.isNullAt(i) && kinds.getUTF8String(i) == Geo)
+        return if (texts.isNullAt(i)) null else parseAnchor(texts.getUTF8String(i))
       i += 1
     }
     null

@@ -8,8 +8,8 @@ import org.apache.spark.sql.catalyst.expressions.objects.Invoke
 import org.apache.spark.sql.types._
 import org.apache.spark.sql.functions.lit
 
-import graft.core.Coord
-import graft.proj.{Dispatch, PJ, Proj}
+import graft.core.{Coord, ProjError}
+import graft.proj.{Dispatch, Factors, PJ, Proj}
 
 /** A compiled proj-string pipeline, serialization-friendly: only the string
   * crosses the wire; the PJ (plan-time constants + kernels) is rebuilt once
@@ -59,122 +59,6 @@ final class CallScratch[S <: AnyRef](make: () => S) extends Serializable {
   @transient private lazy val perThread: ThreadLocal[S] = ThreadLocal.withInitial[S](() => make())
 
   def get: S = perThread.get()
-}
-
-/** Row-level transform entry point (one call per row; constants live in
-  * the ProjPipeline), reached from Catalyst through ProjTransCall. */
-object ProjKernels {
-  private val outType: StructType = StructType(Seq(
-    StructField("x", DoubleType, nullable = false),
-    StructField("y", DoubleType, nullable = false),
-    StructField("z", DoubleType, nullable = false),
-    StructField("t", DoubleType, nullable = false),
-    StructField("err", IntegerType, nullable = false)))
-
-  def resultType: StructType = outType
-
-  /** the transform path allocates nothing per row: a typed
-    * SpecificInternalRow avoids even the Double boxing an Array[Any]-backed
-    * row would pay (held by CallScratch) */
-  final class Scratch {
-    val c = new Coord
-    val row = new SpecificInternalRow(outType.map(_.dataType))
-  }
-
-  /** degIn/degOut: convert between degrees and the pipeline's angular IO. */
-  def eval(p: ProjPipeline, forward: Boolean, degIO: Boolean,
-           x: Double, y: Double, z: Double, t: Double,
-           scratch: CallScratch[Scratch]): InternalRow = {
-    val s = scratch.get
-    val c = s.c
-    var xi = x; var yi = y
-    if (degIO && p.angularInput(forward)) {
-      xi = x * (math.Pi / 180); yi = y * (math.Pi / 180)
-    }
-    c.set(xi, yi, z, t)
-    val err = p.trans(c, forward)
-    var xo = c.x; var yo = c.y
-    if (degIO && p.angularOutput(forward) && err == 0) {
-      xo = c.x * (180 / math.Pi); yo = c.y * (180 / math.Pi)
-    }
-    val r = s.row
-    r.setDouble(0, xo); r.setDouble(1, yo); r.setDouble(2, c.z)
-    r.setDouble(3, c.t); r.setInt(4, err)
-    r
-  }
-}
-
-/** Row-level proj_factors: cartographic distortion characteristics
-  * (reference src/factors.cpp via graft.proj.Factors). */
-object FactorsKernels {
-  private val outType: StructType = StructType(Seq(
-    StructField("h", DoubleType, nullable = false), // meridional scale
-    StructField("k", DoubleType, nullable = false), // parallel scale
-    StructField("s", DoubleType, nullable = false), // areal scale
-    StructField("omega", DoubleType, nullable = false), // angular distortion
-    StructField("conv", DoubleType, nullable = false))) // meridian convergence
-
-  def resultType: StructType = outType
-
-  final class Scratch {
-    val row = new SpecificInternalRow(outType.map(_.dataType))
-    val m = new graft.proj.Factors.ProjFactorsM
-  }
-
-  def eval(p: ProjPipeline, lonDeg: Double, latDeg: Double,
-           scratch: CallScratch[Scratch]): InternalRow = {
-    val s = scratch.get
-    val r = s.row
-    try {
-      val f = s.m
-      graft.proj.Factors.evalInto(p.pjForFactors,
-        lonDeg * (math.Pi / 180), latDeg * (math.Pi / 180), 1e-5, f)
-      r.setDouble(0, f.meridionalScale); r.setDouble(1, f.parallelScale)
-      r.setDouble(2, f.arealScale); r.setDouble(3, f.angularDistortion)
-      r.setDouble(4, f.meridianConvergence)
-    } catch {
-      case _: graft.core.ProjError =>
-        var i = 0
-        while (i < 5) { r.setDouble(i, Double.NaN); i += 1 }
-    }
-    r
-  }
-}
-
-/** Row-level proj_trans_bounds: densified-edge bbox transformation
-  * (reference src/trans_bounds.cpp via graft.proj.Factors.transBounds) —
-  * the partition-pruning primitive: map a lon/lat tile extent into a target
-  * CRS envelope. */
-object TransBoundsKernels {
-  private val outType: StructType = StructType(Seq(
-    StructField("xmin", DoubleType, nullable = false),
-    StructField("ymin", DoubleType, nullable = false),
-    StructField("xmax", DoubleType, nullable = false),
-    StructField("ymax", DoubleType, nullable = false)))
-
-  def resultType: StructType = outType
-
-  final class Scratch {
-    val row = new SpecificInternalRow(outType.map(_.dataType))
-  }
-
-  def eval(p: ProjPipeline, lonMin: Double, latMin: Double,
-           lonMax: Double, latMax: Double,
-           scratch: CallScratch[Scratch]): InternalRow = {
-    val d = math.Pi / 180
-    val r = scratch.get.row
-    try {
-      val (x0, y0, x1, y1) = graft.proj.Factors.transBounds(p.pjForFactors,
-        forward = true, lonMin * d, latMin * d, lonMax * d, latMax * d)
-      r.setDouble(0, x0); r.setDouble(1, y0)
-      r.setDouble(2, x1); r.setDouble(3, y1)
-    } catch {
-      case _: graft.core.ProjError =>
-        var i = 0
-        while (i < 4) { r.setDouble(i, Double.NaN); i += 1 }
-    }
-    r
-  }
 }
 
 /** Per-row coordinate-operation dispatch — the reference's per-point
@@ -276,60 +160,118 @@ final class RegistryDispatch(val srcSpec: String, val dstSpec: String)
   }
 }
 
-object RegistryDispatchKernels {
-  import org.apache.spark.sql.types._
-  private val outType: StructType = StructType(Seq(
-    StructField("op", IntegerType, nullable = false),
-    StructField("x", DoubleType, nullable = false),
-    StructField("y", DoubleType, nullable = false),
-    StructField("z", DoubleType, nullable = false),
-    StructField("err", IntegerType, nullable = false)))
+/** The per-thread scratch of a stateful proj kernel: what the kernel works
+  * in (its Coords, or the Factors record it fills) and its reused result
+  * row, a typed SpecificInternalRow so that doubles don't box. Held by a
+  * CallScratch. */
+final class KernelScratch[W](val work: W, resultType: StructType) {
+  val row = new SpecificInternalRow(resultType.map(_.dataType))
+}
 
-  def resultType: StructType = outType
+/** Invoke targets of the stateful proj kernels (built by ProjExprs). Each
+  * owns its pipeline or dispatch table and a CallScratch, ships with the
+  * plan as an object literal, and is equal by its plan-time inputs, so
+  * equal transforms are one common subexpression. Each `eval` allocates
+  * nothing per row and returns its scratch row. */
+sealed trait ProjCall extends Product with Serializable {
+  def resultType: StructType
+  /** an equal call with its own scratch row */
+  def fresh: ProjCall
+}
 
-  /** the dispatch path allocates nothing per row: a typed
-    * SpecificInternalRow instead of Array[Any] so doubles don't box */
-  final class Scratch {
-    val c = new Coord
-    val c2 = new Coord
-    val saved = new Coord
-    val row = new SpecificInternalRow(outType.map(_.dataType))
-  }
+object ProjCall {
+  private[spark] def struct(fields: (String, DataType)*): StructType =
+    StructType(fields.map { case (n, t) => StructField(n, t, nullable = false) })
+}
 
-  def eval(d: RegistryDispatch, xIn: Double, yIn: Double,
-           scratch: CallScratch[Scratch]): InternalRow = {
+/** Row-level proj_trans (constants live in the ProjPipeline). degIO:
+  * convert between degrees and the pipeline's angular IO. */
+final case class ProjTransCall(projString: String, forward: Boolean, degIO: Boolean)
+    extends ProjCall {
+  val resultType: StructType = ProjCall.struct("x" -> DoubleType, "y" -> DoubleType,
+    "z" -> DoubleType, "t" -> DoubleType, "err" -> IntegerType)
+  private val pipeline = new ProjPipeline(projString)
+  private val scratch = new CallScratch(() => new KernelScratch(new Coord, resultType))
+  def fresh: ProjCall = copy()
+
+  def eval(x: Double, y: Double, z: Double, t: Double): InternalRow = {
     val s = scratch.get
-    // the point in source geographic degrees, for extent checks
-    var lonDeg = 0.0
-    var latDeg = 0.0
-    if (d.srcAngular) {
-      lonDeg = xIn; latDeg = yIn
-    } else {
-      val c2 = s.c2
-      c2.set(xIn, yIn, 0.0, Double.PositiveInfinity)
-      val inv = d.srcInvPipes
-      var i = 0
-      while (i < inv.length && !c2.isError) {
-        inv(i).trans(c2, forward = false)
-        i += 1
-      }
-      if (!c2.isError) {
-        lonDeg = c2.x * (180 / math.Pi)
-        latDeg = c2.y * (180 / math.Pi)
-      }
+    val c = s.work
+    var xi = x; var yi = y
+    if (degIO && pipeline.angularInput(forward)) {
+      xi = x * (math.Pi / 180); yi = y * (math.Pi / 180)
     }
-    val c = s.c
-    val k = if (d.srcAngular) math.Pi / 180 else 1.0
-    c.set(xIn * k, yIn * k, 0.0, Double.PositiveInfinity)
-    val idx = d.transRow(c, lonDeg, latDeg, s.saved)
-    val k2 = if (d.dstAngular) 180 / math.Pi else 1.0
+    c.set(xi, yi, z, t)
+    val err = pipeline.trans(c, forward)
+    var xo = c.x; var yo = c.y
+    if (degIO && pipeline.angularOutput(forward) && err == 0) {
+      xo = c.x * (180 / math.Pi); yo = c.y * (180 / math.Pi)
+    }
     val r = s.row
-    if (c.isError) {
-      r.setInt(0, idx); r.setDouble(1, Double.NaN); r.setDouble(2, Double.NaN)
-      r.setDouble(3, Double.NaN); r.setInt(4, c.err)
-    } else {
-      r.setInt(0, idx); r.setDouble(1, c.x * k2); r.setDouble(2, c.y * k2)
-      r.setDouble(3, c.z); r.setInt(4, 0)
+    r.setDouble(0, xo); r.setDouble(1, yo); r.setDouble(2, c.z)
+    r.setDouble(3, c.t); r.setInt(4, err)
+    r
+  }
+}
+
+/** Row-level proj_factors: cartographic distortion characteristics
+  * (reference src/factors.cpp via graft.proj.Factors). */
+final case class FactorsCall(projString: String) extends ProjCall {
+  val resultType: StructType = ProjCall.struct(
+    "h" -> DoubleType, // meridional scale
+    "k" -> DoubleType, // parallel scale
+    "s" -> DoubleType, // areal scale
+    "omega" -> DoubleType, // angular distortion
+    "conv" -> DoubleType) // meridian convergence
+  private val pipeline = new ProjPipeline(projString)
+  private val scratch =
+    new CallScratch(() => new KernelScratch(new Factors.ProjFactorsM, resultType))
+  def fresh: ProjCall = copy()
+
+  def eval(lonDeg: Double, latDeg: Double): InternalRow = {
+    val s = scratch.get
+    val r = s.row
+    try {
+      val f = s.work
+      Factors.evalInto(pipeline.pjForFactors,
+        lonDeg * (math.Pi / 180), latDeg * (math.Pi / 180), 1e-5, f)
+      r.setDouble(0, f.meridionalScale); r.setDouble(1, f.parallelScale)
+      r.setDouble(2, f.arealScale); r.setDouble(3, f.angularDistortion)
+      r.setDouble(4, f.meridianConvergence)
+    } catch {
+      case _: ProjError =>
+        var i = 0
+        while (i < 5) { r.setDouble(i, Double.NaN); i += 1 }
+    }
+    r
+  }
+}
+
+/** Row-level proj_trans_bounds: densified-edge bbox transformation
+  * (reference src/trans_bounds.cpp via graft.proj.Factors.transBounds)
+  * — the partition-pruning primitive: map a lon/lat tile extent into a
+  * target CRS envelope. */
+final case class TransBoundsCall(projString: String) extends ProjCall {
+  val resultType: StructType = ProjCall.struct("xmin" -> DoubleType, "ymin" -> DoubleType,
+    "xmax" -> DoubleType, "ymax" -> DoubleType)
+  private val pipeline = new ProjPipeline(projString)
+  private val scratch = new CallScratch(() => new KernelScratch(new Factors.BoundsM, resultType))
+  def fresh: ProjCall = copy()
+
+  def eval(lonMin: Double, latMin: Double, lonMax: Double, latMax: Double): InternalRow = {
+    val d = math.Pi / 180
+    val s = scratch.get
+    val r = s.row
+    try {
+      val b = s.work
+      Factors.transBounds(pipeline.pjForFactors, forward = true,
+        lonMin * d, latMin * d, lonMax * d, latMax * d, b)
+      r.setDouble(0, b.xmin); r.setDouble(1, b.ymin)
+      r.setDouble(2, b.xmax); r.setDouble(3, b.ymax)
+    } catch {
+      case _: ProjError =>
+        var i = 0
+        while (i < 4) { r.setDouble(i, Double.NaN); i += 1 }
     }
     r
   }
@@ -341,43 +283,23 @@ object RegistryDispatchKernels {
   * way to the transform (reference zone logic src/projections/tmerc.cpp:
   * 630-672). Pipelines are plan-time constants; PJs build lazily once per
   * executor JVM via the ProjPipeline cache. */
-final class UtmDispatch(val ellps: String) extends Serializable {
-  @transient private lazy val pipes: Array[ProjPipeline] = {
-    val arr = new Array[ProjPipeline](120)
-    var z = 1
-    while (z <= 60) {
-      arr(z - 1) = new ProjPipeline(s"proj=utm zone=$z ellps=$ellps")
-      arr(60 + z - 1) = new ProjPipeline(s"proj=utm zone=$z south ellps=$ellps")
-      z += 1
-    }
-    arr
+final case class UtmNativeCall(ellps: String) extends ProjCall {
+  val resultType: StructType = ProjCall.struct("zone" -> IntegerType, "south" -> BooleanType,
+    "x" -> DoubleType, "y" -> DoubleType)
+  /** zones 1..60 north, then 1..60 south */
+  @transient private lazy val pipes: Array[ProjPipeline] = Array.tabulate(120) { i =>
+    new ProjPipeline(s"proj=utm zone=${i % 60 + 1}${if (i >= 60) " south" else ""} ellps=$ellps")
   }
-  def pipe(zone: Int, south: Boolean): ProjPipeline =
-    pipes(if (south) 60 + zone - 1 else zone - 1)
-}
+  private val scratch = new CallScratch(() => new KernelScratch(new Coord, resultType))
+  def fresh: ProjCall = copy()
 
-object UtmNativeKernels {
-  private val outType: StructType = StructType(Seq(
-    StructField("zone", IntegerType, nullable = false),
-    StructField("south", BooleanType, nullable = false),
-    StructField("x", DoubleType, nullable = false),
-    StructField("y", DoubleType, nullable = false)))
-
-  def resultType: StructType = outType
-
-  final class Scratch {
-    val c = new Coord
-    val row = new SpecificInternalRow(outType.map(_.dataType))
-  }
-
-  def eval(d: UtmDispatch, lonDeg: Double, latDeg: Double,
-           scratch: CallScratch[Scratch]): InternalRow = {
+  def eval(lonDeg: Double, latDeg: Double): InternalRow = {
     val zone = graft.proj.ops.TmercOps.zoneFromLonLat(lonDeg)
     val south = latDeg < 0
     val s = scratch.get
-    val c = s.c
+    val c = s.work
     c.set(lonDeg * (math.Pi / 180), latDeg * (math.Pi / 180), 0.0, 0.0)
-    d.pipe(zone, south).trans(c, forward = true)
+    pipes(if (south) 60 + zone - 1 else zone - 1).trans(c, forward = true)
     val r = s.row
     r.setInt(0, zone); r.setBoolean(1, south)
     r.setDouble(2, c.x); r.setDouble(3, c.y)
@@ -385,62 +307,56 @@ object UtmNativeKernels {
   }
 }
 
-/** Invoke targets of the stateful proj kernels (built by ProjExprs). Each
-  * owns its pipeline or dispatch table and a CallScratch, ships
-  * with the plan as an object literal, and is equal by its plan-time
-  * inputs, so equal transforms are one common subexpression. */
-sealed trait ProjCall extends Product with Serializable {
-  def resultType: StructType
-  /** an equal call with its own scratch row */
-  def fresh: ProjCall
-}
-
-final case class ProjTransCall(projString: String, forward: Boolean, degIO: Boolean)
-    extends ProjCall {
-  private val pipeline = new ProjPipeline(projString)
-  private val scratch = new CallScratch(() => new ProjKernels.Scratch)
-  def resultType: StructType = ProjKernels.resultType
-  def fresh: ProjCall = copy()
-  def eval(x: Double, y: Double, z: Double, t: Double): InternalRow =
-    ProjKernels.eval(pipeline, forward, degIO, x, y, z, t, scratch)
-}
-
-final case class FactorsCall(projString: String) extends ProjCall {
-  private val pipeline = new ProjPipeline(projString)
-  private val scratch = new CallScratch(() => new FactorsKernels.Scratch)
-  def resultType: StructType = FactorsKernels.resultType
-  def fresh: ProjCall = copy()
-  def eval(lonDeg: Double, latDeg: Double): InternalRow =
-    FactorsKernels.eval(pipeline, lonDeg, latDeg, scratch)
-}
-
-final case class TransBoundsCall(projString: String) extends ProjCall {
-  private val pipeline = new ProjPipeline(projString)
-  private val scratch = new CallScratch(() => new TransBoundsKernels.Scratch)
-  def resultType: StructType = TransBoundsKernels.resultType
-  def fresh: ProjCall = copy()
-  def eval(lonMin: Double, latMin: Double, lonMax: Double, latMax: Double): InternalRow =
-    TransBoundsKernels.eval(pipeline, lonMin, latMin, lonMax, latMax, scratch)
-}
-
-final case class UtmNativeCall(ellps: String) extends ProjCall {
-  private val dispatch = new UtmDispatch(ellps)
-  private val scratch = new CallScratch(() => new UtmNativeKernels.Scratch)
-  def resultType: StructType = UtmNativeKernels.resultType
-  def fresh: ProjCall = copy()
-  def eval(lonDeg: Double, latDeg: Double): InternalRow =
-    UtmNativeKernels.eval(dispatch, lonDeg, latDeg, scratch)
-}
-
-/** Plans the registry candidates on construction (driver side), so
-  * executors deserialize plain data; fresh copies share the plan. */
+/** Row-level registry dispatch (see RegistryDispatch). Plans the registry
+  * candidates on construction (driver side), so executors deserialize plain
+  * data; fresh copies share the plan. Its scratch Coords: the transformed
+  * point, the point inverse-projected for extent checks, and the retry
+  * protocol's saved input. */
 final case class CrsDispatchCall(srcSpec: String, dstSpec: String)(
     dispatch: RegistryDispatch = new RegistryDispatch(srcSpec, dstSpec)) extends ProjCall {
-  private val scratch = new CallScratch(() => new RegistryDispatchKernels.Scratch)
-  def resultType: StructType = RegistryDispatchKernels.resultType
+  val resultType: StructType = ProjCall.struct("op" -> IntegerType, "x" -> DoubleType,
+    "y" -> DoubleType, "z" -> DoubleType, "err" -> IntegerType)
+  private val scratch =
+    new CallScratch(() => new KernelScratch(Array.fill(3)(new Coord), resultType))
   def fresh: ProjCall = CrsDispatchCall(srcSpec, dstSpec)(dispatch)
-  def eval(x: Double, y: Double): InternalRow =
-    RegistryDispatchKernels.eval(dispatch, x, y, scratch)
+
+  def eval(xIn: Double, yIn: Double): InternalRow = {
+    val s = scratch.get
+    val cs = s.work
+    // the point in source geographic degrees, for extent checks
+    var lonDeg = 0.0
+    var latDeg = 0.0
+    if (dispatch.srcAngular) {
+      lonDeg = xIn; latDeg = yIn
+    } else {
+      val c2 = cs(1)
+      c2.set(xIn, yIn, 0.0, Double.PositiveInfinity)
+      val inv = dispatch.srcInvPipes
+      var i = 0
+      while (i < inv.length && !c2.isError) {
+        inv(i).trans(c2, forward = false)
+        i += 1
+      }
+      if (!c2.isError) {
+        lonDeg = c2.x * (180 / math.Pi)
+        latDeg = c2.y * (180 / math.Pi)
+      }
+    }
+    val c = cs(0)
+    val k = if (dispatch.srcAngular) math.Pi / 180 else 1.0
+    c.set(xIn * k, yIn * k, 0.0, Double.PositiveInfinity)
+    val idx = dispatch.transRow(c, lonDeg, latDeg, cs(2))
+    val k2 = if (dispatch.dstAngular) 180 / math.Pi else 1.0
+    val r = s.row
+    if (c.isError) {
+      r.setInt(0, idx); r.setDouble(1, Double.NaN); r.setDouble(2, Double.NaN)
+      r.setDouble(3, Double.NaN); r.setInt(4, c.err)
+    } else {
+      r.setInt(0, idx); r.setDouble(1, c.x * k2); r.setDouble(2, c.y * k2)
+      r.setDouble(3, c.z); r.setInt(4, 0)
+    }
+    r
+  }
 }
 
 /** A stateful proj kernel column over double arguments (the analyzer

@@ -176,26 +176,29 @@ object SpatialJoins {
   }
 
   /** Point-in-polygon join: points(lon, lat, …) × zones(zone_id, ring
-    * flat-array) → points with matched zone_id (inner).
+    * flat-array) → points with matched zone_id (inner); every column of
+    * either side but `ring` passes through, a `cell` column included.
     *
-    * Two-phase: S2 cover pre-join on `cell`, then the exact ray-cast
-    * expression. Covers are built EXECUTOR-side (coverCells explode —
-    * no driver collect, so a million-polygon zones table works), and the
-    * cover side rides as a broadcast when `broadcastZones` (the default:
-    * polygon sets are usually small relative to points); pass false to get
-    * a shuffle equi-join on `cell` for huge polygon tables — hot cells can
-    * then be salted with saltCells/replicateForSalt.
+    * Two-phase: S2 cover pre-join on the point's level-`level` cell (an
+    * internal key), then the exact ray-cast expression. Covers are built
+    * EXECUTOR-side (coverCells explode — no driver collect, so a
+    * million-polygon zones table works), and the cover side rides as a
+    * broadcast when `broadcastZones` (the default: polygon sets are usually
+    * small relative to points); pass false to get a shuffle equi-join on
+    * the cell for huge polygon tables — hot cells can then be salted with
+    * saltCells/replicateForSalt.
     */
   def pipJoin(points: DataFrame, zones: DataFrame, level: Int = 12,
               broadcastZones: Boolean = true): DataFrame = {
-    val covers = zones.withColumn("cell",
+    val key = "__pip_cell"
+    val covers = zones.withColumn(key,
       explode(GeoFunctions.coverCells(col("ring"), lit(level))))
-    val pts = points.withColumn("cell",
+    val pts = points.withColumn(key,
       GeoFunctions.s2Cell(col("lon"), col("lat"), lit(level)))
     pts
-      .join(if (broadcastZones) broadcast(covers) else covers, Seq("cell"))
+      .join(if (broadcastZones) broadcast(covers) else covers, Seq(key))
       .where(GeoFunctions.pointInRing(col("lon"), col("lat"), col("ring")))
-      .drop("ring")
+      .drop(key, "ring")
   }
 
   /** kNN: queries(q_id, lon, lat) × points(point_id, lon, lat) → top-k

@@ -3,9 +3,8 @@ package graft.spark
 import java.util.Locale
 
 import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
-import org.apache.spark.sql.catalyst.expressions.GenericInternalRow
 import org.apache.spark.sql.catalyst.util.GenericArrayData
-import org.apache.spark.sql.execution.{FilterExec, GenerateExec, ProjectExec}
+import org.apache.spark.sql.execution.{FileSourceScanExec, FilterExec, GenerateExec, ProjectExec}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 import org.apache.spark.unsafe.types.UTF8String
@@ -95,9 +94,8 @@ class AnchorSpec extends AnyFunSuite {
 
   test("kernel: random decimal tokens parse as Double.parseDouble does") {
     for (text <- decimalTexts(11L, 50000)) {
-      val spans = new GenericArrayData(Array[Any](new GenericInternalRow(Array[Any](
-        UTF8String.fromString("geo"), UTF8String.fromString(text), UTF8String.EMPTY_UTF8, 0))))
-      val got = DocGenKernels.anchor(spans, 0, 1, 4)
+      val got = DocGenKernels.anchor(new GenericArrayData(Array[Any](UTF8String.fromString("geo"))),
+        new GenericArrayData(Array[Any](UTF8String.fromString(text))))
       text.split(" ").zipWithIndex.foreach { case (tok, i) =>
         assert(bits(got.getDouble(i)) == bits(java.lang.Double.parseDouble(tok)), s"'$tok' in '$text'")
       }
@@ -159,6 +157,23 @@ class AnchorSpec extends AnyFunSuite {
     intercept[IllegalArgumentException](DocsTable.withAnchor(noText))
     intercept[IllegalArgumentException](
       DocsTable.withAnchor(docs.withColumn("spans", lit("1 2"))))
+  }
+
+  test("a parquet scan under withAnchor reads only the spans' kind and text") {
+    val dir = java.nio.file.Files.createTempDirectory("anchor_scan")
+    try {
+      val path = dir.resolve("docs").toString
+      DocsTable.docs(spark, 200, partitions = 2).write.parquet(path)
+      val df = DocsTable.withAnchor(spark.read.parquet(path))
+        .select(col("doc_id") +: DocsTable.anchorColumns.map(col): _*)
+      assert(df.where(col("lon").isNotNull).count() > 0)
+      val read = df.queryExecution.sparkPlan.collect {
+        case s: FileSourceScanExec => s.requiredSchema.simpleString
+      }
+      assert(read.nonEmpty, df.queryExecution.sparkPlan.toString)
+      read.foreach(rs => assert(rs.contains("kind") && rs.contains("text") &&
+        !rs.contains("media_ref") && !rs.contains("offset"), s"ReadSchema $rs"))
+    } finally org.apache.commons.io.FileUtils.deleteDirectory(dir.toFile)
   }
 
   test("north-star pipeline: no codegen fallback, anchor Filter/Project in whole-stage codegen") {

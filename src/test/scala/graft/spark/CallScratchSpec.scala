@@ -49,13 +49,14 @@ class CallScratchSpec extends AnyFunSuite {
     }
 
   test("each thread's scratch is its own, and stays its own") {
-    val s = new CallScratch(() => new ProjKernels.Scratch)
-    val mine = s.get
+    val trans = ProjTransCall("proj=webmerc ellps=WGS84", forward = true, degIO = true)
+    def row(): AnyRef = trans.eval(1, 2, 0, 0)
+    val mine = row()
     val pool = Executors.newSingleThreadExecutor()
     val theirs = try pool.submit(new Callable[(AnyRef, AnyRef)] {
-      def call(): (AnyRef, AnyRef) = (s.get, s.get)
+      def call(): (AnyRef, AnyRef) = (row(), row())
     }).get() finally pool.shutdownNow()
-    assert(s.get eq mine)
+    assert(row() eq mine)
     assert(theirs._1 eq theirs._2)
     assert(!(theirs._1 eq mine))
   }

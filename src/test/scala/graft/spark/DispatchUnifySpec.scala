@@ -14,12 +14,11 @@ import graft.proj.{OpFactory, OpRuntime}
   * verdict's "unify dispatch with OpRuntime" ask.
   */
 class DispatchUnifySpec extends AnyFunSuite {
-  private val dispatchScratch = new CallScratch(() => new RegistryDispatchKernels.Scratch)
-
   private val src = "EPSG:4230"
   private val dst = "EPSG:4326"
 
   private lazy val dispatch = new RegistryDispatch(src, dst)
+  private lazy val call = CrsDispatchCall(src, dst)(dispatch)
   private lazy val cands = {
     val s = OpFactory.resolve(src).get
     val d = OpFactory.resolve(dst).get
@@ -44,7 +43,7 @@ class DispatchUnifySpec extends AnyFunSuite {
         assert(ok, s"OpRuntime failed at ($lon, $lat)")
         val cliName = runtime.currentName.get
 
-        val row = RegistryDispatchKernels.eval(dispatch, lon, lat, dispatchScratch)
+        val row = call.eval(lon, lat)
         val op = row.getInt(0)
         assert(row.getInt(4) == 0, s"dispatch err at ($lon, $lat)")
         assert(cands(op).name == cliName,
@@ -111,9 +110,9 @@ class DispatchUnifySpec extends AnyFunSuite {
     // geographic, so the point must be inverse-projected before matching
     // (round-3 ADVICE: raw easting/northing never matched any box and every
     // row silently fell back to candidate 0)
-    val d31 = new RegistryDispatch("EPSG:23031", dst)
+    val d31 = CrsDispatchCall("EPSG:23031", dst)()
     // Barcelona-ish: UTM31 (430000, 4580000) ≈ (2.17 E, 41.37 N)
-    val row = RegistryDispatchKernels.eval(d31, 430000.0, 4580000.0, dispatchScratch)
+    val row = d31.eval(430000.0, 4580000.0)
     assert(row.getInt(4) == 0)
     val op = row.getInt(0)
     val geo = dispatch.select(2.17, 41.37)

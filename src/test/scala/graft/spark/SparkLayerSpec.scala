@@ -92,6 +92,21 @@ class SparkLayerSpec extends AnyFunSuite {
     assert(want.nonEmpty, "oracle produced no matches — fixture broken")
   }
 
+  test("pipJoin keeps the points' own cell column") {
+    // level-12 cells joined at level 10: the join key must not replace them
+    val docs = DocsTable.withAnchor(DocsTable.docs(spark, 2000))
+      .where($"lon".isNotNull)
+      .select($"doc_id".as("point_id"), $"lon", $"lat",
+        GeoFunctions.s2Cell($"lon", $"lat", lit(12)).as("cell"))
+    val want = docs.select("point_id", "cell").collect()
+      .map(r => r.getString(0) -> r.getLong(1)).toMap
+    val got = SpatialJoins.pipJoin(docs, DocsTable.zones(spark), level = 10)
+      .select("point_id", "cell").collect()
+    assert(got.nonEmpty, "no point joined a zone — fixture broken")
+    val moved = got.count(r => r.getLong(1) != want(r.getString(0)))
+    assert(moved == 0, s"$moved of ${got.length} joined points lost their own cell")
+  }
+
   private def rayCast(lon: Double, lat: Double, ring: Array[Double]): Boolean = {
     val n = ring.length / 2
     var inside = false

@@ -74,10 +74,11 @@ object DriveCheck {
       println(f"factors stere@80N: h=${f2.meridionalScale}%.9f k=${f2.parallelScale}%.9f omega=${f2.angularDistortion}%.2e")
       // bounds: lon/lat box -> utm32 with densified edges
       val utm = Proj.create("proj=utm zone=32 ellps=GRS80")
-      val (bx0, by0, bx1, by1) = Factors.transBounds(utm, forward = true,
+      val b = new Factors.BoundsM
+      Factors.transBounds(utm, forward = true,
         6 * GeoMath.DEG2RAD, 40 * GeoMath.DEG2RAD,
-        12 * GeoMath.DEG2RAD, 55 * GeoMath.DEG2RAD)
-      println(f"trans_bounds utm32 of 6-12E 40-55N: x [$bx0%.1f, $bx1%.1f] y [$by0%.1f, $by1%.1f]")
+        12 * GeoMath.DEG2RAD, 55 * GeoMath.DEG2RAD, b)
+      println(f"trans_bounds utm32 of 6-12E 40-55N: x [${b.xmin}%.1f, ${b.xmax}%.1f] y [${b.ymin}%.1f, ${b.ymax}%.1f]")
 
       // registry-grade CRS->CRS planning over the EPSG operation sidecar:
       // name resolution, grid-backed datum shift, GN7.2 similarity
@@ -99,13 +100,14 @@ object DriveCheck {
     println(f"1M utm fwd in ${(System.nanoTime - t0)/1e9}%.3f s (checksum $acc%.1f)")
 
     // row-kernel hot loops: throughput + bytes allocated per row (the
-    // CallScratch contract — each kernel should report ~0 B/row)
+    // CallScratch contract — each call should report ~0 B/row)
     kernelAllocCheck()
   }
 
-  /** Drives the row-kernel entry points (ProjKernels / UtmNativeKernels /
-    * RegistryDispatchKernels / FactorsKernels) for 1M rows each and reports
-    * per-row allocation from ThreadMXBean.getThreadAllocatedBytes. */
+  /** Drives the call objects Spark invokes for the stateful proj kernels
+    * (ProjTransCall / UtmNativeCall / CrsDispatchCall / FactorsCall /
+    * TransBoundsCall) and reports per-row allocation from
+    * ThreadMXBean.getThreadAllocatedBytes. */
   private def kernelAllocCheck(): Unit = {
     import graft.spark._
     val tmx = java.lang.management.ManagementFactory.getThreadMXBean
@@ -124,26 +126,25 @@ object DriveCheck {
       println(f"$name: $n rows in $secs%.3f s (${n / secs / 1e6}%.2f M/s), " +
         f"$bytesPerRow%.1f B/row alloc (checksum $acc%.1f)")
     }
-    val webmerc = new ProjPipeline("proj=webmerc ellps=WGS84")
-    val pkScr = new CallScratch(() => new ProjKernels.Scratch)
-    measure("ProjKernels webmerc", 1000000) { i =>
-      ProjKernels.eval(webmerc, forward = true, degIO = true,
-        -179.0 + (i % 358), -85.0 + (i % 170), 0.0, 0.0, pkScr).getDouble(0)
+    val webmerc = ProjTransCall("proj=webmerc ellps=WGS84", forward = true, degIO = true)
+    measure("ProjTransCall webmerc", 1000000) { i =>
+      webmerc.eval(-179.0 + (i % 358), -85.0 + (i % 170), 0.0, 0.0).getDouble(0)
     }
-    val utm = new UtmDispatch("WGS84")
-    val utmScr = new CallScratch(() => new UtmNativeKernels.Scratch)
-    measure("UtmNativeKernels", 1000000) { i =>
-      UtmNativeKernels.eval(utm, -179.0 + (i % 358), -80.0 + (i % 160), utmScr).getDouble(2)
+    val utm = UtmNativeCall("WGS84")
+    measure("UtmNativeCall", 1000000) { i =>
+      utm.eval(-179.0 + (i % 358), -80.0 + (i % 160)).getDouble(2)
     }
-    val disp = new RegistryDispatch("EPSG:4267", "EPSG:4326")
-    val dScr = new CallScratch(() => new RegistryDispatchKernels.Scratch)
-    measure("RegistryDispatchKernels", 200000) { i =>
-      RegistryDispatchKernels.eval(disp, -100.0 + (i % 40), 30.0 + (i % 20), dScr).getDouble(1)
+    val disp = CrsDispatchCall("EPSG:4267", "EPSG:4326")()
+    measure("CrsDispatchCall", 200000) { i =>
+      disp.eval(-100.0 + (i % 40), 30.0 + (i % 20)).getDouble(1)
     }
-    val merc = new ProjPipeline("proj=merc ellps=WGS84")
-    val fScr = new CallScratch(() => new FactorsKernels.Scratch)
-    measure("FactorsKernels merc", 200000) { i =>
-      FactorsKernels.eval(merc, -179.0 + (i % 358), -80.0 + (i % 160), fScr).getDouble(1)
+    val merc = FactorsCall("proj=merc ellps=WGS84")
+    measure("FactorsCall merc", 200000) { i =>
+      merc.eval(-179.0 + (i % 358), -80.0 + (i % 160)).getDouble(1)
+    }
+    val bounds = TransBoundsCall("proj=utm zone=33 ellps=WGS84")
+    measure("TransBoundsCall utm33", 20000) { i =>
+      bounds.eval(9.0 + (i % 10), -60.0 + (i % 120), 10.0 + (i % 10), -59.0 + (i % 120)).getDouble(0)
     }
   }
 }
